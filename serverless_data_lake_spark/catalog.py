@@ -22,18 +22,23 @@ the *plan shape* matches what an Iceberg MERGE would do at 100 TB:
   tables (``{domain}_{layer}.{table}``), so ``spark.sql`` resolves
   rewritten three-part names and Catalyst gets stats/pushdown.
 
-Durability model: single writer per table. Writes are staged and then
-committed with a roll-forward marker: new files move in *before* old
-files are deleted, and the list of files to delete is journalled in a
-``_sdls_pending.json`` marker first. A crash mid-commit therefore
-leaves extra (duplicate) rows, never lost rows, and the next write on
-the table rolls the pending deletes forward to the consistent state.
-Full-table replace swaps whole directories by rename. This is weaker
-than the reference's Iceberg snapshot isolation — a concurrent reader
-can observe duplicates during the (small) commit window — and that
-trade is deliberate for plain parquet; swap the backend for
-Iceberg/Delta in environments that ship the jar, the interface is
-unchanged.
+Durability model: single writer per table, and one commit rule for
+every write. The writer stages its output under
+``{location}__stage_*``; the commit then journals the staging dir, the
+files the write removes and the new table meta (schema, layout,
+zone-map stats) in a ``_sdls_pending.json`` marker, and rolls it
+forward: staged files move in, removed files are deleted (archived
+under ``retain_history``), the meta is written from the journal and
+the marker dropped. The roll-forward is idempotent, and every write
+and :meth:`TableStore.register_all` first rolls forward a marker a
+crash left behind, so after the next write or ``register_all`` a table
+holds exactly its pre-write state (crash before the marker) or its
+post-write state (crash after it). This is weaker than the
+reference's Iceberg snapshot isolation — a concurrent reader can
+observe a partly rolled-forward write during the (small) commit
+window — and that trade is deliberate for plain parquet; swap the
+backend for Iceberg/Delta in environments that ship the jar, the
+interface is unchanged.
 """
 
 from __future__ import annotations
@@ -43,6 +48,7 @@ import json
 import time
 import uuid
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,7 +110,6 @@ class TableStore:
         self.spark = spark
         self.config = config
         self.retain_history = retain_history
-        self._fs_cache: dict[str, object] = {}
 
     # ------------------------------------------------------------------
     # Hadoop FS helpers (work for file:// and s3a:// alike)
@@ -161,9 +166,6 @@ class TableStore:
                 fs.mkdirs(self._hpath(dst.rsplit("/", 1)[0]))
             fs.rename(self._hpath(f"{src_dir}/{rel}"), self._hpath(dst))
 
-    def _rename_dir(self, src: str, dst: str) -> None:
-        self._fs(dst).rename(self._hpath(src), self._hpath(dst))
-
     def _read_json(self, path: str) -> dict | list | None:
         if not self._exists(path):
             return None
@@ -209,62 +211,25 @@ class TableStore:
         fs.rename(self._hpath(path), self._hpath(dst))
 
     # ------------------------------------------------------------------
-    # Commit protocol: journal the files a commit will delete BEFORE
-    # new files become visible; deleting them + removing the marker IS
-    # the commit's final step, so recovery after a crash is a pure
-    # roll-forward (duplicates are removed, nothing is ever lost).
+    # Commit: every write stages its output under {location}__stage_*
+    # and commits through _commit. The journal (staging dir, files to
+    # remove, new meta) is written before anything at the location
+    # changes and its roll-forward is idempotent, so recovering from a
+    # crash anywhere is rolling the marker forward, if there is one.
     # ------------------------------------------------------------------
+    def _stage(
+        self, df: DataFrame, location: str, partition_by: list[str]
+    ) -> str:
+        """Write ``df`` to a fresh staging dir next to ``location``."""
+        staging = f"{location}__stage_{uuid.uuid4().hex[:8]}"
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        return staging
+
     def _write_pending(
-        self, location: str, staging: str, delete_files: list[str]
-    ) -> None:
-        fs = self._fs(location)
-        out = fs.create(self._hpath(f"{location}/{_PENDING_FILE}"), True)
-        out.write(
-            bytearray(
-                json.dumps(
-                    {"staging": staging, "delete": delete_files}
-                ).encode()
-            )
-        )
-        out.close()
-
-    def _apply_pending(self, location: str) -> None:
-        """Roll forward an in-flight (or crashed) commit: finish the
-        staged move-in if the staging dir still exists, then delete
-        the journalled files, then the marker. Idempotent — and
-        ordered so a crash at any point never loses rows (the staged
-        files are always moved in before their originals go)."""
-        path = f"{location}/{_PENDING_FILE}"
-        if not self._exists(path):
-            return
-        fs = self._fs(path)
-        stream = fs.open(self._hpath(path))
-        try:
-            data = bytes(
-                self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(  # noqa: SLF001
-                    stream
-                )
-            )
-        finally:
-            stream.close()
-        pending = json.loads(data.decode())
-        staging = pending.get("staging")
-        if staging and self._exists(staging):
-            self._move_files_into(staging, location)
-            self._delete(staging)
-        for f in pending.get("delete", []):
-            if self._exists(f):
-                if self.retain_history:
-                    self._archive_file(location, f, self._rel(location, f))
-                else:
-                    self._delete(f)
-        self._delete(path)
-
-    # ------------------------------------------------------------------
-    # Metadata
-    # ------------------------------------------------------------------
-    def _write_meta(
-        self, info: TableInfo, file_stats: dict | None = None
+        self, info: TableInfo, staging: str, remove: list[str], stats: dict
     ) -> None:
         meta = {
             "schema": info.schema.json(),
@@ -273,14 +238,91 @@ class TableStore:
             "bucket_by": info.bucket_by,
             "n_buckets": info.n_buckets,
             "updated_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "file_stats": stats,
         }
-        if file_stats is not None:
-            meta["file_stats"] = file_stats
-        fs = self._fs(info.location)
-        out = fs.create(self._hpath(f"{info.location}/{_META_FILE}"), True)
-        out.write(bytearray(json.dumps(meta).encode()))
-        out.close()
+        self._write_json(
+            f"{info.location}/{_PENDING_FILE}",
+            {"staging": staging, "remove": remove, "meta": meta},
+        )
 
+    def _apply_pending(self, location: str) -> bool:
+        """Roll a journalled commit forward: move the staged files in,
+        delete (or archive) the removed ones, write the journalled
+        meta, drop the marker. Idempotent, and the staged files always
+        move in before the files they replace go, so a crash at any
+        step loses no rows. Returns whether a marker was found."""
+        path = f"{location}/{_PENDING_FILE}"
+        pending = self._read_json(path)
+        if pending is None:
+            return False
+        if self._exists(pending["staging"]):
+            self._move_files_into(pending["staging"], location)
+            self._delete(pending["staging"])
+        for f in pending["remove"]:
+            if self._exists(f):
+                if self.retain_history:
+                    self._archive_file(location, f, self._rel(location, f))
+                else:
+                    self._delete(f)
+        self._write_json(f"{location}/{_META_FILE}", pending["meta"])
+        self._delete(path)
+        return True
+
+    def _commit(
+        self,
+        info: TableInfo,
+        staging: str,
+        remove: list[str],
+        stats: dict[str, list],
+        register: bool,
+        new_partitions=None,
+    ) -> TableInfo:
+        """The one commit step of every write. ``stats`` are the zone
+        maps before the write: entries of removed files are dropped
+        and the staged files' are added. After the roll-forward the
+        snapshot is recorded and the catalog entry re-registered
+        (``register``: the schema or layout changed) or refreshed."""
+        gone = {self._stat_key(f) for f in remove}
+        stats = {
+            b: v for b, v in stats.items() if b not in gone
+        } | self._collect_file_stats(staging, info)
+        self._write_pending(info, staging, remove, stats)
+        self._apply_pending(info.location)
+        self._record_snapshot(info)
+        if register:
+            self._register(info)
+        else:
+            self._refresh(info, new_partitions)
+        return info
+
+    def _open(
+        self, database: str, table: str
+    ) -> tuple[TableInfo | None, dict[str, list]]:
+        """A write's view of its table: roll a crashed commit forward,
+        then read the meta once for the table info and its zone-map
+        stats. A rolled-forward table is re-registered, because the
+        crashed write never synced the catalog."""
+        location = self.config.table_path(database, table)
+        recovered = self._apply_pending(location)
+        meta = self._read_meta(location)
+        if meta is None:
+            return None, {}
+        info = self._table_info(database, table, location, meta)
+        if recovered:
+            self._register(info)
+        return info, meta.get("file_stats") or {}
+
+    def _replaced_files(self, location: str) -> list[str]:
+        """What a full replace removes: every current data file, once
+        a crashed commit is rolled forward."""
+        self._apply_pending(location)
+        if not self._exists(location):
+            return []
+        return self._list_data_files(location)
+
+    # ------------------------------------------------------------------
+    # Metadata
+    # ------------------------------------------------------------------
     def _read_meta(self, location: str) -> dict | None:
         return self._read_json(f"{location}/{_META_FILE}")
 
@@ -299,15 +341,33 @@ class TableStore:
     def _statable(v) -> bool:
         return isinstance(v, (int, float)) and not isinstance(v, bool)
 
+    @staticmethod
+    def _stat_key(path: str) -> str:
+        """A data file's zone-map key: its basename under its hive
+        partition dirs (``col=value/...``), i.e. its path below the
+        table root — one task writes the same basename into every
+        partition it touches. Stable across the staging→location
+        rename."""
+        parts = path.split("/")
+        i = len(parts) - 1
+        while i > 0 and "=" in parts[i - 1]:
+            i -= 1
+        return "/".join(parts[i:])
+
     def _collect_file_stats(
-        self, files: list[str], key: str, schema: StructType
+        self, directory: str, info: TableInfo
     ) -> dict[str, list]:
-        """``{file_basename: [min, max]}`` for the given data files.
-        Basenames are stable across the staging→location rename."""
-        if not files or not any(f.name == key for f in schema.fields):
+        """``{stat_key: [min, max]}`` of the lead primary key for the
+        data files under ``directory``. A lead key that is a partition
+        column has no stats (its values live in directory names)."""
+        if not info.primary_keys:
+            return {}
+        key = info.primary_keys[0]
+        files = self._list_data_files(directory)
+        if not files or key not in info.data_schema.fieldNames():
             return {}
         rows = (
-            self.spark.read.schema(schema)
+            self.spark.read.schema(info.data_schema)
             .parquet(*files)
             .select(
                 F.col(key).alias("__k"),
@@ -318,7 +378,7 @@ class TableStore:
             .collect()
         )
         return {
-            r["__f"].rsplit("/", 1)[-1]: [r["mn"], r["mx"]]
+            self._stat_key(unquote(r["__f"])): [r["mn"], r["mx"]]
             for r in rows
             if self._statable(r["mn"]) and self._statable(r["mx"])
         }
@@ -343,7 +403,7 @@ class TableStore:
             return all_files
         out = []
         for f in all_files:
-            s = stats.get(f.rsplit("/", 1)[-1])
+            s = stats.get(self._stat_key(f))
             if s is None or not (s[1] < batch_min or s[0] > batch_max):
                 out.append(f)
         return out
@@ -565,23 +625,16 @@ class TableStore:
                 if not t_status.isDirectory():
                     continue
                 name = t_status.getPath().getName()
-                if "__stage_" in name or "__old_" in name:
-                    continue  # leftovers of a crashed staged write
+                if "__stage_" in name:
+                    continue  # staging dir of a crashed write
                 location = t_status.getPath().toString()
+                # Before the meta is read: a table whose first write
+                # crashed mid-commit has its meta only in the journal.
+                self._apply_pending(location)
                 meta = self._read_meta(location)
                 if meta is None:
                     continue
-                self._apply_pending(location)
-                info = TableInfo(
-                    database=database,
-                    name=t_status.getPath().getName(),
-                    location=location,
-                    schema=StructType.fromJson(json.loads(meta["schema"])),
-                    primary_keys=meta.get("primary_keys", []),
-                    partition_by=meta.get("partition_by", []),
-                    bucket_by=meta.get("bucket_by", []),
-                    n_buckets=meta.get("n_buckets", 0),
-                )
+                info = self._table_info(database, name, location, meta)
                 self._register(info)
                 infos.append(info)
         return infos
@@ -620,6 +673,12 @@ class TableStore:
         meta = self._read_meta(location)
         if meta is None:
             return None
+        return self._table_info(database, table, location, meta)
+
+    @staticmethod
+    def _table_info(
+        database: str, table: str, location: str, meta: dict
+    ) -> TableInfo:
         return TableInfo(
             database=database,
             name=table,
@@ -643,11 +702,11 @@ class TableStore:
         partition_by: list[str] | None = None,
     ) -> TableInfo:
         """Full overwrite (gold ``write_mode=overwrite`` — reference
-        S6). The new snapshot is fully staged (data + metadata), then
-        swapped in with two directory renames; the previous snapshot
-        is deleted only after the new one is in place, so a failed job
-        never destroys it (a crash between the renames leaves the old
-        snapshot recoverable under ``<location>__old_*``).
+        S6). The new content is staged, then committed as a write that
+        removes every current data file: the previous content goes
+        only after the new one has moved in, so a failed job never
+        destroys it, and after a crash the table holds either the old
+        or the new content (see the module docstring).
 
         ``partition_by`` lays the table out hive-style
         (``col=value/`` directories): scans filtered on partition
@@ -659,11 +718,7 @@ class TableStore:
         if missing:
             raise ValueError(f"partition columns not in data: {missing}")
         location = self.config.table_path(database, table)
-        staging = f"{location}__stage_{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
+        staging = self._stage(df, location, partition_by)
         schema = StructType(
             [f for f in df.schema.fields if f.name not in partition_by]
             + [f for f in df.schema.fields if f.name in partition_by]
@@ -671,58 +726,9 @@ class TableStore:
         info = TableInfo(
             database, table, location, schema, primary_keys or [], partition_by
         )
-        # Zone maps are collected for partitioned tables too: the
-        # partitioned merge's affected-file scan is table-wide when
-        # partition pruning isn't key-safe (see merge), and lead-key
-        # file ranges are what bound that scan. _collect_file_stats
-        # degrades to {} when the lead key IS a partition column
-        # (its values live in directory names, not the files).
-        stats = (
-            self._collect_file_stats(
-                self._list_data_files(staging),
-                primary_keys[0],
-                info.data_schema,
-            )
-            if primary_keys
-            else {}
+        return self._commit(
+            info, staging, self._replaced_files(location), {}, register=True
         )
-        self._write_meta(
-            dataclasses.replace(info, location=staging), file_stats=stats
-        )
-        self._swap_in(info, staging)
-        return info
-
-    def _swap_in(self, info: TableInfo, staging: str) -> TableInfo:
-        """Directory-swap commit for full-replace writes: the staged
-        snapshot (data + metadata, already written under ``staging``)
-        becomes the table; the previous snapshot is deleted (or
-        archived under ``retain_history``) only after the new one is
-        in place."""
-        location = info.location
-        old = f"{location}__old_{uuid.uuid4().hex[:8]}"
-        if self._exists(location):
-            self._rename_dir(location, old)
-        self._rename_dir(staging, location)
-        if self._exists(old):
-            if self.retain_history:
-                # Carry the previous snapshots manifest and archive
-                # every superseded data file (current + already
-                # archived) so earlier versions stay readable.
-                old_snaps = self._read_json(f"{old}/{_SNAPSHOTS_FILE}")
-                if old_snaps:
-                    self._write_json(
-                        f"{location}/{_SNAPSHOTS_FILE}", old_snaps
-                    )
-                for f, rel, _ in self._walk_data_files(old):
-                    self._archive_file(location, f, rel)
-                old_arch = f"{old}/{_ARCHIVE_DIR}"
-                if self._exists(old_arch):
-                    for f, rel, _ in self._walk_data_files(old_arch):
-                        self._archive_file(location, f, rel)
-            self._delete(old)
-        self._register(info)
-        self._record_snapshot(info)
-        return info
 
     def create_bucketed(
         self,
@@ -763,7 +769,7 @@ class TableStore:
         staging = f"{location}__stage_{uuid.uuid4().hex[:8]}"
         # saveAsTable is the only writer that emits bucket metadata;
         # stage under a throwaway catalog name, then drop the name
-        # (files stay) and swap the directory in like any replace.
+        # (files stay) and commit the staged files like any replace.
         tmp = f"sdls_bucket_stage_{uuid.uuid4().hex[:8]}"
         (
             df.write.mode("overwrite")
@@ -783,9 +789,9 @@ class TableStore:
             bucket_by,
             int(n_buckets),
         )
-        self._write_meta(dataclasses.replace(info, location=staging))
-        self._swap_in(info, staging)
-        return info
+        return self._commit(
+            info, staging, self._replaced_files(location), {}, register=True
+        )
 
     def append(
         self,
@@ -800,8 +806,7 @@ class TableStore:
         null for them). On a partitioned table the batch's files land
         only in the partitions it carries (``partition_by`` applies
         on first create; thereafter the table's layout wins)."""
-        self._apply_pending(self.config.table_path(database, table))
-        existing = self.info(database, table)
+        existing, stats = self._open(database, table)
         if existing is None:
             return self.create_or_replace(
                 database, table, df, primary_keys, partition_by
@@ -813,34 +818,19 @@ class TableStore:
                 f"of appending"
             )
         merged_schema = self._merge_schemas(existing.schema, df.schema)
-        df = self._conform(df, merged_schema)
-        before = set(self._list_data_files(existing.location))
-        writer = df.write.mode("append")
-        if existing.partition_by:
-            writer = writer.partitionBy(*existing.partition_by)
-        writer.parquet(existing.location)
+        staging = self._stage(
+            self._conform(df, merged_schema),
+            existing.location,
+            existing.partition_by,
+        )
         info = TableInfo(
             database, table, existing.location, merged_schema,
             primary_keys if primary_keys is not None else existing.primary_keys,
             existing.partition_by,
         )
-        stats = self._load_file_stats(existing.location)
-        if info.primary_keys:
-            new_files = [
-                f
-                for f in self._list_data_files(existing.location)
-                if f not in before
-            ]
-            stats = stats | self._collect_file_stats(
-                new_files, info.primary_keys[0], info.data_schema
-            )
-        self._write_meta(info, file_stats=stats)
-        self._record_snapshot(info)
-        if merged_schema != existing.schema:
-            self._register(info)
-        else:
-            self._refresh(info)
-        return info
+        return self._commit(
+            info, staging, [], stats, register=merged_schema != existing.schema
+        )
 
     def merge(
         self,
@@ -854,35 +844,32 @@ class TableStore:
         semantics (reference S7/S8) via file-level copy-on-write.
 
         Plan, in Spark terms:
-        1. semi-join ``target ⋉ source_keys`` over the hidden
+        1. semi-join ``candidates ⋉ source_keys`` over the hidden
            ``_metadata.file_path`` column → the set of data files
            that contain any matched key (driver sees only file
            *names*, never rows);
         2. rewrite = (rows of those files anti-joined against source
            keys) ∪ source;
-        3. stage; journal the matched files in the pending marker;
-           move the staged files in; delete the matched files + the
-           marker (the commit step).
+        3. stage the rewrite and commit it as a write that removes
+           the matched files (see the module docstring: after a
+           crash the table holds the pre- or the post-merge state).
 
-        A crash mid-commit leaves matched rows duplicated (old + new
-        file both present), never lost; the next write on the table
-        rolls the journalled deletes forward first. Cost is
-        proportional to the matched files + the batch. The
+        Cost is proportional to the candidate files + the batch. The
         incoming-keys side of both joins is typically small and
         broadcast by AQE; skewed PKs are handled by AQE skew-join.
 
-        File pruning before the affected-file scan: keys are matched
-        TABLE-WIDE (Iceberg MERGE semantics — a late correction whose
-        partition value moved still replaces the old row instead of
-        duplicating the key). Partition-directory pruning by the
-        batch's partition values is applied only when it is provably
-        safe: ``partition_by ⊆ keys``, in which case equal keys imply
-        equal partition tuples and no match can hide in another
-        partition. Otherwise the scan falls back to per-file zone
-        maps on the lead key (maintained for partitioned and flat
-        tables alike), so it still opens only files whose key range
-        can overlap the batch. ``partition_by`` applies when this
-        merge creates the table.
+        Candidate files, before the affected-file scan: keys are
+        matched TABLE-WIDE (Iceberg MERGE semantics — a late
+        correction whose partition value moved still replaces the old
+        row instead of duplicating the key), so the candidates are
+        every file whose lead-key zone map can overlap the batch
+        (maintained for partitioned and flat tables alike; stat-less
+        files always qualify). On a partitioned table the scan is
+        also filtered to the batch's partition values when that is
+        provably safe: ``partition_by ⊆ keys``, in which case equal
+        keys imply equal partition tuples and no match can hide in
+        another partition. ``partition_by`` applies when this merge
+        creates the table.
         """
         if isinstance(keys, str):
             # dbt-style configs allow a scalar unique_key; a bare
@@ -891,8 +878,7 @@ class TableStore:
             keys = [keys]
         if not keys:
             raise ValueError("merge requires at least one key column")
-        self._apply_pending(self.config.table_path(database, table))
-        existing = self.info(database, table)
+        existing, stats = self._open(database, table)
         if existing is None:
             return self.create_or_replace(
                 database, table, source, keys, partition_by
@@ -920,33 +906,42 @@ class TableStore:
         src_keys = source.select(*keys).dropDuplicates(keys).persist()
 
         batch_parts = None
-        if pby:
-            stats = self._load_file_stats(location)
-            if all(c in source_cols for c in pby):
-                # The batch's partition tuples — bounded by the number
-                # of partitions a batch touches, collected like
-                # Iceberg's partition summaries. Used for the
-                # surgical ADD PARTITION catalog sync, and for
-                # directory pruning when that is key-safe.
-                pvals = (
-                    source.select(*pby).dropDuplicates(pby).limit(10001).collect()
-                )
-                if len(pvals) <= 10000:
-                    batch_parts = pvals
-            # Directory pruning is only sound when the partition
-            # tuple is part of the key: then equal keys imply equal
+        if pby and all(c in source_cols for c in pby):
+            # The batch's partition tuples — bounded by the number of
+            # partitions a batch touches, collected like Iceberg's
+            # partition summaries. Used for the surgical ADD
+            # PARTITION catalog sync, and for partition pruning when
+            # that is key-safe.
+            pvals = (
+                source.select(*pby).dropDuplicates(pby).limit(10001).collect()
+            )
+            if len(pvals) <= 10000:
+                batch_parts = pvals
+
+        candidates = self._list_data_files(location)
+        if stats:
+            bounds = src_keys.agg(
+                F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
+            ).first()
+            candidates = self._prune_by_stats(
+                candidates, stats, bounds["mn"], bounds["mx"]
+            )
+        # basePath keeps the partition-column values that live in the
+        # directory names of the files read.
+        reader = self.spark.read.schema(merged_schema).option(
+            "basePath", location
+        )
+        affected_files: list[str] = []
+        if candidates:
+            scan = reader.parquet(*candidates)
+            # Partition pruning is only sound when the partition tuple
+            # is part of the key: then equal keys imply equal
             # partition values and a matched row cannot live outside
             # the batch's partitions. Pruning on a non-key partition
             # column would miss a stored row whose partition value
             # differs from the incoming one (late correction) and
             # silently duplicate its key.
-            prune_safe = set(pby) <= set(keys)
-            if prune_safe and batch_parts is not None:
-                scan = (
-                    self.spark.read.schema(merged_schema)
-                    .option("basePath", location)
-                    .parquet(location)
-                )
+            if batch_parts and set(pby) <= set(keys):
                 cond = None
                 for r in batch_parts:
                     t = None
@@ -958,116 +953,40 @@ class TableStore:
                         )
                         t = e if t is None else (t & e)
                     cond = t if cond is None else (cond | t)
-                if cond is not None:
-                    scan = scan.where(cond)
-            else:
-                # Table-wide key scan, bounded by lead-key zone maps:
-                # only files whose [min, max] range can overlap the
-                # batch's key range are opened (stat-less legacy
-                # files always qualify). Column-pruned to the key
-                # columns either way.
-                all_files = self._list_data_files(location)
-                candidates = all_files
-                if stats:
-                    bounds = src_keys.agg(
-                        F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
-                    ).first()
-                    candidates = self._prune_by_stats(
-                        all_files, stats, bounds["mn"], bounds["mx"]
-                    )
-                if not candidates:
-                    scan = None
-                else:
-                    scan = (
-                        self.spark.read.schema(merged_schema)
-                        .option("basePath", location)
-                        .parquet(*candidates)
-                    )
-            if scan is None:
-                affected_files = []
-            else:
-                affected = (
-                    scan.select(
-                        *keys, F.col("_metadata.file_path").alias("__file")
-                    )
-                    .join(src_keys, on=keys, how="left_semi")
-                    .select("__file")
-                    .distinct()
-                    .collect()
+                scan = scan.where(cond)
+            affected = (
+                scan.select(
+                    *keys, F.col("_metadata.file_path").alias("__file")
                 )
-                affected_files = [r["__file"] for r in affected]
-        else:
-            # Zone-map pruning: only files whose lead-key range can
-            # overlap the batch participate in the affected-file scan.
-            stats = self._load_file_stats(location)
-            all_files = self._list_data_files(location)
-            candidates = all_files
-            if stats:
-                bounds = src_keys.agg(
-                    F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
-                ).first()
-                candidates = self._prune_by_stats(
-                    all_files, stats, bounds["mn"], bounds["mx"]
-                )
+                .join(src_keys, on=keys, how="left_semi")
+                .select("__file")
+                .distinct()
+                .collect()
+            )
+            # _metadata.file_path is URL-encoded; Hadoop paths are not.
+            affected_files = [unquote(r["__file"]) for r in affected]
 
-            if candidates:
-                affected = (
-                    self.spark.read.schema(merged_schema)
-                    .parquet(*candidates)
-                    .select(
-                        *keys, F.col("_metadata.file_path").alias("__file")
-                    )
-                    .join(src_keys, on=keys, how="left_semi")
-                    .select("__file")
-                    .distinct()
-                    .collect()
-                )
-                affected_files = [r["__file"] for r in affected]
-            else:
-                affected_files = []
-
-        staging = f"{location}__stage_{uuid.uuid4().hex[:8]}"
         if affected_files:
-            reader = self.spark.read.schema(merged_schema)
-            if pby:
-                # basePath keeps the partition-column values that live
-                # in the directory names of the affected files.
-                reader = reader.option("basePath", location)
             survivors = reader.parquet(*affected_files).join(
                 src_keys, on=keys, how="left_anti"
             )
             out = survivors.unionByName(source)
         else:
             out = source
-        writer = out.write.mode("overwrite")
-        if pby:
-            writer = writer.partitionBy(*pby)
-        writer.parquet(staging)
-
-        new_info = TableInfo(database, table, location, merged_schema, keys, pby)
-        new_stats = self._collect_file_stats(
-            self._list_data_files(staging), keys[0], new_info.data_schema
-        )
-        deleted = {f.rsplit("/", 1)[-1] for f in affected_files}
-        stats = {
-            b: v for b, v in stats.items() if b not in deleted
-        } | new_stats
+        staging = self._stage(out, location, pby)
         src_keys.unpersist()
-
-        self._write_pending(location, staging, affected_files)
-        self._apply_pending(location)
-
-        info = new_info
-        self._write_meta(info, file_stats=stats)
-        self._record_snapshot(info)
-        if merged_schema != existing.schema:
-            self._register(info)
-        else:
-            # The batch's collected partition tuples make the catalog
-            # sync surgical (ADD PARTITION per touched value) instead
-            # of a full layout rescan.
-            self._refresh(info, batch_parts)
-        return info
+        info = TableInfo(database, table, location, merged_schema, keys, pby)
+        # The batch's collected partition tuples make the catalog sync
+        # surgical (ADD PARTITION per touched value) instead of a full
+        # layout rescan.
+        return self._commit(
+            info,
+            staging,
+            affected_files,
+            stats,
+            register=merged_schema != existing.schema,
+            new_partitions=batch_parts,
+        )
 
     def delete_insert(
         self,
@@ -1101,10 +1020,9 @@ class TableStore:
         problem. This rewrites only files below ``small_file_bytes``
         (default: half the target), coalesced to
         ceil(total/target) output files; large files are untouched.
-        Returns the number of files compacted. Same journalled
-        move-in-then-delete commit as merge: a crash mid-commit
-        duplicates rows (rolled forward on the next write), never
-        loses them.
+        Returns the number of files compacted. Commits like every
+        write, as one that removes the compacted files: after a crash
+        the table holds the pre- or the post-compaction files.
 
         ``sort_by`` re-clusters the rewritten rows: a range
         repartition + in-partition sort on the given columns, so
@@ -1113,7 +1031,7 @@ class TableStore:
         more files) and any range-filtered scan skips whole files
         via parquet min/max — the Delta OPTIMIZE ZORDER idea,
         restricted to lexicographic clustering."""
-        info = self.info(database, table)
+        info, stats = self._open(database, table)
         if info is None:
             raise KeyError(f"no such table {database}.{table}")
         if info.bucket_by:
@@ -1122,7 +1040,6 @@ class TableStore:
             # tables are written in one pass and never accrete small
             # files, so there is nothing to compact.
             return 0
-        self._apply_pending(info.location)
         threshold = small_file_bytes or target_file_bytes // 2
         # Group small files by their partition directory ("" for a
         # flat table): compaction is partition-local, so each
@@ -1152,21 +1069,7 @@ class TableStore:
                 out = src.repartition(int(n_out))
             out.write.mode("overwrite").parquet(dst)
             small.extend(paths)
-        stats = self._load_file_stats(info.location)
-        if info.primary_keys:
-            removed = {f.rsplit("/", 1)[-1] for f in small}
-            stats = {
-                b: v for b, v in stats.items() if b not in removed
-            } | self._collect_file_stats(
-                self._list_data_files(staging),
-                info.primary_keys[0],
-                info.data_schema,
-            )
-        self._write_pending(info.location, staging, small)
-        self._apply_pending(info.location)
-        self._write_meta(info, file_stats=stats)
-        self._record_snapshot(info)
-        self._refresh(info)
+        self._commit(info, staging, small, stats, register=False)
         return len(small)
 
     # ------------------------------------------------------------------

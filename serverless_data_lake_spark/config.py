@@ -11,8 +11,7 @@ reference) on any Hadoop-compatible filesystem: local paths in tests,
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -20,20 +19,9 @@ class LakeConfig:
     """Filesystem layout + limits for one lake instance."""
 
     root: str
-    # Reference: MAX_RESULT_ROWS / MAX_QUERY_LENGTH
-    # (lambdas/query_api/main.py:19-20).
+    # Reference: MAX_RESULT_ROWS (lambdas/query_api/main.py:19); its
+    # MAX_QUERY_LENGTH lives with the query gate (plans/validate.py).
     max_result_rows: int = 10_000
-    max_query_length: int = 10_000
-    # Number of hash buckets silver tables are partitioned by. Merges
-    # rewrite only the buckets touched by the incoming batch
-    # (copy-on-write at partition granularity) so a 100 TB table with
-    # a small incremental batch rewrites ~batch-sized data, not the
-    # table. Sized so one bucket of a very large table still fits an
-    # executor: at 100 TB / 1024 buckets ≈ 100 GB per bucket, and each
-    # bucket is itself many parquet files that Spark splits.
-    merge_buckets: int = field(
-        default_factory=lambda: int(os.environ.get("SDLS_MERGE_BUCKETS", "64"))
-    )
 
     @property
     def bronze_root(self) -> str:

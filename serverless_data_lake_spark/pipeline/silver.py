@@ -95,29 +95,11 @@ class SilverProcessor:
 
     def _load_state(self, domain: str, endpoint: str) -> set[str]:
         path = self._state_file(domain, endpoint)
-        if not self.store._exists(path):  # noqa: SLF001
-            return set()
-        fs = self.store._fs(path)  # noqa: SLF001
-        stream = fs.open(self.store._hpath(path))  # noqa: SLF001
-        try:
-            jvm = self.spark._jvm  # noqa: SLF001
-            data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
-        import json as _json
-
-        return set(_json.loads(data.decode()))
+        return set(self.store._read_json(path) or [])  # noqa: SLF001
 
     def _save_state(self, domain: str, endpoint: str, done: set[str]) -> None:
-        import json as _json
-
         path = self._state_file(domain, endpoint)
-        fs = self.store._fs(path)  # noqa: SLF001
-        out = fs.create(self.store._hpath(path), True)  # noqa: SLF001
-        try:
-            out.write(bytearray(_json.dumps(sorted(done)).encode()))
-        finally:
-            out.close()
+        self.store._write_json(path, sorted(done))  # noqa: SLF001
 
     @staticmethod
     def _with_arrival(df: DataFrame) -> DataFrame:

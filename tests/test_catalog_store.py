@@ -3,6 +3,9 @@ files; compaction bin-packs small files; schema evolution."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,10 +114,9 @@ class TestCompaction:
 
 
 class TestCommitRecovery:
-    """Crash-safety of the journalled commit (r1 advice): a crash at
-    any point between staging and the final deletes must be
-    recoverable with no lost rows — duplicates at worst, rolled
-    forward by the next write."""
+    """Hand-built crashed states the fault-injection test below cannot
+    reach: a pending marker met by a later write in the same session,
+    and a staging dir that carries a meta file."""
 
     def _setup(self, spark, store):
         df1 = spark.range(0, 10).select(
@@ -127,51 +129,6 @@ class TestCommitRecovery:
         store.append("db", "t", df2)
         return store.info("db", "t")
 
-    def test_crash_after_marker_before_movein(self, spark, store):
-        """Simulate: staging written, marker written, crash. Recovery
-        must move staged files in and delete the originals."""
-        info = self._setup(spark, store)
-        matched = [
-            f for f in store._list_data_files(info.location)
-        ]
-        # Hand-build the crashed state: a staging dir with the rewrite
-        # (all keys, updated values) and a marker listing all files.
-        staging = f"{info.location}__stage_crash"
-        spark.read.parquet(info.location).withColumn(
-            "v", F.lit("UPDATED")
-        ).write.mode("overwrite").parquet(staging)
-        store._write_pending(info.location, staging, matched)
-
-        store._apply_pending(info.location)  # what the next write does
-        spark.sql("REFRESH TABLE `db`.`t`")
-        rows = store.read("db", "t").collect()
-        assert len(rows) == 20
-        assert all(r.v == "UPDATED" for r in rows)
-        assert not store._exists(staging)
-        assert not store._exists(f"{info.location}/_sdls_pending.json")
-
-    def test_crash_after_movein_before_delete(self, spark, store):
-        """Simulate: staged files moved in, crash before originals
-        were deleted → duplicates visible; recovery deletes them."""
-        info = self._setup(spark, store)
-        originals = store._list_data_files(info.location)
-        staging = f"{info.location}__stage_crash"
-        spark.read.parquet(info.location).withColumn(
-            "v", F.lit("UPDATED")
-        ).write.mode("overwrite").parquet(staging)
-        store._write_pending(info.location, staging, originals)
-        store._move_files_into(staging, info.location)
-        store._delete(staging)
-        # Crashed state: duplicates (old + new), marker present.
-        spark.sql("REFRESH TABLE `db`.`t`")
-        assert store.read("db", "t").count() == 40
-
-        store._apply_pending(info.location)
-        spark.sql("REFRESH TABLE `db`.`t`")
-        rows = store.read("db", "t").collect()
-        assert len(rows) == 20
-        assert all(r.v == "UPDATED" for r in rows)
-
     def test_merge_heals_prior_crash(self, spark, store):
         """A real merge on a table with a pending marker rolls the
         crashed commit forward before computing its own COW set."""
@@ -181,7 +138,7 @@ class TestCommitRecovery:
         spark.read.parquet(info.location).write.mode("overwrite").parquet(
             staging
         )
-        store._write_pending(info.location, staging, originals)
+        store._write_pending(info, staging, originals, {})
 
         updates = spark.createDataFrame([(0, "Z")], ["k", "v"])
         store.merge("db", "t", updates, ["k"])
@@ -194,13 +151,165 @@ class TestCommitRecovery:
         info = store.info("db", "t")
         staging = f"{info.location}__stage_leftover"
         spark.range(1).write.parquet(staging)
-        from serverless_data_lake_spark.catalog import TableInfo
-        store._write_meta(
-            TableInfo("db", "t__stage_leftover", staging,
-                      spark.range(1).schema, [])
+        store._write_json(
+            f"{staging}/_sdls_meta.json",
+            {"schema": spark.range(1).schema.json()},
         )
         names = {i.name for i in store.register_all()}
         assert names == {"t"}
+
+
+class _FaultyFs:
+    """A Hadoop FileSystem whose mutating calls are counted, and the
+    ``fail_at``-th one raises instead of running: a crash at exactly
+    that point of a commit."""
+
+    MUTATING = ("create", "rename", "delete", "mkdirs")
+
+    def __init__(self, fs, state):
+        self._fs, self._state = fs, state
+
+    def __getattr__(self, name):
+        attr = getattr(self._fs, name)
+        if name not in self.MUTATING:
+            return attr
+
+        def call(*args):
+            self._state["n"] += 1
+            if self._state["n"] == self._state["fail_at"]:
+                raise _Crash(f"{name} #{self._state['n']}")
+            return attr(*args)
+
+        return call
+
+
+class _Crash(Exception):
+    pass
+
+
+def _faulty(store, fail_at=0):
+    """Route the store's filesystem helpers through ``_FaultyFs``;
+    returns the call counter (``fail_at=0`` never fails)."""
+    state = {"n": 0, "fail_at": fail_at}
+    real = store._fs
+    store._fs = lambda path: _FaultyFs(real(path), state)
+    return state
+
+
+class TestCommitFaultInjection:
+    """A crash at every filesystem step of one commit: after a fresh
+    store's ``register_all`` and one no-op write, the table holds
+    exactly its pre-write or its post-write state — rows, schema,
+    partition list and file count — and its zone maps cover every
+    live file."""
+
+    def _frame(self, spark, lo, hi, tag):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") % 2).alias("p"),
+            F.lit(tag).alias("v"),
+        ).coalesce(1)
+
+    def _flat(self, spark):
+        return lambda store: store.create_or_replace(
+            "db", "t", self._frame(spark, 0, 10, "a"), ["k"]
+        )
+
+    def _state(self, spark, root):
+        store = TableStore(spark, LakeConfig(root=root))
+        info = store.info("db", "t")
+        if info is None:
+            return None
+        df = store.read("db", "t")
+        rows = sorted(repr(sorted(r.asDict().items())) for r in df.collect())
+        live = {rel for _, rel, _ in store._walk_data_files(info.location)}
+        assert set(store._load_file_stats(info.location)) == live
+        return rows, df.schema.simpleString(), info.partition_by, len(live)
+
+    def _noop_write(self, spark, root):
+        """Upsert one stored row unchanged."""
+        store = TableStore(spark, LakeConfig(root=root))
+        if store.info("db", "t") is None:
+            return
+        df = store.read("db", "t")
+        row = spark.createDataFrame([df.first()], df.schema)
+        store.merge("db", "t", row, ["k"])
+
+    def _check(self, spark, tmp_path, setup, write):
+        template = str(tmp_path / "template")
+        os.makedirs(template)
+        setup(TableStore(spark, LakeConfig(root=template)))
+        pre = self._state(spark, template)
+
+        def run(name, fail_at):
+            root = str(tmp_path / name)
+            shutil.copytree(template, root)
+            store = TableStore(spark, LakeConfig(root=root))
+            calls = _faulty(store, fail_at)
+            if fail_at:
+                with pytest.raises(_Crash):
+                    write(store)
+            else:
+                write(store)
+            return root, calls["n"]
+
+        root, n_calls = run("clean", 0)
+        post = self._state(spark, root)
+        assert pre != post and n_calls >= 4
+        for k in range(1, n_calls + 1):
+            root, _ = run(f"crash{k}", k)
+            TableStore(spark, LakeConfig(root=root)).register_all()
+            assert not os.path.exists(
+                f"{root}/warehouse/db/t/_sdls_pending.json"
+            )
+            got = self._state(spark, root)
+            assert got in (pre, post), f"crash at mutating call {k}"
+            self._noop_write(spark, root)
+            # The no-op write may rewrite a file, not change the table.
+            after = self._state(spark, root)
+            assert (after and after[:3]) == (got and got[:3]), (
+                f"crash at mutating call {k}"
+            )
+
+    def test_merge_widening_schema(self, spark, tmp_path):
+        def write(store):
+            batch = self._frame(spark, 5, 15, "b").withColumn(
+                "w", F.col("k") * 10
+            )
+            store.merge("db", "t", batch, ["k"])
+
+        self._check(spark, tmp_path, self._flat(spark), write)
+
+    def test_append(self, spark, tmp_path):
+        def write(store):
+            store.append("db", "t", self._frame(spark, 20, 30, "b"))
+
+        self._check(spark, tmp_path, self._flat(spark), write)
+
+    def test_replace_flat_with_partitioned(self, spark, tmp_path):
+        def write(store):
+            store.create_or_replace(
+                "db", "t", self._frame(spark, 5, 15, "b"), ["k"], ["p"]
+            )
+
+        self._check(spark, tmp_path, self._flat(spark), write)
+
+    def test_create_new_table(self, spark, tmp_path):
+        def write(store):
+            store.create_or_replace(
+                "db", "t", self._frame(spark, 0, 10, "a"), ["k"], ["p"]
+            )
+
+        self._check(spark, tmp_path, lambda store: None, write)
+
+    def test_compact(self, spark, tmp_path):
+        def setup(store):
+            self._flat(spark)(store)
+            store.append("db", "t", self._frame(spark, 10, 20, "b"))
+
+        def write(store):
+            assert store.compact("db", "t") == 2
+
+        self._check(spark, tmp_path, setup, write)
 
 
 class TestZoneMaps:

@@ -145,6 +145,40 @@ class TestPartitionedMerge:
         rows = {r.id: r.v for r in store.read("d_gold", "t").collect()}
         assert rows[1] == -1 and rows[5] == -5 and len(rows) == 100
 
+    def test_merge_finds_keys_in_same_named_partition_files(
+        self, spark, store
+    ):
+        # One task writes every partition under the same file name;
+        # each file's zone map must still be its own, or a matched
+        # key's file is pruned and the key duplicated.
+        df = spark.range(30).select(
+            F.col("id"), (F.col("id") / 10).cast("long").alias("p"),
+            F.col("id").alias("v"),
+        ).coalesce(1)
+        info = store.create_or_replace("d_gold", "t", df, ["id"], ["p"])
+        stats = store._load_file_stats(info.location)
+        assert sorted(stats.values()) == [[0, 9], [10, 19], [20, 29]]
+        src = spark.createDataFrame([(5, 0, -5)], "id long, p long, v long")
+        store.merge("d_gold", "t", src, ["id"])
+        rows = {r.id: r.v for r in store.read("d_gold", "t").collect()}
+        assert store.read("d_gold", "t").count() == 30 and rows[5] == -5
+
+    def test_merge_partition_value_needing_escape(self, spark, store):
+        # Partition dirs such as "p=a b" and "p=c%2Fd": the matched
+        # file is found, rewritten and removed.
+        df = spark.createDataFrame(
+            [(1, "a b", 1), (2, "c/d", 2)], "id long, p string, v long"
+        ).coalesce(1)
+        store.create_or_replace("d_gold", "t", df, ["id"], ["p"])
+        src = spark.createDataFrame(
+            [(1, "a b", -1), (2, "c/d", -2)], "id long, p string, v long"
+        )
+        store.merge("d_gold", "t", src, ["id"])
+        got = sorted(
+            (r.id, r.p, r.v) for r in store.read("d_gold", "t").collect()
+        )
+        assert got == [(1, "a b", -1), (2, "c/d", -2)]
+
     def test_merge_schema_evolution(self, spark, store):
         store.create_or_replace("d_gold", "t", _base(spark), ["id"], ["p"])
         src = spark.createDataFrame(
@@ -294,50 +328,6 @@ class TestSilverPartitioning:
         assert lake.registry.get("iot", "readings").partition_by == [
             "region"
         ]
-
-
-class TestPartitionedCommitRecovery:
-    """The journalled commit must roll forward through partition
-    subdirectories: staged files move into their partition dirs, and
-    journalled deletes inside partitions are applied."""
-
-    def test_crash_after_marker_before_movein(self, spark, store):
-        store.create_or_replace("d_gold", "t", _base(spark), ["id"], ["p"])
-        info = store.info("d_gold", "t")
-        # Crashed partitioned merge: staging holds a rewritten p=1
-        # (values negated), marker lists the current p=1 files.
-        matched = [
-            f
-            for f in store._list_data_files(info.location)
-            if "/p=1/" in f
-        ]
-        assert matched
-        staging = f"{info.location}__stage_crash"
-        (
-            spark.read.option("basePath", info.location)
-            .parquet(*matched)
-            .withColumn("v", F.lit(-1).cast("long"))
-            .write.partitionBy("p")
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        store._write_pending(info.location, staging, matched)
-
-        store._apply_pending(info.location)  # next write's first act
-        spark.sql("REFRESH TABLE `d_gold`.`t`")
-        t = store.read("d_gold", "t")
-        assert t.count() == 100
-        # p=1 rows carry the staged update; everything else intact.
-        assert t.filter(F.col("p") == 1).agg(
-            F.sum("v")
-        ).first()[0] == -25
-        assert not store._exists(staging)
-        assert not store._exists(f"{info.location}/_sdls_pending.json")
-        # Every data file still lives inside a partition directory —
-        # the roll-forward preserved relative paths rather than
-        # flattening staged files into the table root.
-        files = store._list_data_files(info.location)
-        assert files and all("/p=" in f for f in files)
 
 
 class TestIvfCellPartitionedStorage:
