@@ -27,6 +27,7 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -762,8 +763,8 @@ def _q_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The returned pair set is persisted: it is the published
     output of this pipeline stage, and ``dedup_corpus_survivors``
     consumes exactly this pair set downstream (a production dedup
-    computes pairs once, not once per consumer). Disclosed in
-    bench.py and docs/bench.md: within one bench rep this entry pays
+    computes pairs once, not once per consumer). Declared by that
+    entry's ``consumes``: within one bench rep this entry pays
     the pair computation and the corpus-dedup entry pays closure +
     anti-join on top of it; caches are cleared at rep boundaries.
 
@@ -1725,10 +1726,6 @@ FROM embeddings WHERE vec_id < 5
 """
 
 
-_TOP_TOKENS_FN = _engine_query(_TOKENS_SPARK)
-_JSON_SHIMS_FN = _engine_query(_JSON_SHIMS_SPARK)
-
-
 #: The ten sources lumped into one oversized 'web' origin for the
 #: mixing entry — makes the rebalance fixed point bite (web holds
 #: half the corpus; everything else stays under the cap).
@@ -1870,9 +1867,9 @@ def _q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # job; scoring is then a shuffle-free Arrow map pass instead of
     # the r9 explode + three joins + groupBy (4 exchanges of
     # corpus-proportional bigram rows). In-row == join-path semantics
-    # pinned in tests/test_lm.py. bench.py folds this entry's
-    # construct (the training job) into its headline (EAGER_CONSTRUCT)
-    # since the oracle trains inside its own measured time.
+    # pinned in tests/test_lm.py. The entry is ``eager_construct``:
+    # the bench folds the training job into its headline, since the
+    # oracle trains inside its own measured time.
     loc = train_bigram_lm_local(docs.filter(F.col("doc_id") % 20 == 0))
     scored = perplexity_score_inrow(docs, "doc_id", loc)
     av = F.round(F.col("avg_logp"), 6)
@@ -2360,9 +2357,8 @@ def _q_sketch_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # positive so floor(+0.5) == HALF_UP). If a tdigest row ever
     # reads red at a new scale, triage as input ULP drift at a 6-dp
     # boundary FIRST (see docs/scale.md). The collects are eager
-    # work at construction — this entry is in bench.py's
-    # EAGER_CONSTRUCT set, so the cost stays inside its reported
-    # seconds.
+    # work at construction — this entry is ``eager_construct``, so
+    # the cost stays inside its reported seconds.
     import math
     from concurrent.futures import ThreadPoolExecutor
 
@@ -2600,8 +2596,8 @@ def _decont_stream_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Slices (train %10, test %3 of the decontaminate entry's 1/17
     split; the test slice doubles as the scrub REFERENCE corpus)
     bound the work. The stream runs EAGERLY here — a streaming query
-    has no lazy form — so ``sketch_quality_gates`` is in bench.py's
-    EAGER_CONSTRUCT set: the oracle pays its anti-join inside
+    has no lazy form — so ``sketch_quality_gates`` is
+    ``eager_construct``: the oracle pays its anti-join inside
     measured time, so the Spark side must too (the r5-advisory
     symmetry rule). Multi-micro-batch ordering/idempotence stays
     covered by tests/test_decontaminate_stream.py and the fanout
@@ -3549,141 +3545,124 @@ def entry(spark: SparkSession) -> DataFrame:
     return engine.dataframe(_Q5)
 
 
+@dataclass(frozen=True)
+class Entry:
+    """One graded entry: the only place its facts are declared.
+
+    ``ENTRIES`` order is the bench and oracle run order. Flags:
+
+    - ``eager_construct``: the Spark side does work at construction
+      that the DuckDB oracle pays inside its measured query, so the
+      bench folds construct seconds into the entry's reported seconds
+      (the same work is timed on both sides);
+    - ``gate``: the oracle is a literal SELECT (a deterministic gate)
+      that does none of the work, so like-for-like ratios exclude it.
+      FROZEN at five members since r6, append-only with judge
+      sign-off: reclassifying must never become a dial on the ratio;
+    - ``floor``: a sub-second relational entry left out of the
+      perf-weak set as pure per-query scheduling floor (while it
+      stays under 1 s);
+    - ``consumes``: entries whose persisted result this entry reads
+      within one bench rep; they run first and caches clear only at
+      rep boundaries, on both engines.
+    """
+
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str
+    eager_construct: bool = False
+    gate: bool = False
+    floor: bool = False
+    consumes: tuple[str, ...] = ()
+
+
+ENTRIES: tuple[Entry, ...] = (
+    Entry("q1_pricing_summary", _engine_query(_Q1), _strip(_Q1), floor=True),
+    Entry("q3_top_revenue_orders", _engine_query(_Q3), _strip(_Q3),
+          floor=True),
+    Entry("q5_nation_revenue", _engine_query(_Q5), _strip(_Q5), floor=True),
+    Entry("cross_join_counts", _engine_query(_CROSS), _strip(_CROSS)),
+    Entry("window_top3_orders", _engine_query(_WINDOW_TOP3),
+          _strip(_WINDOW_TOP3)),
+    Entry("qualify_top_order", _engine_query(_QUALIFY), _strip(_QUALIFY)),
+    Entry("cte_semi_anti", _engine_query(_CTE_SEMI_ANTI),
+          _strip(_CTE_SEMI_ANTI)),
+    Entry("rollup_cube_order_stats", _engine_query(_ROLLUP_CUBE),
+          _strip(_ROLLUP_CUBE)),
+    Entry("count_distinct_segments", _engine_query(_COUNT_DISTINCT),
+          _strip(_COUNT_DISTINCT)),
+    Entry("monthly_revenue", _engine_query(_DATE_TRUNC), _strip(_DATE_TRUNC)),
+    # exact top-k baselines + kmeans training are memoized at
+    # construction; the oracle re-pays those scans every rep
+    Entry("ann_topk_gates", _q_ann_gates, _ANN_GATES_ORACLE,
+          eager_construct=True, gate=True),
+    Entry("nonequi_price_pairs", _engine_query(_NONEQUI), _strip(_NONEQUI)),
+    # quantile sketch + per-bucket micro-collect at construction
+    Entry("pack_sequences", _q_pack_sequences, _PACK_ORACLE,
+          eager_construct=True),
+    Entry("list_agg_segments", _engine_query(_LIST_AGG_SPARK),
+          _LIST_AGG_ORACLE),
+    Entry("dialect_text_funcs", _engine_query(_DIALECT_TEXT_SPARK),
+          _DIALECT_TEXT_ORACLE),
+    Entry("top_tokens", _engine_query(_TOKENS_SPARK), _TOKENS_ORACLE),
+    Entry("json_dialect_shims", _engine_query(_JSON_SHIMS_SPARK),
+          _JSON_SHIMS_ORACLE),
+    Entry("tumbling_window_counts", _q_tumbling_windows, _TUMBLING_ORACLE),
+    Entry("merge_upsert_endstate", _q_merge_endstate, _MERGE_ENDSTATE_ORACLE),
+    Entry("partitioned_merge_endstate", _q_partitioned_merge,
+          _PARTITIONED_MERGE_ORACLE),
+    Entry("bucketed_join_revenue", _q_bucketed_join, _BUCKETED_JOIN_ORACLE),
+    Entry("profile_orders", _q_profile, _profile_oracle()),
+    # the decontamination stream runs at construction (no lazy form)
+    Entry("sketch_quality_gates", _q_sketch_gates, _sketch_gates_oracle(),
+          eager_construct=True, gate=True),
+    Entry("chunk_documents", _q_chunk_documents, _CHUNK_ORACLE),
+    Entry("repetition_stats", _q_repetition, _REPETITION_ORACLE),
+    Entry("interval_join_attribution", _q_interval_join,
+          _INTERVAL_JOIN_ORACLE),
+    Entry("sampling_and_splits", _q_sampling_splits, _SAMPLING_SPLITS_ORACLE),
+    Entry("sessionize_events", _q_sessionize, _SESSIONIZE_ORACLE),
+    Entry("salted_aggregate_events", _q_salted_agg, _SALTED_AGG_ORACLE),
+    Entry("redact_pii", _q_redact_pii, _REDACT_ORACLE),
+    Entry("dedup_first_event_per_user", _q_dedup_events,
+          _DEDUP_EVENTS_ORACLE),
+    Entry("dedup_exact_documents", _q_dedup_exact, _DEDUP_EXACT_ORACLE),
+    Entry("ngram_jaccard_pairs", _q_jaccard, _JACCARD_ORACLE),
+    Entry("ngram_jaccard_capped", _q_jaccard_capped, _JACCARD_ORACLE),
+    Entry("ngram_jaccard_prefix", _q_jaccard_prefix, _JACCARD_ORACLE),
+    Entry("minhash_lsh_pairs", _q_minhash, _MINHASH_TWO_LEG_ORACLE),
+    Entry("simhash_hamming_histogram", _q_simhash, _SIMHASH_GATE_ORACLE,
+          gate=True),
+    # the connected-components closure runs at construction; the
+    # oracle's recursive CTE pays it in measured time
+    Entry("dedup_corpus_survivors", _q_dedup_corpus, _dedup_corpus_oracle(),
+          eager_construct=True, consumes=("ngram_jaccard_pairs",)),
+    Entry("decontaminate_train", _q_decontaminate, _DECONTAMINATE_ORACLE),
+    Entry("exact_substring_dedup", _q_substring_dedup,
+          _strip(_SUBSTRING_DEDUP_ORACLE)),
+    Entry("bronze_jsonl_scan", _q_bronze_scan, _BRONZE_SCAN_ORACLE),
+    Entry("embedding_similarity_pairs", _q_cosine_pairs,
+          _COSINE_PAIRS_ORACLE),
+    Entry("cosine_topk", _q_cosine_topk, _COSINE_TOPK_ORACLE),
+    Entry("text_analysis", _q_text_analysis, _text_analysis_oracle()),
+    Entry("multimodal_features", _q_multimodal, _MULTIMODAL_GATE_ORACLE,
+          gate=True),
+    Entry("semantic_dedup_gate", _q_semantic_dedup,
+          _SEMANTIC_DEDUP_GATE_ORACLE, gate=True),
+    Entry("multimodal_metadata_stats", _q_multimodal_metadata,
+          _MULTIMODAL_META_ORACLE),
+    # the bigram-LM training collect runs at construction
+    Entry("lm_perplexity", _q_lm_perplexity, _LM_PERPLEXITY_ORACLE,
+          eager_construct=True),
+    Entry("mixing_controls", _q_mixing_controls, _mixing_oracle()),
+    Entry("star_replace_orders", _engine_query(_STAR_REPLACE),
+          _strip(_STAR_REPLACE)),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # Relational surface (engine path: validate→rewrite→transpile)
-        "q1_pricing_summary": _engine_query(_Q1),
-        "q3_top_revenue_orders": _engine_query(_Q3),
-        "q5_nation_revenue": _engine_query(_Q5),
-        "cross_join_counts": _engine_query(_CROSS),
-        "window_top3_orders": _engine_query(_WINDOW_TOP3),
-        "qualify_top_order": _engine_query(_QUALIFY),
-        "cte_semi_anti": _engine_query(_CTE_SEMI_ANTI),
-        "rollup_cube_order_stats": _engine_query(_ROLLUP_CUBE),
-        "count_distinct_segments": _engine_query(_COUNT_DISTINCT),
-        "monthly_revenue": _engine_query(_DATE_TRUNC),
-        "top_tokens": _TOP_TOKENS_FN,
-        "json_dialect_shims": _JSON_SHIMS_FN,
-        "dialect_text_funcs": _engine_query(_DIALECT_TEXT_SPARK),
-        "list_agg_segments": _engine_query(_LIST_AGG_SPARK),
-        "lm_perplexity": _q_lm_perplexity,
-        "mixing_controls": _q_mixing_controls,
-        "star_replace_orders": _engine_query(_STAR_REPLACE),
-        "nonequi_price_pairs": _engine_query(_NONEQUI),
-        "pack_sequences": _q_pack_sequences,
-        # Pipeline / training-data operators
-        "tumbling_window_counts": _q_tumbling_windows,
-        "merge_upsert_endstate": _q_merge_endstate,
-        "partitioned_merge_endstate": _q_partitioned_merge,
-        "bucketed_join_revenue": _q_bucketed_join,
-        "profile_orders": _q_profile,
-        "sketch_quality_gates": _q_sketch_gates,
-        "chunk_documents": _q_chunk_documents,
-        "repetition_stats": _q_repetition,
-        "interval_join_attribution": _q_interval_join,
-        "sampling_and_splits": _q_sampling_splits,
-        "sessionize_events": _q_sessionize,
-        "salted_aggregate_events": _q_salted_agg,
-        "redact_pii": _q_redact_pii,
-        "dedup_first_event_per_user": _q_dedup_events,
-        "dedup_exact_documents": _q_dedup_exact,
-        "ngram_jaccard_pairs": _q_jaccard,
-        "ngram_jaccard_capped": _q_jaccard_capped,
-        "ngram_jaccard_prefix": _q_jaccard_prefix,
-        "minhash_lsh_pairs": _q_minhash,
-        "embedding_similarity_pairs": _q_cosine_pairs,
-        "cosine_topk": _q_cosine_topk,
-        # lsh/ivf recall gates consolidated into one entry (r6 —
-        # freed the window slot exact_substring_dedup occupies).
-        "ann_topk_gates": _q_ann_gates,
-        "text_analysis": _q_text_analysis,
-        "multimodal_metadata_stats": _q_multimodal_metadata,
-        # r6 rename (r4 advisory): the entry emits a Hamming-distance
-        # histogram, not pairs — named accordingly now. The old key
-        # survives below as a rows-only alias.
-        "simhash_hamming_histogram": _q_simhash,
-        "dedup_corpus_survivors": _q_dedup_corpus,
-        "bronze_jsonl_scan": _q_bronze_scan,
-        "decontaminate_train": _q_decontaminate,
-        "exact_substring_dedup": _q_substring_dedup,
-        "multimodal_features": _q_multimodal,
-        "semantic_dedup_gate": _q_semantic_dedup,
-        # simhash_near_duplicates = round-over-round continuity alias
-        # for simhash_hamming_histogram (r4 advisory rename; same
-        # callable, same pinned oracle — fully checked, not rows-only).
-        "simhash_near_duplicates": _q_simhash,
-        # hourly_event_windows = continuity alias for the merged
-        # tumbling_window_counts (r6: folded in as its 1-hour grain
-        # to free a driver-window slot for pack_sequences).
-        "hourly_event_windows": _q_tumbling_windows,
-        # Continuity alias (r7 consolidation): the lateral-UNNEST
-        # per-doc leg now lives inside top_tokens; identical callable
-        # + oracle, so parity tooling still checks it while the freed
-        # window slot carries lm_perplexity.
-        "unnest_lateral_tokens": _TOP_TOKENS_FN,
-        "from_json_unnest": _JSON_SHIMS_FN,
-    }
-    return q
+    return {e.name: e.build for e in ENTRIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "q1_pricing_summary": _strip(_Q1),
-        "q3_top_revenue_orders": _strip(_Q3),
-        "q5_nation_revenue": _strip(_Q5),
-        "cross_join_counts": _strip(_CROSS),
-        "window_top3_orders": _strip(_WINDOW_TOP3),
-        "qualify_top_order": _strip(_QUALIFY),
-        "cte_semi_anti": _strip(_CTE_SEMI_ANTI),
-        "rollup_cube_order_stats": _strip(_ROLLUP_CUBE),
-        "count_distinct_segments": _strip(_COUNT_DISTINCT),
-        "monthly_revenue": _strip(_DATE_TRUNC),
-        "top_tokens": _TOKENS_ORACLE,
-        "json_dialect_shims": _JSON_SHIMS_ORACLE,
-        "dialect_text_funcs": _DIALECT_TEXT_ORACLE,
-        "list_agg_segments": _LIST_AGG_ORACLE,
-        "lm_perplexity": _LM_PERPLEXITY_ORACLE,
-        "mixing_controls": _mixing_oracle(),
-        "star_replace_orders": _strip(_STAR_REPLACE),
-        "nonequi_price_pairs": _strip(_NONEQUI),
-        "pack_sequences": _PACK_ORACLE,
-        "tumbling_window_counts": _TUMBLING_ORACLE,
-        "merge_upsert_endstate": _MERGE_ENDSTATE_ORACLE,
-        "partitioned_merge_endstate": _PARTITIONED_MERGE_ORACLE,
-        "bucketed_join_revenue": _BUCKETED_JOIN_ORACLE,
-        "profile_orders": _profile_oracle(),
-        "sketch_quality_gates": _sketch_gates_oracle(),
-        "chunk_documents": _CHUNK_ORACLE,
-        "repetition_stats": _REPETITION_ORACLE,
-        "interval_join_attribution": _INTERVAL_JOIN_ORACLE,
-        "sampling_and_splits": _SAMPLING_SPLITS_ORACLE,
-        "sessionize_events": _SESSIONIZE_ORACLE,
-        "salted_aggregate_events": _SALTED_AGG_ORACLE,
-        "redact_pii": _REDACT_ORACLE,
-        "dedup_first_event_per_user": _DEDUP_EVENTS_ORACLE,
-        "dedup_exact_documents": _DEDUP_EXACT_ORACLE,
-        "ngram_jaccard_pairs": _JACCARD_ORACLE,
-        "ngram_jaccard_capped": _JACCARD_ORACLE,
-        "ngram_jaccard_prefix": _JACCARD_ORACLE,
-        "minhash_lsh_pairs": _MINHASH_TWO_LEG_ORACLE,
-        "embedding_similarity_pairs": _COSINE_PAIRS_ORACLE,
-        "cosine_topk": _COSINE_TOPK_ORACLE,
-        "ann_topk_gates": _ANN_GATES_ORACLE,
-        "text_analysis": _text_analysis_oracle(),
-        "multimodal_metadata_stats": _MULTIMODAL_META_ORACLE,
-        "simhash_hamming_histogram": _SIMHASH_GATE_ORACLE,
-        "dedup_corpus_survivors": _dedup_corpus_oracle(),
-        "bronze_jsonl_scan": _BRONZE_SCAN_ORACLE,
-        "decontaminate_train": _DECONTAMINATE_ORACLE,
-        "exact_substring_dedup": _strip(_SUBSTRING_DEDUP_ORACLE),
-        "multimodal_features": _MULTIMODAL_GATE_ORACLE,
-        "semantic_dedup_gate": _SEMANTIC_DEDUP_GATE_ORACLE,
-        # Continuity alias (r4 advisory rename): identical callable,
-        # identical pinned oracle as simhash_hamming_histogram.
-        "simhash_near_duplicates": _SIMHASH_GATE_ORACLE,
-        # Continuity alias (r6 merge): identical callable, identical
-        # oracle as tumbling_window_counts.
-        "hourly_event_windows": _TUMBLING_ORACLE,
-        "unnest_lateral_tokens": _TOKENS_ORACLE,
-        "from_json_unnest": _JSON_SHIMS_ORACLE,
-    }
+    return {e.name: e.oracle for e in ENTRIES}

@@ -1,14 +1,24 @@
-"""Headline benchmark.
+"""Headline benchmark, and the one timing runner every bench tool uses.
 
 Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and
-prints ONE JSON line::
+prints two JSON lines, a ``detail`` line with construct costs, then::
 
-    {"metric": "...", "value": N, "unit": "sec",
+    {"metric": "total_headline_query_seconds", "value": N, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...}, "sf": ...}
 
 Each query is forced end-to-end with a ``noop``-format write (full
 computation, no driver-side result transfer skewing the numbers).
+The queries are every entry declared in ``__spark_entry__.ENTRIES``.
+
+Usage::
+
+    python bench.py                    # every declared entry
+    python bench.py entry NAME [...]   # a subset, same code path
+
+The runner (``session``, ``warm_up``, ``run_order``, ``time_entries``,
+``fold``) is what ``tools/bench_gate.py``, ``tools/profile_stages.py``,
+``tools/capture_plans.py`` and ``tools/scale_sweep.py`` build on.
 """
 
 from __future__ import annotations
@@ -23,89 +33,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entrymod
 from serverless_data_lake_spark.session import get_spark
 
-# Every oracle-checked query plus the rows-only scale operators —
-# the full declared surface is the benchmark, no cherry-picking.
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_nation_revenue",
-    "cross_join_counts",
-    "window_top3_orders",
-    "qualify_top_order",
-    "cte_semi_anti",
-    "rollup_cube_order_stats",
-    "count_distinct_segments",
-    "monthly_revenue",
-    "ann_topk_gates",
-    "nonequi_price_pairs",
-    "pack_sequences",
-    "list_agg_segments",
-    "dialect_text_funcs",
-    "top_tokens",
-    "json_dialect_shims",
-    "tumbling_window_counts",
-    "merge_upsert_endstate",
-    "partitioned_merge_endstate",
-    "bucketed_join_revenue",
-    "profile_orders",
-    "sketch_quality_gates",
-    "chunk_documents",
-    "repetition_stats",
-    "interval_join_attribution",
-    "sampling_and_splits",
-    "sessionize_events",
-    "salted_aggregate_events",
-    "redact_pii",
-    "dedup_first_event_per_user",
-    "dedup_exact_documents",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_capped",
-    "ngram_jaccard_prefix",
-    "minhash_lsh_pairs",
-    "simhash_hamming_histogram",
-    "dedup_corpus_survivors",
-    "decontaminate_train",
-    "exact_substring_dedup",
-    "bronze_jsonl_scan",
-    "embedding_similarity_pairs",
-    "cosine_topk",
-    "text_analysis",
-    "multimodal_features",
-    "semantic_dedup_gate",
-    "multimodal_metadata_stats",
-    "lm_perplexity",
-    "mixing_controls",
-    "star_replace_orders",
-]
+# The full declared surface is the benchmark, no cherry-picking.
+BENCH_QUERIES = [e.name for e in entrymod.ENTRIES]
+EAGER_CONSTRUCT = {e.name for e in entrymod.ENTRIES if e.eager_construct}
 
-# Entries whose DuckDB oracle replays work the Spark side performs
-# EAGERLY at construction time (the connected-components closure runs
-# localCheckpoint during query construction; pack_sequences runs its
-# quantile sketch + per-bucket micro-collect). For these, construct
-# time is folded INTO the reported per-query seconds so paired
-# Spark-vs-oracle comparisons measure the same work on both sides
-# (r5 advisory: the closure was excluded from the headline while the
-# oracle's recursive CTE paid it).
-EAGER_CONSTRUCT = {
-    "dedup_corpus_survivors",
-    "pack_sequences",
-    # the bigram-LM training collect runs at construction; the
-    # oracle trains inside its measured time, so the construct
-    # belongs in the headline (r5-advisory accounting).
-    "lm_perplexity",
-    # the decontamination stream gate (r9) RUNS its streaming query
-    # at construction — a streaming query has no lazy form — and its
-    # oracle row replays the survivor count with a real anti-join in
-    # measured time, so the same accounting rule applies.
-    "sketch_quality_gates",
-    # the ANN gate memoizes its exact top-k baselines + kmeans
-    # training at construction (per applicationId, so min-of-reps
-    # would otherwise keep only the post-memo draws) while the
-    # paired oracle re-pays those scans every rep — fold construct
-    # into the reported seconds so both sides measure the same work
-    # (r11 advisory: the memo reversed the r9 eager-work rule for
-    # this entry's headline).
-    "ann_topk_gates",
+# The cached testdata copies carry ~64 row groups per file (see
+# __spark_entry__._data_path); sizing file splits down lets the scan
+# fan out across cores. At production scale the default 128m is
+# right — this matches splits to the small local files.
+SCAN_SPLIT_CONF = {
+    "spark.sql.files.maxPartitionBytes": "4m",
+    "spark.sql.files.openCostInBytes": "1m",
 }
 
 
@@ -127,90 +65,103 @@ def _host_note() -> dict:
     return note
 
 
-def main() -> None:
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def session(app_name: str = "sdls-bench", **kwargs):
+    """The bench session: ``get_spark`` plus the scan-split sizing."""
+    spark = get_spark(app_name=app_name, extra_conf=SCAN_SPLIT_CONF, **kwargs)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def run_order(names) -> list[str]:
+    """``names`` plus the entries they consume, in declared order —
+    which puts every publisher before its consumers."""
+    known = {e.name: e for e in entrymod.ENTRIES}
+    unknown = [n for n in names if n not in known]
+    if unknown:
+        raise SystemExit(f"unknown entries: {unknown}")
+    wanted = set(names).union(*(known[n].consumes for n in names))
+    return [e.name for e in entrymod.ENTRIES if e.name in wanted]
+
+
+def main(argv: list[str]) -> None:
     host_note = _host_note()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    spark = get_spark(
-        app_name="sdls-bench",
-        extra_conf={
-            # The cached testdata copies carry ~64 row groups per file
-            # (see __spark_entry__._data_path); sizing file splits
-            # down lets the scan fan out across cores. At production
-            # scale the default 128m is right — this matches splits
-            # to the small local files. Env-overridable for split-size
-            # A/Bs (r15); the committed default is the measured best.
-            "spark.sql.files.maxPartitionBytes": os.environ.get(
-                "SDLS_MAX_PARTITION_BYTES", "4m"
-            ),
-            "spark.sql.files.openCostInBytes": os.environ.get(
-                "SDLS_OPEN_COST_BYTES", "1m"
-            ),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    if argv and (argv[0] != "entry" or len(argv) < 2):
+        raise SystemExit("usage: python bench.py [entry NAME ...]")
+    names = run_order(argv[1:]) if argv else BENCH_QUERIES
+    spark = session()
+    warm_up(spark, sf_dir, names)
+    # Best-of-N per query (default 2): single draws on this host
+    # carry ±30% scheduler/GC noise (r3/r4 both flagged phantom
+    # regressions that re-measurement dissolved); the minimum of two
+    # runs is the stable data-proportional cost.
+    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
+    draws, constr = time_entries(spark, sf_dir, names, reps)
+    _report(host_note, sf, reps, draws, constr)
 
-    # Warm the JVM + the parquet layout cache outside the timed
-    # region, then one UNMEASURED complex warmup query so the first
-    # measured query doesn't absorb whole-stage-codegen compilation
-    # and decimal-aggregate setup (r1: q1 paid ~4.5 s of it).
+
+def warm_up(spark, sf_dir: str, names, action=_noop) -> None:
+    """Pay one-time costs outside any timed region."""
+    # JVM + the parquet layout cache + catalog registration, then one
+    # complex query so the first measured one doesn't absorb
+    # whole-stage-codegen compilation and decimal-aggregate setup
+    # (r1: q1 paid ~4.5 s of it).
     entrymod._ensure_catalog(spark, sf_dir)
-    for t in entrymod.TABLES:
-        entrymod._data_path(sf_dir, t)
     spark.range(1000).selectExpr("sum(id)").collect()
     # Warm the Python worker pool + Arrow serialization path once:
     # workers are reused across queries (spark.python.worker.reuse),
     # so without this the first mapInPandas query measured would pay
     # the fork/import cost that every later one skips.
-    spark.range(32).repartition(1).mapInPandas(
+    _noop(spark.range(32).repartition(1).mapInPandas(
         lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-    qs_all = entrymod.queries()
-    qs_all["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    # Unmeasured warmup pass: every benched query once at a 100×
-    # smaller scale factor. Whole-stage-codegen source is
-    # scale-independent, so this compiles each query's generated
-    # stages into the Janino cache (and JIT-warms the interpreted
-    # HOF paths) for pennies of data — the measured sf0.1 loop then
-    # isolates data-proportional execution from one-time per-plan
-    # compilation (2-4 s for the widest dedup plans). Delete this
-    # loop to measure cold-start instead.
+    ))
+    qs = entrymod.queries()
+    action(qs["q1_pricing_summary"](spark, sf_dir))
+    # Every named entry once at a 100× smaller scale factor.
+    # Whole-stage-codegen source is scale-independent, so this
+    # compiles each query's generated stages into the Janino cache
+    # (and JIT-warms the interpreted HOF paths) for pennies of data —
+    # the measured loop then isolates data-proportional execution
+    # from one-time per-plan compilation (2-4 s for the widest dedup
+    # plans).
     warm_dir = os.environ.get(
         "SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001"
     )
-    if os.path.isdir(warm_dir):
-        for name in BENCH_QUERIES:
-            try:
-                qs_all[name](spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass
-            spark.catalog.clearCache()
+    if not os.path.isdir(warm_dir):
+        return
+    for name in names:
+        try:
+            action(qs[name](spark, warm_dir))
+        except Exception as exc:  # noqa: BLE001
+            # a broken entry would otherwise enter the timed reps
+            # cold, with no signal
+            print(f"WARMUP FAILED {name}: {exc!r}", file=sys.stderr)
+        spark.catalog.clearCache()
+    # re-point the catalog at the target (10 DROP+CREATE DDLs)
+    entrymod._ensure_catalog(spark, sf_dir)
 
-    # Best-of-N per query (default 2): single draws on this host
-    # carry ±30% scheduler/GC noise (r3/r4 both flagged phantom
-    # regressions that re-measurement dissolved); the minimum of two
-    # runs is the stable data-proportional cost. Reps interleave
-    # whole passes (A B C, A B C) rather than back-to-back repeats so
-    # rep 2 never reuses rep 1's OS page cache state unfairly.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
+
+def time_entries(spark, sf_dir: str, names, reps: int):
+    """Interleaved reps over ``names``: per-entry lists of execution
+    and construct seconds, one draw per rep."""
+    # Reps interleave whole passes (A B C, A B C) rather than
+    # back-to-back repeats so rep 2 never reuses rep 1's OS page
+    # cache state unfairly.
     qs = entrymod.queries()
-    draws: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}
-    constr: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}
+    draws: dict[str, list[float]] = {name: [] for name in names}
+    constr: dict[str, list[float]] = {name: [] for name in names}
     for _ in range(reps):
-        for name in BENCH_QUERIES:
+        for name in names:
             # Construction is timed SEPARATELY and disclosed: most
             # entries build a lazy plan in ~ms, but the write-path
             # end-states (ingest + merges through TableStore), the
             # IVF trainer, and the iterative connected-components
-            # closure do real eager work here. "queries"/"value"
-            # stay execution-only for round-over-round
-            # comparability; "construct"/"construct_total" carry the
-            # eager-work cost so nothing is hidden from the record.
+            # closure do real eager work here.
             c0 = time.time()
             df = qs[name](spark, sf_dir)
             started = time.time()
@@ -218,18 +169,22 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             draws[name].append(time.time() - started)
         # Hygiene at the REP boundary (untimed), not between
-        # queries: ngram_jaccard_pairs PUBLISHES its pair set
-        # (persisted result) and dedup_corpus_survivors consumes it
-        # downstream in the same rep — the pipeline shape, disclosed
-        # in both entry docstrings and docs/bench.md; clearing
-        # per-query would force the dedup entry to recompute the
-        # pairs its sibling already paid for. Persists are small
-        # (the pair set is a few hundred rows) and operators that
-        # cache large intermediates unpersist themselves
-        # (connected_components), so per-rep clearing keeps later
-        # queries untaxed without defeating the publish.
+        # queries: a publisher's persisted result (Entry.consumes)
+        # must survive until its consumer runs later in the same
+        # rep. Persists are small (the pair set is a few hundred
+        # rows) and operators that cache large intermediates
+        # unpersist themselves (connected_components), so per-rep
+        # clearing keeps later queries untaxed without defeating the
+        # publish.
         spark.catalog.clearCache()
-    timings = {
+    return draws, constr
+
+
+def fold(draws: dict, constr: dict) -> dict[str, float]:
+    """Best-of-reps seconds per entry: execution only, plus the best
+    construct for ``eager_construct`` entries, whose oracle pays that
+    work inside its measured query (the r5-advisory symmetry rule)."""
+    return {
         name: round(
             min(ts)
             + (min(constr[name]) if name in EAGER_CONSTRUCT else 0.0),
@@ -237,6 +192,14 @@ def main() -> None:
         )
         for name, ts in draws.items()
     }
+
+
+def _report(host_note: dict, sf: float, reps: int, draws, constr) -> None:
+    """Print the ``detail`` line, then the headline line."""
+    # "queries"/"value" stay execution-only (bar eager entries) for
+    # round-over-round comparability; "construct_*" carry the
+    # eager-work cost so nothing is hidden from the record.
+    timings = fold(draws, constr)
     constructs = {
         name: round(min(ts), 3)
         for name, ts in constr.items()
@@ -251,7 +214,7 @@ def main() -> None:
     # construct total plus only the top construct costs, rest summed
     # (r8 — r6/r7 tails still opened mid-dict because the full
     # construct breakdown overflowed the window). Full per-construct
-    # numbers stay available locally via tools/bench_gate.py records.
+    # numbers: ``python bench.py entry NAME ...``.
     top = dict(
         sorted(constructs.items(), key=lambda kv: -kv[1])[:6]
     )
@@ -288,4 +251,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

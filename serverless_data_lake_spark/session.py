@@ -76,26 +76,7 @@ def get_spark(
         # Dynamic partition overwrite: MERGE fallback rewrites only
         # the hash buckets touched by a batch.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # Broadcast threshold: Spark's 10 MB default, restored in r16
-        # from the r1-era 64 MB. The wide setting let a PRUNED big
-        # side slip under the bar in the mid-scale window: at sf1,
-        # q5's lineitem Project is estimated 53.6 MiB (155 MB file ×
-        # column-default ratio), so the planner broadcast a 6M-row
-        # build side whose real hash relation is ~10× the estimate —
-        # a 2.9 s driver-side build gap in the stage timeline (and a
-        # driver-memory hazard the estimate error hides; guide §3.1:
-        # "estimates are often badly wrong"). Interleaved A/B at sf1:
-        # q5 warm 3.8-5.2 s @64m vs 2.7-2.9 s @10m. At sf0.1 the
-        # normalized plan shapes of all 50 bench entries are
-        # byte-identical under either value (every estimate is
-        # already <10 MB), so the driver bench is unaffected; true
-        # dimension tables (region/nation/supplier/customer
-        # projected) stay under 10 MB at every tested SF.
-        # Env-overridable for threshold A/Bs (r16).
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SDLS_AUTOBCAST", str(10 * 1024 * 1024)),
-        )
+        # Spark's 10 MB broadcast threshold: 64 MB broadcast sf1 q5's lineitem.
         .config("spark.driver.memory", os.environ.get("SDLS_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

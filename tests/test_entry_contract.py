@@ -11,36 +11,41 @@ entry inside that window.
 
 from __future__ import annotations
 
+import hashlib
+import json
+from pathlib import Path
+
 import __spark_entry__ as entrymod
 
+REPO = Path(__file__).resolve().parent.parent
 DRIVER_WINDOW = 50
+#: sha256 of ``json.dumps(oracle_sql(), sort_keys=True)``.
+ORACLE_DIGEST = (
+    "9cde1dccdde367c612e369cf9fa9b7803aac282fecd5ce01dada7768897d6631"
+)
 
 
 def test_every_unique_oracle_entry_inside_driver_window():
     # An entry past position 50 gets NO correctness row at all (r02
-    # showed the driver drops them, not even rows-only), so every
-    # UNIQUE oracle-checked entry must sit inside the window. Beyond
-    # the window, only continuity aliases are allowed — same callable
-    # AND same oracle text as an in-window entry, so local tooling
-    # (tools/parity_check.py) still fully checks them while the
-    # driver loses nothing it would otherwise record.
-    qs = entrymod.queries()
-    names = list(qs)
+    # showed the driver drops them, not even rows-only), so the
+    # registry holds at most 50 entries, each declared once (a
+    # repeated name would silently collapse in the queries() dict).
+    names = [e.name for e in entrymod.ENTRIES]
+    assert len(names) <= DRIVER_WINDOW
+    assert len(set(names)) == len(names), "entry declared twice"
+
+
+def test_registry_is_the_graded_set_with_pinned_oracles():
+    """The registry is exactly the graded key set, and the oracle
+    texts are byte-identical to the graded ones: an intended oracle
+    change must update ``ORACLE_DIGEST`` too."""
+    graded = json.loads((REPO / "CORRECTNESS_r16.json").read_text())
     oracles = entrymod.oracle_sql()
-    window = names[:DRIVER_WINDOW]
-    wset = set(window)
-    for n in names:
-        if n in wset:
-            continue
-        twins = [
-            m
-            for m in window
-            if qs[m] is qs[n] and oracles.get(m) == oracles.get(n)
-        ]
-        assert twins, (
-            f"registry entry outside the driver's {DRIVER_WINDOW}-row "
-            f"window is not an alias of an in-window entry: {n}"
-        )
+    assert set(entrymod.queries()) == set(oracles) == set(graded)
+    digest = hashlib.sha256(
+        json.dumps(oracles, sort_keys=True).encode()
+    ).hexdigest()
+    assert digest == ORACLE_DIGEST
 
 
 def test_rows_only_entries_come_last():
@@ -121,14 +126,12 @@ def test_planted_complex_column_fails_local_canonicalizer():
 
 def test_bench_eager_construct_accounting_contract():
     """Entries whose DuckDB oracle replays work the Spark side does
-    at CONSTRUCTION time must stay in bench.py's EAGER_CONSTRUCT set
-    (the r5-advisory symmetry rule) — dropping one silently flatters
-    the paired ratio. The set is pinned here with the reason each
-    member qualifies; removing an entry requires removing the eager
-    work too."""
-    import importlib
-
-    bench = importlib.import_module("bench")
+    at CONSTRUCTION time must stay ``eager_construct`` (the
+    r5-advisory symmetry rule) — dropping one silently flatters the
+    paired ratio. The set is pinned here with the reason each member
+    qualifies; removing an entry requires removing the eager work
+    too. Publishers must precede their consumers in the declared
+    order, which is the bench and oracle run order."""
     must_fold = {
         # iterative connected-components closure runs eagerly; the
         # oracle's recursive CTE pays it in measured time
@@ -144,10 +147,35 @@ def test_bench_eager_construct_accounting_contract():
         # fingerprint with a real anti-join
         "sketch_quality_gates",
     }
-    assert must_fold <= bench.EAGER_CONSTRUCT, (
-        "bench.py EAGER_CONSTRUCT lost a member whose oracle pays "
-        f"construct-time work: {sorted(must_fold - bench.EAGER_CONSTRUCT)}"
+    eager = {e.name for e in entrymod.ENTRIES if e.eager_construct}
+    assert must_fold <= eager, (
+        "eager_construct lost a member whose oracle pays "
+        f"construct-time work: {sorted(must_fold - eager)}"
     )
+    pos = {e.name: i for i, e in enumerate(entrymod.ENTRIES)}
+    for e in entrymod.ENTRIES:
+        for pub in e.consumes:
+            assert pos[pub] < pos[e.name], (pub, e.name)
+
+
+def test_bench_runner_fold_and_order():
+    """bench.py's per-entry fold: best-of-reps execution seconds,
+    plus best construct seconds only for ``eager_construct`` entries;
+    a subset runs its publishers first, in declared order."""
+    import bench
+
+    draws = {"pack_sequences": [1.0, 0.8], "merge_upsert_endstate": [0.4]}
+    constr = {"pack_sequences": [0.3, 0.2], "merge_upsert_endstate": [1.9]}
+    assert bench.fold(draws, constr) == {
+        "pack_sequences": 1.0,
+        "merge_upsert_endstate": 0.4,
+    }
+    subset = ["dedup_corpus_survivors", "q1_pricing_summary"]
+    assert bench.run_order(subset) == [
+        "q1_pricing_summary",
+        "ngram_jaccard_pairs",
+        "dedup_corpus_survivors",
+    ]
 
 
 def test_minhash_entry_recycles_persisted_index(spark):

@@ -1,10 +1,11 @@
 """Per-entry bench regression gate — run BEFORE committing any
 change that touches a bench entry's plan.
 
-Times the named entries exactly as bench.py does (noop-format write,
-best of N reps, bench session config incl. the small-file split
-sizing and rep-boundary cache clears) and compares each against the
-last recorded sitting (the newest ``BENCH_r*.json`` with a parsed
+Times the named entries through bench.py's runner (bench session
+conf, warm-up, interleaved noop reps with rep-boundary cache clears,
+best of N, construct folded in only for ``eager_construct`` entries —
+the accounting the recorded figures use) and compares each against
+the last recorded sitting (the newest ``BENCH_r*.json`` with a parsed
 ``queries`` dict, or ``--baseline <file>``). An entry fails the gate
 when it is more than ``--factor`` (default 3×) slower than its
 recorded value — the ``repetition_stats`` class of regression (r6:
@@ -24,6 +25,10 @@ Usage:
 
 Exit code 1 when any entry fails (or is missing from the baseline —
 new entries should be recorded with a full bench run first).
+
+A consumer's publisher (``Entry.consumes``) is run ahead of it, as in
+the recorded sitting, so the consumer does not recompute the
+publisher's work inside its own measured time.
 """
 
 from __future__ import annotations
@@ -34,23 +39,10 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod  # noqa: E402
-from serverless_data_lake_spark.session import get_spark  # noqa: E402
-
-#: Entries whose recorded bench time assumes another entry's
-#: persisted result is already cached within the rep (the disclosed
-#: publish/consume pipeline shape — docs/bench.md). Gating a
-#: consumer standalone would recompute the publisher's work inside
-#: its own measured time and spuriously fail the ±factor gate
-#: (r8 advisory), so the publisher is auto-included (and run FIRST)
-#: whenever a consumer is gated without it.
-CONSUMES: dict[str, tuple[str, ...]] = {
-    "dedup_corpus_survivors": ("ngram_jaccard_pairs",),
-}
+import bench  # noqa: E402
 
 
 def latest_baseline(repo_root: str) -> tuple[str, dict[str, float]]:
@@ -104,69 +96,30 @@ def main() -> int:
     else:
         base_path, baseline = latest_baseline(repo_root)
 
-    qs = entrymod.queries()
-    unknown = [e for e in args.entries if e not in qs]
-    if unknown:
-        raise SystemExit(f"unknown entries: {unknown}")
-
-    # Auto-include publishers ahead of their consumers so the gated
-    # consumer times what its baseline recorded (closure + anti-join
-    # on cached pairs, not a standalone pair recompute).
-    run_order: list[str] = []
-    for e in args.entries:
-        for pub in CONSUMES.get(e, ()):
-            if pub not in run_order:
-                run_order.append(pub)
-                if pub not in args.entries:
-                    print(
-                        f"note: running publisher {pub} ahead of {e} "
-                        "(recorded baseline assumes its persisted "
-                        "result is cached in-rep)"
-                    )
-        if e not in run_order:
-            run_order.append(e)
-
-    spark = get_spark(
-        app_name="sdls-bench-gate",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.files.openCostInBytes": "1m",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    entrymod._ensure_catalog(spark, args.sf_dir)  # noqa: SLF001
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    # Unmeasured warmup (codegen + python workers), mirroring bench.py.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for name in run_order:
-        noop(qs[name](spark, args.sf_dir))
-    spark.catalog.clearCache()
-
-    draws: dict[str, list[float]] = {n: [] for n in run_order}
-    for _ in range(args.reps):
-        for name in run_order:
-            t0 = time.time()
-            noop(qs[name](spark, args.sf_dir))
-            draws[name].append(time.time() - t0)
-        spark.catalog.clearCache()
+    order = bench.run_order(args.entries)
+    for pub in sorted(set(order) - set(args.entries)):
+        print(
+            f"note: running publisher {pub} ahead of its consumer "
+            "(recorded baseline assumes its persisted result is "
+            "cached in-rep)"
+        )
+    spark = bench.session(app_name="sdls-bench-gate")
+    bench.warm_up(spark, args.sf_dir, order)
+    now = bench.fold(*bench.time_entries(spark, args.sf_dir, order, args.reps))
 
     failures = 0
     for name in args.entries:
-        now = min(draws[name])
         ref = baseline.get(name)
         if ref is None:
             print(f"FAIL {name}: no baseline in {os.path.basename(base_path)}")
             failures += 1
             continue
-        ratio = now / ref if ref > 0 else float("inf")
+        ratio = now[name] / ref if ref > 0 else float("inf")
         status = "OK  " if ratio <= args.factor else "FAIL"
         if status == "FAIL":
             failures += 1
         print(
-            f"{status} {name}: {now:.3f}s vs recorded {ref:.3f}s "
+            f"{status} {name}: {now[name]:.3f}s vs recorded {ref:.3f}s "
             f"({ratio:.1f}x, gate {args.factor:.1f}x)"
         )
     return 1 if failures else 0

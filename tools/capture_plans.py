@@ -7,6 +7,7 @@ Usage:
 ``suffix`` is appended to each filename (``<entry>_<suffix>.txt`` —
 the round's deliverable uses ``before`` and ``after``). Defaults to
 every bench entry at /root/testdata/sf0.1.
+Plans come from bench.py's session, so scans show its split sizing.
 
 The formatted plan is the ANALYZED physical plan BEFORE execution
 (AdaptiveSparkPlan isFinalPlan=false where AQE applies); it shows
@@ -25,22 +26,20 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench as benchmod
 import __spark_entry__ as entrymod
-from serverless_data_lake_spark.session import get_spark
+import bench
 
 
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    names = sys.argv[3:] or benchmod.BENCH_QUERIES
+    names = sys.argv[3:] or bench.BENCH_QUERIES
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans", os.environ.get("SDLS_PLANS_ROUND", "r16"),
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="sdls-capture-plans")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.session(app_name="sdls-capture-plans")
     qs = entrymod.queries()
     for name in names:
         df = qs[name](spark, sf_dir)

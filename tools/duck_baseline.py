@@ -14,7 +14,7 @@ files) keeps the Spark-vs-baseline ratio an apples-to-apples number
 instead of depending on who measured the oracle side and when.
 
 Caveats on interpretation (same as VERDICT r4): gate-style oracles
-(`ann_*_topk`, `sketch_quality_gates`, `simhash_near_duplicates`)
+(`ann_topk_gates`, `sketch_quality_gates`, `simhash_hamming_histogram`)
 are literal SELECTs that do none of the work, and the similarity
 oracles compute exact answers without the LSH machinery — per-query
 ratios against those overstate or understate honestly-incomparable
@@ -35,21 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-
-
-def _host_note() -> dict:
-    """Launch-load stamp, mirroring bench.py's (r14 ask #6) — the
-    paired records carry their own host-tide context."""
-    note = {"launch_load_1m": round(os.getloadavg()[0], 2)}
-    settle = os.environ.get("SDLS_SETTLE_S")
-    if settle:
-        # numeric like the load fields (r15, r14 ADVICE) — one JSON
-        # type in archived records, matching bench.py's coercion
-        try:
-            note["settle_s"] = float(settle)
-        except ValueError:
-            note["settle_s"] = settle
-    return note
+from bench import _host_note  # noqa: E402
 
 
 def main() -> None:
@@ -70,48 +56,35 @@ def main() -> None:
 
     oracles = entrymod.oracle_sql()
 
-    # Publish/consume parity with bench.py (r9, closes the r7/r8
-    # ADVICE asymmetry): on the Spark side ngram_jaccard_pairs
-    # PUBLISHES its persisted pair set within its own measured time
-    # and dedup_corpus_survivors consumes it later in the same rep,
-    # caches clearing at rep boundaries. Mirror that here: the
-    # jaccard entry's measured step ALSO materializes the pair CTE
-    # into a temp table, the survivors entry's measured step reads
-    # the materialized pairs instead of recomputing the CTE, and the
-    # table drops at the rep boundary — so neither engine's headline
-    # double-charges (or skips) the pair computation.
-    pair_cte = f"({entrymod._JACCARD_ORACLE})"
-    consume = "(SELECT id_a, id_b, jaccard FROM __published_pairs)"
-
-    def published_pairs_exist() -> bool:
-        return bool(
-            con.execute(
-                "SELECT 1 FROM information_schema.tables "
-                "WHERE table_name = '__published_pairs'"
-            ).fetchall()
-        )
+    # Publish/consume parity with bench.py (r9): a publisher
+    # (named in some entry's ``consumes``) materializes its result
+    # into a temp table inside its own measured step, and a consumer,
+    # whose oracle embeds the publisher's oracle as a subquery, reads
+    # the table instead of recomputing it. Tables drop at the rep
+    # boundary, where the Spark side clears its caches — so neither
+    # engine's headline double-charges (or skips) the shared work.
+    publishers = {p for e in entrymod.ENTRIES for p in e.consumes}
+    consumes = {e.name: e.consumes for e in entrymod.ENTRIES}
+    published: set[str] = set()
 
     def run(name: str, sql: str) -> None:
-        if name == "ngram_jaccard_pairs":
+        for pub in consumes[name]:
+            if pub in published:
+                sql = sql.replace(
+                    f"({oracles[pub]})", f"(SELECT * FROM __published_{pub})", 1
+                )
+        if name in publishers:
             con.execute(
-                "CREATE OR REPLACE TEMP TABLE __published_pairs AS "
-                + sql
+                f"CREATE OR REPLACE TEMP TABLE __published_{name} AS {sql}"
             )
-            con.execute("SELECT * FROM __published_pairs").fetchall()
-        elif (
-            name == "dedup_corpus_survivors"
-            and pair_cte in sql
-            # Guard on the temp table actually existing (r10
-            # advisory): the consume branch engages on CTE-text
-            # match, so a registry reorder that runs survivors
-            # before the jaccard publish would otherwise raise on
-            # the missing table — fall back to the self-contained
-            # SQL instead (costed like any other entry).
-            and published_pairs_exist()
-        ):
-            con.execute(sql.replace(pair_cte, consume, 1)).fetchall()
-        else:
-            con.execute(sql).fetchall()
+            published.add(name)
+            sql = f"SELECT * FROM __published_{name}"
+        con.execute(sql).fetchall()
+
+    def drop_published() -> None:
+        for pub in published:
+            con.execute(f"DROP TABLE IF EXISTS __published_{pub}")
+        published.clear()
 
     draws: dict[str, list[float]] = {name: [] for name in oracles}
     # Warmup pass (parity with bench.py's unmeasured warmup): page
@@ -119,14 +92,15 @@ def main() -> None:
     for name, sql in oracles.items():
         try:
             run(name, sql)
-        except Exception:
-            pass
+        except Exception as exc:  # noqa: BLE001
+            print(f"WARMUP FAILED {name}: {exc!r}", file=sys.stderr)
+    drop_published()
     for _ in range(reps):
         for name, sql in oracles.items():
             started = time.time()
             run(name, sql)
             draws[name].append(time.time() - started)
-        con.execute("DROP TABLE IF EXISTS __published_pairs")
+        drop_published()
     timings = {name: round(min(ts), 3) for name, ts in draws.items()}
     print(
         json.dumps(

@@ -51,33 +51,16 @@ import re
 import statistics
 import sys
 
-#: Entries whose oracle is a literal SELECT (deterministic gates) —
-#: excluded in the like-for-like ratio, per the r6 verdict's method.
-#: FROZEN: this 5-entry set was fixed in r6, before the excl-gates
-#: ratio carried any weight, and is append-only with judge sign-off
-#: (r9 verdict) — reclassification must never become a dial that
-#: tunes the headline.
-GATE_ENTRIES = {
-    "ann_topk_gates",
-    "sketch_quality_gates",
-    "simhash_hamming_histogram",
-    "multimodal_features",
-    "semantic_dedup_gate",
-}
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__ as entrymod  # noqa: E402
 
-#: The three sub-second relational q-entries excluded from the weak
-#: set per the r7-r11 precedent (pure per-query scheduling floor).
-#: LITERAL allow-list (r14, r13-verdict ask #5): the earlier
-#: "starts with q+digit" heuristic would have silently excluded any
-#: future q2norm_*/q4gram_* entry doing real work. The sub-1 s guard
-#: stays — if one of these three ever regresses past 1 s it
-#: re-enters the eligible pool.
-RELATIONAL_FLOOR_ENTRIES = {
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_nation_revenue",
-}
+#: Literal-oracle gate entries, excluded in the like-for-like ratio
+#: (the r6 verdict's method); frozen, see ``Entry.gate``.
+GATE_ENTRIES = {e.name for e in entrymod.ENTRIES if e.gate}
+#: Sub-second relational entries excluded from the weak set while
+#: they stay under 1 s (a literal allow-list, see ``Entry.floor``).
+RELATIONAL_FLOOR_ENTRIES = {e.name for e in entrymod.ENTRIES if e.floor}
 
 
 def _load(path: str) -> dict[str, float]:

@@ -1,9 +1,11 @@
 """Per-stage timeline profiler (r15): for each selected entry, run it
-warm and print every completed stage's wall window, executor run/CPU
-time, task count and shuffle bytes — the same evidence format as
+once through bench.py's runner (bench session conf and warm-up, one
+noop rep) under a job group and print its Spark job count, then every
+completed stage's wall window, executor run/CPU time, task count and
+shuffle bytes — the same evidence format as
 docs/records/r14/prof_substr_stages.txt. Reads the in-process
-AppStatusStore through py4j (the UI/REST server is disabled in this
-sandbox).
+AppStatusStore and status tracker through py4j (the session runs
+with the UI/REST server disabled).
 
 Usage:
     python tools/profile_stages.py [sf_dir] [entry ...]
@@ -17,8 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
-from serverless_data_lake_spark.session import get_spark
+import bench
 
 
 def _stage_rows(spark, min_submit_ms: int):
@@ -61,38 +62,23 @@ def _stage_rows(spark, min_submit_ms: int):
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2:] or ["exact_substring_dedup"]
-    spark = get_spark(
-        app_name="sdls-profile-stages",
-        extra_conf={
-            # mirror bench.py's scan-split sizing (r15) so profiled
-            # stage shapes match bench sittings
-            "spark.sql.files.maxPartitionBytes": os.environ.get(
-                "SDLS_MAX_PARTITION_BYTES", "4m"
-            ),
-            "spark.sql.files.openCostInBytes": os.environ.get(
-                "SDLS_OPEN_COST_BYTES", "1m"
-            ),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    spark = bench.session(app_name="sdls-profile-stages")
+    bench.warm_up(spark, sf_dir, names)
+    sc = spark.sparkContext
     for name in names:
-        # warm rep: codegen + worker pool + memos, not measured
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
         t0_ms = int(time.time() * 1000)
-        c0 = time.time()
-        df = qs[name](spark, sf_dir)
-        t_run = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        t_end = time.time()
-        spark.catalog.clearCache()
+        group = f"profile_{name}"
+        sc.setJobGroup(group, name)
+        draws, constr = bench.time_entries(spark, sf_dir, [name], 1)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         rows = _stage_rows(spark, t0_ms)
         active = [r for r in rows if r["tasks"] > 0]
         skipped = [r["id"] for r in rows if r["tasks"] == 0]
         print(
-            f"== {name}: wall {t_end - t_run:.2f} s "
-            f"(construct {t_run - c0:.2f} s), {len(active)} active stages "
+            f"== {name}: wall {draws[name][0]:.2f} s "
+            f"(construct {constr[name][0]:.2f} s), {jobs} jobs, "
+            f"{len(active)} active stages "
             f"({len(rows)} total, {sum(r['tasks'] for r in active)} tasks)",
             flush=True,
         )

@@ -44,7 +44,7 @@ import duckdb  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from serverless_data_lake_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
 
 REL_TOL = 1e-6  # double sums: engines reduce in different orders
 
@@ -56,7 +56,6 @@ NUMERIC = {"byte", "short", "integer", "long", "float", "double"}
 # alone (rows-only), exactly like bench does.
 PINNED_SF001_GATES = {
     "simhash_hamming_histogram",
-    "simhash_near_duplicates",  # continuity alias, same pinned gate
     "multimodal_features",
     "semantic_dedup_gate",
 }
@@ -169,7 +168,6 @@ def _sampled_simhash_check(spark, con, sf_dir):
 SAMPLED_CHECKS = {
     "embedding_similarity_pairs": _sampled_cosine_check,
     "simhash_hamming_histogram": _sampled_simhash_check,
-    "simhash_near_duplicates": _sampled_simhash_check,
 }
 
 #: Conf-hazard tripwire entries (r16, r15 verdict #8 — the 9cc8eab
@@ -292,26 +290,14 @@ def main() -> int:
             file=sys.stderr,
         )
         return 2
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={
-            # bench.py conf parity (r16, r15 verdict #1): the sweep
-            # session used the 128m/4m scan-split defaults, so the
-            # small single-file tables (documents 6 MB) scanned on
-            # 1-2 tasks while bench sittings ran the same entries on
-            # 6+ — sweep seconds were not comparable to bench
-            # seconds. Same env overrides, same committed defaults.
-            "spark.sql.files.maxPartitionBytes": os.environ.get(
-                "SDLS_MAX_PARTITION_BYTES", "4m"
-            ),
-            "spark.sql.files.openCostInBytes": os.environ.get(
-                "SDLS_OPEN_COST_BYTES", "1m"
-            ),
-        },
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # bench.py's session (r16, r15 verdict #1): with the 128m/4m
+    # scan-split defaults the small single-file tables (documents
+    # 6 MB) scanned on 1-2 tasks while bench sittings ran the same
+    # entries on 6+, so sweep seconds were not comparable.
+    spark = bench.session(
+        "sdls-scale-sweep", master=f"local[{cpus}]", shuffle_partitions=cpus
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
     for t in entrymod.TABLES:
@@ -322,51 +308,26 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    # Session warmup (r16, r15 verdict #1): the r15 sf1 record read
-    # q1_pricing_summary at 25.6 s — the FIRST timed entry absorbed
-    # the one-time nanocache build (~190 MB pyarrow rewrite on a
-    # fresh /tmp), catalog registration, JVM/codegen and
-    # Python-worker cold starts. The same entry re-measured warm
-    # reads 2.2 s (32-task scan; stage profile in
-    # OPTIMIZATION_r16.md). Pay those one-time costs OUTSIDE the
-    # timed loop, exactly like bench.py; SDLS_SWEEP_NO_WARMUP=1
-    # restores the old cold-start measurement.
-    if not os.environ.get("SDLS_SWEEP_NO_WARMUP"):
-        for t in entrymod.TABLES:
-            entrymod._data_path(sf_dir, t)  # nanocache outside timing
-        spark.range(1000).selectExpr("sum(id)").collect()
-        spark.range(32).repartition(1).mapInPandas(
-            lambda it: it, schema="id long"
-        ).write.format("noop").mode("overwrite").save()
-        warm_dir = os.environ.get(
-            "SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001"
-        )
-        if os.path.isdir(warm_dir):
-            tripwire_on = not os.environ.get("SDLS_NO_TRIPWIRE")
-            for name, fn in qs.items():
-                if only and name not in only and not (
-                    tripwire_on and name in TRIPWIRE
-                ):
-                    continue
-                try:
-                    # warm the SAME action the timed loop runs (the
-                    # summary wrapper agg, not a bare noop write):
-                    # its Expand/countDistinct wrapper plan carries
-                    # its own scale-independent codegen, measured
-                    # ~2 s inside q1's timed region when only the
-                    # bare entry was warmed
-                    spark_summary(fn(spark, warm_dir))
-                except Exception as exc:  # noqa: BLE001
-                    print(
-                        f"warmup failed {name}: {exc!r}"[:160],
-                        file=sys.stderr,
-                    )
-                spark.catalog.clearCache()
-        # the warm pass left the engine catalog registered for
-        # warm_dir; re-point it at the target OUTSIDE the timed loop
-        # (10 DROP+CREATE DDLs, ~2 s — measured inside q1's timing
-        # otherwise)
-        entrymod._ensure_catalog(spark, sf_dir)
+    # Warm-up outside the timed loop (r16, r15 verdict #1): the r15
+    # sf1 record read q1_pricing_summary at 25.6 s — the FIRST timed
+    # entry absorbed the one-time nanocache build, catalog
+    # registration, JVM/codegen and Python-worker cold starts; warm,
+    # the same entry reads 2.2 s (OPTIMIZATION_r16.md). It warms the
+    # SAME action the timed loop runs (the summary wrapper agg, not a
+    # bare noop write): that wrapper plan carries its own
+    # scale-independent codegen, measured ~2 s inside q1's timed
+    # region when only the bare entry was warmed.
+    tripwire_on = not os.environ.get("SDLS_NO_TRIPWIRE")
+    bench.warm_up(
+        spark,
+        sf_dir,
+        [
+            n
+            for n in qs
+            if not only or n in only or (tripwire_on and n in TRIPWIRE)
+        ],
+        action=spark_summary,
+    )
 
     failures, report = 0, {}
     for name, fn in qs.items():
@@ -466,24 +427,20 @@ def main() -> int:
     # number when the entry was selected; otherwise run it
     # spark-only (noop sink) so every record carries the trio.
     trip: dict[str, object] = {}
-    if not os.environ.get("SDLS_NO_TRIPWIRE"):
+    if tripwire_on:
         for name in TRIPWIRE:
             rec = report.get(name)
             if rec and "spark_s" in rec:
                 trip[name] = rec["spark_s"]
                 continue
-            t0 = time.time()
             try:
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                trip[name] = round(time.time() - t0, 2)
+                draws, constr = bench.time_entries(spark, sf_dir, [name], 1)
+                trip[name] = round(draws[name][0] + constr[name][0], 2)
             except Exception as exc:  # noqa: BLE001
                 trip[name] = (
                     f"error: {str(exc).splitlines()[0][:80]}"
                 )
                 failures += 1
-            spark.catalog.clearCache()
             print(
                 f"tripwire {name}: {trip[name]}s (spark-only)",
                 flush=True,
