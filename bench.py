@@ -32,15 +32,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from serverless_data_lake_spark.session import get_spark
+from serverless_data_lake_spark.testdata import ensure_catalog
 
 # The full declared surface is the benchmark, no cherry-picking.
 BENCH_QUERIES = [e.name for e in entrymod.ENTRIES]
 EAGER_CONSTRUCT = {e.name for e in entrymod.ENTRIES if e.eager_construct}
 
 # The cached testdata copies carry ~64 row groups per file (see
-# __spark_entry__._data_path); sizing file splits down lets the scan
-# fan out across cores. At production scale the default 128m is
-# right — this matches splits to the small local files.
+# serverless_data_lake_spark/testdata.py, data_path); sizing file
+# splits down lets the scan fan out across cores. At production scale
+# the default 128m is right — this matches splits to the small local
+# files.
 SCAN_SPLIT_CONF = {
     "spark.sql.files.maxPartitionBytes": "4m",
     "spark.sql.files.openCostInBytes": "1m",
@@ -111,7 +113,7 @@ def warm_up(spark, sf_dir: str, names, action=_noop) -> None:
     # complex query so the first measured one doesn't absorb
     # whole-stage-codegen compilation and decimal-aggregate setup
     # (r1: q1 paid ~4.5 s of it).
-    entrymod._ensure_catalog(spark, sf_dir)
+    ensure_catalog(spark, sf_dir)
     spark.range(1000).selectExpr("sum(id)").collect()
     # Warm the Python worker pool + Arrow serialization path once:
     # workers are reused across queries (spark.python.worker.reuse),
@@ -143,7 +145,7 @@ def warm_up(spark, sf_dir: str, names, action=_noop) -> None:
             print(f"WARMUP FAILED {name}: {exc!r}", file=sys.stderr)
         spark.catalog.clearCache()
     # re-point the catalog at the target (10 DROP+CREATE DDLs)
-    entrymod._ensure_catalog(spark, sf_dir)
+    ensure_catalog(spark, sf_dir)
 
 
 def time_entries(spark, sf_dir: str, names, reps: int):

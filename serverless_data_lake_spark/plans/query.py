@@ -19,7 +19,7 @@ are dropped in a ``finally`` so no state leaks between queries.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,7 +53,6 @@ class QueryEngine:
     spark: SparkSession
     config: LakeConfig
     registry: object | None = None  # SchemaRegistry, for the fast path
-    _bronze_views: set[str] = field(default_factory=set)
 
     # -- plan-only entry (returns a DataFrame; no collect) ---------
     def dataframe(self, sql: str) -> DataFrame:
@@ -126,7 +125,6 @@ class QueryEngine:
             reader = reader.schema(schema)
         df = reader.json(path)
         df.createOrReplaceTempView(view)
-        self._bronze_views.add(view)
 
     def _registry_schema(self, domain: str, table: str):
         if self.registry is None:

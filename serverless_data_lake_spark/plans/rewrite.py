@@ -20,7 +20,6 @@ pass — faithful to the reference and requiring no catalog plugin.
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
 
 from serverless_data_lake_spark.plans.dialect import (
     mask_literals,
@@ -47,23 +46,16 @@ def find_table_refs(sql: str) -> list[tuple[str, str, str]]:
     return seen
 
 
-def rewrite_query(
-    sql: str,
-    bronze_resolver: Callable[[str, str], str] | None = None,
-) -> str:
+def rewrite_query(sql: str) -> str:
     """Rewrite three-part names to engine-resolvable names.
 
-    ``bronze_resolver(domain, table)`` returns the SQL identifier a
-    bronze ref should become (typically a temp view the caller has
-    just registered). Without a resolver, bronze refs rewrite to the
-    conventional view name ``__bronze_{domain}_{table}``.
+    Bronze refs rewrite to the conventional temp-view name
+    ``__bronze_{domain}_{table}``, which the caller registers.
     """
 
     def _sub(m: re.Match[str]) -> str:
         domain, layer, table = m.group(1), m.group(2).lower(), m.group(3)
         if layer == "bronze":
-            if bronze_resolver is not None:
-                return bronze_resolver(domain, table)
             return bronze_view_name(domain, table)
         return f"{domain}_{layer}.{table}"
 

@@ -12,7 +12,8 @@ Contract from the reference:
   Structured-Streaming variant with a 60 s trigger lives in
   ``streaming/``);
 - scans read the whole prefix recursively with union-by-name schema
-  merging (``lambdas/query_api/main.py:152-159``).
+  merging (``lambdas/query_api/main.py:152-159``); the scan is
+  ``QueryEngine._register_bronze_view`` in ``plans/query.py``.
 
 Writes go through the Hadoop FileSystem API (not the Spark write
 path) because push batches are tiny (reference batch size: 25
@@ -28,7 +29,7 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from serverless_data_lake_spark.config import LakeConfig
 from serverless_data_lake_spark.schema.registry import SchemaRegistry
@@ -88,13 +89,11 @@ class BronzeZone:
             "_endpoint": table,
         }
 
-    def _wrap_single_column(self, schema, records: list[dict]) -> list[dict]:
+    def _wrap_single_column(self, records: list[dict]) -> list[dict]:
         """``single_column`` schema mode (reference ``models.py:32-37``):
         the payload is kept schema-less, stored whole under a single
         ``data`` column (serialized JSON string)."""
-        import json as _json
-
-        return [{"data": _json.dumps(r, default=str)} for r in records]
+        return [{"data": json.dumps(r, default=str)} for r in records]
 
     def ingest(
         self, domain: str, table: str, record: dict[str, Any]
@@ -102,7 +101,7 @@ class BronzeZone:
         """Single-record push (reference POST /ingest)."""
         schema = self.registry.get(domain, table)
         if schema is not None and schema.schema_mode.value == "single_column":
-            record = self._wrap_single_column(schema, [record])[0]
+            record = self._wrap_single_column([record])[0]
         elif schema is not None and schema.columns:
             try:
                 record = validate_record(
@@ -122,7 +121,7 @@ class BronzeZone:
         schema = self.registry.get(domain, table)
         errors: list[dict[str, Any]] = []
         if schema is not None and schema.schema_mode.value == "single_column":
-            records = self._wrap_single_column(schema, records)
+            records = self._wrap_single_column(records)
         elif schema is not None and schema.columns:
             records, errors = validate_batch(
                 records, schema.columns, strict=schema.strict_validation
@@ -133,23 +132,6 @@ class BronzeZone:
         stamped = [self._stamp(r, domain, table, ts) for r in records]
         obj = self._write_jsonl(domain, table, stamped)
         return IngestResult(len(stamped), len(errors), errors, obj)
-
-    # ------------------------------------------------------------------
-    # Read path
-    # ------------------------------------------------------------------
-    def read(self, domain: str, table: str) -> DataFrame:
-        """Recursive union-by-name scan of one endpoint's prefix.
-
-        Spark's JSON reader infers the schema across *all* matched
-        files and merges by name — the exact analogue of DuckDB's
-        ``read_json_auto(…/**, union_by_name=true)``. For hot paths
-        the registry schema can be supplied to skip inference."""
-        path = self.config.bronze_path(domain, table)
-        return (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .option("inferTimestamp", "true")
-            .json(path)
-        )
 
     def list_objects(self, domain: str, table: str) -> list[str]:
         path = self.config.bronze_path(domain, table)

@@ -103,14 +103,13 @@ def test_driver_stream_gate_rows(spark, gate_rows_fast):
     equivalences the driver's oracle replays with independent SQL."""
     from pyspark.sql import functions as F
 
+    from serverless_data_lake_spark import testdata
     from serverless_data_lake_spark.operators.dedup import (
         reference_span_grams,
         remove_reference_spans,
     )
 
     sf = "/root/testdata/sf0.001"
-    import __spark_entry__ as entrymod
-
     rows = {r.key: r for r in gate_rows_fast}
     assert set(rows) == {
         "decont_survivor_count",
@@ -121,7 +120,7 @@ def test_driver_stream_gate_rows(spark, gate_rows_fast):
         "scrub_removed_sum",
     }
     assert all(r.approx_ok for r in rows.values())
-    docs = entrymod._read(spark, sf, "documents")
+    docs = testdata.read(spark, sf, "documents")
     test_df = docs.filter(
         (F.col("doc_id") % 17 == 0) & (F.col("doc_id") % 3 == 0)
     )

@@ -892,8 +892,8 @@ class TestText:
 class TestIvf:
     def test_ivf_matches_exact_topk_at_full_probe(self, spark):
         from serverless_data_lake_spark.operators.similarity import ivf_topk
-        import __spark_entry__ as e
-        emb = spark.read.parquet(e._data_path("/root/testdata/sf0.01", "embeddings"))
+        from serverless_data_lake_spark.testdata import data_path
+        emb = spark.read.parquet(data_path("/root/testdata/sf0.01", "embeddings"))
         queries = emb.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
@@ -911,8 +911,8 @@ class TestIvf:
 
     def test_ivf_partial_probe_high_recall_for_top1(self, spark):
         from serverless_data_lake_spark.operators.similarity import ivf_topk
-        import __spark_entry__ as e
-        emb = spark.read.parquet(e._data_path("/root/testdata/sf0.01", "embeddings"))
+        from serverless_data_lake_spark.testdata import data_path
+        emb = spark.read.parquet(data_path("/root/testdata/sf0.01", "embeddings"))
         queries = emb.filter(F.col("vec_id") < 10).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
@@ -928,9 +928,9 @@ class TestAnnRecallGate:
     recall and the helper's arithmetic."""
 
     def _exact_and_queries(self, spark):
-        import __spark_entry__ as e
+        from serverless_data_lake_spark.testdata import data_path
         emb = spark.read.parquet(
-            e._data_path("/root/testdata/sf0.01", "embeddings")
+            data_path("/root/testdata/sf0.01", "embeddings")
         )
         queries = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), "embedding"
@@ -1007,9 +1007,9 @@ class TestNumpyPairsKernel:
         from serverless_data_lake_spark.operators.similarity import (
             embedding_all_pairs_numpy,
         )
-        import __spark_entry__ as e
+        from serverless_data_lake_spark.testdata import data_path
         emb = spark.read.parquet(
-            e._data_path("/root/testdata/sf0.001", "embeddings")
+            data_path("/root/testdata/sf0.001", "embeddings")
         )
         sql_rows = sorted(
             (r.id_a, r.id_b, r.cosine)
@@ -1028,9 +1028,9 @@ class TestNumpyPairsKernel:
             embedding_all_pairs_numpy,
         )
         import pytest as _pytest
-        import __spark_entry__ as e
+        from serverless_data_lake_spark.testdata import data_path
         emb = spark.read.parquet(
-            e._data_path("/root/testdata/sf0.001", "embeddings")
+            data_path("/root/testdata/sf0.001", "embeddings")
         )
         with _pytest.raises(ValueError, match="too large"):
             embedding_all_pairs_numpy(emb, max_broadcast_rows=10)
@@ -1054,9 +1054,9 @@ class TestMultiProbe:
         from serverless_data_lake_spark.operators.similarity import (
             cosine_topk, lsh_bucketed_topk,
         )
-        import __spark_entry__ as e
+        from serverless_data_lake_spark.testdata import data_path
         emb = spark.read.parquet(
-            e._data_path("/root/testdata/sf0.01", "embeddings")
+            data_path("/root/testdata/sf0.01", "embeddings")
         )
         queries = emb.filter(F.col("vec_id") < 20).select(
             F.col("vec_id").alias("query_id"), "embedding"

@@ -10,6 +10,7 @@ import re
 import pytest
 
 import __spark_entry__ as entrymod
+from serverless_data_lake_spark.testdata import data_path
 
 SF = "/root/testdata/sf0.001"
 
@@ -87,7 +88,7 @@ def test_dedup_is_single_shuffle(spark):
 
     from serverless_data_lake_spark.operators.dedup import keep_one_per_key
 
-    events = spark.read.parquet(entrymod._data_path(SF, "events"))
+    events = spark.read.parquet(data_path(SF, "events"))
     df = keep_one_per_key(events, ["user_id"], order_col="ts",
                           tiebreakers=["event_id"])
     plan = _formatted_plan(spark, df)
@@ -99,7 +100,7 @@ def test_minhash_signatures_zero_shuffle(spark):
     no aggregate — embarrassingly parallel at any corpus size."""
     from serverless_data_lake_spark.operators.dedup import minhash_signatures
 
-    docs = spark.read.parquet(entrymod._data_path(SF, "documents"))
+    docs = spark.read.parquet(data_path(SF, "documents"))
     sig = minhash_signatures(docs, "doc_id", "text", num_hashes=16)
     plan = _formatted_plan(spark, sig)
     assert _count_nodes(plan, "Exchange") == 0
@@ -114,7 +115,7 @@ def test_multimodal_metadata_stats_prunes_binary(spark):
         media_metadata_stats,
     )
 
-    docs = spark.read.parquet(entrymod._data_path(SF, "documents"))
+    docs = spark.read.parquet(data_path(SF, "documents"))
     media = docs.select(
         F.col("doc_id").alias("media_id"),
         F.lit("image/fake").alias("mime_type"),

@@ -131,11 +131,11 @@ class TestDifferentialFuzz:
 
         import duckdb
 
+        from serverless_data_lake_spark.testdata import ensure_catalog
         from tools.fuzz_oracle import canon, gen_query
-        import __spark_entry__ as e
 
         sf_dir = "/root/testdata/sf0.001"
-        engine = e._ensure_catalog(spark, sf_dir)
+        engine = ensure_catalog(spark, sf_dir)
         con = duckdb.connect()
         con.execute(
             f"CREATE VIEW lineitem AS SELECT * FROM '{sf_dir}/lineitem.parquet'"

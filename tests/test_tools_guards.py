@@ -182,6 +182,8 @@ def test_sketch_gate_driver_assembly_matches_catalyst(spark):
     import __spark_entry__ as entrymod
     from pyspark.sql import functions as F
 
+    from serverless_data_lake_spark import testdata
+
     sf = "/root/testdata/sf0.001"
     if not os.path.isdir(sf):
         import pytest
@@ -194,7 +196,7 @@ def test_sketch_gate_driver_assembly_matches_catalyst(spark):
         ).collect()
         if r["gate"] in ("hll", "tdigest")
     }
-    orders = entrymod._read(spark, sf, "orders")
+    orders = testdata.read(spark, sf, "orders")
     qs = [0.25, 0.5, 0.75, 0.9]
     arr = "array(" + ",".join(str(q) for q in qs) + ")"
     row = orders.agg(

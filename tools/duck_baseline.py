@@ -36,6 +36,7 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import _host_note  # noqa: E402
+from serverless_data_lake_spark import testdata  # noqa: E402
 
 
 def main() -> None:
@@ -49,7 +50,7 @@ def main() -> None:
 
     con = duckdb.connect()
     con.execute(f"SET threads TO {threads}")
-    for t in entrymod.TABLES:
+    for t in testdata.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )

@@ -21,8 +21,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
-import __spark_entry__ as entrymod  # noqa: E402
 from serverless_data_lake_spark.session import get_spark  # noqa: E402
+from serverless_data_lake_spark.testdata import ensure_catalog  # noqa: E402
 
 DIM_COLS = ["l_returnflag", "l_linestatus", "l_linenumber"]
 NUM_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -194,7 +194,7 @@ def main() -> int:
 
     spark = get_spark(master="local[8]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
-    engine = entrymod._ensure_catalog(spark, sf_dir)
+    engine = ensure_catalog(spark, sf_dir)
 
     con = duckdb.connect()
     for t in ("lineitem", "orders", "events", "documents"):

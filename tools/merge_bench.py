@@ -18,10 +18,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-import __spark_entry__ as entrymod  # noqa: E402
 from serverless_data_lake_spark.catalog import TableStore  # noqa: E402
 from serverless_data_lake_spark.config import LakeConfig  # noqa: E402
 from serverless_data_lake_spark.session import get_spark  # noqa: E402
+from serverless_data_lake_spark.testdata import data_path  # noqa: E402
 
 
 def main() -> None:
@@ -34,7 +34,7 @@ def main() -> None:
     store = TableStore(spark, LakeConfig(root=root))
 
     events = spark.read.parquet(
-        entrymod._data_path("/root/testdata/sf0.1", "events")
+        data_path("/root/testdata/sf0.1", "events")
     )
     # Range-partition by key so each file owns a key range — the
     # layout an ingest pipeline converges to; random layout would

@@ -17,6 +17,7 @@ import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from serverless_data_lake_spark import testdata  # noqa: E402
 from serverless_data_lake_spark.session import get_spark  # noqa: E402
 
 
@@ -61,7 +62,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    for t in entrymod.TABLES:
+    for t in testdata.TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs = entrymod.queries()

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 import bench  # noqa: E402
+from serverless_data_lake_spark import testdata  # noqa: E402
 
 REL_TOL = 1e-6  # double sums: engines reduce in different orders
 
@@ -126,7 +127,7 @@ def _sampled_simhash_check(spark, con, sf_dir):
 
     n = con.sql("SELECT count(*) FROM documents").fetchone()[0]
     m = max(1, round(n / 10000))
-    docs = entrymod._read(spark, sf_dir, "documents").where(
+    docs = testdata.read(spark, sf_dir, "documents").where(
         F.col("doc_id") % m == 0
     )
     sigs = simhash_signatures(docs, "doc_id", "text").persist()
@@ -300,7 +301,7 @@ def main() -> int:
     )
 
     con = duckdb.connect()
-    for t in entrymod.TABLES:
+    for t in testdata.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
