@@ -1795,7 +1795,7 @@ FROM c
 def _q_merge_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WRITE path as an oracle-checked entry: materialize a base
     table, MERGE an overlapping batch (updates + inserts) through
-    TableStore's journalled file-level COW (zone-map pruning active —
+    TableStore's logged file-level COW (zone-map pruning active —
     o_orderkey is numeric), and return the end state. The oracle
     reproduces the same end state declaratively, so the driver's hash
     compare certifies upsert semantics, not just read queries

@@ -22,23 +22,37 @@ the *plan shape* matches what an Iceberg MERGE would do at 100 TB:
   tables (``{domain}_{layer}.{table}``), so ``spark.sql`` resolves
   rewritten three-part names and Catalyst gets stats/pushdown.
 
-Durability model: single writer per table, and one commit rule for
-every write. The writer stages its output under
-``{location}__stage_*``; the commit then journals the staging dir, the
-files the write removes and the new table meta (schema, layout,
-zone-map stats) in a ``_sdls_pending.json`` marker, and rolls it
-forward: staged files move in, removed files are deleted (archived
-under ``retain_history``), the meta is written from the journal and
-the marker dropped. The roll-forward is idempotent, and every write
-and :meth:`TableStore.register_all` first rolls forward a marker a
-crash left behind, so after the next write or ``register_all`` a table
-holds exactly its pre-write state (crash before the marker) or its
-post-write state (crash after it). This is weaker than the
-reference's Iceberg snapshot isolation — a concurrent reader can
-observe a partly rolled-forward write during the (small) commit
-window — and that trade is deliberate for plain parquet; swap the
-backend for Iceberg/Delta in environments that ship the jar, the
-interface is unchanged.
+Durability model: one commit log per table, ``{location}/_log/``, of
+numbered version files (``{version:020d}.json``, the Delta Lake
+layout). A version holds the whole table state — schema, keys,
+partition/bucket layout, and every live data file with its size and
+lead-key zone map — plus its commit's journal: the staging dir and the
+files the commit removes. The table's state is its newest version.
+
+Every write stages its output under ``{location}__stage_*``, writes
+the next version to a temp file inside ``_log/`` and renames it to its
+version name. That rename is the commit point: a version file is
+either complete or absent, so a crash before it (a torn temp file
+included) leaves the table as it was. The commit then rolls forward:
+staged files move in, removed files are deleted (archived under
+``retain_history``), older version files are deleted when history is
+off, and the staging dir goes last. The roll-forward is idempotent,
+and every write and :meth:`TableStore.register_all` first finishes one
+a crash cut short (its staging dir still exists), so after the next
+write or ``register_all`` a table holds exactly its pre-write or its
+post-write state.
+
+Single writer per table, with conflicts detected, not retried: a
+rename onto a taken version number fails, and a commit that finds a
+newer version than its own lost the race too; the loser removes its
+staging dir and raises :class:`CommitConflict`. Readers still list the
+table directory (the catalog tables need it for ``PARTITIONED BY``
+pruning and bucketed joins), so a concurrent reader can observe a
+partly rolled-forward write during the (small) roll-forward window.
+That is weaker than the reference's Iceberg snapshot isolation, and
+the trade is deliberate for plain parquet; swap the backend for
+Iceberg/Delta in environments that ship the jar, the interface is
+unchanged.
 """
 
 from __future__ import annotations
@@ -56,10 +70,13 @@ from pyspark.sql.types import StructType
 
 from serverless_data_lake_spark.config import LakeConfig
 
-_META_FILE = "_sdls_meta.json"
-_PENDING_FILE = "_sdls_pending.json"
-_SNAPSHOTS_FILE = "_sdls_snapshots.json"
+_LOG_DIR = "_log"
 _ARCHIVE_DIR = "_archive"
+
+
+class CommitConflict(RuntimeError):
+    """Another writer committed to the table after this write read it.
+    The write's staged files are removed and none of it is visible."""
 
 
 @dataclass
@@ -91,15 +108,21 @@ class TableInfo:
 class TableStore:
     """Catalog + storage manager for one lake.
 
-    ``retain_history=True`` turns on time travel: every committed
-    write records a snapshot (version, data files, schema) in a
-    per-table manifest, and files replaced by later writes move to an
+    Each table's state is the newest version of its commit log (see
+    the module docstring: single writer, conflicts raise
+    :class:`CommitConflict`, and directory-listing readers can see a
+    write mid roll-forward).
+
+    ``retain_history=True`` turns on time travel: the log keeps every
+    version, so each committed write is a snapshot (version, data
+    files, schema), and files replaced by later writes move to an
     ``_archive/`` subdirectory instead of being deleted (leading
     underscore → invisible to Spark's directory scans).
-    :meth:`read_version` reconstructs any recorded snapshot;
-    :meth:`vacuum` prunes history. This is the Iceberg/Delta snapshot
-    idea over plain parquet — storage grows with churn until
-    vacuumed, exactly like their retention model."""
+    :meth:`read_version` reconstructs any kept version; :meth:`vacuum`
+    prunes history. Without it, each commit deletes the older version
+    files. This is the Iceberg/Delta snapshot idea over plain parquet —
+    storage grows with churn until vacuumed, exactly like their
+    retention model."""
 
     def __init__(
         self,
@@ -151,9 +174,6 @@ class TableStore:
 
         rec(self._hpath(directory), "")
         return out
-
-    def _list_data_files(self, directory: str) -> list[str]:
-        return [a for a, _, _ in self._walk_data_files(directory)]
 
     def _move_files_into(self, src_dir: str, dst_dir: str) -> None:
         """Move every data file of ``src_dir`` into ``dst_dir``
@@ -211,12 +231,39 @@ class TableStore:
         fs.rename(self._hpath(path), self._hpath(dst))
 
     # ------------------------------------------------------------------
-    # Commit: every write stages its output under {location}__stage_*
-    # and commits through _commit. The journal (staging dir, files to
-    # remove, new meta) is written before anything at the location
-    # changes and its roll-forward is idempotent, so recovering from a
-    # crash anywhere is rolling the marker forward, if there is one.
+    # Commit log: {location}/_log/{version:020d}.json. Every write
+    # stages its output under {location}__stage_* and commits through
+    # _commit. The table's state is its newest version, and recovering
+    # from a crash anywhere is rolling that version forward if its
+    # staging dir still exists.
     # ------------------------------------------------------------------
+    def _version_path(self, location: str, version: int) -> str:
+        return f"{location}/{_LOG_DIR}/{version:020d}.json"
+
+    def _versions(self, location: str) -> list[int]:
+        """Committed version numbers, ascending. Only the commit's
+        rename gives a file its version name, so the temp file of a
+        crashed commit is never listed."""
+        log = f"{location}/{_LOG_DIR}"
+        if not self._exists(log):
+            return []
+        names = [
+            st.getPath().getName()
+            for st in self._fs(log).listStatus(self._hpath(log))
+        ]
+        return sorted(
+            int(n[:20])
+            for n in names
+            if len(n) == 25 and n[:20].isdigit() and n.endswith(".json")
+        )
+
+    def _latest(self, location: str) -> dict | None:
+        """The newest version: the table's current state."""
+        versions = self._versions(location)
+        if not versions:
+            return None
+        return self._read_json(self._version_path(location, versions[-1]))
+
     def _stage(
         self, df: DataFrame, location: str, partition_by: list[str]
     ) -> str:
@@ -228,247 +275,231 @@ class TableStore:
         writer.parquet(staging)
         return staging
 
-    def _write_pending(
-        self, info: TableInfo, staging: str, remove: list[str], stats: dict
-    ) -> None:
-        meta = {
+    def _commit(
+        self,
+        info: TableInfo,
+        base: dict | None,
+        staging: str,
+        remove: list[str],
+        register: bool,
+        new_partitions=None,
+    ) -> TableInfo:
+        """The one commit step of every write. ``base`` is the version
+        the write read (None: a new table); the new version's files are
+        its files minus ``remove`` (paths below the table root) plus
+        the staged ones. After the roll-forward the catalog entry is
+        re-registered (``register``: the schema or layout changed) or
+        refreshed."""
+        gone = set(remove)
+        files = {
+            rel: entry
+            for rel, entry in (base["files"] if base else {}).items()
+            if rel not in gone
+        } | self._staged_files(staging, info)
+        record = {
+            "version": (base["version"] if base else 0) + 1,
+            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "schema": info.schema.json(),
             "primary_keys": info.primary_keys,
             "partition_by": info.partition_by,
             "bucket_by": info.bucket_by,
             "n_buckets": info.n_buckets,
-            "updated_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "file_stats": stats,
+            "files": files,
+            "staging": staging.removeprefix(info.location),
+            "remove": remove,
         }
-        self._write_json(
-            f"{info.location}/{_PENDING_FILE}",
-            {"staging": staging, "remove": remove, "meta": meta},
-        )
-
-    def _apply_pending(self, location: str) -> bool:
-        """Roll a journalled commit forward: move the staged files in,
-        delete (or archive) the removed ones, write the journalled
-        meta, drop the marker. Idempotent, and the staged files always
-        move in before the files they replace go, so a crash at any
-        step loses no rows. Returns whether a marker was found."""
-        path = f"{location}/{_PENDING_FILE}"
-        pending = self._read_json(path)
-        if pending is None:
-            return False
-        if self._exists(pending["staging"]):
-            self._move_files_into(pending["staging"], location)
-            self._delete(pending["staging"])
-        for f in pending["remove"]:
-            if self._exists(f):
-                if self.retain_history:
-                    self._archive_file(location, f, self._rel(location, f))
-                else:
-                    self._delete(f)
-        self._write_json(f"{location}/{_META_FILE}", pending["meta"])
-        self._delete(path)
-        return True
-
-    def _commit(
-        self,
-        info: TableInfo,
-        staging: str,
-        remove: list[str],
-        stats: dict[str, list],
-        register: bool,
-        new_partitions=None,
-    ) -> TableInfo:
-        """The one commit step of every write. ``stats`` are the zone
-        maps before the write: entries of removed files are dropped
-        and the staged files' are added. After the roll-forward the
-        snapshot is recorded and the catalog entry re-registered
-        (``register``: the schema or layout changed) or refreshed."""
-        gone = {self._stat_key(f) for f in remove}
-        stats = {
-            b: v for b, v in stats.items() if b not in gone
-        } | self._collect_file_stats(staging, info)
-        self._write_pending(info, staging, remove, stats)
-        self._apply_pending(info.location)
-        self._record_snapshot(info)
+        self._publish(info.location, record)
+        self._roll_forward(info.location, record)
         if register:
             self._register(info)
         else:
             self._refresh(info, new_partitions)
         return info
 
+    def _publish(self, location: str, record: dict) -> None:
+        """The commit point: write ``record`` to a temp file in the log
+        and rename it to its version name. The rename fails if another
+        writer took the number, and a newer version than ours means
+        another writer committed twice meanwhile (and deleted the
+        number we took). Either way our version and staging dir go and
+        :class:`CommitConflict` is raised."""
+        tmp = f"{location}/{_LOG_DIR}/.{uuid.uuid4().hex}.tmp"
+        version = record["version"]
+        self._write_json(tmp, record)
+        dst = self._version_path(location, version)
+        if self._fs(dst).rename(self._hpath(tmp), self._hpath(dst)):
+            if self._versions(location)[-1] == version:
+                return
+            tmp = dst
+        self._delete(tmp)
+        self._delete(location + record["staging"])
+        raise CommitConflict(
+            f"{location}: version {version} lost to a concurrent writer"
+        )
+
+    def _roll_forward(self, location: str, record: dict) -> None:
+        """Make the table dir match ``record``, its newest version:
+        move the staged files in, delete (or archive) the removed ones,
+        delete older version files when history is off, and drop the
+        staging dir last, so a version is half rolled forward exactly
+        while its staging dir exists. Idempotent, and the staged files
+        always move in before the files they replace go, so a crash at
+        any step loses no rows."""
+        staging = location + record["staging"]
+        self._move_files_into(staging, location)
+        for rel in record["remove"]:
+            f = f"{location}/{rel}"
+            if self._exists(f):
+                if self.retain_history:
+                    self._archive_file(location, f, rel)
+                else:
+                    self._delete(f)
+        if not self.retain_history:
+            for v in self._versions(location):
+                if v < record["version"]:
+                    self._delete(self._version_path(location, v))
+        self._delete(staging)
+
+    def _recover(self, location: str) -> tuple[dict | None, bool]:
+        """The newest version, rolled forward first if a crash cut its
+        commit short; also returns whether it was."""
+        record = self._latest(location)
+        if record is None or not self._exists(location + record["staging"]):
+            return record, False
+        self._roll_forward(location, record)
+        return record, True
+
     def _open(
         self, database: str, table: str
-    ) -> tuple[TableInfo | None, dict[str, list]]:
-        """A write's view of its table: roll a crashed commit forward,
-        then read the meta once for the table info and its zone-map
-        stats. A rolled-forward table is re-registered, because the
-        crashed write never synced the catalog."""
+    ) -> tuple[TableInfo | None, dict | None]:
+        """A write's view of its table: the newest version, rolled
+        forward if a crash cut it short, and its table info. A
+        rolled-forward table is re-registered, because the crashed
+        write never synced the catalog."""
         location = self.config.table_path(database, table)
-        recovered = self._apply_pending(location)
-        meta = self._read_meta(location)
-        if meta is None:
-            return None, {}
-        info = self._table_info(database, table, location, meta)
+        record, recovered = self._recover(location)
+        if record is None:
+            return None, None
+        info = self._table_info(database, table, location, record)
         if recovered:
             self._register(info)
-        return info, meta.get("file_stats") or {}
-
-    def _replaced_files(self, location: str) -> list[str]:
-        """What a full replace removes: every current data file, once
-        a crashed commit is rolled forward."""
-        self._apply_pending(location)
-        if not self._exists(location):
-            return []
-        return self._list_data_files(location)
-
-    # ------------------------------------------------------------------
-    # Metadata
-    # ------------------------------------------------------------------
-    def _read_meta(self, location: str) -> dict | None:
-        return self._read_json(f"{location}/{_META_FILE}")
+        return info, record
 
     # ------------------------------------------------------------------
     # Zone maps: per-data-file [min, max] of the lead primary key,
-    # persisted in the table meta and maintained incrementally by
+    # kept in every version's file map and maintained incrementally by
     # every write. merge() uses them to prune files whose key range
     # cannot overlap the incoming batch BEFORE its affected-file
     # scan — the Iceberg/Delta data-skipping idea, so merge I/O is
     # O(overlapping files), not O(table). Only numeric keys are
     # tracked (string ordering differs between JVM UTF8 bytes and
-    # Python codepoints; a file without stats is simply never pruned,
-    # which is always safe).
+    # Python codepoints; a file without a zone map is simply never
+    # pruned, which is always safe).
     # ------------------------------------------------------------------
     @staticmethod
     def _statable(v) -> bool:
         return isinstance(v, (int, float)) and not isinstance(v, bool)
 
-    @staticmethod
-    def _stat_key(path: str) -> str:
-        """A data file's zone-map key: its basename under its hive
-        partition dirs (``col=value/...``), i.e. its path below the
-        table root — one task writes the same basename into every
-        partition it touches. Stable across the staging→location
-        rename."""
-        parts = path.split("/")
-        i = len(parts) - 1
-        while i > 0 and "=" in parts[i - 1]:
-            i -= 1
-        return "/".join(parts[i:])
-
-    def _collect_file_stats(
-        self, directory: str, info: TableInfo
-    ) -> dict[str, list]:
-        """``{stat_key: [min, max]}`` of the lead primary key for the
-        data files under ``directory``. A lead key that is a partition
-        column has no stats (its values live in directory names)."""
-        if not info.primary_keys:
-            return {}
-        key = info.primary_keys[0]
-        files = self._list_data_files(directory)
-        if not files or key not in info.data_schema.fieldNames():
-            return {}
-        rows = (
-            self.spark.read.schema(info.data_schema)
-            .parquet(*files)
-            .select(
-                F.col(key).alias("__k"),
-                F.col("_metadata.file_path").alias("__f"),
+    def _staged_files(self, staging: str, info: TableInfo) -> dict[str, dict]:
+        """``{rel: {"size", "zone_map"}}`` for the data files under
+        ``staging``, ``rel`` being the path below it (and so below the
+        table root once moved in). A lead key that is a partition
+        column has no zone maps (its values live in directory names)."""
+        walked = self._walk_data_files(staging)
+        key = info.primary_keys[0] if info.primary_keys else None
+        zone_maps = {}
+        if walked and key in info.data_schema.fieldNames():
+            rows = (
+                self.spark.read.schema(info.data_schema)
+                .parquet(*[f for f, _, _ in walked])
+                .select(
+                    F.col(key).alias("__k"),
+                    F.col("_metadata.file_path").alias("__f"),
+                )
+                .groupBy("__f")
+                .agg(F.min("__k").alias("mn"), F.max("__k").alias("mx"))
+                .collect()
             )
-            .groupBy("__f")
-            .agg(F.min("__k").alias("mn"), F.max("__k").alias("mx"))
-            .collect()
-        )
+            # _metadata.file_path is URL-encoded; Hadoop paths are not.
+            zone_maps = {
+                self._rel(staging, unquote(r["__f"])): [r["mn"], r["mx"]]
+                for r in rows
+                if self._statable(r["mn"]) and self._statable(r["mx"])
+            }
         return {
-            self._stat_key(unquote(r["__f"])): [r["mn"], r["mx"]]
-            for r in rows
-            if self._statable(r["mn"]) and self._statable(r["mx"])
+            rel: {"size": size, "zone_map": zone_maps.get(rel)}
+            for _, rel, size in walked
         }
 
-    def _load_file_stats(self, location: str) -> dict[str, list]:
-        meta = self._read_meta(location)
-        return (meta or {}).get("file_stats") or {}
-
     def _prune_by_stats(
-        self,
-        all_files: list[str],
-        stats: dict[str, list],
-        batch_min,
-        batch_max,
+        self, files: dict[str, dict], batch_min, batch_max
     ) -> list[str]:
-        """Files that may contain keys within [batch_min, batch_max]:
-        stat-less files always qualify; ranged files qualify unless
-        disjoint from the batch range."""
-        if not stats or not (
-            self._statable(batch_min) and self._statable(batch_max)
-        ):
-            return all_files
-        out = []
-        for f in all_files:
-            s = stats.get(self._stat_key(f))
-            if s is None or not (s[1] < batch_min or s[0] > batch_max):
-                out.append(f)
-        return out
+        """The files of a version's file map that may contain keys
+        within [batch_min, batch_max]: files without a zone map always
+        qualify; the others unless disjoint from the batch range."""
+        if not (self._statable(batch_min) and self._statable(batch_max)):
+            return list(files)
+        return [
+            rel
+            for rel, entry in files.items()
+            if entry["zone_map"] is None
+            or not (
+                entry["zone_map"][1] < batch_min
+                or entry["zone_map"][0] > batch_max
+            )
+        ]
 
     # ------------------------------------------------------------------
-    # Snapshots / time travel (retain_history=True)
+    # Snapshots / time travel (retain_history=True): the versions of
+    # the log are the snapshots.
     # ------------------------------------------------------------------
-    def _record_snapshot(self, info: TableInfo) -> None:
-        if not self.retain_history:
-            return
-        path = f"{info.location}/{_SNAPSHOTS_FILE}"
-        snaps = self._read_json(path) or []
-        files = sorted(
-            rel for _, rel, _ in self._walk_data_files(info.location)
-        )
-        snaps.append(
-            {
-                "version": (snaps[-1]["version"] + 1) if snaps else 1,
-                "timestamp": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                ),
-                "files": files,
-                "schema": info.schema.json(),
-                "partition_by": info.partition_by,
-            }
-        )
-        self._write_json(path, snaps)
+    def _location(self, database: str, table: str) -> str:
+        location = self.config.table_path(database, table)
+        if not self._versions(location):
+            raise KeyError(f"no such table {database}.{table}")
+        return location
+
+    def _history(self, location: str) -> list[int]:
+        """Versions kept for time travel: the whole log under
+        ``retain_history``, none otherwise (each commit then deletes
+        the older versions, and the newest is the current state)."""
+        return self._versions(location) if self.retain_history else []
 
     def snapshots(self, database: str, table: str) -> list[dict]:
         """Recorded snapshots, oldest first: version, timestamp,
         file count."""
-        info = self.info(database, table)
-        if info is None:
-            raise KeyError(f"no such table {database}.{table}")
-        snaps = self._read_json(f"{info.location}/{_SNAPSHOTS_FILE}") or []
-        return [
-            {
-                "version": s["version"],
-                "timestamp": s["timestamp"],
-                "n_files": len(s["files"]),
-            }
-            for s in snaps
-        ]
+        location = self._location(database, table)
+        out = []
+        for v in self._history(location):
+            snap = self._read_json(self._version_path(location, v))
+            out.append(
+                {
+                    "version": v,
+                    "timestamp": snap["timestamp"],
+                    "n_files": len(snap["files"]),
+                }
+            )
+        return out
 
     def read_version(self, database: str, table: str, version: int) -> DataFrame:
         """The table exactly as of a recorded snapshot (time travel).
         Files live either in the table dir (still current) or in
         ``_archive/`` (replaced since); a vacuumed snapshot raises."""
-        info = self.info(database, table)
-        if info is None:
-            raise KeyError(f"no such table {database}.{table}")
-        snaps = self._read_json(f"{info.location}/{_SNAPSHOTS_FILE}") or []
-        snap = next((s for s in snaps if s["version"] == version), None)
-        if snap is None:
+        location = self._location(database, table)
+        versions = self._history(location)
+        if version not in versions:
             raise KeyError(
                 f"no snapshot version {version} for {database}.{table} "
-                f"(have: {[s['version'] for s in snaps]})"
+                f"(have: {versions})"
             )
+        snap = self._read_json(self._version_path(location, version))
         schema = StructType.fromJson(json.loads(snap["schema"]))
-        pby = snap.get("partition_by") or []
+        pby = snap["partition_by"]
         current: list[str] = []
         archived: list[str] = []
         for name in snap["files"]:
-            cur = f"{info.location}/{name}"
-            arch = f"{info.location}/{_ARCHIVE_DIR}/{name}"
+            cur = f"{location}/{name}"
+            arch = f"{location}/{_ARCHIVE_DIR}/{name}"
             if self._exists(cur):
                 current.append(cur)
             elif self._exists(arch):
@@ -485,8 +516,8 @@ class TableStore:
         # (the archive mirrors the table's partition layout).
         parts = []
         for base, paths in (
-            (info.location, current),
-            (f"{info.location}/{_ARCHIVE_DIR}", archived),
+            (location, current),
+            (f"{location}/{_ARCHIVE_DIR}", archived),
         ):
             if not paths:
                 continue
@@ -500,29 +531,27 @@ class TableStore:
         return out
 
     def vacuum(self, database: str, table: str, keep_last: int = 1) -> int:
-        """Drop all but the last ``keep_last`` snapshots and delete
-        archived files no kept snapshot references. Returns the number
-        of files deleted."""
-        info = self.info(database, table)
-        if info is None:
-            raise KeyError(f"no such table {database}.{table}")
-        path = f"{info.location}/{_SNAPSHOTS_FILE}"
-        snaps = self._read_json(path) or []
-        kept = snaps[-keep_last:] if keep_last > 0 else []
+        """Delete all but the last ``keep_last`` versions (the newest
+        always stays: it is the current state), then the archived files
+        no kept version references. Returns the number of data files
+        deleted."""
+        location = self._location(database, table)
+        versions = self._versions(location)
+        kept = versions[-max(keep_last, 1):]
         referenced: set[str] = set()
-        for s in kept:
-            referenced.update(s["files"])
-        referenced.update(
-            rel for _, rel, _ in self._walk_data_files(info.location)
-        )
+        for v in kept:
+            referenced.update(
+                self._read_json(self._version_path(location, v))["files"]
+            )
+        for v in versions[: len(versions) - len(kept)]:
+            self._delete(self._version_path(location, v))
         removed = 0
-        arch = f"{info.location}/{_ARCHIVE_DIR}"
+        arch = f"{location}/{_ARCHIVE_DIR}"
         if self._exists(arch):
             for f, rel, _ in self._walk_data_files(arch):
                 if rel not in referenced:
                     self._delete(f)
                     removed += 1
-        self._write_json(path, kept)
         return removed
 
     # ------------------------------------------------------------------
@@ -628,20 +657,16 @@ class TableStore:
                 if "__stage_" in name:
                     continue  # staging dir of a crashed write
                 location = t_status.getPath().toString()
-                # Before the meta is read: a table whose first write
-                # crashed mid-commit has its meta only in the journal.
-                self._apply_pending(location)
-                meta = self._read_meta(location)
-                if meta is None:
+                record, _ = self._recover(location)
+                if record is None:
                     continue
-                info = self._table_info(database, name, location, meta)
+                info = self._table_info(database, name, location, record)
                 self._register(info)
                 infos.append(info)
         return infos
 
     def table_exists(self, database: str, table: str) -> bool:
-        location = self.config.table_path(database, table)
-        return self._read_meta(location) is not None
+        return bool(self._versions(self.config.table_path(database, table)))
 
     def read(self, database: str, table: str) -> DataFrame:
         qualified = f"`{database}`.`{table}`"
@@ -670,24 +695,24 @@ class TableStore:
 
     def info(self, database: str, table: str) -> TableInfo | None:
         location = self.config.table_path(database, table)
-        meta = self._read_meta(location)
-        if meta is None:
+        record = self._latest(location)
+        if record is None:
             return None
-        return self._table_info(database, table, location, meta)
+        return self._table_info(database, table, location, record)
 
     @staticmethod
     def _table_info(
-        database: str, table: str, location: str, meta: dict
+        database: str, table: str, location: str, record: dict
     ) -> TableInfo:
         return TableInfo(
             database=database,
             name=table,
             location=location,
-            schema=StructType.fromJson(json.loads(meta["schema"])),
-            primary_keys=meta.get("primary_keys", []),
-            partition_by=meta.get("partition_by", []),
-            bucket_by=meta.get("bucket_by", []),
-            n_buckets=meta.get("n_buckets", 0),
+            schema=StructType.fromJson(json.loads(record["schema"])),
+            primary_keys=record["primary_keys"],
+            partition_by=record["partition_by"],
+            bucket_by=record["bucket_by"],
+            n_buckets=record["n_buckets"],
         )
 
     # ------------------------------------------------------------------
@@ -718,6 +743,7 @@ class TableStore:
         if missing:
             raise ValueError(f"partition columns not in data: {missing}")
         location = self.config.table_path(database, table)
+        _, base = self._open(database, table)
         staging = self._stage(df, location, partition_by)
         schema = StructType(
             [f for f in df.schema.fields if f.name not in partition_by]
@@ -727,7 +753,7 @@ class TableStore:
             database, table, location, schema, primary_keys or [], partition_by
         )
         return self._commit(
-            info, staging, self._replaced_files(location), {}, register=True
+            info, base, staging, list(base["files"]) if base else [], True
         )
 
     def create_bucketed(
@@ -766,6 +792,7 @@ class TableStore:
             raise ValueError(f"bucket columns not in data: {missing}")
         sort_by = list(sort_by or bucket_by)
         location = self.config.table_path(database, table)
+        _, base = self._open(database, table)
         staging = f"{location}__stage_{uuid.uuid4().hex[:8]}"
         # saveAsTable is the only writer that emits bucket metadata;
         # stage under a throwaway catalog name, then drop the name
@@ -790,7 +817,7 @@ class TableStore:
             int(n_buckets),
         )
         return self._commit(
-            info, staging, self._replaced_files(location), {}, register=True
+            info, base, staging, list(base["files"]) if base else [], True
         )
 
     def append(
@@ -806,7 +833,7 @@ class TableStore:
         null for them). On a partitioned table the batch's files land
         only in the partitions it carries (``partition_by`` applies
         on first create; thereafter the table's layout wins)."""
-        existing, stats = self._open(database, table)
+        existing, base = self._open(database, table)
         if existing is None:
             return self.create_or_replace(
                 database, table, df, primary_keys, partition_by
@@ -829,7 +856,7 @@ class TableStore:
             existing.partition_by,
         )
         return self._commit(
-            info, staging, [], stats, register=merged_schema != existing.schema
+            info, base, staging, [], register=merged_schema != existing.schema
         )
 
     def merge(
@@ -878,7 +905,7 @@ class TableStore:
             keys = [keys]
         if not keys:
             raise ValueError("merge requires at least one key column")
-        existing, stats = self._open(database, table)
+        existing, base = self._open(database, table)
         if existing is None:
             return self.create_or_replace(
                 database, table, source, keys, partition_by
@@ -918,13 +945,14 @@ class TableStore:
             if len(pvals) <= 10000:
                 batch_parts = pvals
 
-        candidates = self._list_data_files(location)
-        if stats:
+        files = base["files"]
+        candidates = list(files)
+        if any(entry["zone_map"] for entry in files.values()):
             bounds = src_keys.agg(
                 F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
             ).first()
             candidates = self._prune_by_stats(
-                candidates, stats, bounds["mn"], bounds["mx"]
+                files, bounds["mn"], bounds["mx"]
             )
         # basePath keeps the partition-column values that live in the
         # directory names of the files read.
@@ -933,7 +961,7 @@ class TableStore:
         )
         affected_files: list[str] = []
         if candidates:
-            scan = reader.parquet(*candidates)
+            scan = reader.parquet(*[f"{location}/{f}" for f in candidates])
             # Partition pruning is only sound when the partition tuple
             # is part of the key: then equal keys imply equal
             # partition values and a matched row cannot live outside
@@ -981,9 +1009,9 @@ class TableStore:
         # layout rescan.
         return self._commit(
             info,
+            base,
             staging,
-            affected_files,
-            stats,
+            [self._rel(location, f) for f in affected_files],
             register=merged_schema != existing.schema,
             new_partitions=batch_parts,
         )
@@ -1031,7 +1059,7 @@ class TableStore:
         more files) and any range-filtered scan skips whole files
         via parquet min/max — the Delta OPTIMIZE ZORDER idea,
         restricted to lexicographic clustering."""
-        info, stats = self._open(database, table)
+        info, base = self._open(database, table)
         if info is None:
             raise KeyError(f"no such table {database}.{table}")
         if info.bucket_by:
@@ -1046,17 +1074,17 @@ class TableStore:
         # rewritten file stays inside its partition and the rest of
         # the table is untouched.
         groups: dict[str, list[tuple[str, int]]] = {}
-        for f, rel, size in self._walk_data_files(info.location):
-            if size < threshold:
+        for rel, entry in base["files"].items():
+            if entry["size"] < threshold:
                 d = rel.rsplit("/", 1)[0] if "/" in rel else ""
-                groups.setdefault(d, []).append((f, size))
+                groups.setdefault(d, []).append((rel, entry["size"]))
         groups = {d: fs_ for d, fs_ in groups.items() if len(fs_) >= 2}
         if not groups:
             return 0
         staging = f"{info.location}__stage_{uuid.uuid4().hex[:8]}"
         small: list[str] = []
         for d, members in groups.items():
-            paths = [f for f, _ in members]
+            paths = [f"{info.location}/{rel}" for rel, _ in members]
             total = sum(s for _, s in members)
             n_out = max(1, -(-total // target_file_bytes))
             dst = f"{staging}/{d}" if d else staging
@@ -1068,8 +1096,8 @@ class TableStore:
             else:
                 out = src.repartition(int(n_out))
             out.write.mode("overwrite").parquet(dst)
-            small.extend(paths)
-        self._commit(info, staging, small, stats, register=False)
+            small.extend(rel for rel, _ in members)
+        self._commit(info, base, staging, small, register=False)
         return len(small)
 
     # ------------------------------------------------------------------

@@ -12,8 +12,10 @@ Pipeline (mirrors the reference query API lifecycle,
 6. sanitized errors    — storage paths stripped from messages.
 
 Statelessness: the reference builds a fresh DuckDB per request; a
-long-lived SparkSession is kept instead, and per-query bronze views
-are dropped in a ``finally`` so no state leaks between queries.
+long-lived SparkSession is kept instead. Per-query bronze views stay
+registered until the next query over the same endpoint refreshes
+them; they are metadata only (a view over a path), so no data is
+pinned between queries.
 """
 
 from __future__ import annotations

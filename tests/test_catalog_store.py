@@ -3,6 +3,7 @@ files; compaction bin-packs small files; schema evolution."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -19,8 +20,21 @@ def store(spark, tmp_path):
 
 
 def _files(store, db, table):
-    info = store.info(db, table)
-    return sorted(store._list_data_files(info.location))
+    """The data files of the table's newest version."""
+    return sorted(store._latest(store.info(db, table).location)["files"])
+
+
+def _on_disk(location):
+    """The data files under a table dir, as paths below it."""
+    out = set()
+    for d, dirs, names in os.walk(location):
+        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+        out.update(
+            os.path.relpath(os.path.join(d, n), location)
+            for n in names
+            if not n.startswith(("_", "."))
+        )
+    return out
 
 
 class TestMergeCow:
@@ -114,9 +128,9 @@ class TestCompaction:
 
 
 class TestCommitRecovery:
-    """Hand-built crashed states the fault-injection test below cannot
-    reach: a pending marker met by a later write in the same session,
-    and a staging dir that carries a meta file."""
+    """Crashed states the fault-injection test below does not reach: a
+    half rolled-forward commit met by a later write of the same store,
+    and a staging dir that carries a commit log."""
 
     def _setup(self, spark, store):
         df1 = spark.range(0, 10).select(
@@ -130,15 +144,18 @@ class TestCommitRecovery:
         return store.info("db", "t")
 
     def test_merge_heals_prior_crash(self, spark, store):
-        """A real merge on a table with a pending marker rolls the
-        crashed commit forward before computing its own COW set."""
+        """A real merge on a table whose last commit crashed before its
+        roll-forward rolls that commit forward before computing its own
+        COW set."""
         info = self._setup(spark, store)
-        originals = store._list_data_files(info.location)
-        staging = f"{info.location}__stage_crash"
-        spark.read.parquet(info.location).write.mode("overwrite").parquet(
-            staging
-        )
-        store._write_pending(info, staging, originals, {})
+        copy = spark.read.parquet(info.location)
+        real_fs = store._fs
+        # Calls 1-2 publish the version; call 3 moves the first staged
+        # file in.
+        _faulty(store, fail_at=3)
+        with pytest.raises(_Crash):
+            store.create_or_replace("db", "t", copy, ["k"])
+        store._fs = real_fs
 
         updates = spark.createDataFrame([(0, "Z")], ["k", "v"])
         store.merge("db", "t", updates, ["k"])
@@ -147,14 +164,11 @@ class TestCommitRecovery:
 
     def test_register_all_skips_stage_dirs(self, spark, store, tmp_path):
         self._setup(spark, store)
-        # Leftover staging dir with a meta file must not register.
+        # Leftover staging dir with a commit log must not register.
         info = store.info("db", "t")
         staging = f"{info.location}__stage_leftover"
         spark.range(1).write.parquet(staging)
-        store._write_json(
-            f"{staging}/_sdls_meta.json",
-            {"schema": spark.range(1).schema.json()},
-        )
+        shutil.copytree(f"{info.location}/_log", f"{staging}/_log")
         names = {i.name for i in store.register_all()}
         assert names == {"t"}
 
@@ -162,7 +176,9 @@ class TestCommitRecovery:
 class _FaultyFs:
     """A Hadoop FileSystem whose mutating calls are counted, and the
     ``fail_at``-th one raises instead of running: a crash at exactly
-    that point of a commit."""
+    that point of a commit. With ``tear``, a failing ``create`` runs
+    and returns a stream that writes half of its bytes, then raises: a
+    crash mid-write."""
 
     MUTATING = ("create", "rename", "delete", "mkdirs")
 
@@ -177,20 +193,34 @@ class _FaultyFs:
         def call(*args):
             self._state["n"] += 1
             if self._state["n"] == self._state["fail_at"]:
+                if name == "create" and self._state["tear"]:
+                    return _TornStream(attr(*args))
                 raise _Crash(f"{name} #{self._state['n']}")
             return attr(*args)
 
         return call
 
 
+class _TornStream:
+    def __init__(self, out):
+        self._out = out
+
+    def write(self, data):
+        self._out.write(data[: len(data) // 2])
+        raise _Crash("torn write")
+
+    def close(self):
+        self._out.close()
+
+
 class _Crash(Exception):
     pass
 
 
-def _faulty(store, fail_at=0):
+def _faulty(store, fail_at=0, tear=False):
     """Route the store's filesystem helpers through ``_FaultyFs``;
     returns the call counter (``fail_at=0`` never fails)."""
-    state = {"n": 0, "fail_at": fail_at}
+    state = {"n": 0, "fail_at": fail_at, "tear": tear}
     real = store._fs
     store._fs = lambda path: _FaultyFs(real(path), state)
     return state
@@ -200,8 +230,10 @@ class TestCommitFaultInjection:
     """A crash at every filesystem step of one commit: after a fresh
     store's ``register_all`` and one no-op write, the table holds
     exactly its pre-write or its post-write state — rows, schema,
-    partition list and file count — and its zone maps cover every
-    live file."""
+    partition list, file count and, with history, the version list —
+    no version is left half rolled forward, and the newest version's
+    file map is exactly the data files on disk, each with a zone
+    map."""
 
     def _frame(self, spark, lo, hi, tag):
         return spark.range(lo, hi).select(
@@ -214,36 +246,47 @@ class TestCommitFaultInjection:
             "db", "t", self._frame(spark, 0, 10, "a"), ["k"]
         )
 
-    def _state(self, spark, root):
-        store = TableStore(spark, LakeConfig(root=root))
+    def _state(self, spark, root, history):
+        store = TableStore(spark, LakeConfig(root=root), history)
         info = store.info("db", "t")
         if info is None:
             return None
         df = store.read("db", "t")
         rows = sorted(repr(sorted(r.asDict().items())) for r in df.collect())
-        live = {rel for _, rel, _ in store._walk_data_files(info.location)}
-        assert set(store._load_file_stats(info.location)) == live
-        return rows, df.schema.simpleString(), info.partition_by, len(live)
+        newest = store._latest(info.location)
+        assert not os.path.exists(info.location + newest["staging"])
+        assert set(newest["files"]) == _on_disk(info.location)
+        assert all(e["zone_map"] for e in newest["files"].values())
+        versions = [s["version"] for s in store.snapshots("db", "t")]
+        if history:
+            latest = store.read_version("db", "t", versions[-1])
+            assert sorted(
+                repr(sorted(r.asDict().items())) for r in latest.collect()
+            ) == rows
+        return (
+            rows, df.schema.simpleString(), info.partition_by,
+            len(newest["files"]), versions,
+        )
 
-    def _noop_write(self, spark, root):
+    def _noop_write(self, spark, root, history):
         """Upsert one stored row unchanged."""
-        store = TableStore(spark, LakeConfig(root=root))
+        store = TableStore(spark, LakeConfig(root=root), history)
         if store.info("db", "t") is None:
             return
         df = store.read("db", "t")
         row = spark.createDataFrame([df.first()], df.schema)
         store.merge("db", "t", row, ["k"])
 
-    def _check(self, spark, tmp_path, setup, write):
+    def _check(self, spark, tmp_path, setup, write, history=False):
         template = str(tmp_path / "template")
         os.makedirs(template)
-        setup(TableStore(spark, LakeConfig(root=template)))
-        pre = self._state(spark, template)
+        setup(TableStore(spark, LakeConfig(root=template), history))
+        pre = self._state(spark, template, history)
 
         def run(name, fail_at):
             root = str(tmp_path / name)
             shutil.copytree(template, root)
-            store = TableStore(spark, LakeConfig(root=root))
+            store = TableStore(spark, LakeConfig(root=root), history)
             calls = _faulty(store, fail_at)
             if fail_at:
                 with pytest.raises(_Crash):
@@ -253,31 +296,42 @@ class TestCommitFaultInjection:
             return root, calls["n"]
 
         root, n_calls = run("clean", 0)
-        post = self._state(spark, root)
+        post = self._state(spark, root, history)
         assert pre != post and n_calls >= 4
         for k in range(1, n_calls + 1):
             root, _ = run(f"crash{k}", k)
-            TableStore(spark, LakeConfig(root=root)).register_all()
-            assert not os.path.exists(
-                f"{root}/warehouse/db/t/_sdls_pending.json"
-            )
-            got = self._state(spark, root)
+            TableStore(spark, LakeConfig(root=root), history).register_all()
+            got = self._state(spark, root, history)
             assert got in (pre, post), f"crash at mutating call {k}"
-            self._noop_write(spark, root)
+            self._noop_write(spark, root, history)
             # The no-op write may rewrite a file, not change the table.
-            after = self._state(spark, root)
+            after = self._state(spark, root, history)
             assert (after and after[:3]) == (got and got[:3]), (
                 f"crash at mutating call {k}"
             )
 
-    def test_merge_widening_schema(self, spark, tmp_path):
-        def write(store):
-            batch = self._frame(spark, 5, 15, "b").withColumn(
-                "w", F.col("k") * 10
-            )
-            store.merge("db", "t", batch, ["k"])
+    def _widening_merge(self, spark, store):
+        batch = self._frame(spark, 5, 15, "b").withColumn(
+            "w", F.col("k") * 10
+        )
+        store.merge("db", "t", batch, ["k"])
 
-        self._check(spark, tmp_path, self._flat(spark), write)
+    def _partitioned_replace(self, spark, store):
+        store.create_or_replace(
+            "db", "t", self._frame(spark, 5, 15, "b"), ["k"], ["p"]
+        )
+
+    def test_merge_widening_schema(self, spark, tmp_path):
+        self._check(
+            spark, tmp_path, self._flat(spark),
+            lambda store: self._widening_merge(spark, store),
+        )
+
+    def test_merge_widening_schema_with_history(self, spark, tmp_path):
+        self._check(
+            spark, tmp_path, self._flat(spark),
+            lambda store: self._widening_merge(spark, store), history=True,
+        )
 
     def test_append(self, spark, tmp_path):
         def write(store):
@@ -286,12 +340,19 @@ class TestCommitFaultInjection:
         self._check(spark, tmp_path, self._flat(spark), write)
 
     def test_replace_flat_with_partitioned(self, spark, tmp_path):
-        def write(store):
-            store.create_or_replace(
-                "db", "t", self._frame(spark, 5, 15, "b"), ["k"], ["p"]
-            )
+        self._check(
+            spark, tmp_path, self._flat(spark),
+            lambda store: self._partitioned_replace(spark, store),
+        )
 
-        self._check(spark, tmp_path, self._flat(spark), write)
+    def test_replace_flat_with_partitioned_with_history(
+        self, spark, tmp_path
+    ):
+        self._check(
+            spark, tmp_path, self._flat(spark),
+            lambda store: self._partitioned_replace(spark, store),
+            history=True,
+        )
 
     def test_create_new_table(self, spark, tmp_path):
         def write(store):
@@ -312,6 +373,95 @@ class TestCommitFaultInjection:
         self._check(spark, tmp_path, setup, write)
 
 
+class TestCommitLog:
+    """A commit torn mid-write is no version, and a commit whose
+    version another writer took is detected and undone."""
+
+    def _table(self, spark, store):
+        store.create_or_replace(
+            "db", "t",
+            spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), ["k"],
+        )
+
+    def _rows(self, store):
+        return {(r.k, r.v) for r in store.read("db", "t").collect()}
+
+    def test_torn_commit_leaves_last_version(self, spark, tmp_path):
+        root = str(tmp_path / "lake")
+        store = TableStore(spark, LakeConfig(root=root))
+        self._table(spark, store)
+        batch = spark.createDataFrame([(2, "B")], ["k", "v"])
+        # The first file the commit creates is cut off mid-write.
+        _faulty(store, fail_at=1, tear=True)
+        with pytest.raises(_Crash):
+            store.merge("db", "t", batch, ["k"])
+
+        fresh = TableStore(spark, LakeConfig(root=root))
+        assert fresh.info("db", "t").primary_keys == ["k"]
+        assert [i.name for i in fresh.register_all()] == ["t"]
+        assert self._rows(fresh) == {(1, "a"), (2, "b")}
+        log = f"{root}/warehouse/db/t/_log"
+        bodies = [
+            open(f"{log}/{n}").read()
+            for n in os.listdir(log)
+            if not n.endswith(".crc")
+        ]
+        torn = []
+        for body in bodies:
+            try:
+                json.loads(body)
+            except ValueError:
+                torn.append(body)
+        assert len(torn) == 1 and len(bodies) == 2
+
+        fresh.merge("db", "t", batch, ["k"])
+        assert self._rows(fresh) == {(1, "a"), (2, "B")}
+        location = fresh.info("db", "t").location
+        assert set(fresh._latest(location)["files"]) == _on_disk(location)
+
+    @pytest.mark.parametrize("winner_commits", [1, 2])
+    def test_conflicting_commit_raises_and_keeps_winner(
+        self, spark, tmp_path, winner_commits
+    ):
+        from serverless_data_lake_spark.catalog import CommitConflict
+
+        root = str(tmp_path / "lake")
+        loser = TableStore(spark, LakeConfig(root=root))
+        winner = TableStore(spark, LakeConfig(root=root))
+        self._table(spark, loser)
+        location = loser.info("db", "t").location
+        real_stage = loser._stage
+        won = []
+
+        def stage_after_winner(*args):
+            # The winner commits between the loser's read and commit.
+            for k in range(3, 3 + winner_commits):
+                winner.merge(
+                    "db", "t",
+                    spark.createDataFrame([(k, "w")], ["k", "v"]), ["k"],
+                )
+            won.append(winner._latest(location))
+            return real_stage(*args)
+
+        loser._stage = stage_after_winner
+        with pytest.raises(CommitConflict):
+            loser.merge(
+                "db", "t", spark.createDataFrame([(1, "L")], ["k", "v"]),
+                ["k"],
+            )
+
+        parent = os.path.dirname(location)
+        assert not [n for n in os.listdir(parent) if "__stage_" in n]
+        assert winner._versions(location) == [1 + winner_commits]
+        expected = {(1, "a"), (2, "b")} | {
+            (k, "w") for k in range(3, 3 + winner_commits)
+        }
+        assert self._rows(winner) == expected
+        # The winner's files and zone maps are exactly as it committed.
+        assert winner._latest(location) == won[0]
+        assert set(won[0]["files"]) == _on_disk(location)
+
+
 class TestZoneMaps:
     """Per-file lead-key min/max stats: maintained by every write,
     consumed by merge to prune non-overlapping files before the
@@ -330,51 +480,51 @@ class TestZoneMaps:
 
     def test_stats_written_and_updated(self, spark, store):
         info = self._two_range_table(spark, store)
-        stats = store._load_file_stats(info.location)
-        files = store._list_data_files(info.location)
-        assert len(stats) == len(files) >= 2
-        ranges = sorted(tuple(v) for v in stats.values())
+        files = store._latest(info.location)["files"]
+        assert set(files) == _on_disk(info.location) and len(files) >= 2
+        ranges = sorted(tuple(e["zone_map"]) for e in files.values())
         assert ranges[0] == (0, 99) and ranges[-1] == (10_000, 10_099)
 
     def test_merge_prunes_disjoint_files(self, spark, store):
         info = self._two_range_table(spark, store)
-        before = {
-            f.rsplit("/", 1)[-1] for f in store._list_data_files(info.location)
-        }
-        stats_before = store._load_file_stats(info.location)
+        files_before = store._latest(info.location)["files"]
         # Batch touches only the hi range; the lo file's range [0,99]
         # is disjoint -> pruned before the affected scan.
-        lo_file = next(b for b, v in stats_before.items() if v[1] == 99)
+        lo_file = next(
+            b for b, e in files_before.items() if e["zone_map"][1] == 99
+        )
         updates = spark.createDataFrame([(10_000, "HI")], ["k", "v"])
         store.merge("db", "t", updates, ["k"])
-        after = {
-            f.rsplit("/", 1)[-1] for f in store._list_data_files(info.location)
-        }
+        after = _on_disk(info.location)
         assert lo_file in after  # untouched, not rewritten
         rows = {r.k: r.v for r in store.read("db", "t").collect()}
         assert rows[10_000] == "HI" and rows[0] == "lo" and len(rows) == 200
         # stats follow the rewrite: deleted file's entry gone, new
         # file's entry present, lo entry intact
-        stats_after = store._load_file_stats(info.location)
-        assert stats_after[lo_file] == [0, 99]
-        assert len(stats_after) == len(after)
+        files_after = store._latest(info.location)["files"]
+        assert files_after[lo_file]["zone_map"] == [0, 99]
+        assert set(files_after) == after
 
     def test_prune_by_stats_logic(self, store):
-        stats = {"a": [0, 99], "b": [100, 199], "c": [50, 150]}
-        files = ["/x/a", "/x/b", "/x/c", "/x/unknown"]
+        files = {
+            name: {"size": 1, "zone_map": zm}
+            for name, zm in (
+                ("a", [0, 99]), ("b", [100, 199]), ("c", [50, 150]),
+                ("unknown", None),
+            )
+        }
         # batch [120, 130]: a disjoint; b, c overlap; unknown kept
-        kept = store._prune_by_stats(files, stats, 120, 130)
-        assert kept == ["/x/b", "/x/c", "/x/unknown"]
+        kept = store._prune_by_stats(files, 120, 130)
+        assert kept == ["b", "c", "unknown"]
         # non-numeric bounds -> no pruning
-        assert store._prune_by_stats(files, stats, "x", "y") == files
+        assert store._prune_by_stats(files, "x", "y") == list(files)
 
     def test_merge_against_fully_disjoint_batch_inserts_only(self, spark, store):
         self._two_range_table(spark, store)
         batch = spark.createDataFrame([(500, "new")], ["k", "v"])
-        info = store.info("db", "t")
-        before = set(store._list_data_files(info.location))
+        before = set(_files(store, "db", "t"))
         store.merge("db", "t", batch, ["k"])
-        after = set(store._list_data_files(info.location))
+        after = set(_files(store, "db", "t"))
         assert before <= after  # nothing rewritten, pure insert
         assert store.read("db", "t").count() == 201
 
@@ -392,9 +542,9 @@ class TestZoneMaps:
             )
         info = store.info("db", "t")
         assert store.compact("db", "t") >= 2
-        stats = store._load_file_stats(info.location)
-        files = store._list_data_files(info.location)
-        assert set(stats) == {f.rsplit("/", 1)[-1] for f in files}
+        files = store._latest(info.location)["files"]
+        assert set(files) == _on_disk(info.location)
+        assert all(e["zone_map"] for e in files.values())
 
 
 @pytest.fixture()
@@ -496,11 +646,10 @@ class TestCompactSortBy:
         )
         assert n == 4
         info = store.info("db", "t")
-        stats = store._load_file_stats(info.location)  # noqa: SLF001
-        files = store._list_data_files(info.location)  # noqa: SLF001
+        files = store._latest(info.location)["files"]  # noqa: SLF001
         assert len(files) >= 2
         # Post-sort, file key ranges are disjoint (tight clustering).
-        ranges = sorted(stats.values())
+        ranges = sorted(e["zone_map"] for e in files.values())
         for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
             assert hi1 < lo2
         # Rows intact.

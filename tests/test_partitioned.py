@@ -39,8 +39,9 @@ def _base(spark, n=100, parts=4):
 
 
 def _files(store, db, table):
-    info = store.info(db, table)
-    return sorted(store._list_data_files(info.location))
+    """The data files of the table's newest version, as full paths."""
+    location = store.info(db, table).location
+    return sorted(f"{location}/{f}" for f in store._latest(location)["files"])
 
 
 class TestPartitionedCreateRead:
@@ -156,8 +157,10 @@ class TestPartitionedMerge:
             F.col("id").alias("v"),
         ).coalesce(1)
         info = store.create_or_replace("d_gold", "t", df, ["id"], ["p"])
-        stats = store._load_file_stats(info.location)
-        assert sorted(stats.values()) == [[0, 9], [10, 19], [20, 29]]
+        files = store._latest(info.location)["files"]
+        assert sorted(e["zone_map"] for e in files.values()) == [
+            [0, 9], [10, 19], [20, 29]
+        ]
         src = spark.createDataFrame([(5, 0, -5)], "id long, p long, v long")
         store.merge("d_gold", "t", src, ["id"])
         rows = {r.id: r.v for r in store.read("d_gold", "t").collect()}

@@ -33,6 +33,10 @@ def main() -> None:
     root = f"/tmp/sdls_merge_bench_{os.getpid()}"
     store = TableStore(spark, LakeConfig(root=root))
 
+    def files(info):
+        """The data files of the table's newest version."""
+        return set(store._latest(info.location)["files"])  # noqa: SLF001
+
     events = spark.read.parquet(
         data_path("/root/testdata/sf0.1", "events")
     )
@@ -43,18 +47,18 @@ def main() -> None:
     clustered = events.repartitionByRange(n_files, "event_id")
     store.create_or_replace("bench_silver", "events", clustered, ["event_id"])
     info = store.info("bench_silver", "events")
-    total_files = len(store._list_data_files(info.location))  # noqa: SLF001
+    total_files = len(files(info))
 
     # CDC batch: updates to a contiguous key range (typical hot range).
     batch = (
         events.filter(F.col("event_id") < batch_rows)
         .withColumn("value", F.col("value") + 1000.0)
     )
-    before = set(store._list_data_files(info.location))  # noqa: SLF001
+    before = files(info)
     t0 = time.time()
     store.merge("bench_silver", "events", batch, ["event_id"])
     merge_s = time.time() - t0
-    after = set(store._list_data_files(info.location))  # noqa: SLF001
+    after = files(info)
 
     untouched = len(before & after)
     rewritten = len(before - after)
@@ -85,12 +89,12 @@ def main() -> None:
     pbatch = events.filter(
         (F.col("event_type") == one_type) & (F.col("event_id") < batch_rows)
     ).withColumn("value", F.col("value") + 1000.0)
-    pbefore = set(store._list_data_files(pinfo.location))  # noqa: SLF001
+    pbefore = files(pinfo)
     t0 = time.time()
     store.merge("bench_silver", "events_part", pbatch, ["event_id"])
     pmerge_s = time.time() - t0
-    pafter = set(store._list_data_files(pinfo.location))  # noqa: SLF001
-    outside = {f for f in pbefore if f"/event_type={one_type}/" not in f}
+    pafter = files(pinfo)
+    outside = {f for f in pbefore if not f.startswith(f"event_type={one_type}/")}
     print(
         {
             "partitioned_total_files": len(pbefore),
