@@ -20,14 +20,19 @@ the *plan shape* matches what an Iceberg MERGE would do at 100 TB:
   reference ``main.py:134-138``).
 - Tables are registered in the session catalog as external parquet
   tables (``{domain}_{layer}.{table}``), so ``spark.sql`` resolves
-  rewritten three-part names and Catalyst gets stats/pushdown.
+  rewritten three-part names and Catalyst gets stats/pushdown. A
+  partitioned table's partition list is derived from the ``col=value``
+  directories of its committed files, never from a directory scan.
 
 Durability model: one commit log per table, ``{location}/_log/``, of
 numbered version files (``{version:020d}.json``, the Delta Lake
 layout). A version holds the whole table state — schema, keys,
-partition/bucket layout, and every live data file with its size and
-lead-key zone map — plus its commit's journal: the staging dir and the
-files the commit removes. The table's state is its newest version.
+partition/bucket layout, every live data file with its size and
+lead-key zone map, and ``consumed``: the source objects whose rows the
+table holds (silver's bronze objects) — plus its commit's journal: the
+staging dir and the files the commit removes. The table's state is its
+newest version, and it is the only state a write leaves: a writer's
+progress commits atomically with its data (Delta's ``txn`` action).
 
 Every write stages its output under ``{location}__stage_*``, writes
 the next version to a temp file inside ``_log/`` and renames it to its
@@ -43,16 +48,17 @@ write or ``register_all`` a table holds exactly its pre-write or its
 post-write state.
 
 Single writer per table, with conflicts detected, not retried: a
-rename onto a taken version number fails, and a commit that finds a
-newer version than its own lost the race too; the loser removes its
-staging dir and raises :class:`CommitConflict`. Readers still list the
-table directory (the catalog tables need it for ``PARTITIONED BY``
-pruning and bucketed joins), so a concurrent reader can observe a
-partly rolled-forward write during the (small) roll-forward window.
-That is weaker than the reference's Iceberg snapshot isolation, and
-the trade is deliberate for plain parquet; swap the backend for
-Iceberg/Delta in environments that ship the jar, the interface is
-unchanged.
+rename onto a taken version number fails, a commit that finds a newer
+version than its own lost the race too, and so does a commit that
+adds a source object its base version already consumed; the loser
+removes its staging dir and raises :class:`CommitConflict`. Readers
+still list the table directory (the catalog tables need it for
+``PARTITIONED BY`` pruning and bucketed joins), so a concurrent reader
+can observe a partly rolled-forward write during the (small)
+roll-forward window. That is weaker than the reference's Iceberg
+snapshot isolation, and the trade is deliberate for plain parquet;
+swap the backend for Iceberg/Delta in environments that ship the jar,
+the interface is unchanged.
 """
 
 from __future__ import annotations
@@ -186,9 +192,7 @@ class TableStore:
                 fs.mkdirs(self._hpath(dst.rsplit("/", 1)[0]))
             fs.rename(self._hpath(f"{src_dir}/{rel}"), self._hpath(dst))
 
-    def _read_json(self, path: str) -> dict | list | None:
-        if not self._exists(path):
-            return None
+    def _read_json(self, path: str) -> dict:
         fs = self._fs(path)
         stream = fs.open(self._hpath(path))
         try:
@@ -201,25 +205,19 @@ class TableStore:
             stream.close()
         return json.loads(data.decode())
 
-    def _write_json(self, path: str, obj) -> None:
-        fs = self._fs(path)
-        out = fs.create(self._hpath(path), True)
-        try:
-            out.write(bytearray(json.dumps(obj).encode()))
-        finally:
-            out.close()
-
     def _norm(self, path: str) -> str:
         """Scheme-less absolute path (``file:/x`` and ``/x`` compare
         equal)."""
         return self._hpath(path).toUri().getPath()
 
     def _rel(self, root: str, path: str) -> str:
-        """Path relative to ``root`` (falls back to the basename when
-        ``path`` is not under ``root``)."""
+        """Path relative to ``root``; raises if ``path`` is not under
+        it (a wrong name must not reach a file map, nor a delete)."""
         r = self._norm(root).rstrip("/") + "/"
         p = self._norm(path)
-        return p[len(r):] if p.startswith(r) else p.rsplit("/", 1)[-1]
+        if not p.startswith(r):
+            raise ValueError(f"{path} is not under {root}")
+        return p[len(r):]
 
     def _archive_file(self, location: str, path: str, rel: str) -> None:
         """Move a data file into the table's ``_archive/`` dir,
@@ -282,20 +280,29 @@ class TableStore:
         staging: str,
         remove: list[str],
         register: bool,
-        new_partitions=None,
+        consumed: list[str] = (),
     ) -> TableInfo:
         """The one commit step of every write. ``base`` is the version
         the write read (None: a new table); the new version's files are
         its files minus ``remove`` (paths below the table root) plus
-        the staged ones. After the roll-forward the catalog entry is
-        re-registered (``register``: the schema or layout changed) or
-        refreshed."""
+        the staged ones, and its ``consumed`` is the base's plus the
+        source objects the write passes. A write that passes an object
+        the base already consumed raises :class:`CommitConflict`: its
+        rows are in the table already. After the roll-forward the
+        catalog entry is re-registered (``register``: the schema or
+        layout changed), or gets the new files' partitions and a
+        refresh."""
+        done = base.get("consumed", []) if base else []
+        if set(consumed) & set(done):
+            self._delete(staging)
+            raise CommitConflict(f"{info.location}: objects already consumed")
         gone = set(remove)
+        staged = self._staged_files(staging, info)
         files = {
             rel: entry
             for rel, entry in (base["files"] if base else {}).items()
             if rel not in gone
-        } | self._staged_files(staging, info)
+        } | staged
         record = {
             "version": (base["version"] if base else 0) + 1,
             "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -305,15 +312,17 @@ class TableStore:
             "bucket_by": info.bucket_by,
             "n_buckets": info.n_buckets,
             "files": files,
+            "consumed": done + list(consumed),
             "staging": staging.removeprefix(info.location),
             "remove": remove,
         }
         self._publish(info.location, record)
         self._roll_forward(info.location, record)
         if register:
-            self._register(info)
+            self._register(info, files)
         else:
-            self._refresh(info, new_partitions)
+            self._add_partitions(info, staged)
+            self.spark.sql(f"REFRESH TABLE `{info.database}`.`{info.name}`")
         return info
 
     def _publish(self, location: str, record: dict) -> None:
@@ -325,7 +334,11 @@ class TableStore:
         :class:`CommitConflict` is raised."""
         tmp = f"{location}/{_LOG_DIR}/.{uuid.uuid4().hex}.tmp"
         version = record["version"]
-        self._write_json(tmp, record)
+        out = self._fs(tmp).create(self._hpath(tmp), True)
+        try:
+            out.write(bytearray(json.dumps(record).encode()))
+        finally:
+            out.close()
         dst = self._version_path(location, version)
         if self._fs(dst).rename(self._hpath(tmp), self._hpath(dst)):
             if self._versions(location)[-1] == version:
@@ -360,29 +373,22 @@ class TableStore:
                     self._delete(self._version_path(location, v))
         self._delete(staging)
 
-    def _recover(self, location: str) -> tuple[dict | None, bool]:
-        """The newest version, rolled forward first if a crash cut its
-        commit short; also returns whether it was."""
-        record = self._latest(location)
-        if record is None or not self._exists(location + record["staging"]):
-            return record, False
-        self._roll_forward(location, record)
-        return record, True
-
     def _open(
         self, database: str, table: str
     ) -> tuple[TableInfo | None, dict | None]:
         """A write's view of its table: the newest version, rolled
-        forward if a crash cut it short, and its table info. A
-        rolled-forward table is re-registered, because the crashed
-        write never synced the catalog."""
+        forward if a crash cut its commit short (its staging dir still
+        exists), and its table info. A rolled-forward table is
+        re-registered, because the crashed write never synced the
+        catalog."""
         location = self.config.table_path(database, table)
-        record, recovered = self._recover(location)
+        record = self._latest(location)
         if record is None:
             return None, None
         info = self._table_info(database, table, location, record)
-        if recovered:
-            self._register(info)
+        if self._exists(location + record["staging"]):
+            self._roll_forward(location, record)
+            self._register(info, record["files"])
         return info, record
 
     # ------------------------------------------------------------------
@@ -404,7 +410,10 @@ class TableStore:
         """``{rel: {"size", "zone_map"}}`` for the data files under
         ``staging``, ``rel`` being the path below it (and so below the
         table root once moved in). A lead key that is a partition
-        column has no zone maps (its values live in directory names)."""
+        column has no zone maps (its values live in directory names).
+        On a keyed table the zone-map job also finds the empty files a
+        write leaves (a file it does not group has no rows): they are
+        deleted from staging and left out of the map."""
         walked = self._walk_data_files(staging)
         key = info.primary_keys[0] if info.primary_keys else None
         zone_maps = {}
@@ -421,10 +430,16 @@ class TableStore:
                 .collect()
             )
             # _metadata.file_path is URL-encoded; Hadoop paths are not.
-            zone_maps = {
+            bounds = {
                 self._rel(staging, unquote(r["__f"])): [r["mn"], r["mx"]]
                 for r in rows
-                if self._statable(r["mn"]) and self._statable(r["mx"])
+            }
+            for f, rel, _ in walked:
+                if rel not in bounds:
+                    self._delete(f)
+            walked = [w for w in walked if w[1] in bounds]
+            zone_maps = {
+                rel: b for rel, b in bounds.items() if all(map(self._statable, b))
             }
         return {
             rel: {"size": size, "zone_map": zone_maps.get(rel)}
@@ -534,8 +549,18 @@ class TableStore:
         """Delete all but the last ``keep_last`` versions (the newest
         always stays: it is the current state), then the archived files
         no kept version references. Returns the number of data files
-        deleted."""
+        deleted.
+
+        A write under the single-writer rule: like every write it first
+        finishes a roll-forward a crash cut short, after which no
+        version names a staging dir that still exists. So it also
+        deletes what crashed commits left: every ``{location}__stage_*``
+        dir and the temp files in ``_log/``."""
         location = self._location(database, table)
+        self._open(database, table)
+        for leftover in (f"{location}__stage_*", f"{location}/{_LOG_DIR}/.*.tmp"):
+            for st in self._fs(location).globStatus(self._hpath(leftover)):
+                self._delete(st.getPath().toString())
         versions = self._versions(location)
         kept = versions[-max(keep_last, 1):]
         referenced: set[str] = set()
@@ -560,12 +585,12 @@ class TableStore:
     def ensure_database(self, database: str) -> None:
         self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{database}`")
 
-    def _register(self, info: TableInfo) -> None:
+    def _register(self, info: TableInfo, files) -> None:
         """(Re-)declare the external table with the current schema.
         Partitioned tables register with ``PARTITIONED BY`` so
         Catalyst prunes partition directories on partition-column
-        filters, then recover their partition list from the
-        directory layout."""
+        filters, and list the partitions of ``files``, the version's
+        data files."""
         self.ensure_database(info.database)
         self.spark.sql(f"DROP TABLE IF EXISTS `{info.database}`.`{info.name}`")
         fields = info.schema.fields
@@ -596,47 +621,29 @@ class TableStore:
             f"CREATE TABLE `{info.database}`.`{info.name}` ({ddl}) "
             f"USING parquet{part}{bucket} LOCATION '{info.location}'"
         )
-        if info.partition_by:
-            self.spark.sql(
-                f"ALTER TABLE `{info.database}`.`{info.name}` "
-                f"RECOVER PARTITIONS"
-            )
+        self._add_partitions(info, files)
 
-    def _refresh(self, info: TableInfo, new_partitions=None) -> None:
-        """Post-write catalog sync: new partition directories must be
-        added to the catalog's partition list. When the write knows
-        exactly which partition values its batch touched
-        (``new_partitions``: rows keyed by partition column), each is
-        added surgically with ADD IF NOT EXISTS PARTITION — O(batch
-        partitions). Otherwise RECOVER rescans the whole layout —
-        O(table partitions), the fallback a 10k-partition table
-        should avoid on the hot path."""
-        q = f"`{info.database}`.`{info.name}`"
-        if info.partition_by:
-            specs = None
-            if new_partitions is not None and all(
-                r[c] is not None
-                for r in new_partitions
-                for c in info.partition_by
-            ):
-                specs = [
-                    ", ".join(
-                        "`{}`='{}'".format(
-                            c, str(r[c]).replace("'", "''")
-                        )
-                        for c in info.partition_by
-                    )
-                    for r in new_partitions
-                ]
-            if specs is not None:
-                for spec in specs:
-                    self.spark.sql(
-                        f"ALTER TABLE {q} "
-                        f"ADD IF NOT EXISTS PARTITION ({spec})"
-                    )
-            else:
-                self.spark.sql(f"ALTER TABLE {q} RECOVER PARTITIONS")
-        self.spark.sql(f"REFRESH TABLE {q}")
+    def _add_partitions(self, info: TableInfo, files) -> None:
+        """Add the partitions of ``files`` (paths below the table root,
+        ``col=value/.../name``) to the catalog's partition list in one
+        statement: the list follows the committed files, and costs
+        O(partitions written), not a rescan of the layout. Directory
+        values are path-escaped (``a%2Fb``); a null is
+        ``__HIVE_DEFAULT_PARTITION__``, which the catalog reads back as
+        NULL."""
+        specs = sorted({
+            ", ".join(
+                "`{}`='{}'".format(c, unquote(d.split("=", 1)[1])
+                                   .replace("\\", "\\\\").replace("'", "\\'"))
+                for c, d in zip(info.partition_by, rel.split("/"))
+            )
+            for rel in files
+        } if info.partition_by else ())
+        if specs:
+            self.spark.sql(
+                f"ALTER TABLE `{info.database}`.`{info.name}` ADD IF NOT EXISTS "
+                + " ".join(f"PARTITION ({s})" for s in specs)
+            )
 
     def register_all(self) -> list[TableInfo]:
         """Scan the warehouse and register every persisted table in
@@ -656,13 +663,10 @@ class TableStore:
                 name = t_status.getPath().getName()
                 if "__stage_" in name:
                     continue  # staging dir of a crashed write
-                location = t_status.getPath().toString()
-                record, _ = self._recover(location)
-                if record is None:
-                    continue
-                info = self._table_info(database, name, location, record)
-                self._register(info)
-                infos.append(info)
+                info, record = self._open(database, name)
+                if info is not None:
+                    self._register(info, record["files"])
+                    infos.append(info)
         return infos
 
     def table_exists(self, database: str, table: str) -> bool:
@@ -677,7 +681,7 @@ class TableStore:
         ):
             # Missing, or a stale registration left by another Lake
             # instance (different root) in this shared session.
-            self._register(info)
+            self._register(info, self._latest(info.location)["files"])
         return self.spark.table(qualified)
 
     def _registered_location(self, database: str, table: str) -> str | None:
@@ -699,6 +703,18 @@ class TableStore:
         if record is None:
             return None
         return self._table_info(database, table, location, record)
+
+    def consumed(self, database: str, table: str) -> set[str]:
+        """The source objects whose rows the table holds: its newest
+        version's ``consumed`` (see :meth:`_commit`)."""
+        record = self._latest(self.config.table_path(database, table))
+        if record is not None and "consumed" not in record:
+            raise ValueError(
+                f"{database}.{table}: its newest version predates the "
+                f"consumed-object record, so which source objects it "
+                f"holds is unknown; re-create it from its sources"
+            )
+        return set(record["consumed"]) if record else set()
 
     @staticmethod
     def _table_info(
@@ -725,6 +741,7 @@ class TableStore:
         df: DataFrame,
         primary_keys: list[str] | None = None,
         partition_by: list[str] | None = None,
+        consumed: list[str] = (),
     ) -> TableInfo:
         """Full overwrite (gold ``write_mode=overwrite`` — reference
         S6). The new content is staged, then committed as a write that
@@ -737,7 +754,9 @@ class TableStore:
         (``col=value/`` directories): scans filtered on partition
         columns prune whole directories, and upserts/appends touch
         only the partitions their batch lands in — the primary
-        file-organization lever at 100 TB."""
+        file-organization lever at 100 TB. ``consumed`` names the
+        source objects the write's rows come from (see
+        :meth:`_commit`), here and in :meth:`append` / :meth:`merge`."""
         partition_by = list(partition_by or [])
         missing = [c for c in partition_by if c not in df.columns]
         if missing:
@@ -753,7 +772,8 @@ class TableStore:
             database, table, location, schema, primary_keys or [], partition_by
         )
         return self._commit(
-            info, base, staging, list(base["files"]) if base else [], True
+            info, base, staging, list(base["files"]) if base else [], True,
+            consumed,
         )
 
     def create_bucketed(
@@ -827,6 +847,7 @@ class TableStore:
         df: DataFrame,
         primary_keys: list[str] | None = None,
         partition_by: list[str] | None = None,
+        consumed: list[str] = (),
     ) -> TableInfo:
         """Append with union-by-name schema evolution (reference S5 +
         V6: new columns widen the table schema; old files read as
@@ -836,7 +857,7 @@ class TableStore:
         existing, base = self._open(database, table)
         if existing is None:
             return self.create_or_replace(
-                database, table, df, primary_keys, partition_by
+                database, table, df, primary_keys, partition_by, consumed
             )
         if existing.bucket_by:
             raise ValueError(
@@ -856,7 +877,7 @@ class TableStore:
             existing.partition_by,
         )
         return self._commit(
-            info, base, staging, [], register=merged_schema != existing.schema
+            info, base, staging, [], merged_schema != existing.schema, consumed
         )
 
     def merge(
@@ -866,6 +887,7 @@ class TableStore:
         source: DataFrame,
         keys: list[str],
         partition_by: list[str] | None = None,
+        consumed: list[str] = (),
     ) -> TableInfo:
         """Upsert: MERGE-matched-update-all / not-matched-insert-all
         semantics (reference S7/S8) via file-level copy-on-write.
@@ -908,7 +930,7 @@ class TableStore:
         existing, base = self._open(database, table)
         if existing is None:
             return self.create_or_replace(
-                database, table, source, keys, partition_by
+                database, table, source, keys, partition_by, consumed
             )
         if existing.bucket_by:
             raise ValueError(
@@ -918,11 +940,6 @@ class TableStore:
             )
 
         merged_schema = self._merge_schemas(existing.schema, source.schema)
-        # Captured before _conform: a batch that never carried a
-        # partition column gets it null-filled by _conform, and a
-        # null partition value must not be mistaken for a real batch
-        # partition tuple when deciding whether pruning is safe.
-        source_cols = set(source.columns)
         source = self._conform(source, merged_schema)
         location = existing.location
         pby = existing.partition_by
@@ -933,12 +950,18 @@ class TableStore:
         src_keys = source.select(*keys).dropDuplicates(keys).persist()
 
         batch_parts = None
-        if pby and all(c in source_cols for c in pby):
+        if pby and set(pby) <= set(keys):
             # The batch's partition tuples — bounded by the number of
             # partitions a batch touches, collected like Iceberg's
-            # partition summaries. Used for the surgical ADD
-            # PARTITION catalog sync, and for partition pruning when
-            # that is key-safe.
+            # partition summaries — prune the scan below. That is only
+            # sound when the partition tuple is part of the key: then
+            # equal keys imply equal partition values and a matched
+            # row cannot live outside the batch's partitions. Pruning
+            # on a non-key partition column would miss a stored row
+            # whose partition value differs from the incoming one
+            # (late correction) and silently duplicate its key. A key
+            # column the batch lacks is null-filled by _conform, and a
+            # null key matches nothing, so pruning on it is safe too.
             pvals = (
                 source.select(*pby).dropDuplicates(pby).limit(10001).collect()
             )
@@ -962,14 +985,7 @@ class TableStore:
         affected_files: list[str] = []
         if candidates:
             scan = reader.parquet(*[f"{location}/{f}" for f in candidates])
-            # Partition pruning is only sound when the partition tuple
-            # is part of the key: then equal keys imply equal
-            # partition values and a matched row cannot live outside
-            # the batch's partitions. Pruning on a non-key partition
-            # column would miss a stored row whose partition value
-            # differs from the incoming one (late correction) and
-            # silently duplicate its key.
-            if batch_parts and set(pby) <= set(keys):
+            if batch_parts:
                 cond = None
                 for r in batch_parts:
                     t = None
@@ -1004,16 +1020,13 @@ class TableStore:
         staging = self._stage(out, location, pby)
         src_keys.unpersist()
         info = TableInfo(database, table, location, merged_schema, keys, pby)
-        # The batch's collected partition tuples make the catalog sync
-        # surgical (ADD PARTITION per touched value) instead of a full
-        # layout rescan.
         return self._commit(
             info,
             base,
             staging,
             [self._rel(location, f) for f in affected_files],
-            register=merged_schema != existing.schema,
-            new_partitions=batch_parts,
+            merged_schema != existing.schema,
+            consumed,
         )
 
     def delete_insert(

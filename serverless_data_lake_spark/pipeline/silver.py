@@ -18,6 +18,11 @@ The write-path lifecycle (reference
 
 Batch and streaming share this code: the streaming variant calls
 :meth:`process_batch` from ``foreachBatch`` (see streaming/).
+
+Progress lives in the commit: the silver table's version records the
+bronze objects it consumed (``catalog.py``), so the write of a batch
+and the record that its objects are done are one atomic commit, and
+there is no second state file to tear or to fall behind.
 """
 
 from __future__ import annotations
@@ -65,41 +70,31 @@ class SilverProcessor:
 
     # ------------------------------------------------------------------
     def process_endpoint(self, domain: str, endpoint: str) -> SilverResult:
-        """Process bronze objects not yet processed for one endpoint.
+        """Process the bronze objects the silver table has not consumed.
 
         The reference is event-driven: every S3 object is processed
-        exactly once. The batch analogue keeps a processed-object
-        manifest per endpoint, so re-running is incremental and —
-        crucially for PK-less append endpoints — never duplicates
-        rows. (Streaming endpoints track progress in their own
-        checkpoint instead; use one mode per endpoint.)"""
+        exactly once. Here the silver table's newest version lists the
+        objects it consumed (as paths below the endpoint's bronze
+        prefix), and the write that applies the new ones adds them in
+        the same commit. A crash before that commit leaves them
+        unconsumed, a crash after it leaves them consumed, and a
+        processor that lost a race to another one finds its objects
+        already in the base version and raises ``CommitConflict``; so
+        re-running is incremental and — crucially for PK-less append
+        endpoints — never duplicates rows. (Streaming endpoints track
+        progress in their own checkpoint instead; use one mode per
+        endpoint.)"""
+        database = self.config.database_name(domain, "silver")
+        done = self.store.consumed(database, endpoint)
         objects = self.bronze.list_objects(domain, endpoint)
-        done = self._load_state(domain, endpoint)
-        new = [o for o in objects if o not in done]
+        new = {rel: path for rel, path in objects.items() if rel not in done}
         if not new:
             return SilverResult(domain, endpoint, 0, 0, "noop")
-        result = self.process_objects(domain, endpoint, new)
-        self._save_state(domain, endpoint, done | set(new))
-        return result
-
-    def process_objects(
-        self, domain: str, endpoint: str, paths: list[str]
-    ) -> SilverResult:
-        """Process specific bronze objects (the per-S3-event path)."""
-        df = self.spark.read.option("inferTimestamp", "true").json(paths)
-        return self.process_batch(domain, endpoint, self._with_arrival(df))
-
-    # -- processed-object manifest -------------------------------------
-    def _state_file(self, domain: str, endpoint: str) -> str:
-        return f"{self.config.root}/_processing_state/{domain}/{endpoint}.json"
-
-    def _load_state(self, domain: str, endpoint: str) -> set[str]:
-        path = self._state_file(domain, endpoint)
-        return set(self.store._read_json(path) or [])  # noqa: SLF001
-
-    def _save_state(self, domain: str, endpoint: str, done: set[str]) -> None:
-        path = self._state_file(domain, endpoint)
-        self.store._write_json(path, sorted(done))  # noqa: SLF001
+        reader = self.spark.read.option("inferTimestamp", "true")
+        df = reader.json(list(new.values()))
+        return self.process_batch(
+            domain, endpoint, self._with_arrival(df), sorted(new)
+        )
 
     @staticmethod
     def _with_arrival(df: DataFrame) -> DataFrame:
@@ -117,8 +112,14 @@ class SilverProcessor:
         )
 
     def process_batch(
-        self, domain: str, endpoint: str, df: DataFrame
+        self,
+        domain: str,
+        endpoint: str,
+        df: DataFrame,
+        consumed: list[str] = (),
     ) -> SilverResult:
+        """Dedup and write one batch; ``consumed`` names the bronze
+        objects it came from, committed with its rows."""
         schema = self.registry.get(domain, endpoint)
         primary_keys = schema.primary_keys if schema else []
         # Endpoint-declared silver partitioning (scale extension):
@@ -161,27 +162,29 @@ class SilverProcessor:
                 .observe(obs_out, F.count(F.lit(1)).alias("n"))
                 .persist()
             )
-            self.store.merge(
-                database, endpoint, cleaned, primary_keys, partition_by
-            )
-            rows_written = int(obs_out.get["n"])
-            mode = "merge"
         else:
             cleaned = df.drop(*METADATA_COLUMNS, "__arrival")
-            self.store.append(
-                database, endpoint, cleaned, partition_by=partition_by
-            )
-            rows_written = None
-            mode = "append"
-        rows_in = int(obs_in.get["n"])
-        if rows_written is None:
-            rows_written = rows_in
-
-        self._register_silver(domain, endpoint, cleaned, primary_keys)
-        df.unpersist()
-        if mode == "merge":
+        try:
+            if primary_keys:
+                self.store.merge(
+                    database, endpoint, cleaned, primary_keys, partition_by,
+                    consumed,
+                )
+            else:
+                self.store.append(
+                    database, endpoint, cleaned,
+                    partition_by=partition_by, consumed=consumed,
+                )
+        finally:
+            df.unpersist()
             cleaned.unpersist()
-        return SilverResult(domain, endpoint, rows_in, rows_written, mode)
+        rows_in = int(obs_in.get["n"])
+        rows_written = int(obs_out.get["n"]) if primary_keys else rows_in
+        self._register_silver(domain, endpoint, cleaned, primary_keys)
+        return SilverResult(
+            domain, endpoint, rows_in, rows_written,
+            "merge" if primary_keys else "append",
+        )
 
     # ------------------------------------------------------------------
     def _register_silver(

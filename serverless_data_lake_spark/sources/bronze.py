@@ -133,18 +133,26 @@ class BronzeZone:
         obj = self._write_jsonl(domain, table, stamped)
         return IngestResult(len(stamped), len(errors), errors, obj)
 
-    def list_objects(self, domain: str, table: str) -> list[str]:
+    def list_objects(self, domain: str, table: str) -> dict[str, str]:
+        """The endpoint's bronze objects as ``{rel: path}``, ``rel``
+        being the object's path below the endpoint prefix. Both come
+        from the one Hadoop listing, so ``rel`` does not depend on how
+        the lake root is spelled (``//``, ``.``, a trailing ``/``)."""
         path = self.config.bronze_path(domain, table)
         jvm = self.spark._jvm  # noqa: SLF001
         hpath = jvm.org.apache.hadoop.fs.Path(path)
         fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())  # noqa: SLF001
         if not fs.exists(hpath):
-            return []
-        out = []
+            return {}
+        root = fs.makeQualified(hpath).toUri().getPath().rstrip("/") + "/"
+        out = {}
         it = fs.listFiles(hpath, True)
         while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not name.startswith(("_", ".")):
-                out.append(st.getPath().toString())
+            obj = it.next().getPath()
+            if obj.getName().startswith(("_", ".")):
+                continue
+            key = obj.toUri().getPath()
+            if not key.startswith(root):
+                raise ValueError(f"bronze object {obj} is not under {root}")
+            out[key[len(root):]] = obj.toString()
         return out

@@ -10,8 +10,14 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from serverless_data_lake_spark.catalog import TableStore
+from serverless_data_lake_spark.catalog import CommitConflict, TableStore
 from serverless_data_lake_spark.config import LakeConfig
+from serverless_data_lake_spark.engine import Lake
+from serverless_data_lake_spark.schema.types import (
+    ColumnDef,
+    DataType,
+    EndpointSchema,
+)
 
 
 @pytest.fixture()
@@ -22,6 +28,16 @@ def store(spark, tmp_path):
 def _files(store, db, table):
     """The data files of the table's newest version."""
     return sorted(store._latest(store.info(db, table).location)["files"])
+
+
+def _leftovers(root):
+    """What crashed commits left under ``root``: staging dirs and temp
+    version files."""
+    out = []
+    for _, dirs, names in os.walk(root):
+        out += [n for n in dirs if "__stage_" in n]
+        out += [n for n in names if n.endswith((".tmp", ".tmp.crc"))]
+    return out
 
 
 def _on_disk(location):
@@ -175,8 +191,9 @@ class TestCommitRecovery:
 
 class _FaultyFs:
     """A Hadoop FileSystem whose mutating calls are counted, and the
-    ``fail_at``-th one raises instead of running: a crash at exactly
-    that point of a commit. With ``tear``, a failing ``create`` runs
+    ``fail_at``-th one (or the first one named ``fail_at``) raises
+    instead of running: a crash at exactly that point of a commit.
+    With ``tear``, a failing ``create`` runs
     and returns a stream that writes half of its bytes, then raises: a
     crash mid-write."""
 
@@ -192,7 +209,8 @@ class _FaultyFs:
 
         def call(*args):
             self._state["n"] += 1
-            if self._state["n"] == self._state["fail_at"]:
+            self._state["names"].append(name)
+            if self._state["fail_at"] in (self._state["n"], name):
                 if name == "create" and self._state["tear"]:
                     return _TornStream(attr(*args))
                 raise _Crash(f"{name} #{self._state['n']}")
@@ -219,8 +237,9 @@ class _Crash(Exception):
 
 def _faulty(store, fail_at=0, tear=False):
     """Route the store's filesystem helpers through ``_FaultyFs``;
-    returns the call counter (``fail_at=0`` never fails)."""
-    state = {"n": 0, "fail_at": fail_at, "tear": tear}
+    returns the call counter and the calls' names (``fail_at=0`` never
+    fails)."""
+    state = {"n": 0, "names": [], "fail_at": fail_at, "tear": tear}
     real = store._fs
     store._fs = lambda path: _FaultyFs(real(path), state)
     return state
@@ -233,7 +252,9 @@ class TestCommitFaultInjection:
     partition list, file count and, with history, the version list —
     no version is left half rolled forward, and the newest version's
     file map is exactly the data files on disk, each with a zone
-    map."""
+    map. A crash before the version's rename (calls 1-2) leaves a
+    staging dir, which ``vacuum`` removes without changing the
+    table."""
 
     def _frame(self, spark, lo, hi, tag):
         return spark.range(lo, hi).select(
@@ -303,6 +324,13 @@ class TestCommitFaultInjection:
             TableStore(spark, LakeConfig(root=root), history).register_all()
             got = self._state(spark, root, history)
             assert got in (pre, post), f"crash at mutating call {k}"
+            if k <= 2 and got:
+                assert _leftovers(root)
+                TableStore(spark, LakeConfig(root=root), history).vacuum(
+                    "db", "t", keep_last=max(1, len(got[4]))
+                )
+                assert not _leftovers(root)
+                assert self._state(spark, root, history) == got
             self._noop_write(spark, root, history)
             # The no-op write may rewrite a file, not change the table.
             after = self._state(spark, root, history)
@@ -392,7 +420,7 @@ class TestCommitLog:
         self._table(spark, store)
         batch = spark.createDataFrame([(2, "B")], ["k", "v"])
         # The first file the commit creates is cut off mid-write.
-        _faulty(store, fail_at=1, tear=True)
+        _faulty(store, fail_at="create", tear=True)
         with pytest.raises(_Crash):
             store.merge("db", "t", batch, ["k"])
 
@@ -413,6 +441,9 @@ class TestCommitLog:
             except ValueError:
                 torn.append(body)
         assert len(torn) == 1 and len(bodies) == 2
+        fresh.vacuum("db", "t")
+        assert not _leftovers(root)
+        assert self._rows(fresh) == {(1, "a"), (2, "b")}
 
         fresh.merge("db", "t", batch, ["k"])
         assert self._rows(fresh) == {(1, "a"), (2, "B")}
@@ -423,8 +454,6 @@ class TestCommitLog:
     def test_conflicting_commit_raises_and_keeps_winner(
         self, spark, tmp_path, winner_commits
     ):
-        from serverless_data_lake_spark.catalog import CommitConflict
-
         root = str(tmp_path / "lake")
         loser = TableStore(spark, LakeConfig(root=root))
         winner = TableStore(spark, LakeConfig(root=root))
@@ -527,6 +556,37 @@ class TestZoneMaps:
         after = set(_files(store, "db", "t"))
         assert before <= after  # nothing rewritten, pure insert
         assert store.read("db", "t").count() == 201
+
+    def test_writes_leave_no_empty_files(self, spark, store):
+        """Frames with fewer rows than Spark partitions: the empty
+        files their write stages are dropped before the commit."""
+        import pyarrow.parquet as pq
+
+        store.create_or_replace(
+            "db", "t",
+            spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), ["k"],
+        )
+        store.merge(
+            "db", "t", spark.createDataFrame([(3, "c")], ["k", "v"]), ["k"]
+        )
+        info = store.info("db", "t")
+        files = store._latest(info.location)["files"]
+        assert set(files) == _on_disk(info.location) and len(files) <= 3
+        assert all(e["zone_map"] for e in files.values())
+        assert all(
+            pq.ParquetFile(f"{info.location}/{f}").metadata.num_rows
+            for f in files
+        )
+        rows = {(r.k, r.v) for r in store.read("db", "t").collect()}
+        assert rows == {(1, "a"), (2, "b"), (3, "c")}
+
+    def test_rel_rejects_a_path_outside_its_root(self, store):
+        # Empty staged files are found by relative path: a path that
+        # does not map below the staging dir must raise, never name
+        # (and so delete) some other file.
+        assert store._rel("/a/b/", "file:/a/b/p=1/f") == "p=1/f"
+        with pytest.raises(ValueError):
+            store._rel("/a/b", "/a/c/f")
 
     def test_compact_refreshes_stats(self, spark, store):
         store.create_or_replace(
@@ -654,3 +714,123 @@ class TestCompactSortBy:
             assert hi1 < lo2
         # Rows intact.
         assert store.read("db", "t").count() == 4000
+
+
+class TestSilverExactlyOnce:
+    """Silver's progress commits with its rows: a crash at every
+    filesystem step of ``process_silver`` (a torn version write
+    included), or a second processor committing in between, never
+    applies a bronze object twice."""
+
+    def _template(self, spark, root, keyed):
+        """One processed push and one pending; returns the rows silver
+        holds once both are applied exactly once."""
+        lake = Lake(spark, LakeConfig(root=root))
+        lake.create_endpoint(
+            EndpointSchema(
+                domain="crm",
+                name="events",
+                columns=[
+                    ColumnDef("id", DataType.BIGINT, primary_key=keyed),
+                    ColumnDef("v", DataType.STRING),
+                ],
+            )
+        )
+        first = [{"id": i, "v": "a"} for i in range(5)]
+        second = [{"id": i, "v": "b"} for i in range(3, 8)]
+        lake.ingest_batch("crm", "events", first)
+        lake.process_silver("crm", "events")
+        lake.ingest_batch("crm", "events", second)
+        if keyed:
+            return sorted({r["id"]: r["v"] for r in first + second}.items())
+        return sorted((r["id"], r["v"]) for r in first + second)
+
+    def _lake(self, spark, root):
+        return Lake(spark, LakeConfig(root=root))
+
+    def _rows(self, lake):
+        return sorted(
+            (r.id, r.v) for r in lake.store.read("crm_silver", "events").collect()
+        )
+
+    @pytest.mark.parametrize("keyed", [False, True], ids=["append", "pk"])
+    def test_crash_at_every_step(self, spark, tmp_path, keyed):
+        template = str(tmp_path / "template")
+        want = self._template(spark, template, keyed)
+
+        def run(name, fail_at, tear=False):
+            root = str(tmp_path / name)
+            shutil.copytree(template, root)
+            lake = self._lake(spark, root)
+            calls = _faulty(lake.store, fail_at, tear)
+            if fail_at:
+                with pytest.raises(_Crash):
+                    lake.process_silver("crm", "events")
+            else:
+                lake.process_silver("crm", "events")
+            return root, calls
+
+        root, calls = run("clean", 0)
+        assert self._rows(self._lake(spark, root)) == want
+        crashes = [(k, False) for k in range(1, calls["n"] + 1)] + [
+            (k, True) for k, name in enumerate(calls["names"], 1)
+            if name == "create"
+        ]
+        for k, tear in crashes:
+            root, _ = run(f"crash{k}{'torn' if tear else ''}", k, tear)
+            lake = self._lake(spark, root)
+            lake.process_silver("crm", "events")
+            assert self._rows(lake) == want, f"crash at mutating call {k}"
+
+    @pytest.mark.parametrize("keyed", [False, True], ids=["append", "pk"])
+    def test_stale_read_conflicts(self, spark, tmp_path, keyed):
+        root = str(tmp_path / "lake")
+        want = self._template(spark, root, keyed)
+        first, second = self._lake(spark, root), self._lake(spark, root)
+        write = "merge" if keyed else "append"
+        real = getattr(first.store, write)
+
+        def second_commits_first(*args, **kwargs):
+            # Between the first processor's read of its progress and
+            # its commit, the second one processes the same objects.
+            assert second.process_silver("crm", "events").rows_in == 5
+            return real(*args, **kwargs)
+
+        setattr(first.store, write, second_commits_first)
+        with pytest.raises(CommitConflict):
+            first.process_silver("crm", "events")
+        assert self._rows(first) == want
+        assert not _leftovers(root)
+        assert first.process_silver("crm", "events").mode == "noop"
+
+    @pytest.mark.parametrize("suffix", ["/", "//", "/./"])
+    def test_root_spelling_keeps_every_object(self, spark, tmp_path, suffix):
+        # The consumed record holds paths below the bronze prefix; a
+        # root spelled with a trailing "/", a "//" or a "." segment
+        # must give every object its own entry, not lose all but one.
+        root = str(tmp_path / "lake") + suffix
+        want = self._template(spark, root, False)
+        lake = self._lake(spark, root)
+        assert lake.process_silver("crm", "events").rows_in == 5
+        assert self._rows(lake) == want
+        assert len(lake.store.consumed("crm_silver", "events")) == 2
+        assert lake.process_silver("crm", "events").mode == "noop"
+
+    def test_log_without_consumed_record_fails_loudly(self, spark, tmp_path):
+        # A version written before the log recorded consumed objects
+        # cannot tell which bronze objects silver holds: re-applying
+        # them all would duplicate an append endpoint's rows.
+        root = str(tmp_path / "lake")
+        self._template(spark, root, False)
+        lake = self._lake(spark, root)
+        log = lake.store._latest(lake.config.table_path("crm_silver", "events"))
+        path = lake.store._version_path(
+            lake.config.table_path("crm_silver", "events"), log["version"]
+        )
+        del log["consumed"]
+        with open(path, "w") as f:
+            json.dump(log, f)
+        d, name = os.path.split(path)
+        os.remove(os.path.join(d, f".{name}.crc"))  # the local FS checksum
+        with pytest.raises(ValueError, match="consumed-object record"):
+            lake.process_silver("crm", "events")
