@@ -43,8 +43,8 @@ class Lake:
         self.store = TableStore(spark, config)
         self.bronze = BronzeZone(spark, config, self.registry)
         self.silver = SilverProcessor(spark, config, self.registry, self.store)
-        self.gold = GoldRunner(spark, config, self.registry, self.store)
         self.queries = QueryEngine(spark, config, registry=self.registry)
+        self.gold = GoldRunner(spark, config, self.registry, self.store, self.queries)
         # Make previously persisted tables resolvable in this session.
         self.store.register_all()
 

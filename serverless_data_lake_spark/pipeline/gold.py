@@ -20,8 +20,9 @@ Reference semantics (``containers/dbt_runner/entrypoint.py``,
 - execution status is persisted per job (O5).
 
 The reference's five-step DuckDB→Parquet→Arrow→PyIceberg dance
-collapses to ``spark.sql(rewritten) → write per mode`` — one engine,
-no intermediate handoff.
+collapses to ``QueryEngine.dataframe(query) → write per mode`` — one
+engine, no intermediate handoff, and the same front end (gate, name
+rewrite, bronze views, dialect shims) as the query API.
 """
 
 from __future__ import annotations
@@ -34,8 +35,7 @@ from pyspark.sql import functions as F
 
 from serverless_data_lake_spark.catalog import TableStore
 from serverless_data_lake_spark.config import LakeConfig
-from serverless_data_lake_spark.plans.dialect import transpile
-from serverless_data_lake_spark.plans.rewrite import rewrite_query
+from serverless_data_lake_spark.plans.query import QueryEngine
 from serverless_data_lake_spark.schema.registry import GoldJobConfig, SchemaRegistry
 
 _FREQ_ORDER = {"hour": 0, "day": 1, "month": 2}  # lower = more frequent
@@ -128,11 +128,13 @@ class GoldRunner:
         config: LakeConfig,
         registry: SchemaRegistry | None = None,
         store: TableStore | None = None,
+        queries: QueryEngine | None = None,
     ) -> None:
         self.spark = spark
         self.config = config
         self.registry = registry or SchemaRegistry(config.registry_root)
         self.store = store or TableStore(spark, config)
+        self.queries = queries or QueryEngine(spark, config, self.registry)
 
     # ------------------------------------------------------------------
     def run_job(self, job: GoldJobConfig) -> GoldResult:
@@ -167,14 +169,13 @@ class GoldRunner:
         job.validate()
         started = time.time()
         database = self.config.database_name(job.domain, "gold")
-        sql = transpile(rewrite_query(job.query))
         # ``rows`` = rows produced by THIS run, observed on the write
         # pass itself. The r1 implementation re-counted the whole
         # table after every run — a second full-table scan per job,
         # i.e. a second job at 100 TB.
         from pyspark.sql import Observation
 
-        df = self.spark.sql(sql)
+        df = self.queries.dataframe(job.query)
         if (
             job.incremental_column
             and job.write_mode == "append"

@@ -8,9 +8,10 @@ relied on). Almost all of it maps 1:1 to Spark SQL; this module
 covers the names/clauses that differ. It is a deliberately
 lightweight string-level pass (mirroring the reference's own regex
 rewrites) — Catalyst parses the result, so a shim that misfires
-surfaces as a parse error, never silent corruption. String literals
-are masked before every regex pass and spliced back afterwards, so
-literal text is never rewritten.
+surfaces as a parse error, never silent corruption. ``mask_literals``
+below is the one SQL lexer in ``plans/``: strings and comments are
+masked before every pass and spliced back afterwards, so their text
+is never rewritten.
 
 Shimmed surface:
 
@@ -90,45 +91,85 @@ _QUALIFY_HELPER = "__qualify__"
 
 
 # ---------------------------------------------------------------------------
-# String-literal masking: every regex pass below runs on masked text so
-# a literal like 'epoch(x)' or 'sales.silver.orders' is never mutated
-# (rewrite.py uses the same helpers for the three-part-name pass).
-# Placeholders stay quoted ('␀7␀') so depth/keyword scanners still see
-# them as literals and offsets stay consistent.
+# The lexer: every pass in plans/ runs on masked text, so a literal like
+# 'epoch(x)' or 'sales.silver.orders', or the same text in a comment, is
+# never mutated and never read as code. It follows Spark's own lexical
+# rules (SqlBaseLexer, ANSI mode, escapedStringLiterals=false):
+#   '…' and "…" strings, with backslash escapes and doubled quotes;
+#   r'…' and r"…" raw strings (the r starts a token);
+#   `…` identifiers with doubled backticks, passed through whole;
+#   -- comments, which a backslash before the newline continues;
+#   /* */ comments, which nest; /*+ opens a hint, which is code;
+#   */ outside a comment is one token, so its / opens no comment.
+# A string becomes \x00i\x00 and a comment \x01i\x01, where i indexes
+# the originals; an unclosed token runs to the end (Spark rejects it).
+# A \x00 or \x01 in code or in an identifier would read as such a mark,
+# so the lexer refuses it (in code, Spark's lexer has no token for it).
 # ---------------------------------------------------------------------------
-_MASK_RE = re.compile("\x00(\\d+)\x00")
+_TOKEN_RE = re.compile(
+    r"""(?P<str>(?<!\w)[rR](?:'[^']*'?|"[^"]*"?)"""
+    r"""|'(?:[^'\\]|\\.|'')*'?|"(?:[^"\\]|\\.|"")*"?)"""
+    r"""|(?P<ident>`(?:[^`\x00\x01]|``)*`?)|(?P<end>\*/)|(?P<hint>/\*\+)"""
+    r"""|(?P<line>--(?:\\\n|[^\r\n])*)|(?P<block>/\*)|(?P<ctl>[\x00\x01])""",
+    re.S,
+)
+_BLOCK_RE = re.compile(r"(/\*(?!\+))|\*/")
+_MASK_RE = re.compile("[\x00\x01](\\d+)[\x00\x01]")
+_LIT = "\x00(\\d+)\x00"  # a masked string literal, for the passes below
 
 
-def mask_literals(sql: str) -> tuple[str, list[str]]:
-    """Replace each ``'...'`` literal (with ``''`` escapes) by a
-    ``'␀i␀'`` placeholder; returns (masked, originals)."""
+def mask_literals(sql: str, gate: bool = False) -> tuple[str, list[str]]:
+    """Mask every string and comment; returns (masked, originals).
+
+    ``gate=True`` gives the read-only gate's view instead: each
+    comment reads as a space, each backtick identifier as its bare
+    name between spaces, so ``reflect/**/(`` and ```reflect`(`` show
+    the call they make, and each ``/*+ … */`` hint is cut out and
+    returned in place of the originals. Raises ValueError on a
+    \\x00 or \\x01 outside a string or comment."""
     out: list[str] = []
     lits: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch != "'":
-            out.append(ch)
-            i += 1
-            continue
-        j = i + 1
-        while j < n:
-            if sql[j] == "'":
-                if j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                    continue
-                break
-            j += 1
-        lits.append(sql[i : j + 1])
-        out.append(f"'\x00{len(lits) - 1}\x00'")
-        i = j + 1
-    return "".join(out), lits
+    hints: list[str] = []
+    hint_at = None  # where the open hint starts in out (gate only)
+    pos = 0
+    while m := _TOKEN_RE.search(sql, pos):
+        out.append(sql[pos : m.start()])
+        kind, end = m.lastgroup, m.end()
+        if kind == "ctl":
+            raise ValueError("\\x00 or \\x01 outside a string literal or comment")
+        if kind == "block":
+            depth = 1
+            for b in _BLOCK_RE.finditer(sql, end):
+                depth += 1 if b.group(1) else -1
+                if depth == 0:
+                    end = b.end()
+                    break
+            else:
+                end = len(sql)
+        tok = sql[m.start() : end]
+        if kind == "hint" and gate and hint_at is None:
+            hint_at = len(out)
+        if kind in ("end", "hint"):
+            out.append(tok)
+        elif kind == "ident":
+            out.append(f" {tok[1:-1]} " if gate else tok)
+        elif kind == "str" or not gate:
+            mark = "\x00" if kind == "str" else "\x01"
+            out.append(f"{mark}{len(lits)}{mark}")
+            lits.append(tok)
+        else:
+            out.append(" ")
+        if kind == "end" and hint_at is not None:
+            hints.append("".join(out[hint_at:]))
+            out[hint_at:] = [" "]
+            hint_at = None
+        pos = end
+    out.append(sql[pos:])
+    return "".join(out), hints if gate else lits
 
 
 def unmask_literals(sql: str, lits: list[str]) -> str:
-    return re.sub(
-        "'\x00(\\d+)\x00'", lambda m: lits[int(m.group(1))], sql
-    )
+    return _MASK_RE.sub(lambda m: lits[int(m.group(1))], sql)
 
 
 def _rename_functions(sql: str) -> str:
@@ -140,39 +181,21 @@ def _rename_functions(sql: str) -> str:
 def _match_paren(sql: str, open_pos: int) -> int:
     """Index just past the ``)`` matching the ``(`` at open_pos."""
     depth = 0
-    i, n = open_pos, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n and sql[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if ch == "(":
+    for i in range(open_pos, len(sql)):
+        if sql[i] == "(":
             depth += 1
-        elif ch == ")":
+        elif sql[i] == ")":
             depth -= 1
             if depth == 0:
                 return i + 1
-        i += 1
-    return n
+    return len(sql)
 
 
 def _split_top_commas(text: str) -> list[str]:
     parts: list[str] = []
     depth = 0
     cur: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = i + 1
-            while j < n and text[j] != "'":
-                j += 1
-            cur.append(text[i : j + 1])
-            i = j + 1
-            continue
+    for ch in text:
         if ch in "([":
             depth += 1
         elif ch in ")]":
@@ -182,31 +205,19 @@ def _split_top_commas(text: str) -> list[str]:
             cur = []
         else:
             cur.append(ch)
-        i += 1
     parts.append("".join(cur))
     return parts
 
 
 def _split_protected(sql: str, keyword_re: re.Pattern[str]) -> list[int]:
-    """Offsets of keyword matches at paren-depth 0, outside string
-    literals. Used to find top-level QUALIFY / ORDER BY / LIMIT."""
+    """Offsets of keyword matches at paren-depth 0. Used to find
+    top-level QUALIFY / ORDER BY / LIMIT."""
     hits: list[int] = []
     depth = 0
     i = 0
     n = len(sql)
     while i < n:
         ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
         if ch == "(":
             depth += 1
         elif ch == ")":
@@ -265,11 +276,8 @@ def _rewrite_qualify(sql: str) -> str:
     rest = sql[pos:]
     rest = _QUALIFY_RE.sub("", rest, count=1)
     tail_hits = _split_protected(rest, _TAIL_RE)
-    if tail_hits:
-        pred = rest[: tail_hits[0]]
-        tail = rest[tail_hits[0] :]
-    else:
-        pred, tail = rest, ""
+    cut = tail_hits[0] if tail_hits else len(rest)
+    pred, tail = rest[:cut], rest[cut:]
 
     # Inject the helper column after the SELECT list of the SELECT
     # that owns this QUALIFY: the last top-level FROM before it.
@@ -277,11 +285,10 @@ def _rewrite_qualify(sql: str) -> str:
     if not from_hits:
         return sql  # malformed; let Spark raise
     from_pos = from_hits[-1]
-    select_list_end = from_pos
     inner = (
-        head[:select_list_end]
+        head[:from_pos]
         + f", ({pred.strip()}) AS {_QUALIFY_HELPER} "
-        + head[select_list_end:]
+        + head[from_pos:]
     )
     return (
         f"SELECT * EXCEPT ({_QUALIFY_HELPER}) FROM ({inner}) "
@@ -380,7 +387,6 @@ def _rewrite_star_replace(sql: str) -> str:
         names = ", ".join(c for _, c in pairs)
         exprs = ", ".join(f"{e} AS {c}" for e, c in pairs)
         sql = sql[: m.start()] + f"* EXCEPT ({names}), {exprs}" + sql[close:]
-    return sql
 
 
 # ---------------------------------------------------------------------------
@@ -429,7 +435,7 @@ def _duck_type_to_ddl(node) -> str | None:
     return None
 
 
-_ARROW_RE = re.compile(r"->>\s*'\x00(\d+)\x00'")
+_ARROW_RE = re.compile(r"->>\s*" + _LIT)
 _ARROW_LHS_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_.]*$")
 
 
@@ -454,11 +460,11 @@ def _rewrite_json_arrows(sql: str, lits: list[str]) -> str:
         if not path.startswith("$"):
             path = "$." + path
         lits.append(f"'{path}'")
-        rhs = f"'\x00{len(lits) - 1}\x00'"
+        rhs = f"\x00{len(lits) - 1}\x00"
         # LHS: parenthesized group, string literal (placeholder), or
         # qualified identifier
         head = sql[: m.start()].rstrip()
-        pm = re.search(r"'\x00\d+\x00'$", head)
+        pm = re.search(_LIT + "$", head)
         if pm:
             lhs_start = pm.start()
         elif head.endswith(")"):
@@ -486,13 +492,13 @@ def _rewrite_json_arrows(sql: str, lits: list[str]) -> str:
         )
 
 
-def _rewrite_from_json(sql: str) -> str:
+def _rewrite_from_json(sql: str, lits: list[str]) -> str:
     """Convert ``from_json(expr, '<duckdb json type>')`` second
     arguments (e.g. ``'["VARCHAR"]'``, ``'{"k":"INTEGER"}'``) to
     Spark DDL type strings. Spark-native second arguments ('k INT',
     'array<string>') don't parse as JSON type descriptors and pass
-    through untouched. Runs on UNMASKED text — it must read the
-    literal."""
+    through untouched. Runs on masked text and reads the literal
+    through ``lits``."""
     out: list[str] = []
     pos = 0
     while True:
@@ -505,12 +511,11 @@ def _rewrite_from_json(sql: str) -> str:
         args = _split_top_commas(sql[open_pos + 1 : close - 1])
         out.append(sql[pos : open_pos + 1])
         if len(args) >= 2:
-            type_arg = args[1].strip()
-            lm = re.match(r"(?s)^'(.*)'$", type_arg)
+            lm = re.fullmatch(_LIT, args[1].strip())
             ddl = None
             if lm:
-                try:
-                    ddl = _duck_type_to_ddl(json.loads(lm.group(1).replace("''", "'")))
+                try:  # no valid descriptor holds a quote, so no unescaping
+                    ddl = _duck_type_to_ddl(json.loads(lits[int(lm.group(1))][1:-1]))
                 except (ValueError, TypeError):
                     ddl = None
             if ddl is not None:
@@ -521,10 +526,9 @@ def _rewrite_from_json(sql: str) -> str:
 
 
 def transpile(sql: str) -> str:
-    """Full dialect pass: function renames, EXCLUDE→EXCEPT,
-    ``* REPLACE``, UNNEST, QUALIFY — all on literal-masked text —
-    then the from_json type-descriptor conversion on the restored
-    text (it needs the literal contents)."""
+    """Full dialect pass, all on masked text: function renames,
+    EXCLUDE→EXCEPT, ``* REPLACE``, UNNEST, ``->>``, QUALIFY and the
+    from_json type-descriptor conversion."""
     masked, lits = mask_literals(sql)
     masked = _rename_functions(masked)
     masked = _EXCLUDE_RE.sub(r"\1EXCEPT\2", masked)
@@ -533,8 +537,7 @@ def transpile(sql: str) -> str:
     masked = _rewrite_json_arrows(masked, lits)
     if _QUALIFY_RE.search(masked):
         masked = _rewrite_qualify(masked)
-    sql = unmask_literals(masked, lits)
-    return _rewrite_from_json(sql)
+    return unmask_literals(_rewrite_from_json(masked, lits), lits)
 
 
 _EPOCH_MS_RE = re.compile(r"\bepoch_ms\s*\(", re.IGNORECASE)

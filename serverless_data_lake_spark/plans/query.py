@@ -1,7 +1,10 @@
-"""Serving-layer query entry point.
+"""The one path from SQL text to a DataFrame.
 
-Pipeline (mirrors the reference query API lifecycle,
-``lambdas/query_api/main.py:210-237``):
+``QueryEngine.dataframe`` is the front end for serving
+(``QueryEngine.query``), gold jobs (``GoldRunner``) and the ``Lake``
+helpers; each of its passes reads the query through the one SQL lexer
+(``dialect.mask_literals``). Pipeline (mirrors the reference query API
+lifecycle, ``lambdas/query_api/main.py:210-237``):
 
 1. ``validate_query``  — SELECT/WITH-only gate, 10k-char cap;
 2. ``rewrite_query``   — three-part name resolution (bronze refs get
@@ -12,10 +15,11 @@ Pipeline (mirrors the reference query API lifecycle,
 6. sanitized errors    — storage paths stripped from messages.
 
 Statelessness: the reference builds a fresh DuckDB per request; a
-long-lived SparkSession is kept instead. Per-query bronze views stay
-registered until the next query over the same endpoint refreshes
-them; they are metadata only (a view over a path), so no data is
-pinned between queries.
+long-lived SparkSession is kept instead. Bronze views stay registered
+until the next ``dataframe`` call over the same endpoint refreshes
+them, so no call reads an earlier call's file listing; they are
+metadata only (a view over a path), so no data is pinned between
+queries.
 """
 
 from __future__ import annotations
@@ -37,7 +41,10 @@ from serverless_data_lake_spark.plans.rewrite import (
     find_table_refs,
     rewrite_query,
 )
-from serverless_data_lake_spark.plans.validate import validate_query
+from serverless_data_lake_spark.plans.validate import (
+    QueryValidationError,
+    validate_query,
+)
 
 _PATH_RE = re.compile(r"(s3a?://\S+|file:/\S+|/[\w./-]{2,})")
 
@@ -87,10 +94,11 @@ class QueryEngine:
     # -- serving entry (capped, JSON-shaped) -----------------------
     def query(self, sql: str) -> QueryResult:
         cap = self.config.max_result_rows
-        validate_query(sql)  # QueryValidationError propagates (HTTP-400 class)
         try:
             df = self.dataframe(sql)
             rows = df.limit(cap + 1).collect()
+        except QueryValidationError:
+            raise  # the HTTP-400 class, message kept
         except Exception as exc:  # noqa: BLE001 — serving boundary
             raise QueryExecutionError(_friendly_error(exc)) from None
         truncated = len(rows) > cap
@@ -144,9 +152,10 @@ class QueryEngine:
         from pyspark.sql.types import StringType, StructField
 
         from serverless_data_lake_spark.schema.types import to_struct_type
+        from serverless_data_lake_spark.sources.bronze import METADATA_COLUMNS
 
         schema = to_struct_type(endpoint.columns)
-        for meta in ("_insert_date", "_domain", "_endpoint"):
+        for meta in METADATA_COLUMNS:
             schema = schema.add(StructField(meta, StringType(), True))
         return schema
 

@@ -14,7 +14,8 @@ bronze refs resolve to per-query temp views over
 ``spark.read.json(bronze_path, recursiveFileLookup=true)`` (Spark's
 JSON reader unions schemas by name natively, matching
 ``union_by_name=true``). The rewrite itself stays a pre-parse string
-pass — faithful to the reference and requiring no catalog plugin.
+pass over the lexer's masked text (``dialect.mask_literals``) —
+faithful to the reference and requiring no catalog plugin.
 """
 
 from __future__ import annotations
@@ -34,9 +35,9 @@ _THREE_PART_RE = re.compile(
 
 def find_table_refs(sql: str) -> list[tuple[str, str, str]]:
     """All three-part refs in the query as (domain, layer, table),
-    deduplicated, in order of first appearance. String literals are
-    masked first so a literal like ``'sales.silver.orders'`` is
-    neither registered nor rewritten."""
+    deduplicated, in order of first appearance. Strings and comments
+    are masked first so ``'sales.silver.orders'``, or the same name
+    in a comment, is neither registered nor rewritten."""
     masked, _ = mask_literals(sql)
     seen: list[tuple[str, str, str]] = []
     for m in _THREE_PART_RE.finditer(masked):

@@ -5,12 +5,21 @@ Behavioral contract from the reference's query API
 SELECT or WITH, must not contain DDL/DML/transaction/extension
 statements, must not call direct file functions, and are capped at
 10,000 characters. The gate is a pre-parse string check — Catalyst
-never sees a rejected query.
+never sees a rejected query. It reads the query through the one SQL
+lexer (``dialect.mask_literals``): keywords inside strings and
+comments don't trip it, each comment reads as a space, and a
+backtick-quoted function name is checked like a bare one. A
+``/*+ … */`` hint is scanned for calls but not for statement
+keywords, so ``/*+ MERGE(t) */`` passes. Every front end
+(``QueryEngine.dataframe``, which serving and gold jobs both use, and
+``GoldJobConfig.validate``) runs it.
 """
 
 from __future__ import annotations
 
 import re
+
+from serverless_data_lake_spark.plans.dialect import mask_literals
 
 MAX_QUERY_LENGTH = 10_000
 
@@ -77,19 +86,10 @@ _STMT_RE = re.compile(
 _FUNC_RE = re.compile(
     r"\b(" + "|".join(_FORBIDDEN_FUNCTIONS) + r")\s*\(", re.IGNORECASE
 )
-_COMMENT_RE = re.compile(r"--[^\n]*|/\*.*?\*/", re.DOTALL)
-_STRING_RE = re.compile(r"'(?:[^']|'')*'")
 
 
 class QueryValidationError(ValueError):
     """Raised when a query fails the read-only gate."""
-
-
-def _strip_literals(sql: str) -> str:
-    """Remove comments and string literals so keywords inside them
-    don't trip the gate (e.g. ``WHERE note = 'please delete me'``)."""
-    sql = _COMMENT_RE.sub(" ", sql)
-    return _STRING_RE.sub("''", sql)
 
 
 def validate_query(sql: str) -> str:
@@ -101,20 +101,24 @@ def validate_query(sql: str) -> str:
         raise QueryValidationError(
             f"Query exceeds maximum length of {MAX_QUERY_LENGTH} characters"
         )
-    scrubbed = _strip_literals(sql)
+    try:
+        scrubbed, hints = mask_literals(sql, gate=True)
+    except ValueError as err:
+        raise QueryValidationError(str(err)) from None
     head = scrubbed.strip().split(None, 1)[0].lower() if scrubbed.strip() else ""
     if head not in ("select", "with"):
         raise QueryValidationError("Only SELECT and WITH queries are allowed")
     # Multiple statements: anything after a top-level semicolon.
-    body = scrubbed.strip().rstrip(";")
+    body = " ".join([scrubbed.strip().rstrip(";"), *hints])
     if ";" in body:
         raise QueryValidationError("Multiple statements are not allowed")
+    # A hint's names (/*+ MERGE(t) */) are not statements; its calls are.
     m = _STMT_RE.search(scrubbed)
     if m:
         raise QueryValidationError(
             f"Statement keyword not allowed in read-only queries: {m.group(1).upper()}"
         )
-    m = _FUNC_RE.search(scrubbed)
+    m = _FUNC_RE.search(body)
     if m:
         raise QueryValidationError(
             f"Direct file access function not allowed: {m.group(1)}"

@@ -3,8 +3,9 @@
 One long-lived session serves both the query path and the pipeline
 path (the reference used a fresh DuckDB per request —
 ``lambdas/query_api/main.py:216-222`` — but a Spark build keeps the
-JVM warm; statelessness is preserved by never leaking temp views,
-see plans/query.py).
+JVM warm). The session is not stateless: bronze temp views stay
+registered between queries, and each query over an endpoint
+re-registers its view (see plans/query.py).
 """
 
 from __future__ import annotations

@@ -161,6 +161,43 @@ class TestIncrementalGold:
         assert store.read("sales_gold", "inc").count() == 12
 
 
+class TestGoldFrontEnd:
+    """Gold jobs read through ``QueryEngine.dataframe``, the query
+    API's front end: bronze views, the ``epoch_ms`` retry, the gate."""
+
+    def test_bronze_job_sees_every_push(self, lake):
+        def push(lo, hi):
+            lake.ingest_batch(
+                "sales", "events", [{"id": i, "v": i * 1.5} for i in range(lo, hi)]
+            )
+
+        def gold_n():
+            return lake.query("SELECT n FROM sales.gold.ev").rows[0]["n"]
+
+        push(0, 5)
+        lake.create_gold_job(GoldJobConfig(
+            domain="sales", name="ev",
+            query="SELECT count(*) AS n, sum(id) AS s FROM sales.bronze.events",
+        ))
+        assert lake.run_gold("sales", "ev").rows == 1  # a fresh session
+        assert gold_n() == 5
+        # A query registers the view; a later run must not read its
+        # file listing.
+        assert lake.query(
+            "SELECT count(*) AS n FROM sales.bronze.events"
+        ).rows[0]["n"] == 5
+        push(5, 8)
+        lake.run_gold("sales", "ev")
+        assert gold_n() == 8
+
+    def test_epoch_ms_timestamp_direction(self, lake):
+        sql = "SELECT epoch_ms(TIMESTAMP '2026-01-02 03:04:05.678') AS ms"
+        lake.create_gold_job(GoldJobConfig(domain="sales", name="ms", query=sql))
+        assert lake.run_gold("sales", "ms").rows == 1
+        want = lake.sql(sql).collect()[0].ms
+        assert lake.query("SELECT ms FROM sales.gold.ms").rows[0]["ms"] == want
+
+
 def test_bad_write_mode_fails_at_save_not_on_listing(lake, tmp_path):
     """r9 review: write_mode validates on the SAVE path (fail at
     creation), but deserialization stays tolerant — one legacy
@@ -199,3 +236,32 @@ def test_bad_write_mode_fails_at_save_not_on_listing(lake, tmp_path):
     status = lake.registry.get_execution_status("sales", "legacy_job")
     assert status["status"] == "FAILED"
     assert "write_mode" in status["error"]
+
+    # The query passes the query API's gate at save, over HTTP too.
+    import json
+    import urllib.error
+    import urllib.request
+
+    from serverless_data_lake_spark.plans.validate import QueryValidationError
+    from serverless_data_lake_spark.serving import LakeServer
+
+    spy = GoldJobConfig(
+        domain="sales", name="spy",
+        query="SELECT reflect('java.lang.System','getProperty','user.name') AS u",
+    )
+    with pytest.raises(QueryValidationError, match="reflect"):
+        lake.create_gold_job(spy)
+    srv = LakeServer(lake)
+    port = srv.start()
+    try:
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}/transform/jobs",
+            data=json.dumps(spy.to_dict()).encode(), method="POST",
+            headers={"Content-Type": "application/json"},
+        )
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(req)
+        assert err.value.code == 400
+    finally:
+        srv.stop()
+    assert lake.registry.get_gold_job("sales", "spy") is None

@@ -4,7 +4,12 @@ tests/test_consumption.py:57-67)."""
 
 from __future__ import annotations
 
-from serverless_data_lake_spark.plans.dialect import transpile
+import random
+import re
+
+from py4j.java_gateway import get_field
+
+from serverless_data_lake_spark.plans.dialect import mask_literals, transpile
 from serverless_data_lake_spark.plans.rewrite import (
     bronze_view_name,
     find_table_refs,
@@ -165,6 +170,97 @@ class TestLiteralMasking:
     def test_escaped_quotes_preserved(self):
         sql = "SELECT 'it''s epoch_ms(1)' AS lit FROM t"
         assert transpile(sql) == sql
+
+    def test_quote_in_comment_hides_nothing(self):
+        sql = (
+            "SELECT o_orderkey, epoch_ms(ts) AS t -- don't double count\n"
+            "FROM sales.silver.orders"
+        )
+        assert find_table_refs(sql) == [("sales", "silver", "orders")]
+        assert transpile(rewrite_query(sql)) == (
+            "SELECT o_orderkey, timestamp_millis(ts) AS t -- don't double count\n"
+            "FROM sales_silver.orders"
+        )
+
+    def test_backslash_escape_ends_no_literal(self):
+        sql = "SELECT 'it\\'s' AS a, o_orderkey FROM sales.silver.orders"
+        assert find_table_refs(sql) == [("sales", "silver", "orders")]
+        assert rewrite_query(sql) == (
+            "SELECT 'it\\'s' AS a, o_orderkey FROM sales_silver.orders"
+        )
+
+    def test_double_quoted_string_untouched(self):
+        sql = 'SELECT "sales.silver.orders" AS label, "epoch(x)" AS e'
+        assert find_table_refs(sql) == []
+        assert transpile(rewrite_query(sql)) == sql
+
+    def test_ref_in_comment_neither_found_nor_rewritten(self):
+        sql = (
+            "SELECT 1 AS x /* was sales.silver.orders /* nested */ "
+            "sales.gold.old */ -- see sales.bronze.events\nFROM t"
+        )
+        assert find_table_refs(sql) == []
+        assert transpile(rewrite_query(sql)) == sql
+
+    def test_hint_text_reaches_spark(self):
+        sql = "SELECT /*+ BROADCAST(o) */ o.a FROM sales.silver.orders o"
+        assert transpile(rewrite_query(sql)) == (
+            "SELECT /*+ BROADCAST(o) */ o.a FROM sales_silver.orders o"
+        )
+
+
+class TestLexerMatchesSpark:
+    """``mask_literals`` against Spark's own lexer (``SqlBaseLexer``)
+    on seeded soup of the characters that start or end a token: every
+    string, comment and backtick identifier must span the same text.
+    Inputs Spark cannot lex (an unclosed token) are skipped; Spark
+    rejects them before any plan runs."""
+
+    PIECES = [
+        "'", '"', "`", "\\", "--", "/*", "*/", "/*+", "\n", "\\\n", "\r",
+        "\r\n", "r'", 'r"', "R'", "''", '""', "``", "\\'", '\\"', "a", "x",
+        "_r", "1", " ", "*", "/", "-", "+", "(", ",",
+    ]
+
+    @staticmethod
+    def _spark_masked(jvm, sql):
+        """``sql`` masked the way ``mask_literals`` masks it, from the
+        tokens Spark's lexer produces; None when Spark cannot lex it."""
+        parser = jvm.org.apache.spark.sql.catalyst.parser
+        lexer = parser.SqlBaseLexer(parser.UpperCaseCharStream(
+            jvm.org.antlr.v4.runtime.CharStreams.fromString(sql)))
+        lexer.removeErrorListeners()
+        vocab = lexer.getVocabulary()
+        out, n = [], 0
+        for tok in lexer.getAllTokens():
+            kind = vocab.getSymbolicName(tok.getType())
+            text = sql[tok.getStartIndex() : tok.getStopIndex() + 1]
+            if kind == "UNRECOGNIZED":
+                return None
+            if kind in ("STRING_LITERAL", "DOUBLEQUOTED_STRING"):
+                text = f"\x00{n}\x00"
+                n += 1
+            elif kind in ("SIMPLE_COMMENT", "BRACKETED_COMMENT"):
+                # Spark's line comment also holds its newline, which
+                # mask_literals leaves in the text.
+                m = re.fullmatch(r"(--(?:\\\n|[^\r\n])*)(\r?\n?)", text)
+                text = f"\x01{n}\x01" + (m.group(2) if m else "")
+                n += 1
+            out.append(text)
+        if get_field(lexer, "has_unclosed_bracketed_comment"):
+            return None
+        return "".join(out)
+
+    def test_same_spans_as_spark(self, spark):
+        rng = random.Random(0)
+        checked = 0
+        for _ in range(800):
+            sql = "".join(rng.choice(self.PIECES) for _ in range(rng.randint(1, 12)))
+            want = self._spark_masked(spark._jvm, sql)
+            if want is not None:
+                checked += 1
+                assert mask_literals(sql)[0] == want, sql
+        assert checked > 150
 
 
 class TestDuckDBShims:

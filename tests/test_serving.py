@@ -10,6 +10,7 @@ import urllib.request
 from urllib.parse import quote
 
 import pytest
+from test_validate import BYPASSES, SPOOFS
 
 from serverless_data_lake_spark.serving import LakeServer
 from serverless_data_lake_spark.serving.chart import suggest_chart
@@ -93,14 +94,21 @@ class TestHttpApi:
         assert body["rows"][0]["total_amount"] == 10.0
         assert body["truncated"] is False
 
-    def test_query_validation_400(self, server):
-        sql = quote("DROP TABLE x")
+    @pytest.mark.parametrize(
+        "sql, reason",
+        [
+            ("DROP TABLE x", "SELECT"),
+            *((q, "reflect") for q in BYPASSES),
+            *((q, "string literal") for q in SPOOFS),
+        ],
+    )
+    def test_query_validation_400(self, server, sql, reason):
         try:
-            _get(f"{server}/consumption/query?sql={sql}")
+            _get(f"{server}/consumption/query?sql={quote(sql)}")
             raise AssertionError("expected 400")
         except urllib.error.HTTPError as err:
             assert err.code == 400
-            assert "SELECT" in json.loads(err.read())["error"]
+            assert reason in json.loads(err.read())["error"]
 
     def test_tables_listing(self, server):
         status, body = _get(f"{server}/consumption/tables")

@@ -20,6 +20,40 @@ ALLOWED = [
     "SELECT 1;",  # trailing semicolon ok
     "SELECT created_at FROM t",  # 'create' substring of identifier
     "  \n SELECT 1",
+    "/* lead */ SELECT 1",
+    "SELECT 1 AS `it's`",  # a quote inside an identifier opens no string
+    "SELECT 'a--b' AS s",  # a comment marker inside a literal
+    'SELECT "x" AS s',  # double quotes are a string in Spark
+    "SELECT 1 /* a /* b */ c */",  # comments nest
+    "SELECT /*+ MERGE(t) */ * FROM t",  # a hint name is not a statement
+    "SELECT '\x00' AS s /* \x01 */",  # only code may not hold them
+]
+
+_REFLECT = "reflect('java.lang.System','getProperty','user.name')"
+
+# Each passed the gate while a second scanner disagreed with Spark's
+# lexer about where a string or comment ends, and Spark then ran the
+# call the gate never saw.
+BYPASSES = [
+    f"SELECT '--' AS a, {_REFLECT}",
+    f"SELECT '/*' AS a, {_REFLECT}, '*/' AS b",
+    f'SELECT "--" AS a, {_REFLECT}',
+    f"SELECT 'x\\'' AS a, {_REFLECT}",  # backslash escape
+    "SELECT `reflect`('java.lang.System','getProperty','user.name')",
+    f"SELECT 1 AS a /* /* */ ' */ , {_REFLECT} -- '",  # nested comment
+    f"SELECT /*+ FOO('*/') */ {_REFLECT} AS a -- '",  # a hint is code
+    f"SELECT 1 AS a -- \\\n'\n, {_REFLECT} -- '",  # continued comment
+]
+
+_REFLECT_DQ = 'reflect("java.lang.System","getProperty","user.name")'
+
+# A NUL or \x01 outside a string would read as one of the lexer's
+# placeholders, and the rewrite would splice a string's text there as
+# code: after r it reads as a raw string, in backticks it ends the name.
+SPOOFS = [
+    f"SELECT '\\' , {_REFLECT_DQ} , ' AS a, r\x000\x00 AS b --'",
+    f"SELECT '\\' , {_REFLECT_DQ} , ' AS a, r\x010\x01 AS b --'",
+    f"SELECT '` , {_REFLECT_DQ} AS c, 1 AS `' AS a, 1 AS `\x000\x00`",
 ]
 
 BLOCKED = [
@@ -52,6 +86,12 @@ BLOCKED = [
     "SELECT 1; SELECT 2",
     "",
     "   ",
+    *BYPASSES,
+    *SPOOFS,
+    f"SELECT r'\\' AS a, {_REFLECT}",  # a raw string ends at its quote
+    f"SELECT /*+ FOO */*, {_REFLECT} AS a FROM (SELECT 1 AS x) -- */",
+    f"SELECT /*+ REPARTITION({_REFLECT}) */ 1",  # a hint's calls are checked
+    "SELECT reflect/**/('java.lang.System','getProperty','user.name')",
 ]
 
 
