@@ -16,8 +16,8 @@ engine:
   upsert-by-(composite)-key write modes, cron-tag + dependency-DAG
   scheduling with frequency inheritance.
 - **Query**: SELECT/WITH-only gate, three-part ``domain.layer.table``
-  name rewrite, DuckDB-dialect shims, 10k row cap — all executed by
-  Catalyst (``spark.sql``).
+  name rewrite, DuckDB-dialect shims, one parse by Spark's query
+  parser, 10k row cap — all executed by Catalyst.
 - **Scale extensions**: dedup family (exact / MinHash-LSH / SimHash /
   n-gram Jaccard / embedding-cosine), similarity search, text
   analysis, multimodal column plumbing.

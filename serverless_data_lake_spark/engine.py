@@ -80,6 +80,7 @@ class Lake:
         return self.silver.process_endpoint(domain, endpoint)
 
     def create_gold_job(self, job: GoldJobConfig) -> None:
+        self.queries.parse(job.query)  # the query API's gate, at save
         self.registry.save_gold_job(job.domain, job)
 
     def run_gold(self, domain: str, name: str) -> GoldResult:

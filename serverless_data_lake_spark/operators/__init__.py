@@ -59,7 +59,6 @@ from serverless_data_lake_spark.operators.dedup import (
     simhash_signatures,
 )
 from serverless_data_lake_spark.operators.similarity import (
-    cosine_similarity_col,
     cosine_topk,
     embedding_all_pairs_numpy,
     embedding_near_duplicates,
@@ -144,7 +143,6 @@ __all__ = [
     "stratified_sample",
     "train_bpe",
     "train_pq_codebooks",
-    "cosine_similarity_col",
     "cosine_topk",
     "decontaminate",
     "dedup_exact",

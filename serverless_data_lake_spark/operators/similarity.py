@@ -56,10 +56,6 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine_similarity_col(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -3,8 +3,11 @@ shims, and the serving-layer entry point.
 
 The only "optimizer" the reference implements is a regex table-name
 rewrite (SURVEY §4); everything else is delegated to the SQL engine.
-Here that division of labor is kept: these modules are string-level
-pre-passes, and Catalyst does all actual planning.
+Here that division of labor is kept: the text checks, the name
+rewrite and the dialect shims are string-level pre-passes; Spark's
+parser then builds the one tree that is gated (one query, calls
+looked up in the session's function registry) and run, and Catalyst
+does all actual planning.
 """
 
 from serverless_data_lake_spark.plans.dialect import transpile

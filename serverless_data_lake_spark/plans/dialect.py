@@ -109,7 +109,7 @@ _QUALIFY_HELPER = "__qualify__"
 _TOKEN_RE = re.compile(
     r"""(?P<str>(?<!\w)[rR](?:'[^']*'?|"[^"]*"?)"""
     r"""|'(?:[^'\\]|\\.|'')*'?|"(?:[^"\\]|\\.|"")*"?)"""
-    r"""|(?P<ident>`(?:[^`\x00\x01]|``)*`?)|(?P<end>\*/)|(?P<hint>/\*\+)"""
+    r"""|(?P<code>`(?:[^`\x00\x01]|``)*`?|\*/|/\*\+)"""
     r"""|(?P<line>--(?:\\\n|[^\r\n])*)|(?P<block>/\*)|(?P<ctl>[\x00\x01])""",
     re.S,
 )
@@ -118,19 +118,12 @@ _MASK_RE = re.compile("[\x00\x01](\\d+)[\x00\x01]")
 _LIT = "\x00(\\d+)\x00"  # a masked string literal, for the passes below
 
 
-def mask_literals(sql: str, gate: bool = False) -> tuple[str, list[str]]:
+def mask_literals(sql: str) -> tuple[str, list[str]]:
     """Mask every string and comment; returns (masked, originals).
-
-    ``gate=True`` gives the read-only gate's view instead: each
-    comment reads as a space, each backtick identifier as its bare
-    name between spaces, so ``reflect/**/(`` and ```reflect`(`` show
-    the call they make, and each ``/*+ … */`` hint is cut out and
-    returned in place of the originals. Raises ValueError on a
-    \\x00 or \\x01 outside a string or comment."""
+    Raises ValueError on a \\x00 or \\x01 outside a string or
+    comment."""
     out: list[str] = []
     lits: list[str] = []
-    hints: list[str] = []
-    hint_at = None  # where the open hint starts in out (gate only)
     pos = 0
     while m := _TOKEN_RE.search(sql, pos):
         out.append(sql[pos : m.start()])
@@ -147,25 +140,15 @@ def mask_literals(sql: str, gate: bool = False) -> tuple[str, list[str]]:
             else:
                 end = len(sql)
         tok = sql[m.start() : end]
-        if kind == "hint" and gate and hint_at is None:
-            hint_at = len(out)
-        if kind in ("end", "hint"):
+        if kind == "code":  # an identifier, */ or /*+
             out.append(tok)
-        elif kind == "ident":
-            out.append(f" {tok[1:-1]} " if gate else tok)
-        elif kind == "str" or not gate:
+        else:
             mark = "\x00" if kind == "str" else "\x01"
             out.append(f"{mark}{len(lits)}{mark}")
             lits.append(tok)
-        else:
-            out.append(" ")
-        if kind == "end" and hint_at is not None:
-            hints.append("".join(out[hint_at:]))
-            out[hint_at:] = [" "]
-            hint_at = None
         pos = end
     out.append(sql[pos:])
-    return "".join(out), hints if gate else lits
+    return "".join(out), lits
 
 
 def unmask_literals(sql: str, lits: list[str]) -> str:

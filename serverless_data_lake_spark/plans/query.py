@@ -2,17 +2,28 @@
 
 ``QueryEngine.dataframe`` is the front end for serving
 (``QueryEngine.query``), gold jobs (``GoldRunner``) and the ``Lake``
-helpers; each of its passes reads the query through the one SQL lexer
-(``dialect.mask_literals``). Pipeline (mirrors the reference query API
-lifecycle, ``lambdas/query_api/main.py:210-237``):
+helpers, and gold save runs its gate, ``QueryEngine.parse``. Steps 1–3
+read the query through the one SQL lexer (``dialect.mask_literals``).
+Pipeline (mirrors the reference query API lifecycle,
+``lambdas/query_api/main.py:210-237``):
 
-1. ``validate_query``  — SELECT/WITH-only gate, 10k-char cap;
+1. ``validate_query``  — the text checks: not empty, 10k-char cap,
+   SELECT/WITH first; drops trailing semicolons and comments;
 2. ``rewrite_query``   — three-part name resolution (bronze refs get
    per-query temp views over the JSONL prefix);
 3. ``transpile``       — DuckDB-dialect shims;
-4. ``spark.sql``       — Catalyst does parse/analyze/optimize/exec;
+4. one parse           — Spark's ``parseQuery`` accepts one query and
+   nothing else, ``LookupFunctions`` checks its calls against the
+   session's function registry, and ``Dataset.ofRows`` analyzes that
+   same tree, so Spark never parses the text a second time;
 5. row cap             — ``limit(N + 1)`` and a ``truncated`` flag;
-6. sanitized errors    — storage paths stripped from messages.
+6. sanitized errors    — storage paths stripped from messages; what the
+   gate refuses is a ``QueryValidationError`` (HTTP 400).
+
+The engine hardens the session it serves before its first parse: the
+reflective builtins and ``input_file_name`` are dropped from its
+function registry, and ``spark.sql.runSQLOnFiles`` is off, so a path
+such as ``text.`/etc/hostname``` names no table.
 
 Statelessness: the reference builds a fresh DuckDB per request; a
 long-lived SparkSession is kept instead. Bronze views stay registered
@@ -26,9 +37,12 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField
 
 from serverless_data_lake_spark.config import LakeConfig
 from serverless_data_lake_spark.plans.dialect import (
@@ -45,8 +59,21 @@ from serverless_data_lake_spark.plans.validate import (
     QueryValidationError,
     validate_query,
 )
+from serverless_data_lake_spark.schema.types import SchemaMode, to_struct_type
+from serverless_data_lake_spark.sources.bronze import METADATA_COLUMNS
 
 _PATH_RE = re.compile(r"(s3a?://\S+|file:/\S+|/[\w./-]{2,})")
+# Builtins no lake query may reach: the reflective calls run any static
+# Java method on the driver, and input_file_name shows storage paths.
+_DROPPED_FUNCTIONS = ("reflect", "java_method", "try_reflect", "input_file_name")
+# Analysis errors for a name the session does not have: a function
+# (DuckDB's read_*, glob, *_scan, or a dropped builtin) or a relation
+# (a path, once runSQLOnFiles is off).
+_OUTSIDE_THE_LAKE = (
+    "UNRESOLVED_ROUTINE",
+    "UNRESOLVABLE_TABLE_VALUED_FUNCTION",
+    "TABLE_OR_VIEW_NOT_FOUND",
+)
 
 
 @dataclass
@@ -63,33 +90,74 @@ class QueryEngine:
     config: LakeConfig
     registry: object | None = None  # SchemaRegistry, for the fast path
 
+    @cached_property
+    def _session_gate(self):
+        """Harden the session, once, before this engine parses its first
+        query, so every session an engine serves is hardened however it
+        was built: a name dropped from the function registry resolves
+        under no spelling (case, backticks, ``builtin.``, hints,
+        lambdas, ``WINDOW``), and with runSQLOnFiles off a
+        ``format.`path``` relation is a missing table. Returns the
+        session's parser, its function lookup and ``Dataset``."""
+        jvm, state = self.spark._jvm, self.spark._jsparkSession.sessionState()
+        ident = jvm.org.apache.spark.sql.catalyst.FunctionIdentifier
+        for name in _DROPPED_FUNCTIONS:
+            state.functionRegistry().dropFunction(ident.apply(name))
+        self.spark.conf.set("spark.sql.runSQLOnFiles", "false")
+        lookup = state.analyzer().LookupFunctions()
+        return state.sqlParser(), lookup, jvm.org.apache.spark.sql.classic.Dataset
+
+    # -- the gate (serving and gold save) --------------------------
+    def parse(self, sql: str) -> tuple[str, Any]:
+        """Steps 1–4 short of analysis; needs no table to exist.
+        Returns the rewritten text and the parsed plan (a JVM
+        ``LogicalPlan``); raises QueryValidationError."""
+        rewritten = rewrite_query(validate_query(sql))
+        return rewritten, self._parse(transpile(rewritten))
+
+    def _parse(self, text: str):
+        parser, lookup_functions, _ = self._session_gate
+        try:
+            plan = parser.parseQuery(text)
+            lookup_functions.apply(plan)
+        except AnalysisException as exc:  # ParseException is one too
+            raise _refused(exc) from None
+        return plan
+
     # -- plan-only entry (returns a DataFrame; no collect) ---------
     def dataframe(self, sql: str) -> DataFrame:
-        """Validate + rewrite + transpile, return the lazy DataFrame.
+        """The gate, then bronze views, then the analyzed DataFrame.
 
         Bronze temp views created here live until the next query that
         touches the same endpoint refreshes them (they are metadata
         only — a view over a path — so leaving them registered does
         not pin data)."""
-        validate_query(sql)
+        rewritten, plan = self.parse(sql)
         for domain, layer, table in find_table_refs(sql):
             if layer == "bronze":
                 self._register_bronze_view(domain, table)
-        rewritten = rewrite_query(sql)
         try:
-            return self.spark.sql(transpile(rewritten))
-        except Exception as exc:  # noqa: BLE001 — overload retry below
+            return self._analyze(plan)
+        except AnalysisException as exc:
             # DuckDB's epoch_ms is overloaded by argument type; the
             # static rename picks the integer→timestamp direction.
             # When analysis rejects a TIMESTAMP argument, retry the
             # timestamp→bigint direction (unix_millis). See
             # dialect.reverse_epoch_ms.
-            if not is_epoch_ms_type_mismatch(exc):
+            alt = is_epoch_ms_type_mismatch(exc) and reverse_epoch_ms(rewritten)
+            if not alt:
                 raise
-            alt = reverse_epoch_ms(rewritten)
-            if alt is None:
+            return self._analyze(self._parse(transpile(alt)))
+
+    def _analyze(self, plan) -> DataFrame:
+        _, _, dataset = self._session_gate
+        try:
+            jdf = dataset.ofRows(self.spark._jsparkSession, plan)
+            return DataFrame(jdf, self.spark)
+        except AnalysisException as exc:
+            if exc.getCondition() not in _OUTSIDE_THE_LAKE:
                 raise
-            return self.spark.sql(transpile(alt))
+            raise _refused(exc) from None
 
     # -- serving entry (capped, JSON-shaped) -----------------------
     def query(self, sql: str) -> QueryResult:
@@ -142,18 +210,11 @@ class QueryEngine:
         endpoint = self.registry.get(domain, table)
         if endpoint is None or not endpoint.columns:
             return None
-        from serverless_data_lake_spark.schema.types import SchemaMode
-
         if endpoint.schema_mode is not SchemaMode.MANUAL:
             # Auto-inferred registrations may lag behind payload drift;
             # only user-declared schemas are authoritative enough to
             # skip the union-by-name inference scan.
             return None
-        from pyspark.sql.types import StringType, StructField
-
-        from serverless_data_lake_spark.schema.types import to_struct_type
-        from serverless_data_lake_spark.sources.bronze import METADATA_COLUMNS
-
         schema = to_struct_type(endpoint.columns)
         for meta in METADATA_COLUMNS:
             schema = schema.add(StructField(meta, StringType(), True))
@@ -167,8 +228,15 @@ class QueryExecutionError(RuntimeError):
 def _friendly_error(exc: Exception) -> str:
     """Strip filesystem/bucket paths from error text (reference:
     ``lambdas/query_api/main.py:186-207``)."""
-    msg = str(exc).split("\n")[0]
+    msg = str(exc).strip().split("\n")[0]
     msg = _PATH_RE.sub("<path>", msg)
     if "TABLE_OR_VIEW_NOT_FOUND" in str(exc) or "PATH_NOT_FOUND" in str(exc):
         return f"Table not found or not accessible. ({msg[:200]})"
     return msg[:500]
+
+
+def _refused(exc: AnalysisException) -> QueryValidationError:
+    return QueryValidationError(
+        "Only a SELECT over lake tables and Spark's built-in functions "
+        f"is allowed: {_friendly_error(exc)}"
+    )

@@ -27,8 +27,12 @@ from serverless_data_lake_spark.plans.dialect import (
     unmask_literals,
 )
 
+# A whole dotted name of exactly three parts: no ``x.`` before it and no
+# ``.y`` after it, so a longer chain is left alone and a second pass
+# finds nothing the first did not.
 _THREE_PART_RE = re.compile(
-    r"\b([A-Za-z_][A-Za-z0-9_]*)\.(bronze|silver|gold)\.([A-Za-z_][A-Za-z0-9_]*)\b",
+    r"(?<![\w.])([A-Za-z_][A-Za-z0-9_]*)\.(bronze|silver|gold)"
+    r"\.([A-Za-z_][A-Za-z0-9_]*)(?![\w.])",
     re.IGNORECASE,
 )
 

@@ -1,91 +1,33 @@
-"""SELECT-only SQL gate.
+"""The text checks of the SELECT-only gate.
 
 Behavioral contract from the reference's query API
-(``lambdas/query_api/main.py:19-77``): queries must start with
-SELECT or WITH, must not contain DDL/DML/transaction/extension
-statements, must not call direct file functions, and are capped at
-10,000 characters. The gate is a pre-parse string check — Catalyst
-never sees a rejected query. It reads the query through the one SQL
-lexer (``dialect.mask_literals``): keywords inside strings and
-comments don't trip it, each comment reads as a space, and a
-backtick-quoted function name is checked like a bare one. A
-``/*+ … */`` hint is scanned for calls but not for statement
-keywords, so ``/*+ MERGE(t) */`` passes. Every front end
-(``QueryEngine.dataframe``, which serving and gold jobs both use, and
-``GoldJobConfig.validate``) runs it.
+(``lambdas/query_api/main.py:19-77``): one read-only SELECT or WITH
+query of at most 10,000 characters, with no DDL/DML and no direct
+file access. Each rule has one enforcer:
+
+- here, on the text: empty, the length cap, the lexer's refusal of a
+  ``\\x00``/``\\x01`` in code (``dialect.mask_literals``), and SELECT or
+  WITH as the first code word; trailing semicolons and comments are
+  dropped;
+- one statement and no command: Spark's ``parseQuery``, whose grammar
+  has no rule for anything but a query (``QueryEngine.parse``);
+- no reflective call, no ``input_file_name`` and no path relation: the
+  session the engine hardens, whose function registry lacks them and
+  whose ``runSQLOnFiles`` is off (``QueryEngine._session_gate``).
 """
 
 from __future__ import annotations
 
 import re
 
-from serverless_data_lake_spark.plans.dialect import mask_literals
+from serverless_data_lake_spark.plans.dialect import mask_literals, unmask_literals
 
 MAX_QUERY_LENGTH = 10_000
 
-# Statement keywords that must not appear anywhere in a read-only
-# query (word-bounded, case-insensitive).
-_FORBIDDEN_STATEMENTS = (
-    "insert",
-    "update",
-    "delete",
-    "drop",
-    "create",
-    "alter",
-    "truncate",
-    "merge",
-    "grant",
-    "revoke",
-    "attach",
-    "detach",
-    "install",
-    "load",
-    "set",
-    "reset",
-    "pragma",
-    "call",
-    "begin",
-    "commit",
-    "rollback",
-    "vacuum",
-    "analyze",
-    "export",
-    "import",
-    "copy",
-    "use",
-    "refresh",
-    "cache",
-    "uncache",
-    "msck",
-)
-
-# Direct file/table functions that would bypass the catalog layer.
-_FORBIDDEN_FUNCTIONS = (
-    "read_csv",
-    "read_csv_auto",
-    "read_parquet",
-    "read_json",
-    "read_json_auto",
-    "read_json_objects",
-    "read_ndjson",
-    "read_ndjson_auto",
-    "parquet_scan",
-    "delta_scan",
-    "iceberg_scan",
-    "glob",
-    "from_file",
-    # Spark-specific escape hatches blocked for symmetry:
-    "reflect",
-    "java_method",
-    "input_file_name",
-)
-
-_STMT_RE = re.compile(
-    r"\b(" + "|".join(_FORBIDDEN_STATEMENTS) + r")\b", re.IGNORECASE
-)
-_FUNC_RE = re.compile(
-    r"\b(" + "|".join(_FORBIDDEN_FUNCTIONS) + r")\s*\(", re.IGNORECASE
-)
+_HEAD_RE = re.compile("(?:\\s|\x01\\d+\x01)*(\\w*)")  # skips blanks and comments
+# Trailing blanks, comments and semicolons, matched on the reversed
+# masked text (a mask reads the same both ways round).
+_REVERSED_TAIL_RE = re.compile("(?:[\\s;]|\x01\\d+\x01)*")
 
 
 class QueryValidationError(ValueError):
@@ -93,8 +35,9 @@ class QueryValidationError(ValueError):
 
 
 def validate_query(sql: str) -> str:
-    """Validate and return the query; raise QueryValidationError
-    otherwise. Returns the input unchanged on success."""
+    """Apply the text checks; raise QueryValidationError on failure.
+    Returns the query without its trailing semicolons and comments:
+    Spark's query parser takes one query and no ``;``."""
     if not sql or not sql.strip():
         raise QueryValidationError("Query is empty")
     if len(sql) > MAX_QUERY_LENGTH:
@@ -102,25 +45,10 @@ def validate_query(sql: str) -> str:
             f"Query exceeds maximum length of {MAX_QUERY_LENGTH} characters"
         )
     try:
-        scrubbed, hints = mask_literals(sql, gate=True)
+        masked, lits = mask_literals(sql)
     except ValueError as err:
         raise QueryValidationError(str(err)) from None
-    head = scrubbed.strip().split(None, 1)[0].lower() if scrubbed.strip() else ""
-    if head not in ("select", "with"):
+    if _HEAD_RE.match(masked).group(1).lower() not in ("select", "with"):
         raise QueryValidationError("Only SELECT and WITH queries are allowed")
-    # Multiple statements: anything after a top-level semicolon.
-    body = " ".join([scrubbed.strip().rstrip(";"), *hints])
-    if ";" in body:
-        raise QueryValidationError("Multiple statements are not allowed")
-    # A hint's names (/*+ MERGE(t) */) are not statements; its calls are.
-    m = _STMT_RE.search(scrubbed)
-    if m:
-        raise QueryValidationError(
-            f"Statement keyword not allowed in read-only queries: {m.group(1).upper()}"
-        )
-    m = _FUNC_RE.search(body)
-    if m:
-        raise QueryValidationError(
-            f"Direct file access function not allowed: {m.group(1)}"
-        )
-    return sql
+    tail = _REVERSED_TAIL_RE.match(masked[::-1]).end()
+    return unmask_literals(masked[: len(masked) - tail], lits)

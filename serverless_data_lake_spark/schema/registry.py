@@ -24,7 +24,6 @@ from dataclasses import dataclass, field
 
 import yaml
 
-from serverless_data_lake_spark.plans.validate import validate_query
 from serverless_data_lake_spark.schema.types import EndpointSchema
 
 _VERSION_RE = re.compile(r"^v(\d+)\.yaml$")
@@ -215,8 +214,8 @@ class GoldJobConfig:
         table-doesn't-exist branch creates regardless of mode), and
         only raise on the second — a delayed failure that looked
         like a working job (found by an r9 verify probe). The query
-        must pass the query API's read-only gate."""
-        validate_query(self.query)
+        passes the query API's gate in ``Lake.create_gold_job``, which
+        needs the session's parser."""
         if self.write_mode not in ("overwrite", "append"):
             raise ValueError(
                 f"unknown write_mode: {self.write_mode!r} — expected "

@@ -6,6 +6,12 @@ path (the reference used a fresh DuckDB per request —
 JVM warm). The session is not stateless: bronze temp views stay
 registered between queries, and each query over an endpoint
 re-registers its view (see plans/query.py).
+
+Read-only serving settings are not made here: a ``QueryEngine``
+hardens its session before it parses its first query (drops the
+reflective builtins and ``input_file_name``, turns
+``spark.sql.runSQLOnFiles`` off), so every session an engine serves is
+hardened, however it was built.
 """
 
 from __future__ import annotations

@@ -6,15 +6,15 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from serverless_data_lake_spark.config import LakeConfig
 from serverless_data_lake_spark.plans.dialect import transpile
+from serverless_data_lake_spark.plans.query import QueryEngine
 from serverless_data_lake_spark.plans.rewrite import rewrite_query
-from serverless_data_lake_spark.plans.validate import (
-    QueryValidationError,
-    validate_query,
-)
+from serverless_data_lake_spark.plans.validate import QueryValidationError
 from serverless_data_lake_spark.schema.inference import (
     infer_type_from_value,
     to_snake_case,
@@ -28,22 +28,30 @@ sql_text = st.text(
 )
 
 
+@pytest.fixture(scope="module")
+def engine(spark, tmp_path_factory):
+    return QueryEngine(spark, LakeConfig(root=str(tmp_path_factory.mktemp("lake"))))
+
+
 class TestValidatorTotality:
-    @given(sql_text)
+    """The engine's gate (text checks, then Spark's parser and function
+    lookup): a text-only check would pass ``SELECT 1; DROP TABLE t``."""
+
+    @given(sql=st.one_of(sql_text, sql_text.map("SELECT {}".format)))
     @settings(max_examples=300, deadline=None)
-    def test_never_crashes(self, sql):
+    def test_never_crashes(self, engine, sql):
         try:
-            validate_query(sql)
+            engine.parse(sql)
         except QueryValidationError:
             pass  # rejection is fine; crashing is not
 
-    @given(sql_text)
+    @given(sql=sql_text)
     @settings(max_examples=300, deadline=None)
-    def test_write_statements_never_pass(self, sql):
+    def test_write_statements_never_pass(self, engine, sql):
         """Whatever gets through must not start with a write keyword
         outside a literal."""
         try:
-            validate_query(sql)
+            engine.parse(sql)
         except QueryValidationError:
             return
         head = sql.strip().split(None, 1)
@@ -52,26 +60,35 @@ class TestValidatorTotality:
         # Stronger: explicit write statements are always rejected.
         for stmt in ("DROP TABLE t", "INSERT INTO t VALUES (1)"):
             try:
-                validate_query(sql + "; " + stmt)
+                engine.parse(sql + "; " + stmt)
                 raise AssertionError("write slipped through")
             except QueryValidationError:
                 pass
 
-    @given(st.sampled_from([
+    @given(kw=st.sampled_from([
         "DELETE", "DROP", "INSERT", "UPDATE", "CREATE", "MERGE", "COPY",
-    ]), sql_text)
+    ]), tail=sql_text)
     @settings(max_examples=100, deadline=None)
-    def test_keyword_anywhere_rejected(self, kw, tail):
+    def test_keyword_anywhere_rejected(self, engine, kw, tail):
         # A bare write keyword followed by arbitrary text never passes.
         try:
-            validate_query(f"{kw} {tail}")
+            engine.parse(f"{kw} {tail}")
             raise AssertionError("write keyword passed the gate")
         except QueryValidationError:
             pass
 
 
+# Dotted names of 4-6 parts, where a three-part rewrite must leave the
+# chain whole: a.silver.b.gold.c once became a_silver.b.gold.c, and a
+# second pass then rewrote b.gold.c.
+dotted_chain = st.lists(
+    st.sampled_from(["a", "b", "sales", "silver", "gold", "bronze"]),
+    min_size=4, max_size=6,
+).map(lambda parts: "SELECT * FROM " + ".".join(parts))
+
+
 class TestRewriteTotality:
-    @given(sql_text)
+    @given(st.one_of(sql_text, dotted_chain))
     @settings(max_examples=300, deadline=None)
     def test_rewrite_never_crashes_and_is_idempotent(self, sql):
         once = rewrite_query(sql)

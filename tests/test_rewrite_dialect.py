@@ -67,6 +67,8 @@ class TestRewrite:
             "SELECT * FROM plain_table WHERE x = 1",
             "SELECT a.b.c.d FROM t",  # 4-part: inner 3 don't match layer
             "SELECT * FROM db.schema.table",  # layer not in bronze/silver/gold
+            "SELECT * FROM a.silver.b.gold.c",  # a longer chain stays whole
+            "SELECT * FROM cat.sales.silver.orders",
         ):
             assert rewrite_query(sql) == sql
 

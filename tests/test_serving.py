@@ -100,6 +100,9 @@ class TestHttpApi:
             ("DROP TABLE x", "SELECT"),
             *((q, "reflect") for q in BYPASSES),
             *((q, "string literal") for q in SPOOFS),
+            ("SELECT try_reflect('java.lang.System','getProperty','user.home') AS h",
+             "try_reflect"),
+            ("SELECT * FROM text.`/etc/hostname`", "not found"),
         ],
     )
     def test_query_validation_400(self, server, sql, reason):

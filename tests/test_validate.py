@@ -1,14 +1,24 @@
 """SQL-gate cases (ports the reference's ~20 security cases,
-tests/test_consumption.py:278-367)."""
+tests/test_consumption.py:278-367), run through the engine's gate:
+the text checks, then Spark's parser, function registry and analyzer
+in the session the engine hardened."""
 
 from __future__ import annotations
 
 import pytest
 
+from serverless_data_lake_spark.config import LakeConfig
+from serverless_data_lake_spark.plans.query import QueryEngine
 from serverless_data_lake_spark.plans.validate import (
     QueryValidationError,
     validate_query,
 )
+
+
+@pytest.fixture(scope="module")
+def engine(spark, tmp_path_factory):
+    return QueryEngine(spark, LakeConfig(root=str(tmp_path_factory.mktemp("lake"))))
+
 
 ALLOWED = [
     "SELECT 1",
@@ -27,6 +37,9 @@ ALLOWED = [
     "SELECT 1 /* a /* b */ c */",  # comments nest
     "SELECT /*+ MERGE(t) */ * FROM t",  # a hint name is not a statement
     "SELECT '\x00' AS s /* \x01 */",  # only code may not hold them
+    "SELECT 1 AS set",  # a statement keyword is a name here
+    "SELECT o.use FROM t o",
+    "SELECT a FROM t QUALIFY row_number() OVER (ORDER BY a) = 1;",  # ; dropped first
 ]
 
 _REFLECT = "reflect('java.lang.System','getProperty','user.name')"
@@ -92,18 +105,27 @@ BLOCKED = [
     f"SELECT /*+ FOO */*, {_REFLECT} AS a FROM (SELECT 1 AS x) -- */",
     f"SELECT /*+ REPARTITION({_REFLECT}) */ 1",  # a hint's calls are checked
     "SELECT reflect/**/('java.lang.System','getProperty','user.name')",
+    "SELECT try_reflect('java.lang.System','getProperty','user.home') AS h",
+    "SELECT java_method('java.lang.System','getProperty','user.name')",
+    f"WITH c AS (SELECT {_REFLECT} AS u) SELECT * FROM c",
+    f"SELECT * FROM (SELECT {_REFLECT} AS u)",
+    f"SELECT sum(1) OVER w FROM range(2) WINDOW w AS (PARTITION BY {_REFLECT})",
+    f"SELECT transform(array(1), x -> {_REFLECT})",
+    "SELECT * FROM text.`/etc/hostname`",
+    "SELECT * FROM parquet.`/tmp`",
+    "SELECT input_file_name()",
 ]
 
 
 @pytest.mark.parametrize("sql", ALLOWED)
-def test_allowed(sql):
-    assert validate_query(sql) == sql
+def test_allowed(engine, sql):
+    engine.parse(sql)
 
 
 @pytest.mark.parametrize("sql", BLOCKED)
-def test_blocked(sql):
+def test_blocked(engine, sql):
     with pytest.raises(QueryValidationError):
-        validate_query(sql)
+        engine.dataframe(sql)
 
 
 def test_length_cap():
@@ -111,6 +133,25 @@ def test_length_cap():
         validate_query("SELECT 1 " + " " * 10_000)
 
 
-def test_select_star_exclude_is_not_a_blocked_statement():
+def test_select_star_exclude_is_not_a_blocked_statement(engine):
     # EXCEPT-like star modifiers pass through to the dialect layer.
-    validate_query("SELECT * EXCLUDE (a) FROM sales.silver.t")
+    engine.parse("SELECT * EXCLUDE (a) FROM sales.silver.t")
+
+
+def test_no_alias_of_a_dropped_function_resolves(engine, spark):
+    """Spark may add an alias for a dropped builtin's class; it would
+    resolve in the engine's session until the engine drops it too."""
+    dropped = ("CallMethodViaReflection", "TryReflect", "InputFileName")
+
+    def named(session):
+        return sorted(
+            f.name for f in session.catalog.listFunctions()
+            if (f.className or "").rsplit(".", 1)[-1] in dropped
+        )
+
+    # A session no engine serves still has all four.
+    assert named(spark.newSession()) == [
+        "input_file_name", "java_method", "reflect", "try_reflect",
+    ]
+    engine.parse("SELECT 1")  # the engine hardens its session first
+    assert named(spark) == []
