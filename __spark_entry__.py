@@ -678,11 +678,9 @@ def _q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       (``build_lsh_index`` + ``lsh_pairs_index_vs_index``) — the
       even-id half of the corpus is the STANDING INDEX, the odd-id
       half is the arriving batch, and the leg returns the batch's
-      verified matches against the index. This is the exact operator
-      the incremental/streaming dedup path runs per micro-batch
-      (streaming/incremental_dedup_stream.py), now oracle-checked:
-      because verification is exact Jaccard, the leg must equal the
-      cross-parity restriction of the exact pair set.
+      verified matches against the index. Because verification is
+      exact Jaccard, the leg must equal the cross-parity restriction
+      of the exact pair set.
 
     Pairs are normalized to (id_a=min, id_b=max) in both legs so one
     exact-Jaccard oracle covers them.

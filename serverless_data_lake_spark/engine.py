@@ -21,6 +21,10 @@ resolution follows whichever Lake registered last).
 
 from __future__ import annotations
 
+import dataclasses
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from serverless_data_lake_spark.catalog import TableStore
@@ -96,48 +100,23 @@ class Lake:
     # Ingestion plans (REST pull, reference S13 + O6)
     # ------------------------------------------------------------------
     def save_ingestion_plan(self, plan) -> None:
-        import json as _json
-        import os as _os
-
-        d = _os.path.join(self.config.registry_root, plan.domain, "plans")
-        _os.makedirs(d, exist_ok=True)
-        doc = {
-            "domain": plan.domain,
-            "base_url": plan.base_url,
-            "auth_type": plan.auth_type,
-            "auth_token": plan.auth_token,
-            "api_key_header": plan.api_key_header,
-            "tag": plan.tag,
-            "endpoints": [
-                {
-                    "name": e.name,
-                    "path": e.path,
-                    "data_path": e.data_path,
-                    "primary_key": e.primary_key,
-                    "params": e.params,
-                    "pagination": vars(e.pagination),
-                }
-                for e in plan.endpoints
-            ],
-        }
-        with open(_os.path.join(d, "plan.json"), "w") as fh:
-            _json.dump(doc, fh, indent=2)
+        d = os.path.join(self.config.registry_root, plan.domain, "plans")
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "plan.json"), "w") as fh:
+            json.dump(dataclasses.asdict(plan), fh, indent=2)
 
     def list_ingestion_plans(self) -> list:
-        import json as _json
-        import os as _os
-
         from serverless_data_lake_spark.sources.rest import IngestionPlan
 
         out = []
         root = self.config.registry_root
-        if not _os.path.isdir(root):
+        if not os.path.isdir(root):
             return out
-        for domain in sorted(_os.listdir(root)):
-            path = _os.path.join(root, domain, "plans", "plan.json")
-            if _os.path.exists(path):
+        for domain in sorted(os.listdir(root)):
+            path = os.path.join(root, domain, "plans", "plan.json")
+            if os.path.exists(path):
                 with open(path) as fh:
-                    out.append(IngestionPlan.from_dict(_json.load(fh)))
+                    out.append(IngestionPlan.from_dict(json.load(fh)))
         return out
 
     # ------------------------------------------------------------------

@@ -6,19 +6,20 @@
 - ``similarity`` — similarity search over embedding columns:
   brute-force cosine top-k and an LSH-bucketed ANN variant.
 - ``text``       — text analysis: language ID, quality scoring,
-  token counting, document fingerprinting.
-- ``multimodal`` — binary-column plumbing for image/audio/video
-  payloads (decode stubbed; Spark-side schema/batching real).
-- ``skew``       — salted joins and two-phase salted aggregation for
-  hot-key shuffles AQE can't fix.
+  token counting, chunking, repetition signals, PII redaction.
+- ``multimodal`` — binary-column plumbing for image payloads (real
+  codec-less decode and features via ``media_codecs``) plus
+  metadata-only media stats.
+- ``skew``       — two-phase salted aggregation for hot-key
+  shuffles AQE can't fix.
 - ``profile``    — single-pass per-column table profiling (count,
   nulls, exact or HLL distinct, min/max).
 - ``sampling``   — deterministic hash sampling and leakage-safe
   train/val/test splits.
 - ``lm``         — bigram-LM perplexity scoring (CCNet-style filter
   signal; Witten-Bell-weighted interpolation).
-- ``mixing``     — URL/domain helpers, skew-resilient per-origin
-  caps, corpus rebalancing to a max origin share.
+- ``mixing``     — skew-resilient per-origin caps, corpus
+  rebalancing to a max origin share.
 - ``classifier`` — trainable quality classifier (hashed
   token+bigram features → logistic regression, JVM-side via
   pyspark.ml) + the GPT-3 Pareto keep rule.
@@ -44,8 +45,6 @@ from serverless_data_lake_spark.operators.dedup import (
     contamination_report,
     dedup_exact,
     decontaminate,
-    incremental_dedup,
-    lsh_pairs_against_index,
     lsh_pairs_index_vs_index,
     lsh_self_pairs,
     keep_one_per_key,
@@ -74,7 +73,6 @@ from serverless_data_lake_spark.operators.similarity import (
 from serverless_data_lake_spark.operators.lm import (
     LocalNGramLM,
     NGramLM,
-    collect_local_lm,
     perplexity_score,
     perplexity_score_inrow,
     train_bigram_lm,
@@ -82,8 +80,6 @@ from serverless_data_lake_spark.operators.lm import (
 )
 from serverless_data_lake_spark.operators.mixing import (
     cap_per_group,
-    extract_domain,
-    normalize_url,
     rebalance_sources,
     source_mix_report,
 )
@@ -93,17 +89,12 @@ from serverless_data_lake_spark.operators.sampling import (
     deterministic_sample,
     hash_unit,
     importance_sample,
-    split_leakage_report,
     stratified_sample,
 )
-from serverless_data_lake_spark.operators.skew import (
-    salted_aggregate,
-    salted_join,
-)
+from serverless_data_lake_spark.operators.skew import salted_aggregate
 from serverless_data_lake_spark.operators.text import (
     chunk_documents,
     detect_language,
-    document_fingerprint,
     quality_score,
     token_count,
     tokenize,
@@ -131,15 +122,12 @@ __all__ = [
     "default_tokenizer",
     "export_packed",
     "importance_sample",
-    "incremental_dedup",
-    "lsh_pairs_against_index",
     "lsh_pairs_index_vs_index",
     "lsh_self_pairs",
     "pack_sequences",
     "pq_encode",
     "pq_topk",
     "semantic_dedup",
-    "split_leakage_report",
     "stratified_sample",
     "train_bpe",
     "train_pq_codebooks",
@@ -149,7 +137,6 @@ __all__ = [
     "deterministic_sample",
     "embedding_all_pairs_numpy",
     "detect_language",
-    "document_fingerprint",
     "embedding_near_duplicates",
     "euclidean_topk",
     "hash_unit",
@@ -161,11 +148,8 @@ __all__ = [
     "LocalNGramLM",
     "NGramLM",
     "cap_per_group",
-    "extract_domain",
-    "normalize_url",
     "rebalance_sources",
     "source_mix_report",
-    "collect_local_lm",
     "perplexity_score",
     "perplexity_score_inrow",
     "train_bigram_lm",
@@ -178,7 +162,6 @@ __all__ = [
     "profile_table",
     "quality_score",
     "salted_aggregate",
-    "salted_join",
     "simhash_near_duplicates",
     "simhash_signatures",
     "token_count",

@@ -31,12 +31,10 @@ compositions so Catalyst plans the shuffles:
   ``contamination_report`` is its audit twin (per-eval-doc hit
   counts + example train ids) and ``contamination_pairs`` the
   shared (eval, train, shared-gram-count) core both can consume.
-- ``build_lsh_index`` / ``incremental_dedup`` — batch-vs-corpus
-  near-dup dedup against a standing, parquet-backed LSH index (the
-  daily-increment shape; streaming twin in
-  ``streaming/incremental_dedup_stream.py``);
-  ``lsh_pairs_index_vs_index`` pairs two prebuilt indexes without
-  re-running either side's signature pass.
+- ``build_lsh_index`` / ``lsh_pairs_index_vs_index`` — batch-vs-corpus
+  near-dup pairs between two prebuilt LSH indexes (the
+  daily-increment shape: an arriving batch against a standing
+  index) without re-running either side's signature pass.
 - embedding near-dup lives in ``operators/similarity.py``.
 """
 
@@ -438,67 +436,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + banded LSH (sub-quadratic scale path)
 # ---------------------------------------------------------------------------
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 128,
-    shingle_size: int = 3,
-) -> DataFrame:
-    """(id, array<bigint> signature) — H pairwise-independent
-    minhashes.
-
-    Hash family: ONE ``xxhash64`` of the shingle *string*, then H
-    derived hashes ``xxhash64(base, i)`` over the fixed-width base —
-    the variable-length string bytes are hashed once instead of H
-    times, so per-shingle cost is O(len + H) not O(len·H).
-
-    The whole signature is computed **in-row** (nested higher-order
-    functions over the gram array: ``min_j xxhash64(base_j, i)`` for
-    each i) — a pure map with ZERO shuffle, embarrassingly parallel
-    at any corpus size. The r1 shape (explode shingles → groupBy(doc)
-    with H ``min`` aggregates) paid a full shuffle of the exploded
-    token set plus a 128-column aggregate for the same arithmetic;
-    at sf0.1 the in-row plan is ~3× faster and at 100 TB it removes
-    the only shuffle from the signature stage entirely.
-
-    The gram array is materialized in its own projection first
-    (:func:`gram_hash_sets`): the signature expression references it
-    H+1 times, and a higher-order function sees no codegen
-    subexpression elimination — inlined, the tokenization would
-    re-run per reference (CollapseProject keeps multi-referenced
-    non-cheap aliases in their own project, making the materialization
-    stick)."""
-    # Empty-doc drop on a CHEAP raw-token predicate BEFORE the
-    # signature projection: a post-projection
-    # ``filter(size(signature) > 0)`` gets pushed below the project
-    # and re-evaluates the whole H-minhash expression inside the
-    # predicate (filter pushdown inlines aliases; HOFs get no
-    # subexpression elimination — the repetition_stats incident,
-    # operators/text.py::repetition_gram_expr).
-    enough = (
-        F.size(_hashed_tokens(text_col)) >= shingle_size
-    )
-    grams = gram_hash_sets(
-        df.filter(enough), id_col, text_col, shingle_size
-    )
-    sig = _signature_expr(F.col("__grams"), num_hashes)
-    return grams.select(F.col(id_col), sig.alias("signature"))
-
-
-def _signature_expr(bases, num_hashes: int):
-    """Column: minhash signature array from an ``array<bigint>`` of
-    per-gram base hashes (empty array → empty signature)."""
-    return F.when(F.size(bases) == 0, F.array().cast("array<bigint>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.array_min(
-                F.transform(bases, lambda b: F.xxhash64(b, i))
-            ),
-        )
-    )
-
-
 def _band_hash_arr(bases, bands: int, rows: int):
     """Column: per-band LSH bucket hashes — band b's hash is one
     multi-argument ``xxhash64`` over its ``rows`` minhash values,
@@ -819,45 +756,23 @@ def build_lsh_index(
     )
 
 
-def lsh_pairs_against_index(
-    new_df: DataFrame,
-    index: LshIndex,
-    id_col: str,
-    text_col: str,
-    verify_threshold: float | None = 0.8,
-    broadcast_new: bool = True,
-) -> DataFrame:
-    """Near-duplicate matches of a NEW batch against an indexed
-    corpus: ``(new_id, corpus_id[, jaccard])``.
-
-    Scale shape — the asymmetry is the point: the corpus index is
-    large and stays put; the new batch is small, so its banded rows
-    (and gram sets, for verification) ship map-side
-    (``broadcast_new=True``, the default; flip off for a huge
-    backfill batch and AQE plans the shuffle join). The corpus never
-    self-joins, and corpus gram sets are only fetched for the
-    candidate ids."""
-    rows = index.num_hashes // index.bands
-    new_grams = gram_hash_sets(
-        new_df, id_col, text_col, index.shingle_size
-    ).select(F.col(id_col).alias("__gid"), "__grams").persist()
-    new_banded = _banded_rows(new_grams, index.bands, rows, id_out="__nid")
-    return _lsh_pairs_between(
-        new_banded, new_grams, index, verify_threshold, broadcast_new
-    )
-
-
 def lsh_pairs_index_vs_index(
     batch_index: LshIndex,
     corpus_index: LshIndex,
     verify_threshold: float | None = 0.8,
     broadcast_new: bool = True,
 ) -> DataFrame:
-    """:func:`lsh_pairs_against_index` where the NEW side is already
-    in index form — its signatures/bands were computed elsewhere
-    (e.g. both sides are slices of ONE full-corpus index, or a
-    batch's index rows persisted by the streaming twin). Skips the
-    new side's tokenize + MinHash pass entirely; at 100 TB the
+    """Near-duplicate matches of a NEW batch against an indexed
+    corpus, ``(new_id, corpus_id[, jaccard])``, with both sides in
+    index form (e.g. both are slices of ONE full-corpus index): a
+    band-bucket candidate join, then exact-Jaccard verification on
+    the fetched gram sets. The batch side's banded rows and gram
+    sets ship map-side (``broadcast_new=True``, the default; flip it
+    off for a huge backfill batch and AQE plans the shuffle join);
+    the corpus never self-joins, and its gram sets are fetched for
+    the candidate ids only.
+
+    Neither side is re-tokenized or re-signed; at 100 TB the
     signature pass IS the dominant cost of the LSH family, so a
     pipeline that already holds index rows for both sides should
     never hand text back to the pairing step (r9: the driver's
@@ -889,27 +804,10 @@ def lsh_pairs_index_vs_index(
     new_grams = batch_index.grams_df.select(
         F.col("__cid").alias("__gid"), "__grams"
     )
-    return _lsh_pairs_between(
-        new_banded, new_grams, corpus_index, verify_threshold,
-        broadcast_new,
-    )
-
-
-def _lsh_pairs_between(
-    new_banded: DataFrame,
-    new_grams: DataFrame,
-    index: LshIndex,
-    verify_threshold: float | None,
-    broadcast_new: bool,
-) -> DataFrame:
-    """Shared core of the batch-vs-corpus pairing: band-bucket
-    candidate join, then exact-Jaccard verification on the fetched
-    gram sets. ``new_banded``: (__nid, __band, __bh);
-    ``new_grams``: (__gid, __grams)."""
     if broadcast_new:
         new_banded = F.broadcast(new_banded)
     candidates = (
-        new_banded.join(index.bands_df, ["__band", "__bh"])
+        new_banded.join(corpus_index.bands_df, ["__band", "__bh"])
         .select(
             F.col("__nid").alias("new_id"),
             F.col("__cid").alias("corpus_id"),
@@ -926,7 +824,7 @@ def _lsh_pairs_between(
     return (
         candidates.join(new_side, "new_id")
         .join(
-            index.grams_df.select(
+            corpus_index.grams_df.select(
                 F.col("__cid").alias("corpus_id"),
                 F.col("__grams").alias("__gb"),
             ),
@@ -941,49 +839,6 @@ def _lsh_pairs_between(
         .filter(F.col("jaccard") >= verify_threshold)
         .select("new_id", "corpus_id", "jaccard")
     )
-
-
-def incremental_dedup(
-    new_df: DataFrame,
-    index: LshIndex,
-    id_col: str,
-    text_col: str,
-    verify_threshold: float = 0.8,
-    within_batch: bool = True,
-) -> DataFrame:
-    """Survivors of a new batch against a standing corpus: drop
-    every new document that near-duplicates an indexed corpus
-    document, and (``within_batch``) also dedup the batch against
-    itself first — min-id wins inside the batch, the corpus always
-    wins across. The returned rows are exactly what an incremental
-    ingest appends to the corpus (and whose signatures it appends to
-    the index)."""
-    cur = new_df
-    if within_batch:
-        pairs = minhash_lsh_pairs(
-            cur, id_col, text_col,
-            num_hashes=index.num_hashes, bands=index.bands,
-            shingle_size=index.shingle_size,
-            verify_threshold=verify_threshold,
-        )
-        losers = pairs.select(F.col("id_b").alias("__loser")).distinct()
-        cur = cur.join(
-            losers, cur[id_col] == losers["__loser"], "left_anti"
-        )
-    matches = (
-        lsh_pairs_against_index(
-            cur, index, id_col, text_col,
-            verify_threshold=verify_threshold,
-        )
-        # A document is never a duplicate of ITSELF: when a replayed
-        # micro-batch's own rows are already in the index (failure
-        # recovery in the streaming twin), the identity match must
-        # not drop everything.
-        .filter(F.col("new_id") != F.col("corpus_id"))
-        .select(F.col("new_id").alias("__dup"))
-        .distinct()
-    )
-    return cur.join(matches, cur[id_col] == matches["__dup"], "left_anti")
 
 
 # ---------------------------------------------------------------------------

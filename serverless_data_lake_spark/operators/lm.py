@@ -189,22 +189,6 @@ class LocalNGramLM:
     total_tokens: int = field(default=0)
 
 
-def collect_local_lm(lm: NGramLM) -> LocalNGramLM:
-    """Collect an :class:`NGramLM`'s two count tables into a
-    :class:`LocalNGramLM` (one Arrow ``toPandas`` per table)."""
-    uni = lm.unigrams.toPandas()
-    bi = lm.bigrams.toPandas()
-    return _local_from_frames(
-        uni["w1"].to_numpy(np.int64),
-        uni["c1"].to_numpy(np.int64),
-        bi["w1"].to_numpy(np.int64),
-        bi["w2"].to_numpy(np.int64),
-        bi["c12"].to_numpy(np.int64),
-        vocab_size=lm.vocab_size,
-        total_tokens=lm.total_tokens,
-    )
-
-
 def _local_from_frames(
     uw, uc, bw1, bw2, bc, vocab_size: int, total_tokens: int
 ) -> LocalNGramLM:

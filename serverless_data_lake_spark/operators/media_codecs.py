@@ -2,12 +2,9 @@
 
 The multimodal kernels (:mod:`operators.multimodal`) treat media as
 opaque ``binary`` columns and decode inside Arrow-batched
-``mapInPandas``. Containers without PIL/ffmpeg can still REALLY
-decode the uncompressed/stdlib-compressed formats:
+``mapInPandas``. Containers without PIL can still REALLY decode the
+uncompressed/stdlib-compressed image formats:
 
-- **WAV** (RIFF): stdlib ``wave`` + ``numpy.frombuffer`` —
-  8/16/24/32-bit integer PCM, any channel count — plus manual-parse
-  G.711 μ-law/A-law expansion (telephony speech corpora).
 - **BMP** (Windows DIB, 24/32-bit uncompressed): manual header
   parse + numpy row reshape (4-byte row padding, bottom-up rows).
 - **PNG** (non-interlaced, 8-bit gray/RGB/RGBA): stdlib ``zlib``
@@ -28,8 +25,8 @@ decode the uncompressed/stdlib-compressed formats:
   compression none/LZW (early-change, predictor 2)/PackBits;
   gray, white-is-zero, RGB(A), palette.
 
-Formats that require actual codec libraries (MP3, H.264/MP4)
-remain stubbed in :mod:`operators.multimodal` with
+Formats that require actual codec libraries (webp, progressive
+JPEG) remain stubbed in :mod:`operators.multimodal` with
 ``NotImplementedError`` under ``strict=True`` — that boundary is now
 *format-based*, not blanket.
 
@@ -40,111 +37,10 @@ answer).
 
 from __future__ import annotations
 
-import io
 import struct
-import wave
 import zlib
 
 import numpy as np
-
-
-# ---------------------------------------------------------------------------
-# WAV (RIFF PCM)
-# ---------------------------------------------------------------------------
-def _decode_wav_companded(content: bytes) -> tuple[int, int, np.ndarray]:
-    """G.711 μ-law / A-law RIFF WAV (wFormatTag 7 / 6) — the
-    telephony/speech-corpus encodings stdlib ``wave`` rejects.
-    Manual RIFF parse + vectorized expansion tables (ITU-T G.711)."""
-    if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-        raise ValueError("not a WAVE file")
-    fmt = None
-    data = None
-    pos = 12
-    while pos + 8 <= len(content):
-        cid, size = content[pos : pos + 4], struct.unpack_from(
-            "<I", content, pos + 4
-        )[0]
-        body = content[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)
-        if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", body)
-        elif cid == b"data":
-            data = body
-    if fmt is None or data is None:
-        raise ValueError("WAVE missing fmt/data chunks")
-    tag, channels, rate, _bps, _align, bits = fmt
-    if tag not in (6, 7) or bits != 8:
-        raise ValueError(f"unsupported WAVE format tag {tag}/{bits}-bit")
-    codes = np.frombuffer(data, dtype=np.uint8).astype(np.int64)
-    if tag == 7:  # μ-law (G.711): invert, extract exponent/mantissa
-        u = ~codes & 0xFF
-        sign = np.where(u & 0x80, -1, 1)
-        exp = (u >> 4) & 7
-        mant = u & 0x0F
-        mag = ((mant << 1) + 33) * (1 << exp) - 33
-        lin = sign * mag * 4  # 14-bit -> 16-bit range
-    else:  # A-law: even-bit inversion, segment expansion. NB the
-        # sign convention is OPPOSITE μ-law: after the 0x55 XOR a set
-        # 0x80 bit means POSITIVE (G.711 / classic g711.c).
-        a = codes ^ 0x55
-        sign = np.where(a & 0x80, 1, -1)
-        seg = (a >> 4) & 7
-        mant = a & 0x0F
-        mag = np.where(
-            seg == 0,
-            (mant << 1) + 1,
-            ((mant << 1) + 33) * (1 << (seg - 1)),
-        )
-        lin = sign * mag * 8  # 13-bit -> 16-bit range
-    arr = (lin / 32768.0).astype(np.float32)
-    arr = arr.reshape(-1, channels) if channels > 1 else arr.reshape(-1, 1)
-    return rate, channels, arr
-
-
-def decode_wav(content: bytes) -> tuple[int, int, np.ndarray]:
-    """Decode RIFF audio: integer PCM (8/16/24/32-bit via stdlib
-    ``wave``) plus G.711 μ-law / A-law companded streams.
-
-    Returns ``(sample_rate, n_channels, samples)`` where ``samples``
-    is float32 in [-1, 1], shape ``(n_frames, n_channels)``.
-    """
-    try:
-        with wave.open(io.BytesIO(content), "rb") as w:
-            rate = w.getframerate()
-            channels = w.getnchannels()
-            width = w.getsampwidth()
-            frames = w.readframes(w.getnframes())
-    except wave.Error:
-        # stdlib wave only reads format-1 PCM; G.711 goes manual.
-        return _decode_wav_companded(content)
-    if width == 1:
-        # 8-bit WAV is unsigned.
-        arr = np.frombuffer(frames, dtype=np.uint8).astype(np.float32)
-        arr = (arr - 128.0) / 128.0
-    elif width == 2:
-        arr = np.frombuffer(frames, dtype="<i2").astype(np.float32) / 32768.0
-    elif width == 3:
-        # 24-bit little-endian: widen each 3-byte sample to int32 by
-        # sign-extending through the high byte.
-        b = np.frombuffer(frames, dtype=np.uint8).reshape(-1, 3)
-        widened = (
-            b[:, 0].astype(np.int32)
-            | (b[:, 1].astype(np.int32) << 8)
-            | (b[:, 2].astype(np.int8).astype(np.int32) << 16)
-        )
-        arr = widened.astype(np.float32) / 8388608.0
-    elif width == 4:
-        arr = (
-            np.frombuffer(frames, dtype="<i4").astype(np.float32)
-            / 2147483648.0
-        )
-    else:
-        raise ValueError(f"unsupported PCM sample width: {width}")
-    if channels > 1:
-        arr = arr.reshape(-1, channels)
-    else:
-        arr = arr.reshape(-1, 1)
-    return rate, channels, arr
 
 
 # ---------------------------------------------------------------------------
@@ -318,90 +214,6 @@ def decode_png(content: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# AVI (RIFF container, uncompressed DIB video stream)
-# ---------------------------------------------------------------------------
-def decode_avi_frames(content: bytes) -> tuple[float, list[np.ndarray]]:
-    """Decode an uncompressed (BI_RGB) or Motion-JPEG video AVI.
-
-    Returns ``(fps, frames)`` with each frame ``(H, W, 3)`` uint8
-    RGB. Two codec-less cases are handled: ``biCompression=0`` DIB
-    frames (bottom-up BGR rows, 4-byte stride padding — the same
-    pixel layout BMP uses) and ``biCompression='MJPG'``, where every
-    ``..dc``/``..db`` chunk is an independent baseline JPEG decoded
-    via :func:`decode_jpeg`. Other compressed streams (H.264 etc.)
-    raise ``ValueError`` — those need a real codec library.
-    """
-    if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"AVI ":
-        raise ValueError("not an AVI file")
-
-    fps, width, height, bpp, compression = 0.0, None, None, None, None
-    frames: list[bytes] = []
-    # strf carries a different struct per stream type (BITMAPINFOHEADER
-    # for 'vids', WAVEFORMATEX for 'auds'); strf always follows its strh
-    # within the same strl LIST, so gate on the last-seen strh fcc — an
-    # AVI whose audio strl precedes the video one must not have its
-    # WAVEFORMATEX parsed as a video header.
-    last_strh_fcc = b""
-
-    def walk(start: int, end: int) -> None:
-        nonlocal fps, width, height, bpp, compression, last_strh_fcc
-        pos = start
-        while pos + 8 <= end:
-            cid, size = content[pos : pos + 4], struct.unpack_from(
-                "<I", content, pos + 4
-            )[0]
-            body_at = pos + 8
-            if cid == b"LIST":
-                walk(body_at + 4, body_at + size)  # skip list type tag
-            elif cid == b"strh":
-                last_strh_fcc = content[body_at : body_at + 4]
-                if last_strh_fcc == b"vids":
-                    scale, rate = struct.unpack_from(
-                        "<II", content, body_at + 20
-                    )
-                    fps = rate / scale if scale else 0.0
-            elif cid == b"strf" and last_strh_fcc == b"vids" and width is None:
-                (
-                    _sz, width, height, _planes, bpp, compression,
-                ) = struct.unpack_from("<IiiHHI", content, body_at)
-            elif cid[2:] in (b"db", b"dc") and size:
-                frames.append(content[body_at : body_at + size])
-            pos = body_at + size + (size & 1)  # chunks are word-aligned
-
-    walk(12, len(content))
-    if width is None or not frames:
-        raise ValueError("AVI missing video stream headers or frames")
-    if compression == struct.unpack("<I", b"MJPG")[0]:
-        out = [decode_jpeg(raw) for raw in frames]
-        for px in out:
-            if px.shape[:2] != (abs(height), width):
-                raise ValueError("MJPG frame size disagrees with header")
-        return fps, out
-    if compression != 0 or bpp not in (24, 32):
-        raise ValueError(
-            f"unsupported AVI: bpp={bpp} compression={compression} "
-            "(only uncompressed DIB and MJPG decode without a codec)"
-        )
-    bottom_up = height > 0
-    h = abs(height)
-    bytes_pp = bpp // 8
-    stride = (width * bytes_pp + 3) & ~3
-    out = []
-    for raw in frames:
-        if len(raw) < stride * h:
-            raise ValueError("truncated AVI frame")
-        px = (
-            np.frombuffer(raw, dtype=np.uint8, count=stride * h)
-            .reshape(h, stride)[:, : width * bytes_pp]
-            .reshape(h, width, bytes_pp)
-        )
-        if bottom_up:
-            px = px[::-1]
-        out.append(px[:, :, 2::-1].copy())  # BGR(A) -> RGB
-    return fps, out
-
-
-# ---------------------------------------------------------------------------
 # Deterministic features over decoded media
 # ---------------------------------------------------------------------------
 def image_features(pixels: np.ndarray, dim: int) -> list[float]:
@@ -417,22 +229,6 @@ def image_features(pixels: np.ndarray, dim: int) -> list[float]:
     flat = lum.reshape(-1)
     cells = np.array_split(flat, dim)
     return [float(c.mean() / 255.0) if c.size else 0.0 for c in cells]
-
-
-def audio_features(rate: int, samples: np.ndarray) -> list[float]:
-    """[duration_s, rms, zero_crossing_rate, peak] over the mono
-    mixdown — the standard cheap audio-quality signals."""
-    mono = samples.mean(axis=1)
-    n = mono.shape[0]
-    if n == 0:
-        return [0.0, 0.0, 0.0, 0.0]
-    zc = float(np.count_nonzero(np.diff(np.signbit(mono)))) / max(n - 1, 1)
-    return [
-        float(n) / float(rate),
-        float(np.sqrt(np.mean(mono**2))),
-        zc,
-        float(np.max(np.abs(mono))),
-    ]
 
 
 # ---------------------------------------------------------------------------
@@ -842,9 +638,8 @@ def decode_gif_frames(content: bytes) -> tuple[float, list[np.ndarray]]:
     (none/keep, restore-to-background, restore-to-previous) and
     transparency masking, per the GIF89a spec §23.
 
-    Returns ``(fps, frames)`` in the same contract as
-    :func:`decode_avi_frames` so animated GIFs ride the video
-    frame-sampling kernel. ``fps`` derives from the mean per-frame
+    Returns ``(fps, frames)``, each frame ``(H, W, 3)`` uint8 RGB.
+    ``fps`` derives from the mean per-frame
     delay (a 0 delay counts as 10 cs, the conventional browser
     treatment); the canvas initializes to the logical-screen
     background color (black when absent)."""
@@ -1149,18 +944,3 @@ def decode_image(content: bytes, mime: str) -> np.ndarray:
     owns the strict/fallback policy)."""
     return _IMAGE_DECODERS[mime](bytes(content))
 
-
-_VIDEO_DECODERS = {
-    "video/avi": decode_avi_frames,
-    "video/x-msvideo": decode_avi_frames,
-    "image/gif": decode_gif_frames,  # animated GIF as a video source
-}
-
-
-def decode_video_frames(
-    content: bytes, mime: str
-) -> tuple[float, list[np.ndarray]]:
-    """Route to the pure-python frame decoder for ``mime`` —
-    ``(fps, frames)``. Raises ``KeyError`` for codec-bound
-    containers."""
-    return _VIDEO_DECODERS[mime](bytes(content))

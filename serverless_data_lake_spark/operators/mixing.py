@@ -24,87 +24,14 @@ Scale notes:
   bounded-metadata scale the catalog keeps per file); the row
   selection itself is a distributed hash filter over a broadcast
   rate table.
-- URL helpers are pure Column regexps (codegen'd, engine-portable).
-  ``extract_domain`` is public-suffix-aware: a shipped 2-label PSL
-  subset (``psl_data.py``) rides in the expression as a literal
-  array, so ``news.bbc.co.uk`` groups as ``bbc.co.uk`` with zero
-  joins; hosts under plain TLDs keep the last-two-labels rule.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from serverless_data_lake_spark.operators.sampling import hash_unit
-
-
-# ---------------------------------------------------------------------------
-# URL helpers
-# ---------------------------------------------------------------------------
-def normalize_url(url: Column) -> Column:
-    """Canonical URL: lowercase scheme+host, strip a leading
-    ``www.``, drop query/fragment, drop one trailing slash. Purely
-    syntactic — no network, no IDN."""
-    u = F.trim(url)
-    # Lowercase scheme+host only: split off the path first.
-    no_frag = F.regexp_replace(u, "[#?].*$", "")
-    scheme = F.lower(F.regexp_extract(no_frag, r"^([A-Za-z][A-Za-z0-9+.-]*://)", 1))
-    rest = F.regexp_replace(no_frag, r"^[A-Za-z][A-Za-z0-9+.-]*://", "")
-    host = F.lower(F.regexp_extract(rest, r"^([^/]*)", 1))
-    host = F.regexp_replace(host, r"^www\.", "")
-    path = F.regexp_extract(rest, r"^[^/]*(/.*)?$", 1)
-    path = F.regexp_replace(path, "/$", "")
-    return F.concat(scheme, host, path)
-
-
-def extract_domain(url: Column) -> Column:
-    """Registrable domain of a URL's host, public-suffix-aware.
-
-    Longest-match over the shipped PSL subsets
-    (:mod:`operators.psl_data`): when the host's last THREE labels
-    form a 3-label public suffix (``k12.ca.us``, …), the registrable
-    domain is the last FOUR labels
-    (``school.district.k12.ca.us`` → ``district.k12.ca.us``); when
-    the last two form a 2-label suffix (``co.uk``, ``com.au``,
-    ``tokyo.jp``, …), the last THREE
-    (``news.bbc.co.uk`` → ``bbc.co.uk``); otherwise the last two
-    (``a.b.example.com`` → ``example.com``). Pure in-row Column
-    logic: both suffix sets ship as literal arrays (a few hundred
-    strings — an equi-join against a suffix table would buy nothing
-    at this size and cost a broadcast), so the expression stays
-    codegen'd and shuffle-free. Deeper suffixes not shipped (JP city
-    domains) fall back to the next-shallower answer — see
-    ``psl_data.py``."""
-    from serverless_data_lake_spark.operators.psl_data import (
-        PUBLIC_SUFFIXES_2LABEL,
-        PUBLIC_SUFFIXES_3LABEL,
-    )
-
-    no_scheme = F.regexp_replace(F.trim(url), r"^[A-Za-z][A-Za-z0-9+.-]*://", "")
-    host = F.lower(F.regexp_extract(no_scheme, r"^([^/:?#]*)", 1))
-    host = F.regexp_replace(host, r"^www\.", "")
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    last2 = F.concat_ws(
-        ".", F.element_at(labels, -2), F.element_at(labels, -1)
-    )
-    last3 = F.concat_ws(
-        ".", F.element_at(labels, -3), F.element_at(labels, -2),
-        F.element_at(labels, -1),
-    )
-    last4 = F.concat_ws(
-        ".", F.element_at(labels, -4), F.element_at(labels, -3),
-        F.element_at(labels, -2), F.element_at(labels, -1),
-    )
-    psl2 = F.array(*[F.lit(s) for s in PUBLIC_SUFFIXES_2LABEL])
-    psl3 = F.array(*[F.lit(s) for s in PUBLIC_SUFFIXES_3LABEL])
-    return (
-        F.when((n >= 4) & F.array_contains(psl3, last3), last4)
-        .when((n >= 3) & F.array_contains(psl2, last2), last3)
-        .when(n >= 2, last2)
-        .otherwise(host)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,18 +1,15 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary.
+"""Multimodal column plumbing: media as opaque binary.
 
 A 100 TB multimodal pipeline treats media as ``binary`` columns with
-typed metadata and runs decode / feature-extraction / resize /
-frame-sampling as **Arrow-batched Pandas functions over
-``mapInPandas``** — the schema, partitioning, and batch shape here
-are the real production plumbing.
+typed metadata and runs decode / feature extraction as
+**Arrow-batched Pandas functions over ``mapInPandas``** — the schema,
+partitioning, and batch shape here are the real production plumbing.
 
-Decoding is REAL for the formats pure stdlib/numpy can parse —
-BMP, non-interlaced 8-bit PNG, baseline-sequential JPEG, GIF,
-RIFF-PCM WAV, uncompressed/MJPG AVI
+Image decoding is REAL for the formats pure stdlib/numpy can parse —
+BMP, PNG, baseline-sequential JPEG, GIF, TIFF
 (:mod:`operators.media_codecs`) — and stubbed only for formats that
 genuinely require codec libraries this container does not ship
-(MP3, H.264/MP4, webp, progressive JPEG): those raise
-``NotImplementedError`` by
+(webp, progressive JPEG): those raise ``NotImplementedError`` by
 default (``strict=True``) — a pipeline must never silently ship fake
 features — or, under an explicit ``strict=False``, produce a
 deterministic fake so the Spark-side contract stays testable without
@@ -38,25 +35,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("mime_type", StringType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-        StructField("content", BinaryType(), True),
-    ]
 )
 
 IMAGE_FEATURE_SCHEMA = StructType(
@@ -92,7 +75,6 @@ _DECODABLE_IMAGE = {
     "image/tiff",
     "image/tif",
 }
-_DECODABLE_AUDIO = {"audio/wav", "audio/x-wav", "audio/wave"}
 
 
 def _image_feature(content, mime, dim: int, strict: bool) -> list[float]:
@@ -145,232 +127,6 @@ def extract_image_features(
     return df.select("media_id", "mime_type", "content").mapInPandas(
         kernel, schema=IMAGE_FEATURE_SCHEMA
     )
-
-
-AUDIO_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("mime_type", StringType(), True),
-        StructField("sample_rate", IntegerType(), True),
-        StructField("n_channels", IntegerType(), True),
-        StructField("feature", ArrayType(FloatType()), True),
-    ]
-)
-
-
-def extract_audio_features(
-    df: DataFrame,
-    strict: bool = True,
-) -> DataFrame:
-    """Decode + feature-extract audio via ``mapInPandas``.
-
-    RIFF-PCM WAV is REALLY decoded (stdlib ``wave`` + numpy);
-    features are ``[duration_s, rms, zero_crossing_rate, peak]``
-    over the mono mixdown. Compressed audio (MP3/AAC/OGG) requires a
-    codec library: ``NotImplementedError`` by default, deterministic
-    fake under an explicit ``strict=False``."""
-
-    def one(content, mime):
-        from serverless_data_lake_spark.operators.media_codecs import (
-            audio_features,
-            decode_wav,
-        )
-
-        if content is not None and mime in _DECODABLE_AUDIO:
-            rate, channels, samples = decode_wav(bytes(content))
-            return rate, channels, audio_features(rate, samples)
-        if strict:
-            raise NotImplementedError(
-                f"decode for {mime!r} requires an audio codec library "
-                "not shipped in this environment; only PCM WAV decodes "
-                "without one"
-            )
-        return 0, 0, _fake_decode(content, 4)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [
-                one(c, m)
-                for c, m in zip(pdf["content"], pdf["mime_type"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime_type": pdf["mime_type"],
-                    "sample_rate": [d[0] for d in decoded],
-                    "n_channels": [d[1] for d in decoded],
-                    "feature": [d[2] for d in decoded],
-                }
-            )
-
-    return df.select("media_id", "mime_type", "content").mapInPandas(
-        kernel, schema=AUDIO_FEATURE_SCHEMA
-    )
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("mime_type", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("content", BinaryType(), True),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    strict: bool = True,
-) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-encode via
-    ``mapInPandas``.
-
-    REAL for BMP/PNG/baseline-JPEG inputs
-    (operators/media_codecs.py): pixels are
-    index-mapped in numpy (deterministic, no interpolation library)
-    and re-encoded as 24-bit BMP — the uniform-size preprocessing
-    step a training pipeline runs before batching images into
-    tensors. Codec-requiring formats raise by default, or pass
-    through unchanged under an explicit ``strict=False``."""
-
-    def one(content, mime):
-        import numpy as np
-
-        from serverless_data_lake_spark.operators.media_codecs import (
-            decode_image,
-            encode_bmp,
-        )
-
-        if content is not None and mime in _DECODABLE_IMAGE:
-            px = decode_image(content, mime)
-            if px.shape[2] < 3:  # grayscale PNG -> replicate channels
-                px = np.repeat(px[:, :, :1], 3, axis=2)
-            h0, w0 = px.shape[:2]
-            rows = (np.arange(height) * h0) // height
-            cols = (np.arange(width) * w0) // width
-            resized = px[rows][:, cols, :3]
-            return "image/bmp", width, height, encode_bmp(
-                np.ascontiguousarray(resized)
-            )
-        if strict:
-            raise NotImplementedError(
-                f"resize for {mime!r} requires a codec library not "
-                "shipped in this environment; only BMP/PNG/"
-                "baseline-JPEG resize without one"
-            )
-        return mime, None, None, content
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                one(c, m)
-                for c, m in zip(pdf["content"], pdf["mime_type"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime_type": [o[0] for o in out],
-                    "width": [o[1] for o in out],
-                    "height": [o[2] for o in out],
-                    "content": [o[3] for o in out],
-                }
-            )
-
-    return df.select("media_id", "mime_type", "content").mapInPandas(
-        kernel, schema=RESIZED_SCHEMA
-    )
-
-
-_DECODABLE_VIDEO = {"video/avi", "video/x-msvideo", "image/gif"}
-
-
-def sample_video_frames(
-    df: DataFrame,
-    every_ms: int = 1000,
-    strict: bool = True,
-) -> DataFrame:
-    """Frame-sampling: one output row per sampled timestamp.
-
-    Timestamps are derived from metadata (``duration_ms``) JVM-side
-    with ``sequence`` + ``explode`` — the binary only flows into the
-    decode kernel. Uncompressed DIB AVI, Motion-JPEG AVI, and
-    animated GIF are REALLY decoded (operators/media_codecs.py —
-    pure RIFF/GIF container parse; MJPG frames through the baseline
-    JPEG decoder; GIF frames composed with disposal+transparency):
-    the frame nearest each sampled timestamp is emitted re-encoded
-    as a 24-bit BMP. Codec-bound containers (MP4/H.264) raise by
-    default or produce the deterministic fake under an explicit
-    ``strict=False``."""
-    frames = df.withColumn(
-        "frame_ts_ms",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ),
-    )
-
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("frame_ts_ms", LongType(), False),
-            StructField("frame", BinaryType(), True),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from serverless_data_lake_spark.operators.media_codecs import (
-            decode_video_frames,
-            encode_bmp,
-        )
-
-        # Keep only the MOST RECENT media's decoded frames: explode
-        # emits a media's sampled timestamps contiguously within the
-        # partition, so one slot gives full reuse while bounding task
-        # memory to a single video regardless of batch size.
-        decoded: dict = {}
-
-        def one(mid, mime, ts, content):
-            if content is not None and mime in _DECODABLE_VIDEO:
-                if mid not in decoded:
-                    decoded.clear()
-                    decoded[mid] = decode_video_frames(content, mime)
-                fps, fr = decoded[mid]
-                idx = min(int(round(ts / 1000.0 * fps)), len(fr) - 1)
-                return encode_bmp(fr[idx])
-            if strict:
-                raise NotImplementedError(
-                    f"frame decode for {mime!r} requires ffmpeg-class "
-                    "codecs not shipped here; only uncompressed/MJPG "
-                    "AVI and animated GIF decode without one"
-                )
-            return f"frame:{mid}:{ts}".encode()
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "frame_ts_ms": pdf["frame_ts_ms"],
-                    "frame": [
-                        one(mid, mime, ts, c)
-                        for mid, mime, ts, c in zip(
-                            pdf["media_id"],
-                            pdf["mime_type"],
-                            pdf["frame_ts_ms"],
-                            pdf["content"],
-                        )
-                    ],
-                }
-            )
-
-    return frames.select(
-        "media_id", "mime_type", "frame_ts_ms", "content"
-    ).mapInPandas(kernel, schema=out_schema)
 
 
 def media_metadata_stats(df: DataFrame) -> DataFrame:

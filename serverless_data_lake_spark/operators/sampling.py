@@ -147,56 +147,3 @@ def assign_splits(
     expr = F.lit(last) if expr is None else expr.otherwise(last)
     return df.withColumn(out_col, expr)
 
-
-def split_leakage_report(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    split_col: str = "split",
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """Audit near-duplicate LEAKAGE across data splits: every pair
-    in ``pairs`` (any near-dup pair set — exact Jaccard, MinHash,
-    SimHash, embedding cosine) whose two documents landed in
-    DIFFERENT splits is a contamination path from train into eval.
-    Hash-keyed splits are leakage-safe per KEY, but near-duplicate
-    CONTENT under different keys crosses them freely — the
-    train/test contamination mechanism every dedup paper warns
-    about, and the check a release review runs after
-    :func:`assign_splits`.
-
-    Returns one row per ordered split pair with a cross-split
-    duplicate: ``(split_a, split_b, n_pairs)``, ``split_a <
-    split_b`` lexicographically, only cross-split rows. An empty
-    result IS the clean bill. Cost: two broadcast-or-shuffle joins
-    of the (small) pair set against the (id → split) projection —
-    the corpus itself is never shuffled.
-
-    Remediation is upstream, not here: run the dedup family over
-    the WHOLE corpus before splitting (the curation pipeline's
-    stage order does exactly that), or collapse duplicate groups to
-    one key before :func:`assign_splits` so the group hashes as a
-    unit.
-    """
-    ids = df.select(
-        F.col(id_col).alias("__lid"), F.col(split_col).alias("__lsplit")
-    )
-    a = pairs.select(F.col(src).alias("__lid"), F.col(dst).alias("__rid"))
-    joined = (
-        a.join(ids, "__lid")
-        .withColumnRenamed("__lsplit", "__sa")
-        .withColumnRenamed("__lid", "__ida")
-        .withColumnRenamed("__rid", "__lid")
-        .join(ids, "__lid")
-        .withColumnRenamed("__lsplit", "__sb")
-    )
-    return (
-        joined.filter(F.col("__sa") != F.col("__sb"))
-        .select(
-            F.least("__sa", "__sb").alias("split_a"),
-            F.greatest("__sa", "__sb").alias("split_b"),
-        )
-        .groupBy("split_a", "split_b")
-        .agg(F.count("*").cast("bigint").alias("n_pairs"))
-    )

@@ -927,83 +927,6 @@ def semantic_dedup(
 
 
 # ---------------------------------------------------------------------------
-# Embedding storage / transform utilities
-# ---------------------------------------------------------------------------
-def normalize_embeddings(vec: Column) -> Column:
-    """L2-normalize an ``array<float|double>`` in-row (zero-vector →
-    unchanged zeros, not NaN). Normalized storage turns every cosine
-    downstream into a plain dot product — at 100 TB you normalize
-    ONCE at ingest, not per query."""
-    n = _norm(vec)
-    return F.when(n == 0.0, _as_double(vec)).otherwise(
-        F.transform(vec, lambda x: x.cast("double") / n)
-    )
-
-
-def random_projection(
-    vec: Column, out_dim: int, seed: int = 0
-) -> Column:
-    """Signed random projection to ``out_dim`` dims
-    (Achlioptas/JL): ``y_j = Σ_i x_i · s_ij / √out_dim`` with
-    ``s_ij = ±1`` derived from ``xxhash64(seed, j, i)`` — the
-    projection matrix is never materialized ANYWHERE; every executor
-    recomputes signs from the hash, so the operator is a pure in-row
-    Column expression (deterministic on any cluster layout, zero
-    shuffle, zero broadcast). O(d_in · d_out) per row, the JL price.
-
-    Use it to shrink embeddings before LSH/IVF indexing or int8
-    storage: Johnson–Lindenstrauss keeps pairwise geometry within
-    ~1/√out_dim distortion."""
-    if out_dim < 1:
-        raise ValueError("out_dim must be >= 1")
-    scale = 1.0 / (out_dim ** 0.5)
-    sign = lambda j, i: (
-        F.pmod(F.xxhash64(F.lit(seed), j, i), F.lit(2)) * 2 - 1
-    ).cast("double")
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(out_dim - 1)),
-        lambda j: F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(0), F.size(vec) - 1),
-                lambda x, i: x.cast("double") * sign(j, i),
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        ) * F.lit(scale),
-    )
-
-
-def quantize_embeddings(
-    df: DataFrame, vec_col: str, out_col: str = "q"
-) -> DataFrame:
-    """Symmetric per-vector int8 quantization: each embedding stores
-    as ``array<tinyint>`` codes plus one float scale
-    (``x ≈ code · scale``, scale = max|x|/127) — 4× smaller at rest,
-    which at 100 TB of embeddings is the difference between one
-    copy and four. Adds ``<out_col>_codes`` and ``<out_col>_scale``;
-    round-trip error ≤ scale/2 per component
-    (:func:`dequantize_embeddings` restores doubles)."""
-    v = F.col(vec_col)
-    amax = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
-    scale = F.when(amax == 0.0, F.lit(1.0)).otherwise(amax / F.lit(127.0))
-    codes = F.transform(
-        v, lambda x: F.round(x.cast("double") / scale).cast("tinyint")
-    )
-    return df.withColumn(f"{out_col}_codes", codes).withColumn(
-        f"{out_col}_scale", scale.cast("float")
-    )
-
-
-def dequantize_embeddings(codes: Column, scale: Column) -> Column:
-    """Inverse of :func:`quantize_embeddings`:
-    ``array<double> = codes · scale``."""
-    return F.transform(
-        codes, lambda c: c.cast("double") * scale.cast("double")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Product quantization (Jégou et al. 2011, "Product Quantization for
 # Nearest Neighbor Search")
 # ---------------------------------------------------------------------------

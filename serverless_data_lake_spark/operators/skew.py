@@ -1,18 +1,11 @@
-"""Skew mitigation: salted joins and two-phase salted aggregation.
+"""Skew mitigation: two-phase salted aggregation.
 
 A shuffle keyed on a skewed column sends every row of the hot key to
 one task — the straggler that dominates job wall-clock at 100 TB.
 AQE's skew-join handles the sort-merge-join case by splitting
-oversized partitions at runtime; these operators cover what AQE does
-not: aggregations with a hot group, and joins where a pre-shuffle
-layout change beats runtime splitting (e.g. the skewed side feeds
-several downstream ops).
+oversized partitions at runtime; aggregations with a hot group are
+what it does not cover.
 
-- :func:`salted_join` — scatter each left row into one of ``salt``
-  sub-keys, replicate the (smaller) right side once per sub-key, and
-  equi-join on ``keys + salt``. The hot key's rows now spread over
-  ``salt`` tasks. Cost: right side × ``salt`` (choose the smaller
-  side as ``right``); result is row-identical to the plain join.
 - :func:`salted_aggregate` — two-phase aggregation: partial
   aggregate on ``(keys, salt)`` (spreads the hot group), final
   aggregate on ``keys``. Works for algebraic aggregates (count /
@@ -28,47 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SALT = "__sdls_salt"
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join resilient to left-side key skew. ``right`` is
-    replicated ``salt`` times (pick the smaller input), the join runs
-    on ``keys + salt``, and the salt column never escapes.
-
-    Only join types where unmatched *right* rows never surface are
-    allowed (inner / left / left_semi / left_anti — for anti, a right
-    key is replicated across every salt value, so membership per
-    ``(key, salt)`` equals membership per ``key`` and the result is
-    unchanged): right/full outer would emit each unmatched right row
-    ``salt`` times, diverging from the plain join. For a skewed right
-    side, swap the operands.
-    """
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
-        raise ValueError(
-            f"salted_join supports inner/left/left_semi, got {how!r}: "
-            "replicating the right side would duplicate unmatched "
-            "right rows under right/full outer joins"
-        )
-    if salt < 2:
-        return left.join(right, on=keys, how=how)
-    salted_left = left.withColumn(
-        _SALT, (F.rand(42) * salt).cast("int")
-    )
-    replicated_right = right.withColumn(
-        _SALT,
-        F.explode(F.array(*[F.lit(i) for i in range(salt)])),
-    )
-    return salted_left.join(
-        replicated_right, on=[*keys, _SALT], how=how
-    ).drop(_SALT)
-
-
 _COMBINE = {"count": F.sum, "sum": F.sum, "min": F.min, "max": F.max}
 
 

@@ -11,8 +11,6 @@ row path):
 - ``quality_score`` — [0,1] heuristic from length, punctuation
   ratio, stopword ratio, mean word length — the usual cheap quality
   gates applied before expensive model-based filtering.
-- ``document_fingerprint`` — 64-bit content fingerprint over
-  normalized text (case/whitespace-insensitive exact-dup key).
 """
 
 from __future__ import annotations
@@ -125,15 +123,6 @@ def quality_score(text: Column) -> Column:
     mean_w = F.when(n_toks > 0, (n_chars - n_toks + 1) / n_toks).otherwise(F.lit(0.0))
     word_f = F.when((mean_w >= 2.5) & (mean_w <= 9.0), F.lit(1.0)).otherwise(F.lit(0.3))
     return (length_f + alpha_f + stop_f + word_f) / F.lit(4.0)
-
-
-def document_fingerprint(text: Column) -> Column:
-    """64-bit fingerprint of whitespace/case-normalized text —
-    the exact-dup key used by ``dedup_exact`` pipelines. xxhash64 is
-    the JVM-side stable hash (seeded, collision-negligible for dedup
-    purposes at trillions of docs ≈ birthday bound √2⁶⁴ ≈ 4·10⁹)."""
-    normalized = F.regexp_replace(F.lower(F.trim(text)), "\\s+", " ")
-    return F.xxhash64(normalized)
 
 
 def chunk_documents(

@@ -23,7 +23,9 @@ Pipeline (mirrors the reference query API lifecycle,
 The engine hardens the session it serves before its first parse: the
 reflective builtins and ``input_file_name`` are dropped from its
 function registry, and ``spark.sql.runSQLOnFiles`` is off, so a path
-such as ``text.`/etc/hostname``` names no table.
+such as ``text.`/etc/hostname``` names no table. After analysis, a
+plan whose relations output the hidden ``_metadata`` column (file
+paths) is refused too.
 
 Statelessness: the reference builds a fresh DuckDB per request; a
 long-lived SparkSession is kept instead. Bronze views stay registered
@@ -66,6 +68,9 @@ _PATH_RE = re.compile(r"(s3a?://\S+|file:/\S+|/[\w./-]{2,})")
 # Builtins no lake query may reach: the reflective calls run any static
 # Java method on the driver, and input_file_name shows storage paths.
 _DROPPED_FUNCTIONS = ("reflect", "java_method", "try_reflect", "input_file_name")
+# Metadata key of a file relation's hidden ``_metadata`` column, whose
+# fields hold each row's storage path.
+_FILE_METADATA_KEY = "__file_source_metadata_col"
 # Analysis errors for a name the session does not have: a function
 # (DuckDB's read_*, glob, *_scan, or a dropped builtin) or a relation
 # (a path, once runSQLOnFiles is off).
@@ -121,7 +126,7 @@ class QueryEngine:
             plan = parser.parseQuery(text)
             lookup_functions.apply(plan)
         except AnalysisException as exc:  # ParseException is one too
-            raise _refused(exc) from None
+            raise _refused(_friendly_error(exc)) from None
         return plan
 
     # -- plan-only entry (returns a DataFrame; no collect) ---------
@@ -153,11 +158,13 @@ class QueryEngine:
         _, _, dataset = self._session_gate
         try:
             jdf = dataset.ofRows(self.spark._jsparkSession, plan)
-            return DataFrame(jdf, self.spark)
         except AnalysisException as exc:
             if exc.getCondition() not in _OUTSIDE_THE_LAKE:
                 raise
-            raise _refused(exc) from None
+            raise _refused(_friendly_error(exc)) from None
+        if _reads_file_metadata(jdf.queryExecution().analyzed()):
+            raise _refused("the hidden _metadata column holds storage paths")
+        return DataFrame(jdf, self.spark)
 
     # -- serving entry (capped, JSON-shaped) -----------------------
     def query(self, sql: str) -> QueryResult:
@@ -235,8 +242,24 @@ def _friendly_error(exc: Exception) -> str:
     return msg[:500]
 
 
-def _refused(exc: AnalysisException) -> QueryValidationError:
+def _reads_file_metadata(plan) -> bool:
+    """True when a relation in the analyzed ``plan``, or in any of its
+    subqueries, outputs the hidden ``_metadata`` column. Spark adds
+    that column to a relation's output only when the query names it,
+    in whatever clause, CTE or subquery."""
+    subqueries = plan.subqueriesAll()
+    for tree in [plan, *(subqueries.apply(i) for i in range(subqueries.size()))]:
+        leaves = tree.collectLeaves()
+        for i in range(leaves.size()):
+            output = leaves.apply(i).output()
+            for j in range(output.size()):
+                if output.apply(j).metadata().contains(_FILE_METADATA_KEY):
+                    return True
+    return False
+
+
+def _refused(reason: str) -> QueryValidationError:
     return QueryValidationError(
         "Only a SELECT over lake tables and Spark's built-in functions "
-        f"is allowed: {_friendly_error(exc)}"
+        f"is allowed: {reason}"
     )

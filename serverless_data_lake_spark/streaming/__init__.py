@@ -14,14 +14,10 @@ streaming form (stream==batch agreement is asserted in tests).
 - ``join_stream``    — stream-stream interval join (attribution
   windows), state bounded by watermark + interval.
 - ``decontaminate_stream`` — GPT-3 n-gram decontamination at ingest
-  (foreachBatch over the once-persisted eval gram set).
+  (per-batch filter over the once-persisted eval gram set).
 - ``span_dedup_stream``    — reference-span scrubbing at ingest.
-- ``curation_stream``      — the per-document subset of
-  ``CurationPipeline`` per micro-batch (corpus-global stages
-  refused loudly).
-- ``incremental_dedup_stream`` — near-dup dedup of each micro-batch
-  against a parquet-backed LSH corpus index that grows with every
-  batch's survivors.
+- ``curation_fanout``      — one ``foreachBatch`` query that fans each
+  micro-batch out to several per-batch twins (the two above).
 """
 
 from serverless_data_lake_spark.streaming.dedup_stream import (

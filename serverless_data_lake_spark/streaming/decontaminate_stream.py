@@ -52,15 +52,14 @@ def decontaminate_stream(
     min_shared: int = 1,
     broadcast: bool | None = None,
     test_grams: DataFrame | None = None,
-) -> tuple[Callable[[DataFrame, int], None], DataFrame]:
+) -> tuple[Callable[[DataFrame], DataFrame], DataFrame]:
     """Build the ``foreachBatch`` handler for streaming
     decontamination.
 
-    Returns ``(handler, test_grams)``: wire the handler with
-    ``train_stream.writeStream.foreachBatch(lambda df, bid:
-    handler(sink(df), bid))`` — or more simply write your sink
-    inside your own closure around :func:`make_batch_filter`. The
-    persisted ``test_grams`` is returned so the caller can
+    Returns ``(clean_batch, test_grams)``: ``clean_batch`` maps one
+    micro-batch to its clean rows; wire it into a ``foreachBatch``
+    sink (:func:`streaming.curation_fanout.start_curation_fanout_stream`
+    does). The persisted ``test_grams`` is returned so the caller can
     ``unpersist()`` it when the query stops.
 
     ``test_grams`` accepts a precomputed gram set (e.g. a small
@@ -99,44 +98,3 @@ def decontaminate_stream(
 
     return clean_batch, grams
 
-
-def start_decontaminate_stream(
-    train_stream: DataFrame,
-    test: DataFrame,
-    id_col: str,
-    text_col: str,
-    out_path: str,
-    checkpoint: str,
-    n: int = 13,
-    min_shared: int = 1,
-    broadcast: bool | None = None,
-    project: "list[str] | None" = None,
-):
-    """Start the end-to-end query: clean docs append to parquet at
-    ``out_path`` with exactly-once checkpointing.
-
-    Returns ``(query, test_grams)`` — the StreamingQuery plus the
-    persisted eval-gram set, which the caller must ``unpersist()``
-    once done with the stream (in a ``finally``: a failed query must
-    not leak the cache into the session — the r7 CacheManager
-    replay-credit rule). ``project`` optionally narrows the sink's
-    columns (e.g. ``["doc_id"]`` when only survivor ids matter — the
-    driver's stream gate)."""
-    clean_batch, grams = decontaminate_stream(
-        train_stream, test, id_col, text_col,
-        n=n, min_shared=min_shared, broadcast=broadcast,
-    )
-
-    def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        cleaned = clean_batch(batch_df)
-        if project is not None:
-            cleaned = cleaned.select(*project)
-        cleaned.write.mode("append").parquet(out_path)
-
-    query = (
-        train_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return query, grams

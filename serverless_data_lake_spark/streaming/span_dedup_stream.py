@@ -75,30 +75,3 @@ def span_scrub_stream(
 
     return clean_batch, grams
 
-
-def start_span_scrub_stream(
-    doc_stream: DataFrame,
-    ref: DataFrame,
-    id_col: str,
-    text_col: str,
-    out_path: str,
-    checkpoint: str,
-    k: int = 13,
-    broadcast: bool = True,
-):
-    """Start the end-to-end query: scrubbed docs append to parquet at
-    ``out_path`` with exactly-once checkpointing. Returns the
-    StreamingQuery."""
-    clean_batch, _ = span_scrub_stream(
-        ref, id_col, text_col, k=k, broadcast=broadcast
-    )
-
-    def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        clean_batch(batch_df).write.mode("append").parquet(out_path)
-
-    return (
-        doc_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -212,81 +212,6 @@ def test_scrub_reference_spans_stage(spark):
     assert got[2] == "nothing shared with the reference corpus here"
 
 
-def test_streaming_curation_matches_batch(spark, tmp_path):
-    from serverless_data_lake_spark.streaming.curation_stream import (
-        start_curation_stream,
-    )
-
-    ref = spark.createDataFrame(
-        [(100, "forbidden benchmark answer span goes here today")], SCHEMA
-    )
-    batches = [
-        [(1, "clean document with plenty of ordinary words inside"),
-         (2, "forbidden benchmark answer span goes here today verbatim")],
-        [(3, "x"),  # fails length gate
-         (4, "another clean document about gardens and rivers flowing")],
-    ]
-    pipe = (
-        CurationPipeline("doc_id", "text")
-        .scrub_reference_spans(ref, k=5)
-        .length_filter(min_tokens=4)
-        .assign_splits({"train": 0.5, "val": 0.5}, salt="s")
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    out = tmp_path / "out"
-    stream = spark.readStream.schema(
-        "doc_id long, text string"
-    ).json(str(src))
-    reports: list = []
-    for b in batches:
-        spark.createDataFrame(b, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).json(str(src))
-        q = start_curation_stream(
-            stream, pipe, str(out), str(tmp_path / "ckpt"),
-            reports=reports,
-        )
-        q.awaitTermination(120)
-
-    got = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    # Batch twin over the union.
-    union = spark.createDataFrame(batches[0] + batches[1], SCHEMA)
-    expect = {}
-    pipe.execute(
-        union, sink=lambda d: expect.update(
-            {r["doc_id"]: r["text"] for r in d.collect()}
-        )
-    )
-    assert got == expect
-    # doc 2 is scrubbed down to its single non-reference token
-    # ("verbatim") and then falls to the 4-token length gate; doc 3
-    # fails the gate directly.
-    assert sorted(got) == [1, 4]
-    assert len(reports) == 2 and all(len(r) == 3 for r in reports)
-    assert sum(r[0].rows_in for r in reports) == 4
-    # The scrub itself dropped nobody; the length gate dropped one
-    # per batch.
-    assert all(r[0].rows_dropped == 0 for r in reports)
-    assert [r[1].rows_dropped for r in reports] == [1, 1]
-
-
-def test_streaming_refuses_corpus_global_stages(spark, tmp_path):
-    from serverless_data_lake_spark.streaming.curation_stream import (
-        start_curation_stream,
-    )
-
-    pipe = CurationPipeline().exact_dedup()
-    stream = spark.readStream.schema(SCHEMA).json(str(tmp_path))
-    with pytest.raises(ValueError, match="corpus-global"):
-        start_curation_stream(
-            stream, pipe, str(tmp_path / "o"), str(tmp_path / "c")
-        )
-
-
 def test_eager_stage_inputs_compute_once(spark):
     """Stages whose operator runs driver actions over its input
     (near_dedup's closure, rebalance's count+collect) must read a

@@ -1,81 +1,13 @@
-"""Streaming decontamination: the foreachBatch twin must agree with
-the batch operator run over the union of all micro-batches (docs are
-independent, so batch-of-union == union-of-batches)."""
+"""The driver's decontamination stream gate: the streamed survivor
+and span-scrub fingerprints must equal the batch operators' over the
+same slices, on the local-relation fast path and on the distributed
+over-cap path."""
 
 from __future__ import annotations
 
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+import pytest
 
 from serverless_data_lake_spark.operators.dedup import decontaminate
-from serverless_data_lake_spark.streaming.decontaminate_stream import (
-    start_decontaminate_stream,
-)
-
-SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-    ]
-)
-
-LEAK = "the exact answer to benchmark question forty two is this"
-
-BATCH_1 = [
-    (1, "clean document about weather patterns entirely here"),
-    (2, f"contaminated document containing {LEAK} verbatim"),
-]
-BATCH_2 = [
-    (3, "another clean one about cooking rice slowly today"),
-    (4, f"late-arriving contamination: {LEAK} again"),
-    (5, "benign mention of benchmark question without the answer"),
-]
-
-
-def test_stream_matches_batch_union(spark, tmp_path):
-    test_df = spark.createDataFrame(
-        [(100, f"eval prompt: {LEAK}?")], SCHEMA
-    )
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    out = tmp_path / "clean_out"
-
-    stream = spark.readStream.schema(SCHEMA).json(str(src))
-    for i, batch in enumerate((BATCH_1, BATCH_2)):
-        spark.createDataFrame(batch, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).json(str(src))
-        # availableNow processes everything present then stops; run
-        # one query per arrival wave to exercise the checkpoint
-        # resume path across micro-batches.
-        q, grams = start_decontaminate_stream(
-            stream, test_df, "doc_id", "text",
-            out_path=str(out), checkpoint=str(tmp_path / "ckpt"),
-            n=5, min_shared=1,
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            grams.unpersist()
-
-    got = sorted(
-        r.doc_id for r in spark.read.parquet(str(out)).collect()
-    )
-    union = spark.createDataFrame(BATCH_1 + BATCH_2, SCHEMA)
-    expect = sorted(
-        r.doc_id
-        for r in decontaminate(
-            union, test_df, "doc_id", "text", n=5, min_shared=1
-        ).collect()
-    )
-    assert got == expect == [1, 3, 5]
-
-
-import pytest
 
 
 @pytest.fixture(scope="module")

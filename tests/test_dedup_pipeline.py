@@ -124,8 +124,8 @@ def test_loop_keeps_representative_text_intact(pipeline_lake):
 
 
 class TestIncrementalLshDedup:
-    """Batch-vs-corpus near-dup dedup (operators/dedup.py LshIndex):
-    the daily-increment shape — new batches dedup against a standing
+    """Batch-vs-corpus near-dup pairs (operators/dedup.py LshIndex):
+    the daily-increment shape — a new batch pairs against a standing
     index without the corpus ever re-pairing with itself."""
 
     CORPUS = [
@@ -143,11 +143,28 @@ class TestIncrementalLshDedup:
         corpus = spark.createDataFrame(self.CORPUS, self.SCHEMA)
         return build_lsh_index(corpus, "doc_id", "text").persist()
 
-    def test_matches_against_corpus(self, spark):
+    @staticmethod
+    def _pairs(new, index, verify_threshold):
+        """(new_id, corpus_id) matches of a text batch against
+        ``index``: the batch is indexed with the same parameters."""
         from serverless_data_lake_spark.operators.dedup import (
-            lsh_pairs_against_index,
+            build_lsh_index,
+            lsh_pairs_index_vs_index,
         )
 
+        batch = build_lsh_index(
+            new, "doc_id", "text",
+            num_hashes=index.num_hashes, bands=index.bands,
+            shingle_size=index.shingle_size,
+        )
+        return {
+            (r.new_id, r.corpus_id)
+            for r in lsh_pairs_index_vs_index(
+                batch, index, verify_threshold=verify_threshold
+            ).collect()
+        }
+
+    def test_matches_against_corpus(self, spark):
         idx = self._index(spark)
         new = spark.createDataFrame(
             [
@@ -157,46 +174,11 @@ class TestIncrementalLshDedup:
             ],
             self.SCHEMA,
         )
-        got = {
-            (r.new_id, r.corpus_id)
-            for r in lsh_pairs_against_index(
-                new, idx, "doc_id", "text", verify_threshold=0.5
-            ).collect()
-        }
-        assert got == {(101, 1)}
-        idx.unpersist()
-
-    def test_incremental_dedup_survivors(self, spark):
-        from serverless_data_lake_spark.operators.dedup import (
-            incremental_dedup,
-        )
-
-        idx = self._index(spark)
-        new = spark.createDataFrame(
-            [
-                (101, "the quick brown fox jumps over the lazy cat near the river bank"),
-                (102, "a brand new document about submarine cable maintenance schedules"),
-                # within-batch near-dup pair; min id (103) survives
-                (103, "fresh snow fell on the quiet village square before dawn today"),
-                (104, "fresh snow fell on the quiet village square before dawn tonight"),
-            ],
-            self.SCHEMA,
-        )
-        kept = {
-            r.doc_id
-            for r in incremental_dedup(
-                new, idx, "doc_id", "text", verify_threshold=0.5
-            ).collect()
-        }
-        assert kept == {102, 103}
+        assert self._pairs(new, idx, 0.5) == {(101, 1)}
         idx.unpersist()
 
     def test_index_roundtrips_through_parquet(self, spark, tmp_path):
-        from serverless_data_lake_spark.operators.dedup import (
-            LshIndex,
-            build_lsh_index,
-            lsh_pairs_against_index,
-        )
+        from serverless_data_lake_spark.operators.dedup import LshIndex
 
         idx = self._index(spark)
         idx.bands_df.write.parquet(str(tmp_path / "bands"))
@@ -212,13 +194,8 @@ class TestIncrementalLshDedup:
             [(201, "the quick brown fox jumps over the lazy dog near the river bank")],
             self.SCHEMA,
         )
-        got = {
-            (r.new_id, r.corpus_id)
-            for r in lsh_pairs_against_index(
-                new, reloaded, "doc_id", "text", verify_threshold=0.9
-            ).collect()
-        }
-        assert got == {(201, 1)}  # exact text -> jaccard 1.0
+        # exact text -> jaccard 1.0
+        assert self._pairs(new, reloaded, 0.9) == {(201, 1)}
         idx.unpersist()
 
     def test_index_join_agrees_with_self_join(self, spark):
@@ -230,7 +207,6 @@ class TestIncrementalLshDedup:
 
         from serverless_data_lake_spark.operators.dedup import (
             build_lsh_index,
-            lsh_pairs_against_index,
             minhash_lsh_pairs,
         )
 
@@ -257,10 +233,7 @@ class TestIncrementalLshDedup:
         new = df.filter(F.col("doc_id") >= 1000)
         idx = build_lsh_index(old, "doc_id", "text").persist()
         cross = {
-            (min(r.new_id, r.corpus_id), max(r.new_id, r.corpus_id))
-            for r in lsh_pairs_against_index(
-                new, idx, "doc_id", "text", verify_threshold=0.6
-            ).collect()
+            (min(a, b), max(a, b)) for a, b in self._pairs(new, idx, 0.6)
         }
         expected = {
             (a, b) for a, b in full
@@ -341,18 +314,18 @@ class TestIndexVsIndexPairs:
 
     def test_agrees_with_text_path_and_full_slices(self, spark):
         """lsh_pairs_index_vs_index (r9: the minhash entry's
-        signature-pass-once shape) must equal lsh_pairs_against_index
-        fed the same batch as TEXT — the index form skips the
-        tokenize+MinHash pass, not any of the matching semantics —
-        and slicing ONE full-corpus index by parity must equal
-        building the two sides separately."""
+        signature-pass-once shape) must equal the cross-parity pairs
+        of minhash_lsh_pairs run over the TEXT of the whole corpus,
+        with the same exact Jaccard — and slicing ONE full-corpus
+        index by parity must equal building the two sides
+        separately."""
         import random
 
         from serverless_data_lake_spark.operators.dedup import (
             LshIndex,
             build_lsh_index,
-            lsh_pairs_against_index,
             lsh_pairs_index_vs_index,
+            minhash_lsh_pairs,
         )
 
         rng = random.Random(11)
@@ -368,13 +341,16 @@ class TestIndexVsIndexPairs:
         even = df.filter(F.col("doc_id") % 2 == 0)
         odd = df.filter(F.col("doc_id") % 2 == 1)
 
-        corpus_idx = build_lsh_index(even, "doc_id", "text").persist()
         via_text = {
-            (r.new_id, r.corpus_id, round(r.jaccard, 12))
-            for r in lsh_pairs_against_index(
-                odd, corpus_idx, "doc_id", "text", verify_threshold=0.5
+            (b, a, round(r.jaccard, 12)) if a % 2 == 0
+            else (a, b, round(r.jaccard, 12))
+            for r in minhash_lsh_pairs(
+                df, "doc_id", "text", verify_threshold=0.5
             ).collect()
+            for a, b in [(r.id_a, r.id_b)]
+            if (a + b) % 2 == 1
         }
+        corpus_idx = build_lsh_index(even, "doc_id", "text").persist()
         batch_idx = build_lsh_index(odd, "doc_id", "text")
         via_index = {
             (r.new_id, r.corpus_id, round(r.jaccard, 12))
@@ -406,7 +382,7 @@ class TestIndexVsIndexPairs:
                 _slice(1), _slice(0), verify_threshold=0.5
             ).collect()
         }
-        assert via_slices == via_text
+        assert via_slices == via_index
         corpus_idx.unpersist()
         full_idx.unpersist()
 

@@ -11,6 +11,7 @@ entry inside that window.
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import json
 from pathlib import Path
@@ -103,6 +104,114 @@ def test_no_complex_types_in_entry_schemas(spark):
     assert not offenders, (
         "driver-breaking complex-typed columns in queries() entries "
         f"(pandas canonicalizer cannot hash them): {offenders}"
+    )
+
+
+#: Top-level package definitions no user path calls that stay on
+#: purpose, each with its reason. Any other unreached definition is
+#: dead code: delete it with its tests.
+PUBLIC_ENTRY_POINTS = {
+    "RestSource": "the paper's pull ingestion (the reference's plan "
+    "runner); TestPlanToLake runs it from plan to bronze to silver",
+    "start_silver_stream": "the paper's Stream abstraction: "
+    "checkpointed bronze-to-silver micro-batches on the batch MERGE",
+    "dedup_stream": "stream twin of a graded entry; its stream==batch "
+    "test is part of the correctness floor",
+    "dedup_stream_exact": "stream twin of a graded entry; its "
+    "stream==batch test is part of the correctness floor",
+    "interval_join_stream": "stream twin of a graded entry; its "
+    "stream==batch test is part of the correctness floor",
+    "sessionize_stream": "stream twin of a graded entry; its "
+    "stream==batch test is part of the correctness floor",
+    "windowed_event_counts_stream": "stream twin of a graded entry; its "
+    "stream==batch test is part of the correctness floor",
+    "embedding_near_duplicates": "the SQL reference "
+    "TestNumpyPairsKernel checks embedding_all_pairs_numpy against",
+}
+
+
+def _names(node) -> set[str]:
+    """Names a subtree uses: ``Name`` ids and ``Attribute`` attrs (so
+    names inside f-strings count, names in docstrings do not)."""
+    return {
+        n.id if isinstance(n, ast.Name) else n.attr
+        for n in ast.walk(node)
+        if isinstance(n, (ast.Name, ast.Attribute))
+    }
+
+
+def _reached(defs: dict, roots: set[str]) -> set:
+    """Fixed point: a definition is reached once a reached body (or a
+    root) names it, so code called only from dead code is dead."""
+    seen, reached = set(roots), set()
+    grew = True
+    while grew:
+        grew = False
+        for key, uses in defs.items():
+            if key not in reached and key[1] in seen:
+                reached.add(key)
+                seen |= uses
+                grew = True
+    return reached
+
+
+def test_every_package_definition_is_reached():
+    """Every top-level definition in the package is reached from a
+    user path, or is named in ``PUBLIC_ENTRY_POINTS``. User paths are
+    the package's own module-level code (not the re-exports in
+    ``__init__.py``), ``__spark_entry__.py``, ``bench.py``, ``tools/``
+    and ``perfbench/``. Tests do not count: a definition only its
+    own tests call is dead. Name-based, so a name shared with a live
+    definition elsewhere counts as reached (the scan errs towards
+    keeping code)."""
+    defs: dict[tuple[str, str], set[str]] = {}
+    roots: set[str] = set()
+    for path in sorted((REPO / "serverless_data_lake_spark").rglob("*.py")):
+        where = path.relative_to(REPO).as_posix()
+        for stmt in ast.parse(path.read_text()).body:
+            if isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                names, body = [stmt.name], stmt
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                targets = (
+                    stmt.targets if isinstance(stmt, ast.Assign)
+                    else [stmt.target]
+                )
+                names = [
+                    t.id for t in targets
+                    if isinstance(t, ast.Name) and not t.id.startswith("__")
+                ]
+                body = stmt.value
+            else:
+                names = []
+            for name in names:
+                defs[(where, name)] = _names(body) if body else set()
+            if not names and path.name != "__init__.py":
+                roots |= _names(stmt)
+    for path in [
+        REPO / "__spark_entry__.py",
+        REPO / "bench.py",
+        *sorted((REPO / "tools").rglob("*.py")),
+        *sorted((REPO / "perfbench").rglob("*.py")),
+    ]:
+        roots |= _names(ast.parse(path.read_text()))
+
+    reached = _reached(defs, roots | set(PUBLIC_ENTRY_POINTS))
+    unreached = sorted(f"{w}::{n}" for w, n in defs if (w, n) not in reached)
+    assert not unreached, (
+        "no user path reaches these definitions; delete them with "
+        "their tests, or name them in PUBLIC_ENTRY_POINTS with a "
+        "reason:\n  " + "\n  ".join(unreached)
+    )
+    live = {n for _, n in _reached(defs, roots)}
+    defined = {n for _, n in defs}
+    stale = sorted(
+        n for n in PUBLIC_ENTRY_POINTS if n in live or n not in defined
+    )
+    assert not stale, (
+        f"PUBLIC_ENTRY_POINTS names a definition that is gone or now "
+        f"reached from a user path: {stale}"
     )
 
 

@@ -176,8 +176,7 @@ class TestGif:
 
 
 # ---------------------------------------------------------------------------
-# Animated GIFs: composition (disposal, transparency), fps, and the
-# video frame-sampling route.
+# Animated GIFs: composition (disposal, transparency) and fps.
 # ---------------------------------------------------------------------------
 def make_animated_gif(
     frame_specs,
@@ -309,35 +308,3 @@ class TestAnimatedGif:
         want[0, 0] = _PAL4[3]
         np.testing.assert_array_equal(frames[2], want)
 
-    def test_video_sampling_route(self, spark):
-        from serverless_data_lake_spark.operators.media_codecs import (
-            decode_bmp,
-        )
-        from serverless_data_lake_spark.operators.multimodal import (
-            sample_video_frames,
-        )
-
-        colors = (0, 1, 2, 3)
-        gif = make_animated_gif(
-            [{"idx": np.full((2, 2), c, dtype=int), "delay_cs": 10}
-             for c in colors],
-            _PAL4,
-            screen=(2, 2),
-        )
-        # 10 cs/frame = 10 fps; 400 ms total; sample every 200 ms ->
-        # ts 0, 200 -> frames 0 and 2.
-        df = spark.createDataFrame(
-            [(1, "image/gif", 400, bytearray(gif))],
-            "media_id long, mime_type string, duration_ms long, "
-            "content binary",
-        )
-        rows = sorted(
-            sample_video_frames(df, every_ms=200, strict=True).collect(),
-            key=lambda r: r["frame_ts_ms"],
-        )
-        assert [r["frame_ts_ms"] for r in rows] == [0, 200]
-        for r, c in zip(rows, (0, 2)):
-            px = decode_bmp(bytes(r["frame"]))
-            np.testing.assert_array_equal(
-                px, _expect(np.full((2, 2), c, dtype=int), _PAL4)
-            )

@@ -53,6 +53,27 @@ def lm(spark):
     ).persist()
 
 
+def collected(lm: NGramLM):
+    """The distributed LM's two count tables collected into a
+    ``LocalNGramLM``: the baseline the local training routes must
+    reproduce, and the broadcast model the in-row scorer consumes."""
+    import numpy as np
+
+    from serverless_data_lake_spark.operators.lm import _local_from_frames
+
+    uni = lm.unigrams.toPandas()
+    bi = lm.bigrams.toPandas()
+    return _local_from_frames(
+        uni["w1"].to_numpy(np.int64),
+        uni["c1"].to_numpy(np.int64),
+        bi["w1"].to_numpy(np.int64),
+        bi["w2"].to_numpy(np.int64),
+        bi["c12"].to_numpy(np.int64),
+        vocab_size=lm.vocab_size,
+        total_tokens=lm.total_tokens,
+    )
+
+
 class TestLM:
     def test_counts_match_reference(self, spark, lm):
         uni, bi, vocab, total = ref_lm([t for _i, t in REF])
@@ -157,7 +178,6 @@ class TestInRowScoring:
         import numpy as np
 
         from serverless_data_lake_spark.operators.lm import (
-            collect_local_lm,
             train_bigram_lm_local,
         )
 
@@ -166,9 +186,9 @@ class TestInRowScoring:
         # where the shuffle route's explode_outer+isNotNull and the
         # scorer's None-guard already tolerated it) — so the NULL
         # row is added here and the counts must still equal the
-        # NULL-free collect_local_lm baseline.
+        # NULL-free collected baseline.
         ref = spark.createDataFrame(REF + [(4, None)], SCHEMA)
-        via_collect = collect_local_lm(lm)
+        via_collect = collected(lm)
         for mode in ("partials", "shuffle"):
             loc = train_bigram_lm_local(ref, merge=mode)
             assert loc.vocab_size == via_collect.vocab_size
@@ -185,7 +205,6 @@ class TestInRowScoring:
 
     def test_inrow_equals_join_path(self, spark, lm):
         from serverless_data_lake_spark.operators.lm import (
-            collect_local_lm,
             perplexity_score_inrow,
         )
 
@@ -197,7 +216,7 @@ class TestInRowScoring:
         inrow = {
             r["doc_id"]: r
             for r in perplexity_score_inrow(
-                docs, "doc_id", collect_local_lm(lm)
+                docs, "doc_id", collected(lm)
             ).collect()
         }
         assert set(joined) == set(inrow)
@@ -221,7 +240,6 @@ class TestInRowScoring:
         n_bigrams still counts the row — the kernel must mask the
         same way (an all-unseen doc keeps n_bigrams>0, NULL avg)."""
         from serverless_data_lake_spark.operators.lm import (
-            collect_local_lm,
             perplexity_score_inrow,
         )
 
@@ -235,7 +253,7 @@ class TestInRowScoring:
         inrow = {
             r["doc_id"]: r
             for r in perplexity_score_inrow(
-                docs, "doc_id", collect_local_lm(lm), alpha=0.0
+                docs, "doc_id", collected(lm), alpha=0.0
             ).collect()
         }
         assert joined[12]["n_bigrams"] == 3
@@ -250,13 +268,12 @@ class TestInRowScoring:
 
     def test_inrow_plan_has_no_exchange(self, spark, lm):
         from serverless_data_lake_spark.operators.lm import (
-            collect_local_lm,
             perplexity_score_inrow,
         )
 
         docs = spark.createDataFrame(self.DOCS, SCHEMA)
         plan = (
-            perplexity_score_inrow(docs, "doc_id", collect_local_lm(lm))
+            perplexity_score_inrow(docs, "doc_id", collected(lm))
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "Exchange" not in plan  # map-only: zero shuffles
@@ -266,9 +283,6 @@ class TestInRowScoring:
         """pipeline.curation.perplexity_filter dispatches on the LM
         type: a LocalNGramLM routes through the map-only scorer and
         must keep exactly the documents the NGramLM path keeps."""
-        from serverless_data_lake_spark.operators.lm import (
-            collect_local_lm,
-        )
         from serverless_data_lake_spark.pipeline.curation import (
             CurationPipeline,
         )
@@ -287,7 +301,7 @@ class TestInRowScoring:
         cut = (ppl[1] + ppl[2]) / 2
         kept: dict = {}
         pipe = CurationPipeline("doc_id", "text").perplexity_filter(
-            collect_local_lm(lm), max_perplexity=cut
+            collected(lm), max_perplexity=cut
         )
         _out, report = pipe.execute(
             docs,

@@ -3,20 +3,15 @@ and their routing in the multimodal kernels."""
 
 from __future__ import annotations
 
-import io
 import struct
-import wave
 import zlib
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from serverless_data_lake_spark.operators.media_codecs import (
-    audio_features,
     decode_bmp,
     decode_png,
-    decode_wav,
     image_features,
 )
 
@@ -24,19 +19,6 @@ from serverless_data_lake_spark.operators.media_codecs import (
 # ---------------------------------------------------------------------------
 # Fixture encoders (stdlib only — independent of the decoders under test)
 # ---------------------------------------------------------------------------
-def make_wav(samples: np.ndarray, rate: int = 8000, width: int = 2) -> bytes:
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(samples.shape[1] if samples.ndim == 2 else 1)
-        w.setsampwidth(width)
-        w.setframerate(rate)
-        if width == 2:
-            w.writeframes(samples.astype("<i2").tobytes())
-        elif width == 1:
-            w.writeframes(samples.astype(np.uint8).tobytes())
-    return buf.getvalue()
-
-
 def make_bmp(pixels: np.ndarray) -> bytes:
     """24-bit bottom-up BMP from (H, W, 3) uint8 RGB."""
     h, w, _ = pixels.shape
@@ -50,67 +32,6 @@ def make_bmp(pixels: np.ndarray) -> bytes:
     ) + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body),
                     2835, 2835, 0, 0)
     return header + bytes(body)
-
-
-def make_avi(
-    frames: list[np.ndarray], fps: int = 10, audio_first: bool = False
-) -> bytes:
-    """Minimal uncompressed (BI_RGB) AVI from (H, W, 3) uint8 RGB
-    frames — independent fixture encoder. ``audio_first`` prepends an
-    audio strl (whose strf is a WAVEFORMATEX, not a video header)
-    before the video strl, the layout that used to confuse strf
-    attribution."""
-    h, w, _ = frames[0].shape
-    stride = (w * 3 + 3) & ~3
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return cid + struct.pack("<I", len(body)) + body + pad
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    frame_bytes = []
-    for fr in frames:
-        body = bytearray()
-        for row in fr[::-1]:  # bottom-up
-            line = row[:, ::-1].tobytes()  # RGB -> BGR
-            body += line + b"\x00" * (stride - len(line))
-        frame_bytes.append(bytes(body))
-
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1000000 // fps, 0, 0, 0, len(frames), 0, 1, stride * h,
-        w, h, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"\x00" * 4
-        + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, fps,
-                      0, len(frames), stride * h, 0, 0, 0)
-        + struct.pack("<hhhh", 0, 0, 0, 0)
-    )
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                       stride * h, 0, 0, 0, 0)
-    strls = lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf))
-    if audio_first:
-        # PCM audio stream header + WAVEFORMATEX strf whose leading
-        # bytes (wFormatTag=1, nChannels=1, 8000 Hz ...) would parse as
-        # an absurd BITMAPINFOHEADER if misattributed to the video.
-        astrh = (
-            b"auds" + b"\x00" * 4
-            + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, 8000,
-                          0, 8000, 16000, 0, 0, 0)
-            + struct.pack("<hhhh", 0, 0, 0, 0)
-        )
-        astrf = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-        strls = (
-            lst(b"strl", chunk(b"strh", astrh) + chunk(b"strf", astrf))
-            + strls
-        )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + strls)
-    movi = lst(b"movi", b"".join(chunk(b"00db", fb) for fb in frame_bytes))
-    riff_body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
 
 
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:
@@ -175,52 +96,6 @@ def make_png(pixels: np.ndarray, filters: list[int] | None = None) -> bytes:
 # ---------------------------------------------------------------------------
 # Decoder unit tests
 # ---------------------------------------------------------------------------
-class TestWav:
-    def test_roundtrip_16bit_stereo(self):
-        t = np.arange(800)
-        left = (np.sin(2 * np.pi * t / 50) * 20000).astype(np.int64)
-        right = (np.cos(2 * np.pi * t / 25) * 15000).astype(np.int64)
-        pcm = np.stack([left, right], axis=1)
-        rate, channels, out = decode_wav(make_wav(pcm, rate=8000))
-        assert (rate, channels) == (8000, 2)
-        assert out.shape == (800, 2)
-        np.testing.assert_allclose(out[:, 0], left / 32768.0, atol=1e-6)
-
-    def test_8bit_mono_unsigned(self):
-        pcm = np.array([0, 128, 255], dtype=np.uint8).reshape(-1, 1)
-        rate, channels, out = decode_wav(make_wav(pcm, width=1))
-        assert channels == 1
-        np.testing.assert_allclose(
-            out[:, 0], [(-128) / 128.0, 0.0, 127 / 128.0], atol=1e-6
-        )
-
-    def test_24bit_sign_extension(self):
-        vals = [-8388608, -1, 0, 1, 8388607]  # int24 extremes
-        frames = b"".join(
-            v.to_bytes(3, "little", signed=True) for v in vals
-        )
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(3)
-            w.setframerate(8000)
-            w.writeframes(frames)
-        _, _, out = decode_wav(buf.getvalue())
-        np.testing.assert_allclose(
-            out[:, 0], np.array(vals) / 8388608.0, atol=1e-7
-        )
-
-    def test_audio_features(self):
-        rate = 8000
-        pcm = np.full((rate, 1), 16384, dtype=np.int64)  # 1 s DC at 0.5
-        _, _, samples = decode_wav(make_wav(pcm, rate=rate))
-        dur, rms, zcr, peak = audio_features(rate, samples)
-        assert dur == pytest.approx(1.0)
-        assert rms == pytest.approx(0.5, abs=1e-4)
-        assert zcr == 0.0
-        assert peak == pytest.approx(0.5, abs=1e-4)
-
-
 class TestBmp:
     def test_roundtrip_known_pixels(self):
         # Non-multiple-of-4 width forces row padding.
@@ -315,93 +190,6 @@ class TestPng:
         assert all(0.0 <= v <= 1.0 for v in f1)
 
 
-class TestAvi:
-    def test_roundtrip_frames_and_fps(self):
-        from serverless_data_lake_spark.operators.media_codecs import (
-            decode_avi_frames,
-        )
-
-        frames = [
-            np.full((3, 5, 3), v, dtype=np.uint8) for v in (10, 20, 30)
-        ]
-        fps, out = decode_avi_frames(make_avi(frames, fps=10))
-        assert fps == pytest.approx(10.0)
-        assert len(out) == 3
-        for got, want in zip(out, frames):
-            np.testing.assert_array_equal(got, want)
-
-    def test_audio_strl_before_video_strl(self):
-        # The audio stream's strf (WAVEFORMATEX) precedes the video
-        # strl; strf attribution must key off the owning strh fcc, not
-        # first-seen order.
-        from serverless_data_lake_spark.operators.media_codecs import (
-            decode_avi_frames,
-        )
-
-        frames = [np.full((3, 5, 3), v, dtype=np.uint8) for v in (7, 99)]
-        fps, out = decode_avi_frames(
-            make_avi(frames, fps=25, audio_first=True)
-        )
-        assert fps == pytest.approx(25.0)
-        assert len(out) == 2
-        for got, want in zip(out, frames):
-            np.testing.assert_array_equal(got, want)
-
-    def test_rejects_garbage(self):
-        from serverless_data_lake_spark.operators.media_codecs import (
-            decode_avi_frames,
-        )
-
-        with pytest.raises(ValueError):
-            decode_avi_frames(b"RIFFxxxxWAVE")
-
-    def test_mjpg_frames(self):
-        # Motion-JPEG: each frame chunk is an independent baseline
-        # JPEG (encoded by the independent fixture encoder).
-        from test_jpeg_codec import make_jpeg
-
-        from serverless_data_lake_spark.operators.media_codecs import (
-            decode_avi_frames,
-        )
-
-        frames = [
-            np.full((8, 16, 3), v, dtype=np.uint8) for v in (40, 90, 180)
-        ]
-        jpegs = [make_jpeg(f) for f in frames]
-        avi = make_avi(frames, fps=12)
-        # Rewrite the fixture AVI into an MJPG one: swap compression
-        # fourcc in strf and replace each 00db payload with the JPEG.
-        strf_old = struct.pack("<IiiHHIIiiII", 40, 16, 8, 1, 24, 0,
-                               ((16 * 3 + 3) & ~3) * 8, 0, 0, 0, 0)
-        strf_new = struct.pack("<IiiHHIIiiII", 40, 16, 8, 1, 24,
-                               struct.unpack("<I", b"MJPG")[0],
-                               0, 0, 0, 0, 0)
-        assert strf_old in avi
-        avi = avi.replace(strf_old, strf_new)
-        # Rebuild movi with JPEG chunks.
-        # The movi LIST layout is LIST<size>movi…: its header starts
-        # 8 bytes before the "movi" tag.
-        hdr_end = avi.rindex(b"movi") - 8
-
-        def chunk(cid, body):
-            pad = b"\x00" if len(body) % 2 else b""
-            return cid + struct.pack("<I", len(body)) + body + pad
-
-        movi_body = b"movi" + b"".join(chunk(b"00dc", j) for j in jpegs)
-        movi = b"LIST" + struct.pack("<I", len(movi_body)) + movi_body
-        riff_body = avi[12:hdr_end] + movi
-        mjpg_avi = (
-            b"RIFF" + struct.pack("<I", len(riff_body) + 4) + b"AVI "
-            + riff_body
-        )
-        fps, out = decode_avi_frames(mjpg_avi)
-        assert fps == pytest.approx(12.0)
-        assert len(out) == 3
-        for got, want in zip(out, frames):
-            assert got.shape == want.shape
-            assert np.abs(got.astype(int) - want.astype(int)).max() <= 2
-
-
 # ---------------------------------------------------------------------------
 # Spark-side routing
 # ---------------------------------------------------------------------------
@@ -467,53 +255,6 @@ class TestKernelRouting:
         }
         assert rows[2] == pytest.approx(rows[1], abs=0.02)
 
-    def test_real_audio_decode(self, spark):
-        from serverless_data_lake_spark.operators.multimodal import (
-            extract_audio_features,
-        )
-
-        rate = 8000
-        pcm = np.full((rate // 2, 1), -8192, dtype=np.int64)  # 0.5 s
-        df = _media_df(
-            spark, [(7, "audio/wav", bytearray(make_wav(pcm, rate=rate)))]
-        )
-        row = extract_audio_features(df, strict=True).collect()[0]
-        assert row["sample_rate"] == rate and row["n_channels"] == 1
-        dur, rms, zcr, peak = row["feature"]
-        assert dur == pytest.approx(0.5)
-        assert rms == pytest.approx(0.25, abs=1e-3)
-        assert zcr == 0.0
-
-    def test_resize_real_roundtrip(self, spark):
-        from serverless_data_lake_spark.operators.multimodal import (
-            resize_images,
-        )
-
-        # 2x2 quadrant image -> 4x4 nearest-neighbor: each quadrant
-        # becomes a 2x2 block of its color.
-        px = np.zeros((2, 2, 3), dtype=np.uint8)
-        px[0, 0], px[0, 1] = (255, 0, 0), (0, 255, 0)
-        px[1, 0], px[1, 1] = (0, 0, 255), (255, 255, 255)
-        df = _media_df(
-            spark, [(1, "image/png", bytearray(make_png(px.copy())))]
-        )
-        row = resize_images(df, 4, 4, strict=True).collect()[0]
-        assert (row["mime_type"], row["width"], row["height"]) == (
-            "image/bmp", 4, 4,
-        )
-        out = decode_bmp(bytes(row["content"]))
-        expect = px.repeat(2, axis=0).repeat(2, axis=1)
-        np.testing.assert_array_equal(out, expect)
-
-    def test_resize_strict_fences_codec_formats(self, spark):
-        from serverless_data_lake_spark.operators.multimodal import (
-            resize_images,
-        )
-
-        df = _media_df(spark, [(1, "image/webp", b"RIFFnopeWEBP")])
-        with pytest.raises(Exception, match="NotImplementedError|codec"):
-            resize_images(df, 4, 4, strict=True).collect()
-
     def test_default_is_strict_fail_loud(self, spark):
         # Pipeline foot-gun closed in r6: with no strict argument, a
         # codec-bound format must raise, never silently ship fake
@@ -525,57 +266,6 @@ class TestKernelRouting:
         df = _media_df(spark, [(1, "image/webp", b"RIFFjunkWEBP")])
         with pytest.raises(Exception, match="NotImplementedError|codec"):
             extract_image_features(df, dim=4).collect()
-
-    def test_resize_passthrough_when_not_strict(self, spark):
-        from serverless_data_lake_spark.operators.multimodal import (
-            resize_images,
-        )
-
-        df = _media_df(spark, [(1, "image/webp", b"RIFFkeepWEBP")])
-        row = resize_images(df, 4, 4, strict=False).collect()[0]
-        assert bytes(row["content"]) == b"RIFFkeepWEBP"
-        assert row["width"] is None
-
-    def test_real_video_frame_sampling(self, spark):
-        from serverless_data_lake_spark.operators.multimodal import (
-            sample_video_frames,
-        )
-
-        # 10 fps, 5 frames = 500 ms; sample every 200 ms -> ts 0,
-        # 200, 400 -> frame indices 0, 2, 4.
-        frames = [
-            np.full((2, 2, 3), v, dtype=np.uint8)
-            for v in (0, 50, 100, 150, 200)
-        ]
-        df = spark.createDataFrame(
-            [(1, "video/avi", 500, bytearray(make_avi(frames, fps=10)))],
-            "media_id long, mime_type string, duration_ms long, "
-            "content binary",
-        )
-        rows = sorted(
-            sample_video_frames(df, every_ms=200, strict=True).collect(),
-            key=lambda r: r["frame_ts_ms"],
-        )
-        assert [r["frame_ts_ms"] for r in rows] == [0, 200, 400]
-        for r, v in zip(rows, (0, 100, 200)):
-            px = decode_bmp(bytes(r["frame"]))
-            assert px.shape == (2, 2, 3)
-            np.testing.assert_array_equal(
-                px, np.full((2, 2, 3), v, dtype=np.uint8)
-            )
-
-    def test_video_strict_fences_codec_containers(self, spark):
-        from serverless_data_lake_spark.operators.multimodal import (
-            sample_video_frames,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "video/mp4", 1000, b"\x00\x00\x00 ftypisom")],
-            "media_id long, mime_type string, duration_ms long, "
-            "content binary",
-        )
-        with pytest.raises(Exception, match="NotImplementedError|codec"):
-            sample_video_frames(df, strict=True).collect()
 
     def test_decodable_set_matches_dispatcher(self):
         # Every mime the kernels claim decodable must have a real
@@ -594,49 +284,3 @@ class TestKernelRouting:
     # parquet scan in tests/test_plan_quality.py — a LocalTableScan
     # here would list every column regardless.)
 
-
-class TestG711Wav:
-    """μ-law/A-law WAV against the stdlib audioop reference tables."""
-
-    @staticmethod
-    def _wav(tag: int, payload: bytes, rate=8000, channels=1) -> bytes:
-        fmt = struct.pack("<HHIIHH", tag, channels, rate,
-                          rate * channels, channels, 8)
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(payload)) + payload
-        )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
-
-    @pytest.mark.parametrize("law,tag", [("ulaw", 7), ("alaw", 6)])
-    def test_matches_audioop_reference(self, law, tag):
-        audioop = pytest.importorskip("audioop")
-        from serverless_data_lake_spark.operators.media_codecs import (
-            decode_wav,
-        )
-
-        rng = np.random.default_rng(13)
-        pcm = rng.integers(-32768, 32768, size=512).astype("<i2")
-        enc = getattr(audioop, f"lin2{law}")(pcm.tobytes(), 2)
-        rate, channels, out = decode_wav(self._wav(tag, enc))
-        assert (rate, channels) == (8000, 1)
-        ref = np.frombuffer(
-            getattr(audioop, f"{law}2lin")(enc, 2), dtype="<i2"
-        ).astype(np.float32) / 32768.0
-        np.testing.assert_allclose(out[:, 0], ref, atol=1e-6)
-
-    def test_stereo_and_rejections(self):
-        audioop = pytest.importorskip("audioop")
-        from serverless_data_lake_spark.operators.media_codecs import (
-            decode_wav,
-        )
-
-        pcm = np.arange(-200, 200, dtype="<i2")
-        enc = audioop.lin2ulaw(pcm.tobytes(), 2)
-        _, channels, out = decode_wav(
-            self._wav(7, enc, channels=2)
-        )
-        assert channels == 2 and out.shape == (200, 2)
-        with pytest.raises(ValueError):
-            decode_wav(self._wav(2, b"\x00" * 16))  # ADPCM: unsupported

@@ -8,75 +8,9 @@ from pyspark.sql import functions as F
 
 from serverless_data_lake_spark.operators.mixing import (
     cap_per_group,
-    extract_domain,
-    normalize_url,
     rebalance_sources,
     source_mix_report,
 )
-
-
-class TestUrlHelpers:
-    CASES = [
-        ("HTTPS://WWW.Example.COM/Path/?q=1#frag", "https://example.com/Path"),
-        ("http://example.com/", "http://example.com"),
-        ("example.com/a/b", "example.com/a/b"),
-        ("  https://sub.Example.org/X  ", "https://sub.example.org/X"),
-    ]
-
-    def test_normalize(self, spark):
-        df = spark.createDataFrame(
-            [(i, u) for i, (u, _e) in enumerate(self.CASES)],
-            "i long, url string",
-        )
-        got = {
-            r["i"]: r["n"]
-            for r in df.select(
-                "i", normalize_url(F.col("url")).alias("n")
-            ).collect()
-        }
-        for i, (_u, expect) in enumerate(self.CASES):
-            assert got[i] == expect, (i, got[i])
-
-    def test_domain(self, spark):
-        cases = [
-            ("https://www.news.example.com/a", "example.com"),
-            ("http://example.org:8080/x", "example.org"),
-            ("sub.deep.host.net/path", "host.net"),
-            ("plainhost/x", "plainhost"),  # no dot: bare host
-            # Public-suffix-aware: last TWO labels are a public
-            # suffix -> registrable domain is the last THREE.
-            ("https://news.bbc.co.uk/politics", "bbc.co.uk"),
-            ("http://www.shop.example.com.au/", "example.com.au"),
-            ("https://blogs.unam.gob.mx/x", "unam.gob.mx"),
-            # The suffix alone (no registrable label) keeps 2 labels.
-            ("https://co.uk/", "co.uk"),
-            # ac.jp is a suffix; example.ac.jp is registrable.
-            ("user.pages.example.ac.jp", "example.ac.jp"),
-            # r8: JP prefecture geographic domains are 2-label
-            # suffixes — registrable is the last three labels.
-            ("https://foo.bar.tokyo.jp/x", "bar.tokyo.jp"),
-            ("http://www.pref.aichi.jp/", "pref.aichi.jp"),
-            # r8: 3-label US locality suffixes — registrable is the
-            # last FOUR labels.
-            ("https://www.school.district.k12.ca.us/home", "district.k12.ca.us"),
-            ("library.branch.lib.ny.us", "branch.lib.ny.us"),
-            # The 3-label suffix alone falls through to the 2-label
-            # branch (k12.tx.us itself is not registrable; ties to
-            # the co.uk-alone case above).
-            ("https://k12.tx.us/", "k12.tx.us"),
-        ]
-        df = spark.createDataFrame(
-            [(i, u) for i, (u, _e) in enumerate(cases)],
-            "i long, url string",
-        )
-        got = {
-            r["i"]: r["d"]
-            for r in df.select(
-                "i", extract_domain(F.col("url")).alias("d")
-            ).collect()
-        }
-        for i, (_u, expect) in enumerate(cases):
-            assert got[i] == expect, (i, got[i])
 
 
 @pytest.fixture()

@@ -22,7 +22,6 @@ from serverless_data_lake_spark.operators.similarity import (
 )
 from serverless_data_lake_spark.operators.text import (
     detect_language,
-    document_fingerprint,
     quality_score,
     token_count,
 )
@@ -879,16 +878,6 @@ class TestText:
         # "bpe", covered in tests/test_bpe.py)
         assert row.rx == 7
 
-    def test_fingerprint_normalizes_whitespace_case(self, spark):
-        df = spark.createDataFrame(
-            [(1, "Hello   World"), (2, "hello world"), (3, "other")], ["id", "t"]
-        )
-        out = {r.id: r.fp for r in df.select(
-            "id", document_fingerprint(F.col("t")).alias("fp")
-        ).collect()}
-        assert out[1] == out[2] != out[3]
-
-
 class TestIvf:
     def test_ivf_matches_exact_topk_at_full_probe(self, spark):
         from serverless_data_lake_spark.operators.similarity import ivf_topk
@@ -1079,8 +1068,8 @@ class TestMultiProbe:
 
 
 class TestSkewOperators:
-    """Salted join / salted aggregate: row-identical to the plain
-    plan on a deliberately skewed key distribution."""
+    """Salted aggregate: row-identical to the plain plan on a
+    deliberately skewed key distribution."""
 
     def _skewed(self, spark):
         from pyspark.sql import functions as F
@@ -1092,67 +1081,6 @@ class TestSkewOperators:
             .alias("k"),
             (F.col("id") % 100).alias("v"),
         )
-
-    def test_salted_join_matches_plain(self, spark):
-        from pyspark.sql import functions as F
-
-        from serverless_data_lake_spark.operators.skew import salted_join
-
-        left = self._skewed(spark)
-        right = spark.range(50).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("w")
-        )
-        plain = left.join(right, on=["k"]).groupBy().agg(
-            F.count("*").alias("n"), F.sum(F.col("v") + F.col("w")).alias("s")
-        ).first()
-        salted = salted_join(left, right, ["k"], salt=8).groupBy().agg(
-            F.count("*").alias("n"), F.sum(F.col("v") + F.col("w")).alias("s")
-        ).first()
-        assert (plain.n, plain.s) == (salted.n, salted.s)
-        assert plain.n > 0
-
-    def test_salted_join_rejects_right_outer(self, spark):
-        # Replicating the right side would emit unmatched right rows
-        # `salt` times under right/full outer (ADVICE r2) — raise.
-        from pyspark.sql import functions as F
-
-        from serverless_data_lake_spark.operators.skew import salted_join
-
-        left = self._skewed(spark)
-        right = spark.range(5).select(F.col("id").alias("k"))
-        for how in ("right", "right_outer", "full", "full_outer", "outer"):
-            with pytest.raises(ValueError, match="salted_join supports"):
-                salted_join(left, right, ["k"], salt=8, how=how)
-
-    def test_salted_join_left_anti_matches_plain(self, spark):
-        # left_anti is safe: every right key carries every salt value,
-        # so per-(key, salt) membership equals per-key membership.
-        from pyspark.sql import functions as F
-
-        from serverless_data_lake_spark.operators.skew import salted_join
-
-        left = self._skewed(spark)
-        right = spark.range(5).select(F.col("id").alias("k"))
-        plain = left.join(right, on=["k"], how="left_anti")
-        salted = salted_join(left, right, ["k"], salt=8, how="left_anti")
-        assert plain.count() == salted.count()
-        assert salted.exceptAll(plain).count() == 0
-
-    def test_salted_join_left_outer(self, spark):
-        from pyspark.sql import functions as F
-
-        from serverless_data_lake_spark.operators.skew import salted_join
-
-        left = self._skewed(spark)
-        right = spark.range(5).select(
-            F.col("id").alias("k"), F.lit(1).alias("w")
-        )
-        out = salted_join(left, right, ["k"], salt=4, how="left")
-        assert out.count() == left.count()
-        # Unmatched keys survive with null w.
-        assert out.filter("w IS NULL").count() == left.join(
-            right, "k", "left_anti"
-        ).count()
 
     def test_salted_aggregate_matches_plain(self, spark):
         from pyspark.sql import functions as F
@@ -1661,168 +1589,6 @@ class TestPrefixFilteredJaccard:
             for r in ngram_jaccard_prefix(df, "doc_id", "text").collect()
         }
         assert got == {(3, 4)}
-
-
-class TestEmbeddingUtilities:
-    def test_normalize(self, spark):
-        import numpy as np
-
-        from serverless_data_lake_spark.operators.similarity import (
-            normalize_embeddings,
-        )
-
-        df = spark.createDataFrame(
-            [(1, [3.0, 4.0]), (2, [0.0, 0.0])], "id long, v array<double>"
-        )
-        out = {r.id: r.n for r in df.select(
-            "id", normalize_embeddings(F.col("v")).alias("n")
-        ).collect()}
-        assert np.allclose(out[1], [0.6, 0.8])
-        assert out[2] == [0.0, 0.0]  # zero vector untouched, no NaN
-
-    def test_random_projection_preserves_geometry(self, spark):
-        import numpy as np
-
-        from serverless_data_lake_spark.operators.similarity import (
-            random_projection,
-        )
-
-        rng = np.random.default_rng(17)
-        vecs = rng.normal(size=(60, 64))
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-            "id long, v array<double>",
-        )
-        proj = {
-            r.id: np.array(r.p)
-            for r in df.select(
-                "id", random_projection(F.col("v"), 32, seed=7).alias("p")
-            ).collect()
-        }
-        # JL: squared norms preserved in expectation; check the
-        # distortion of pairwise distances stays moderate.
-        ratios = []
-        for i in range(0, 40, 3):
-            for j in range(i + 1, 40, 7):
-                d_in = np.linalg.norm(vecs[i] - vecs[j])
-                d_out = np.linalg.norm(proj[i] - proj[j])
-                ratios.append(d_out / d_in)
-        assert 0.55 < min(ratios) and max(ratios) < 1.6
-        assert abs(np.mean(ratios) - 1.0) < 0.15
-
-    def test_random_projection_deterministic_and_seeded(self, spark):
-        from serverless_data_lake_spark.operators.similarity import (
-            random_projection,
-        )
-
-        df = spark.createDataFrame(
-            [(1, [1.0, -2.0, 0.5])], "id long, v array<double>"
-        )
-        a = df.select(random_projection(F.col("v"), 8, seed=1).alias("p")).first().p
-        b = df.repartition(3).select(
-            random_projection(F.col("v"), 8, seed=1).alias("p")
-        ).first().p
-        c = df.select(random_projection(F.col("v"), 8, seed=2).alias("p")).first().p
-        assert a == b      # layout-invariant
-        assert a != c      # seed changes the matrix
-
-    def test_quantize_roundtrip_error_bound(self, spark):
-        import numpy as np
-
-        from serverless_data_lake_spark.operators.similarity import (
-            dequantize_embeddings,
-            quantize_embeddings,
-        )
-
-        rng = np.random.default_rng(3)
-        vecs = rng.normal(scale=2.0, size=(30, 16))
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-            "id long, v array<double>",
-        )
-        q = quantize_embeddings(df, "v")
-        assert dict(q.dtypes)["q_codes"] == "array<tinyint>"
-        back = q.select(
-            "id", "v",
-            dequantize_embeddings(F.col("q_codes"), F.col("q_scale")).alias("d"),
-            "q_scale",
-        ).collect()
-        for r in back:
-            err = np.max(np.abs(np.array(r.v) - np.array(r.d)))
-            assert err <= r.q_scale / 2 + 1e-9
-
-    def test_quantize_zero_vector(self, spark):
-        from serverless_data_lake_spark.operators.similarity import (
-            quantize_embeddings,
-        )
-
-        df = spark.createDataFrame([(1, [0.0, 0.0])], "id long, v array<double>")
-        r = quantize_embeddings(df, "v").first()
-        assert list(r.q_codes) == [0, 0] and r.q_scale == 1.0
-
-
-class TestSplitLeakage:
-    def test_cross_split_pairs_reported(self, spark):
-        from serverless_data_lake_spark.operators.sampling import (
-            split_leakage_report,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "train"), (2, "test"), (3, "train"), (4, "val"),
-             (5, "train")],
-            "doc_id long, split string",
-        )
-        pairs = spark.createDataFrame(
-            [(1, 2), (1, 3), (2, 4), (3, 5)], "id_a long, id_b long"
-        )
-        got = {
-            (r.split_a, r.split_b): r.n_pairs
-            for r in split_leakage_report(
-                df, pairs, "doc_id"
-            ).collect()
-        }
-        # (1,2): train/test leak; (2,4): test/val leak; (1,3) and
-        # (3,5) are same-split — excluded.
-        assert got == {("test", "train"): 1, ("test", "val"): 1}
-
-    def test_clean_splits_empty_report(self, spark):
-        from serverless_data_lake_spark.operators.sampling import (
-            split_leakage_report,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "train"), (2, "train")], "doc_id long, split string"
-        )
-        pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-        assert split_leakage_report(df, pairs, "doc_id").count() == 0
-
-    def test_composes_with_real_dedup_and_splits(self, spark):
-        """End-to-end: near-dup pair under different ids straddles
-        hash splits -> the report catches exactly it."""
-        from serverless_data_lake_spark.operators.dedup import (
-            ngram_jaccard_pairs,
-        )
-        from serverless_data_lake_spark.operators.sampling import (
-            assign_splits,
-            split_leakage_report,
-        )
-
-        text = "a long enough shared document body that forms many grams"
-        rows = [(i, f"unrelated text number {i} about topic {i} entirely")
-                for i in range(10)]
-        rows += [(100, text), (101, text + " x")]
-        df = assign_splits(
-            spark.createDataFrame(rows, "doc_id long, text string"),
-            "doc_id", {"train": 0.5, "test": 0.5}, salt="leak3",
-        )
-        pairs = ngram_jaccard_pairs(df, "doc_id", "text", n=3,
-                                    threshold=0.5)
-        splits = {r.doc_id: r.split for r in df.collect()}
-        report = split_leakage_report(df, pairs, "doc_id").collect()
-        if splits[100] == splits[101]:
-            assert report == []  # landed together: no cross-split pair
-        else:
-            assert len(report) == 1 and report[0].n_pairs == 1
 
 
 def test_hyperplane_signature_frozen_literals(spark):

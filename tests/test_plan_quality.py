@@ -95,18 +95,6 @@ def test_dedup_is_single_shuffle(spark):
     assert _count_nodes(plan, "Exchange") == 1
 
 
-def test_minhash_signatures_zero_shuffle(spark):
-    """The in-row signature (r2 rewrite) is a pure map: no exchange,
-    no aggregate — embarrassingly parallel at any corpus size."""
-    from serverless_data_lake_spark.operators.dedup import minhash_signatures
-
-    docs = spark.read.parquet(data_path(SF, "documents"))
-    sig = minhash_signatures(docs, "doc_id", "text", num_hashes=16)
-    plan = _formatted_plan(spark, sig)
-    assert _count_nodes(plan, "Exchange") == 0
-    assert _count_nodes(plan, "HashAggregate") == 0
-
-
 def test_multimodal_metadata_stats_prunes_binary(spark):
     """Metadata-only profiling must not read the binary column."""
     import pyspark.sql.functions as F

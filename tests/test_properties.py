@@ -26,6 +26,15 @@ _IDENT_RE = re.compile(r"^[a-z_][a-z0-9_]*$")
 sql_text = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=300
 )
+# Printable text that can open no string, identifier or comment and end
+# no statement: after it, an appended statement is always code.
+code_text = st.text(
+    alphabet=st.characters(
+        min_codepoint=32, max_codepoint=126,
+        exclude_characters="-/'\"`\\;",
+    ),
+    max_size=300,
+)
 
 
 @pytest.fixture(scope="module")
@@ -45,25 +54,15 @@ class TestValidatorTotality:
         except QueryValidationError:
             pass  # rejection is fine; crashing is not
 
-    @given(sql=sql_text)
+    @given(body=code_text)
     @settings(max_examples=300, deadline=None)
-    def test_write_statements_never_pass(self, engine, sql):
-        """Whatever gets through must not start with a write keyword
-        outside a literal."""
-        try:
-            engine.parse(sql)
-        except QueryValidationError:
-            return
-        head = sql.strip().split(None, 1)
-        if head:
-            assert head[0].lower() in ("select", "with") or not head[0].isalpha() or True
-        # Stronger: explicit write statements are always rejected.
+    def test_write_statements_never_pass(self, engine, body):
+        """``SELECT`` + text that cannot hide what follows, then a
+        write statement: the write is code whatever the draw, so the
+        gate refuses the whole text."""
         for stmt in ("DROP TABLE t", "INSERT INTO t VALUES (1)"):
-            try:
-                engine.parse(sql + "; " + stmt)
-                raise AssertionError("write slipped through")
-            except QueryValidationError:
-                pass
+            with pytest.raises(QueryValidationError):
+                engine.parse(f"SELECT {body}; {stmt}")
 
     @given(kw=st.sampled_from([
         "DELETE", "DROP", "INSERT", "UPDATE", "CREATE", "MERGE", "COPY",

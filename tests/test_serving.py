@@ -10,7 +10,7 @@ import urllib.request
 from urllib.parse import quote
 
 import pytest
-from test_validate import BYPASSES, SPOOFS
+from test_validate import BYPASSES, METADATA_LEAKS, SPOOFS
 
 from serverless_data_lake_spark.serving import LakeServer
 from serverless_data_lake_spark.serving.chart import suggest_chart
@@ -103,6 +103,8 @@ class TestHttpApi:
             ("SELECT try_reflect('java.lang.System','getProperty','user.home') AS h",
              "try_reflect"),
             ("SELECT * FROM text.`/etc/hostname`", "not found"),
+            *((q.format(t="sales.silver.orders"), "_metadata")
+              for q in METADATA_LEAKS),
         ],
     )
     def test_query_validation_400(self, server, sql, reason):

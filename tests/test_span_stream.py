@@ -1,8 +1,7 @@
-"""Streaming span scrubbing: the foreachBatch twin must agree with
-the batch operator run over the union of all micro-batches
-(documents are rewritten independently against a static reference,
-so batch-of-union == union-of-batches by construction — the test
-certifies the wiring keeps it that way)."""
+"""Reference-span scrubbing semantics (``remove_reference_spans``),
+the batch operator behind the streaming span twin; the twin's
+stream==batch agreement is asserted through the curation fan-out
+(tests/test_curation_fanout.py)."""
 
 from __future__ import annotations
 
@@ -17,9 +16,6 @@ from serverless_data_lake_spark.operators.dedup import (
     reference_span_grams,
     remove_reference_spans,
 )
-from serverless_data_lake_spark.streaming.span_dedup_stream import (
-    start_span_scrub_stream,
-)
 
 SCHEMA = StructType(
     [
@@ -30,50 +26,27 @@ SCHEMA = StructType(
 
 PASSAGE = "the quick brown fox jumps over the lazy dog"
 
-BATCH_1 = [
-    (1, f"intro text {PASSAGE} outro"),
-    (2, "nothing shared here at all"),
-]
-BATCH_2 = [
-    (3, f"{PASSAGE} appears right at the start"),
-    (4, "quick brown fox alone is below the span threshold"),
-]
 
-
-def test_stream_matches_batch_union(spark, tmp_path):
+def test_reference_span_cut_wherever_it_appears(spark):
+    # The 9-token reference passage is cut wherever it appears in a
+    # document; an overlap shorter than k survives.
     ref = spark.createDataFrame([(100, PASSAGE)], SCHEMA)
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    out = tmp_path / "scrubbed_out"
-
-    stream = spark.readStream.schema(SCHEMA).json(str(src))
-    for batch in (BATCH_1, BATCH_2):
-        spark.createDataFrame(batch, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).json(str(src))
-        # availableNow processes everything present then stops; one
-        # query per arrival wave exercises checkpoint resume.
-        q = start_span_scrub_stream(
-            stream, ref, "doc_id", "text",
-            out_path=str(out), checkpoint=str(tmp_path / "ckpt"), k=5,
-        )
-        q.awaitTermination(120)
-
+    grams = reference_span_grams(ref, "doc_id", "text", k=5)
+    df = spark.createDataFrame(
+        [
+            (1, f"intro text {PASSAGE} outro"),
+            (2, "nothing shared here at all"),
+            (3, f"{PASSAGE} appears right at the start"),
+            (4, "quick brown fox alone is below the span threshold"),
+        ],
+        SCHEMA,
+    )
     got = {
         r.doc_id: (r.text_dedup, r.n_kept, r.n_removed)
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    union = spark.createDataFrame(BATCH_1 + BATCH_2, SCHEMA)
-    grams = reference_span_grams(ref, "doc_id", "text", k=5)
-    expect = {
-        r.doc_id: (r.text_dedup, r.n_kept, r.n_removed)
         for r in remove_reference_spans(
-            union, grams, "doc_id", "text", k=5
+            df, grams, "doc_id", "text", k=5
         ).collect()
     }
-    assert got == expect
-    # Semantics spot-checks: the 9-token reference passage is cut
-    # wherever it appears; sub-threshold overlap survives.
     assert got[1] == ("intro text outro", 3, 9)
     assert got[3] == ("appears right at the start", 5, 9)
     assert got[4][2] == 0  # "quick brown fox" alone: below k=5

@@ -15,9 +15,19 @@ from serverless_data_lake_spark.plans.validate import (
 )
 
 
+#: A catalog table over parquet files, as every lake table is.
+FILES = "gate_files"
+
+
 @pytest.fixture(scope="module")
 def engine(spark, tmp_path_factory):
-    return QueryEngine(spark, LakeConfig(root=str(tmp_path_factory.mktemp("lake"))))
+    root = tmp_path_factory.mktemp("lake")
+    spark.range(3).write.parquet(str(root / "files"))
+    spark.sql(f"DROP TABLE IF EXISTS {FILES}")
+    spark.sql(
+        f"CREATE TABLE {FILES} USING parquet LOCATION '{root / 'files'}'"
+    )
+    return QueryEngine(spark, LakeConfig(root=str(root)))
 
 
 ALLOWED = [
@@ -69,6 +79,18 @@ SPOOFS = [
     f"SELECT '` , {_REFLECT_DQ} AS c, 1 AS `' AS a, 1 AS `\x000\x00`",
 ]
 
+# Each reads the hidden _metadata column of a file relation ``{t}``,
+# whose fields hold every row's storage path.
+METADATA_LEAKS = [
+    "SELECT _metadata.file_path FROM {t}",
+    "SELECT t._metadata FROM {t} t",
+    "SELECT 1 AS a FROM {t} WHERE _metadata.file_name LIKE '%'",
+    "WITH c AS (SELECT _metadata.file_path AS p FROM {t}) SELECT * FROM c",
+    "SELECT (SELECT max(_metadata.file_path) FROM {t}) AS p",
+    "SELECT 1 AS a WHERE EXISTS (SELECT _metadata FROM {t})",
+    "SELECT 1 AS a WHERE 'x' IN (SELECT _metadata.file_path FROM {t})",
+]
+
 BLOCKED = [
     "DROP TABLE t",
     "INSERT INTO t VALUES (1)",
@@ -114,6 +136,7 @@ BLOCKED = [
     "SELECT * FROM text.`/etc/hostname`",
     "SELECT * FROM parquet.`/tmp`",
     "SELECT input_file_name()",
+    *(q.format(t=FILES) for q in METADATA_LEAKS),
 ]
 
 
@@ -126,6 +149,19 @@ def test_allowed(engine, sql):
 def test_blocked(engine, sql):
     with pytest.raises(QueryValidationError):
         engine.dataframe(sql)
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT * FROM {t}",
+        "SELECT count(*) AS n FROM {t}",
+        "SELECT a.id FROM {t} a JOIN {t} b ON a.id = b.id",
+        "SELECT id FROM {t} WHERE id IN (SELECT id FROM {t})",
+    ],
+)
+def test_file_relations_pass_without_metadata(engine, sql):
+    assert engine.dataframe(sql.format(t=FILES)).count() >= 1
 
 
 def test_length_cap():
