@@ -2331,7 +2331,7 @@ def _decont_stream_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             _GATE_LOCAL_GRAM_CAP,
         )
         clean_decont, grams = decontaminate_stream(
-            train_stream, test, "doc_id", "text", n=5,
+            test, "doc_id", "text", n=5,
             broadcast=True if tg is not None else None,
             test_grams=tg,
         )

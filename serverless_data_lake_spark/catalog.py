@@ -39,9 +39,10 @@ the next version to a temp file inside ``_log/`` and renames it to its
 version name. That rename is the commit point: a version file is
 either complete or absent, so a crash before it (a torn temp file
 included) leaves the table as it was. The commit then rolls forward:
-staged files move in, removed files are deleted (archived under
-``retain_history``), older version files are deleted when history is
-off, and the staging dir goes last. The roll-forward is idempotent,
+staged files move in, the files it removes and the older version
+files are deleted, and the staging dir goes last. So a table keeps
+one version and no replaced file outlives the commit that replaced
+it. The roll-forward is idempotent,
 and every write and :meth:`TableStore.register_all` first finishes one
 a crash cut short (its staging dir still exists), so after the next
 write or ``register_all`` a table holds exactly its pre-write or its
@@ -77,7 +78,6 @@ from pyspark.sql.types import StructType
 from serverless_data_lake_spark.config import LakeConfig
 
 _LOG_DIR = "_log"
-_ARCHIVE_DIR = "_archive"
 
 
 class CommitConflict(RuntimeError):
@@ -114,31 +114,15 @@ class TableInfo:
 class TableStore:
     """Catalog + storage manager for one lake.
 
-    Each table's state is the newest version of its commit log (see
-    the module docstring: single writer, conflicts raise
+    Each table's state is its one version in the commit log: every
+    commit deletes the files it removes and the older version files
+    (see the module docstring: single writer, conflicts raise
     :class:`CommitConflict`, and directory-listing readers can see a
-    write mid roll-forward).
+    write mid roll-forward)."""
 
-    ``retain_history=True`` turns on time travel: the log keeps every
-    version, so each committed write is a snapshot (version, data
-    files, schema), and files replaced by later writes move to an
-    ``_archive/`` subdirectory instead of being deleted (leading
-    underscore → invisible to Spark's directory scans).
-    :meth:`read_version` reconstructs any kept version; :meth:`vacuum`
-    prunes history. Without it, each commit deletes the older version
-    files. This is the Iceberg/Delta snapshot idea over plain parquet —
-    storage grows with churn until vacuumed, exactly like their
-    retention model."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        config: LakeConfig,
-        retain_history: bool = False,
-    ) -> None:
+    def __init__(self, spark: SparkSession, config: LakeConfig) -> None:
         self.spark = spark
         self.config = config
-        self.retain_history = retain_history
 
     # ------------------------------------------------------------------
     # Hadoop FS helpers (work for file:// and s3a:// alike)
@@ -159,8 +143,8 @@ class TableStore:
     def _walk_data_files(self, directory: str) -> list[tuple[str, str, int]]:
         """All data files under ``directory`` recursively as
         ``(abs_path, rel_path, size_bytes)``. ``_``/``.``-prefixed
-        files AND directories are skipped at every level (metadata,
-        ``_archive``), so hive partition subdirs (``col=value/...``)
+        files AND directories are skipped at every level (``_log`` and
+        Spark's markers), so hive partition subdirs (``col=value/...``)
         are walked and flat tables behave exactly as before
         (rel == basename)."""
         fs = self._fs(directory)
@@ -218,15 +202,6 @@ class TableStore:
         if not p.startswith(r):
             raise ValueError(f"{path} is not under {root}")
         return p[len(r):]
-
-    def _archive_file(self, location: str, path: str, rel: str) -> None:
-        """Move a data file into the table's ``_archive/`` dir,
-        preserving its path relative to the table root (partition
-        subdirs included) instead of deleting it."""
-        fs = self._fs(location)
-        dst = f"{location}/{_ARCHIVE_DIR}/{rel}"
-        fs.mkdirs(self._hpath(dst.rsplit("/", 1)[0]))
-        fs.rename(self._hpath(path), self._hpath(dst))
 
     # ------------------------------------------------------------------
     # Commit log: {location}/_log/{version:020d}.json. Every write
@@ -352,25 +327,20 @@ class TableStore:
 
     def _roll_forward(self, location: str, record: dict) -> None:
         """Make the table dir match ``record``, its newest version:
-        move the staged files in, delete (or archive) the removed ones,
-        delete older version files when history is off, and drop the
-        staging dir last, so a version is half rolled forward exactly
-        while its staging dir exists. Idempotent, and the staged files
-        always move in before the files they replace go, so a crash at
-        any step loses no rows."""
+        move the staged files in, delete the removed ones and the older
+        version files, and drop the staging dir last, so a version is
+        half rolled forward exactly while its staging dir exists.
+        Idempotent, and the staged files always move in before the
+        files they replace go, so a crash at any step loses no rows."""
         staging = location + record["staging"]
         self._move_files_into(staging, location)
         for rel in record["remove"]:
             f = f"{location}/{rel}"
             if self._exists(f):
-                if self.retain_history:
-                    self._archive_file(location, f, rel)
-                else:
-                    self._delete(f)
-        if not self.retain_history:
-            for v in self._versions(location):
-                if v < record["version"]:
-                    self._delete(self._version_path(location, v))
+                self._delete(f)
+        for v in self._versions(location):
+            if v < record["version"]:
+                self._delete(self._version_path(location, v))
         self._delete(staging)
 
     def _open(
@@ -390,6 +360,20 @@ class TableStore:
             self._roll_forward(location, record)
             self._register(info, record["files"])
         return info, record
+
+    def vacuum(self, database: str, table: str) -> None:
+        """Delete what crashed commits left: every
+        ``{location}__stage_*`` dir and the temp files in ``_log/``. A
+        write under the single-writer rule: like every write it first
+        finishes a roll-forward a crash cut short, after which no
+        version names a staging dir that still exists."""
+        info, _ = self._open(database, table)
+        if info is None:
+            raise KeyError(f"no such table {database}.{table}")
+        location = info.location
+        for leftover in (f"{location}__stage_*", f"{location}/{_LOG_DIR}/.*.tmp"):
+            for st in self._fs(location).globStatus(self._hpath(leftover)):
+                self._delete(st.getPath().toString())
 
     # ------------------------------------------------------------------
     # Zone maps: per-data-file [min, max] of the lead primary key,
@@ -463,121 +447,6 @@ class TableStore:
                 or entry["zone_map"][0] > batch_max
             )
         ]
-
-    # ------------------------------------------------------------------
-    # Snapshots / time travel (retain_history=True): the versions of
-    # the log are the snapshots.
-    # ------------------------------------------------------------------
-    def _location(self, database: str, table: str) -> str:
-        location = self.config.table_path(database, table)
-        if not self._versions(location):
-            raise KeyError(f"no such table {database}.{table}")
-        return location
-
-    def _history(self, location: str) -> list[int]:
-        """Versions kept for time travel: the whole log under
-        ``retain_history``, none otherwise (each commit then deletes
-        the older versions, and the newest is the current state)."""
-        return self._versions(location) if self.retain_history else []
-
-    def snapshots(self, database: str, table: str) -> list[dict]:
-        """Recorded snapshots, oldest first: version, timestamp,
-        file count."""
-        location = self._location(database, table)
-        out = []
-        for v in self._history(location):
-            snap = self._read_json(self._version_path(location, v))
-            out.append(
-                {
-                    "version": v,
-                    "timestamp": snap["timestamp"],
-                    "n_files": len(snap["files"]),
-                }
-            )
-        return out
-
-    def read_version(self, database: str, table: str, version: int) -> DataFrame:
-        """The table exactly as of a recorded snapshot (time travel).
-        Files live either in the table dir (still current) or in
-        ``_archive/`` (replaced since); a vacuumed snapshot raises."""
-        location = self._location(database, table)
-        versions = self._history(location)
-        if version not in versions:
-            raise KeyError(
-                f"no snapshot version {version} for {database}.{table} "
-                f"(have: {versions})"
-            )
-        snap = self._read_json(self._version_path(location, version))
-        schema = StructType.fromJson(json.loads(snap["schema"]))
-        pby = snap["partition_by"]
-        current: list[str] = []
-        archived: list[str] = []
-        for name in snap["files"]:
-            cur = f"{location}/{name}"
-            arch = f"{location}/{_ARCHIVE_DIR}/{name}"
-            if self._exists(cur):
-                current.append(cur)
-            elif self._exists(arch):
-                archived.append(arch)
-            else:
-                raise KeyError(
-                    f"snapshot {version} of {database}.{table} was "
-                    f"vacuumed (missing file {name})"
-                )
-        if not current and not archived:
-            return self.spark.createDataFrame([], schema)
-        # Partitioned snapshots: partition values live in the relative
-        # directory names, so each group reads with its own basePath
-        # (the archive mirrors the table's partition layout).
-        parts = []
-        for base, paths in (
-            (location, current),
-            (f"{location}/{_ARCHIVE_DIR}", archived),
-        ):
-            if not paths:
-                continue
-            reader = self.spark.read.schema(schema)
-            if pby:
-                reader = reader.option("basePath", base)
-            parts.append(reader.parquet(*paths))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def vacuum(self, database: str, table: str, keep_last: int = 1) -> int:
-        """Delete all but the last ``keep_last`` versions (the newest
-        always stays: it is the current state), then the archived files
-        no kept version references. Returns the number of data files
-        deleted.
-
-        A write under the single-writer rule: like every write it first
-        finishes a roll-forward a crash cut short, after which no
-        version names a staging dir that still exists. So it also
-        deletes what crashed commits left: every ``{location}__stage_*``
-        dir and the temp files in ``_log/``."""
-        location = self._location(database, table)
-        self._open(database, table)
-        for leftover in (f"{location}__stage_*", f"{location}/{_LOG_DIR}/.*.tmp"):
-            for st in self._fs(location).globStatus(self._hpath(leftover)):
-                self._delete(st.getPath().toString())
-        versions = self._versions(location)
-        kept = versions[-max(keep_last, 1):]
-        referenced: set[str] = set()
-        for v in kept:
-            referenced.update(
-                self._read_json(self._version_path(location, v))["files"]
-            )
-        for v in versions[: len(versions) - len(kept)]:
-            self._delete(self._version_path(location, v))
-        removed = 0
-        arch = f"{location}/{_ARCHIVE_DIR}"
-        if self._exists(arch):
-            for f, rel, _ in self._walk_data_files(arch):
-                if rel not in referenced:
-                    self._delete(f)
-                    removed += 1
-        return removed
 
     # ------------------------------------------------------------------
     # Catalog registration
@@ -1044,74 +913,6 @@ class TableStore:
         Identical mechanics to :meth:`merge` (source may legitimately
         carry several rows per key, all of which are inserted)."""
         return self.merge(database, table, source, keys, partition_by)
-
-    def compact(
-        self,
-        database: str,
-        table: str,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        small_file_bytes: int | None = None,
-        sort_by: list[str] | None = None,
-    ) -> int:
-        """Bin-pack small data files into ~target-size files.
-
-        Incremental merges and appends accumulate small files (each
-        micro-batch writes at least one); scans then pay per-file open
-        cost and lose row-group locality — the classic small-file
-        problem. This rewrites only files below ``small_file_bytes``
-        (default: half the target), coalesced to
-        ceil(total/target) output files; large files are untouched.
-        Returns the number of files compacted. Commits like every
-        write, as one that removes the compacted files: after a crash
-        the table holds the pre- or the post-compaction files.
-
-        ``sort_by`` re-clusters the rewritten rows: a range
-        repartition + in-partition sort on the given columns, so
-        each output file covers a tight key range. On a PK-keyed
-        table this directly sharpens the zone maps (merge prunes
-        more files) and any range-filtered scan skips whole files
-        via parquet min/max — the Delta OPTIMIZE ZORDER idea,
-        restricted to lexicographic clustering."""
-        info, base = self._open(database, table)
-        if info is None:
-            raise KeyError(f"no such table {database}.{table}")
-        if info.bucket_by:
-            # Bucket membership is baked into file names; rewriting
-            # them would break the bucket→file contract. Bucketed
-            # tables are written in one pass and never accrete small
-            # files, so there is nothing to compact.
-            return 0
-        threshold = small_file_bytes or target_file_bytes // 2
-        # Group small files by their partition directory ("" for a
-        # flat table): compaction is partition-local, so each
-        # rewritten file stays inside its partition and the rest of
-        # the table is untouched.
-        groups: dict[str, list[tuple[str, int]]] = {}
-        for rel, entry in base["files"].items():
-            if entry["size"] < threshold:
-                d = rel.rsplit("/", 1)[0] if "/" in rel else ""
-                groups.setdefault(d, []).append((rel, entry["size"]))
-        groups = {d: fs_ for d, fs_ in groups.items() if len(fs_) >= 2}
-        if not groups:
-            return 0
-        staging = f"{info.location}__stage_{uuid.uuid4().hex[:8]}"
-        small: list[str] = []
-        for d, members in groups.items():
-            paths = [f"{info.location}/{rel}" for rel, _ in members]
-            total = sum(s for _, s in members)
-            n_out = max(1, -(-total // target_file_bytes))
-            dst = f"{staging}/{d}" if d else staging
-            src = self.spark.read.schema(info.data_schema).parquet(*paths)
-            if sort_by:
-                out = src.repartitionByRange(
-                    int(n_out), *[F.col(c) for c in sort_by]
-                ).sortWithinPartitions(*sort_by)
-            else:
-                out = src.repartition(int(n_out))
-            out.write.mode("overwrite").parquet(dst)
-            small.extend(rel for rel, _ in members)
-        self._commit(info, base, staging, small, register=False)
-        return len(small)
 
     # ------------------------------------------------------------------
     # Schema evolution helpers

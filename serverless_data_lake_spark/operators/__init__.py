@@ -22,7 +22,7 @@
   rebalancing to a max origin share.
 - ``classifier`` — trainable quality classifier (hashed
   token+bigram features → logistic regression, JVM-side via
-  pyspark.ml) + the GPT-3 Pareto keep rule.
+  pyspark.ml).
 - ``packing``    — GPT-style sequence packing via distributed
   prefix sum; sequence assembly and ordered training export.
 - ``bpe``        — byte-level BPE tokenization against a frozen

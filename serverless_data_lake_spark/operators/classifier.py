@@ -28,7 +28,7 @@ import os
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.feature import HashingTF, SQLTransformer
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 QUALITY_SCORE_COL = "quality_prob"
@@ -148,18 +148,3 @@ def score_quality(
         "rawPrediction", "__qc_prob", "prediction",
     )
 
-
-def pareto_keep_probability(
-    score: Column, alpha: float = 9.0
-) -> Column:
-    """The probability induced by GPT-3's score-dependent keep rule
-    (Brown et al. 2020 appendix A: keep iff
-    ``pareto(alpha) > 1 − score``; for a Lomax/numpy Pareto,
-    ``P(X > x) = (1 + x)^-alpha``, so the keep probability is
-    ``(2 − score)^-alpha``): a perfect scorer always survives, a
-    zero scorer keeps a ``2^-alpha`` re-weighting tail instead of a
-    hard cut. Compose with
-    :func:`operators.sampling.importance_sample` by passing this as
-    the weight — its hash coin replaces the random draw, making the
-    selection deterministic."""
-    return F.pow(F.lit(2.0) - score, F.lit(-float(alpha)))

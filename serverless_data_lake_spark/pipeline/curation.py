@@ -38,8 +38,8 @@ over the same 12-stage sf0.1 chain (233 s vs 39 s):
   ``rebalance_sources`` counts + collects its per-group sizes) —
   each action would otherwise re-execute the whole upstream chain;
 - stages whose operator scans its input TWICE (span removal,
-  reference scrubbing, decontamination and the perplexity gate all
-  aggregate then join back) — lazily stacked, k such stages
+  decontamination and the perplexity gate all aggregate then join
+  back) — lazily stacked, k such stages
   duplicate the upstream plan 2^k times inside the final action.
 
 With the boundaries cached, each segment computes exactly once and
@@ -86,10 +86,6 @@ class CurationPipeline:
         self.id_col = id_col
         self.text_col = text_col
         self._stages: list[tuple[str, Callable[[DataFrame], DataFrame]]] = []
-        # Stages that reason across the WHOLE corpus (global dedup)
-        # cannot stream; per-document stages can. Tracked so the
-        # streaming twin can refuse unsound pipelines loudly.
-        self._corpus_global: set[str] = set()
         # Stages whose operator runs driver actions over its input
         # during construction, or scans it more than once; build()
         # materializes their input so neither re-executes upstream.
@@ -97,22 +93,12 @@ class CurationPipeline:
         self._persisted: list[DataFrame] = []
 
     def _add(
-        self,
-        name: str,
-        fn,
-        stream_safe: bool = True,
-        eager_input: bool = False,
+        self, name: str, fn, eager_input: bool = False
     ) -> "CurationPipeline":
         self._stages.append((name, fn))
-        if not stream_safe:
-            self._corpus_global.add(name)
         if eager_input:
             self._eager_input.add(name)
         return self
-
-    @property
-    def corpus_global_stages(self) -> list[str]:
-        return [n for n, _f in self._stages if n in self._corpus_global]
 
     # -- dedup family --------------------------------------------------
     def exact_dedup(self) -> "CurationPipeline":
@@ -121,7 +107,6 @@ class CurationPipeline:
         return self._add(
             "exact_dedup",
             lambda df: dedup_exact(df, [self.text_col], id_col=self.id_col),
-            stream_safe=False,
         )
 
     def near_dedup(
@@ -156,10 +141,7 @@ class CurationPipeline:
                 raise ValueError(f"unknown near-dedup method {method!r}")
             return dedup_corpus(df, pairs, self.id_col)
 
-        return self._add(
-            f"near_dedup[{method}]", run,
-            stream_safe=False, eager_input=True,
-        )
+        return self._add(f"near_dedup[{method}]", run, eager_input=True)
 
     def remove_duplicate_spans(
         self, k: int = 13, drop_empty: bool = True
@@ -191,54 +173,7 @@ class CurationPipeline:
                 )
             return out
 
-        return self._add(
-            f"span_dedup[k={k}]", run,
-            stream_safe=False, eager_input=True,
-        )
-
-    def scrub_reference_spans(
-        self,
-        ref: DataFrame,
-        k: int = 13,
-        drop_empty: bool = True,
-        broadcast: bool = True,
-    ) -> "CurationPipeline":
-        """Cut every ≥k-token span that also occurs in a static
-        reference corpus (span-granular decontamination — the
-        document survives with the passage excised)."""
-        from serverless_data_lake_spark.operators.dedup import (
-            reference_span_grams,
-            remove_reference_spans,
-        )
-
-        grams = None
-
-        def run(df: DataFrame) -> DataFrame:
-            nonlocal grams
-            if grams is None:
-                grams = reference_span_grams(
-                    ref, self.id_col, self.text_col, k
-                )
-            extra = [
-                c for c in df.columns
-                if c not in (self.id_col, self.text_col)
-            ]
-            rewritten = remove_reference_spans(
-                df, grams, self.id_col, self.text_col,
-                k=k, broadcast=broadcast,
-            )
-            if drop_empty:
-                rewritten = rewritten.filter(F.col("n_kept") > 0)
-            out = rewritten.select(
-                self.id_col, F.col("text_dedup").alias(self.text_col)
-            )
-            if extra:
-                out = out.join(
-                    df.select(self.id_col, *extra), self.id_col, "left"
-                )
-            return out
-
-        return self._add(f"ref_span_scrub[k={k}]", run, eager_input=True)
+        return self._add(f"span_dedup[k={k}]", run, eager_input=True)
 
     def decontaminate(
         self, test: DataFrame, n: int = 13, min_shared: int = 1
@@ -309,69 +244,6 @@ class CurationPipeline:
             f"perplexity<={max_perplexity:g}", run, eager_input=True
         )
 
-    def classifier_filter(
-        self, model, min_prob: float | None = None, alpha: float | None = None,
-        salt: str = "",
-    ) -> "CurationPipeline":
-        """Gate on a trained quality classifier
-        (:mod:`operators.classifier`): either a hard cut
-        (``min_prob``) or GPT-3's Pareto score-dependent keep rule
-        (``alpha`` — deterministic via the hash coin). Exactly one
-        of the two must be given. Scoring is a JVM-side model
-        transform (the trainer launders the model's training summary
-        so its closure can share a plan with the audit taps'
-        Observation nodes — see
-        :func:`operators.classifier.train_quality_classifier`).
-
-        Shape: score a projected (id, score) side, PERSIST it,
-        filter, semi-join back — never a direct ``filter`` on the
-        score column: a filter predicate evaluates the whole
-        model-UDF chain per row on the interpreted path (pushdown
-        inlines the chain into the predicate; measured 20× the cost
-        of the same chain in a projection at sf0.1). The cache node
-        pins the chain inside a projection evaluated once; the
-        semi-join back makes the stage dual-scan, hence an eager
-        boundary, like the perplexity gate."""
-        if (min_prob is None) == (alpha is None):
-            raise ValueError("pass exactly one of min_prob / alpha")
-        from serverless_data_lake_spark.operators.classifier import (
-            QUALITY_SCORE_COL,
-            pareto_keep_probability,
-            score_quality,
-        )
-
-        def run(df: DataFrame) -> DataFrame:
-            scored = score_quality(
-                df.select(self.id_col, self.text_col), model
-            ).select(
-                F.col(self.id_col).alias("__qid"),
-                F.col(QUALITY_SCORE_COL).alias("__qs"),
-            ).persist()
-            self._persisted.append(scored)
-            if min_prob is not None:
-                keep = scored.filter(F.col("__qs") >= min_prob)
-            else:
-                from serverless_data_lake_spark.operators.sampling import (
-                    importance_sample,
-                )
-
-                keep = importance_sample(
-                    scored, "__qid",
-                    pareto_keep_probability(F.col("__qs"), alpha=alpha),
-                    salt=salt,
-                )
-            return df.join(
-                keep.select("__qid"),
-                df[self.id_col] == F.col("__qid"),
-                "left_semi",
-            )
-
-        name = (
-            f"classifier>={min_prob:g}" if min_prob is not None
-            else f"classifier_pareto[{alpha:g}]"
-        )
-        return self._add(name, run, eager_input=True)
-
     def length_filter(
         self,
         min_tokens: int = 0,
@@ -407,8 +279,7 @@ class CurationPipeline:
         inlines aliases into the predicate through every projection,
         and the signals reference the gram array ~6 times with no
         HOF subexpression elimination (the direct-filter variant
-        measured 32× on the repetition_stats entry; same family of
-        trap as the classifier stage's 20×). The cache pins the
+        measured 32× on the repetition_stats entry). The cache pins the
         signal computation inside a projection evaluated once."""
         from serverless_data_lake_spark.operators.text import (
             repetition_stats,
@@ -448,8 +319,6 @@ class CurationPipeline:
                 df, group_col, self.id_col, max_rows,
                 priority_col=priority_col,
             ),
-            # Per-batch caps would re-admit max_rows per batch.
-            stream_safe=False,
         )
 
     def rebalance_sources(
@@ -466,7 +335,6 @@ class CurationPipeline:
             lambda df: rebalance_sources(
                 df, group_col, self.id_col, max_frac, salt=salt
             ),
-            stream_safe=False,
             eager_input=True,
         )
 
@@ -491,10 +359,7 @@ class CurationPipeline:
             ).drop("n_tokens")
             return df.join(meta, self.id_col)
 
-        return self._add(
-            f"pack[{capacity}]", run,
-            stream_safe=False, eager_input=True,
-        )
+        return self._add(f"pack[{capacity}]", run, eager_input=True)
 
     # -- selection ------------------------------------------------------
     def sample(self, rate: float, salt: str = "") -> "CurationPipeline":

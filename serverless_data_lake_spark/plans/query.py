@@ -18,7 +18,8 @@ Pipeline (mirrors the reference query API lifecycle,
    same tree, so Spark never parses the text a second time;
 5. row cap             — ``limit(N + 1)`` and a ``truncated`` flag;
 6. sanitized errors    — storage paths stripped from messages; what the
-   gate refuses is a ``QueryValidationError`` (HTTP 400).
+   gate refuses, and an analysis error that is the query's own fault
+   (``_QUERY_FAULTS``), is a ``QueryValidationError`` (HTTP 400).
 
 The engine hardens the session it serves before its first parse: the
 reflective builtins and ``input_file_name`` are dropped from its
@@ -78,6 +79,18 @@ _OUTSIDE_THE_LAKE = (
     "UNRESOLVED_ROUTINE",
     "UNRESOLVABLE_TABLE_VALUED_FUNCTION",
     "TABLE_OR_VIEW_NOT_FOUND",
+)
+# Analysis errors that are the query's own fault: a column the tables
+# lack, or an operator over the wrong types. They answer like the gate
+# (HTTP 400); storage faults (PATH_NOT_FOUND) stay engine errors.
+_QUERY_FAULTS = (
+    "UNRESOLVED_COLUMN",
+    "FIELD_NOT_FOUND",
+    "AMBIGUOUS_REFERENCE",
+    "DATATYPE_MISMATCH",
+    "WRONG_NUM_ARGS",
+    "MISSING_AGGREGATION",
+    "MISSING_GROUP_BY",
 )
 
 
@@ -151,8 +164,11 @@ class QueryEngine:
             # dialect.reverse_epoch_ms.
             alt = is_epoch_ms_type_mismatch(exc) and reverse_epoch_ms(rewritten)
             if not alt:
-                raise
+                raise _query_fault(exc) from None
+        try:
             return self._analyze(self._parse(transpile(alt)))
+        except AnalysisException as exc:
+            raise _query_fault(exc) from None
 
     def _analyze(self, plan) -> DataFrame:
         _, _, dataset = self._session_gate
@@ -256,6 +272,15 @@ def _reads_file_metadata(plan) -> bool:
                 if output.apply(j).metadata().contains(_FILE_METADATA_KEY):
                     return True
     return False
+
+
+def _query_fault(exc: AnalysisException) -> Exception:
+    """``exc`` as a ``QueryValidationError`` with its paths scrubbed
+    when it is the query's own fault (``_QUERY_FAULTS``), else ``exc``
+    itself."""
+    if (exc.getCondition() or "").split(".")[0] in _QUERY_FAULTS:
+        return QueryValidationError(_friendly_error(exc))
+    return exc
 
 
 def _refused(reason: str) -> QueryValidationError:

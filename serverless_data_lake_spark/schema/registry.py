@@ -136,13 +136,6 @@ class SchemaRegistry:
                     out.append(cfg)
         return out
 
-    def delete_gold_job(self, domain: str, name: str) -> bool:
-        path = os.path.join(self._dir(domain, "gold", name), "config.yaml")
-        if os.path.exists(path):
-            os.remove(path)
-            return True
-        return False
-
     # ------------------------------------------------------------------
     # Execution status (reference O5: last_execution.yaml)
     # ------------------------------------------------------------------

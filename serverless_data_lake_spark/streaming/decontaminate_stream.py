@@ -44,7 +44,6 @@ from serverless_data_lake_spark.operators.dedup import (
 
 
 def decontaminate_stream(
-    train_stream: DataFrame,
     test: DataFrame,
     id_col: str,
     text_col: str,

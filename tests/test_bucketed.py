@@ -89,10 +89,6 @@ class TestBucketedGuards:
         with pytest.raises(ValueError, match="overwrite-only"):
             store.append("d_gold", "facts", _facts(spark, 10))
 
-    def test_compact_is_noop(self, spark, store):
-        store.create_bucketed("d_gold", "facts", _facts(spark), ["k"], 8)
-        assert store.compact("d_gold", "facts") == 0
-
 
 class TestBucketedRestart:
     def test_register_all_restores_bucketing(self, spark, store, tmp_path):

@@ -1,5 +1,5 @@
 """TableStore mechanics: file-level COW merge rewrites only matched
-files; compaction bin-packs small files; schema evolution."""
+files; schema evolution; crash recovery and commit conflicts."""
 
 from __future__ import annotations
 
@@ -102,45 +102,6 @@ class TestMergeCow:
         rows = {r.k: (r.v, r.score) for r in store.read("db", "t").collect()}
         assert rows[1] == ("x", None)
         assert rows[2] == ("y", 9.5)
-
-
-class TestCompaction:
-    def test_compacts_small_files(self, spark, store):
-        store.create_or_replace(
-            "db", "t",
-            spark.range(0, 10).select(F.col("id").alias("k")).coalesce(1),
-            ["k"],
-        )
-        for i in range(5):
-            store.append(
-                "db", "t",
-                spark.range(100 + i, 101 + i).select(
-                    F.col("id").alias("k")
-                ).coalesce(1),
-            )
-        before = _files(store, "db", "t")
-        assert len(before) >= 6
-        compacted = store.compact("db", "t")
-        assert compacted == len(before)
-        after = _files(store, "db", "t")
-        assert len(after) < len(before)
-        assert store.read("db", "t").count() == 15
-
-    def test_compact_noop_on_single_file(self, spark, store):
-        store.create_or_replace(
-            "db", "t", spark.range(5).select(F.col("id").alias("k")).coalesce(1)
-        )
-        assert store.compact("db", "t") == 0
-
-    def test_compact_skips_large_files(self, spark, store):
-        store.create_or_replace(
-            "db", "t", spark.range(5).select(F.col("id").alias("k")).coalesce(1)
-        )
-        store.append(
-            "db", "t", spark.range(5, 10).select(F.col("id").alias("k")).coalesce(1)
-        )
-        # threshold below any real file size -> nothing is "small"
-        assert store.compact("db", "t", small_file_bytes=1) == 0
 
 
 class TestCommitRecovery:
@@ -249,12 +210,11 @@ class TestCommitFaultInjection:
     """A crash at every filesystem step of one commit: after a fresh
     store's ``register_all`` and one no-op write, the table holds
     exactly its pre-write or its post-write state — rows, schema,
-    partition list, file count and, with history, the version list —
-    no version is left half rolled forward, and the newest version's
-    file map is exactly the data files on disk, each with a zone
-    map. A crash before the version's rename (calls 1-2) leaves a
-    staging dir, which ``vacuum`` removes without changing the
-    table."""
+    partition list and file count — in one version: no version is
+    left half rolled forward, and the table's version file map is
+    exactly the data files on disk, each with a zone map. A crash
+    before the version's rename (calls 1-2) leaves a staging dir,
+    which ``vacuum`` removes without changing the table."""
 
     def _frame(self, spark, lo, hi, tag):
         return spark.range(lo, hi).select(
@@ -267,47 +227,42 @@ class TestCommitFaultInjection:
             "db", "t", self._frame(spark, 0, 10, "a"), ["k"]
         )
 
-    def _state(self, spark, root, history):
-        store = TableStore(spark, LakeConfig(root=root), history)
+    def _state(self, spark, root):
+        store = TableStore(spark, LakeConfig(root=root))
         info = store.info("db", "t")
         if info is None:
             return None
         df = store.read("db", "t")
         rows = sorted(repr(sorted(r.asDict().items())) for r in df.collect())
         newest = store._latest(info.location)
+        assert len(store._versions(info.location)) == 1
         assert not os.path.exists(info.location + newest["staging"])
         assert set(newest["files"]) == _on_disk(info.location)
         assert all(e["zone_map"] for e in newest["files"].values())
-        versions = [s["version"] for s in store.snapshots("db", "t")]
-        if history:
-            latest = store.read_version("db", "t", versions[-1])
-            assert sorted(
-                repr(sorted(r.asDict().items())) for r in latest.collect()
-            ) == rows
         return (
             rows, df.schema.simpleString(), info.partition_by,
-            len(newest["files"]), versions,
+            len(newest["files"]),
         )
 
-    def _noop_write(self, spark, root, history):
+    def _noop_write(self, spark, root):
         """Upsert one stored row unchanged."""
-        store = TableStore(spark, LakeConfig(root=root), history)
+        store = TableStore(spark, LakeConfig(root=root))
         if store.info("db", "t") is None:
             return
         df = store.read("db", "t")
         row = spark.createDataFrame([df.first()], df.schema)
         store.merge("db", "t", row, ["k"])
 
-    def _check(self, spark, tmp_path, setup, write, history=False):
+    def _check(self, spark, tmp_path, setup, write):
         template = str(tmp_path / "template")
         os.makedirs(template)
-        setup(TableStore(spark, LakeConfig(root=template), history))
-        pre = self._state(spark, template, history)
+        setup(TableStore(spark, LakeConfig(root=template)))
+        pre = self._state(spark, template)
 
         def run(name, fail_at):
             root = str(tmp_path / name)
             shutil.copytree(template, root)
-            store = TableStore(spark, LakeConfig(root=root), history)
+            store = TableStore(spark, LakeConfig(root=root))
             calls = _faulty(store, fail_at)
             if fail_at:
                 with pytest.raises(_Crash):
@@ -317,23 +272,21 @@ class TestCommitFaultInjection:
             return root, calls["n"]
 
         root, n_calls = run("clean", 0)
-        post = self._state(spark, root, history)
+        post = self._state(spark, root)
         assert pre != post and n_calls >= 4
         for k in range(1, n_calls + 1):
             root, _ = run(f"crash{k}", k)
-            TableStore(spark, LakeConfig(root=root), history).register_all()
-            got = self._state(spark, root, history)
+            TableStore(spark, LakeConfig(root=root)).register_all()
+            got = self._state(spark, root)
             assert got in (pre, post), f"crash at mutating call {k}"
             if k <= 2 and got:
                 assert _leftovers(root)
-                TableStore(spark, LakeConfig(root=root), history).vacuum(
-                    "db", "t", keep_last=max(1, len(got[4]))
-                )
+                TableStore(spark, LakeConfig(root=root)).vacuum("db", "t")
                 assert not _leftovers(root)
-                assert self._state(spark, root, history) == got
-            self._noop_write(spark, root, history)
+                assert self._state(spark, root) == got
+            self._noop_write(spark, root)
             # The no-op write may rewrite a file, not change the table.
-            after = self._state(spark, root, history)
+            after = self._state(spark, root)
             assert (after and after[:3]) == (got and got[:3]), (
                 f"crash at mutating call {k}"
             )
@@ -355,12 +308,6 @@ class TestCommitFaultInjection:
             lambda store: self._widening_merge(spark, store),
         )
 
-    def test_merge_widening_schema_with_history(self, spark, tmp_path):
-        self._check(
-            spark, tmp_path, self._flat(spark),
-            lambda store: self._widening_merge(spark, store), history=True,
-        )
-
     def test_append(self, spark, tmp_path):
         def write(store):
             store.append("db", "t", self._frame(spark, 20, 30, "b"))
@@ -373,15 +320,6 @@ class TestCommitFaultInjection:
             lambda store: self._partitioned_replace(spark, store),
         )
 
-    def test_replace_flat_with_partitioned_with_history(
-        self, spark, tmp_path
-    ):
-        self._check(
-            spark, tmp_path, self._flat(spark),
-            lambda store: self._partitioned_replace(spark, store),
-            history=True,
-        )
-
     def test_create_new_table(self, spark, tmp_path):
         def write(store):
             store.create_or_replace(
@@ -389,16 +327,6 @@ class TestCommitFaultInjection:
             )
 
         self._check(spark, tmp_path, lambda store: None, write)
-
-    def test_compact(self, spark, tmp_path):
-        def setup(store):
-            self._flat(spark)(store)
-            store.append("db", "t", self._frame(spark, 10, 20, "b"))
-
-        def write(store):
-            assert store.compact("db", "t") == 2
-
-        self._check(spark, tmp_path, setup, write)
 
 
 class TestCommitLog:
@@ -587,133 +515,6 @@ class TestZoneMaps:
         assert store._rel("/a/b/", "file:/a/b/p=1/f") == "p=1/f"
         with pytest.raises(ValueError):
             store._rel("/a/b", "/a/c/f")
-
-    def test_compact_refreshes_stats(self, spark, store):
-        store.create_or_replace(
-            "db", "t",
-            spark.range(5).select(F.col("id").alias("k")).coalesce(1), ["k"],
-        )
-        for i in range(4):
-            store.append(
-                "db", "t",
-                spark.range(100 + i, 101 + i).select(
-                    F.col("id").alias("k")
-                ).coalesce(1),
-            )
-        info = store.info("db", "t")
-        assert store.compact("db", "t") >= 2
-        files = store._latest(info.location)["files"]
-        assert set(files) == _on_disk(info.location)
-        assert all(e["zone_map"] for e in files.values())
-
-
-@pytest.fixture()
-def tt_store(spark, tmp_path):
-    return TableStore(
-        spark, LakeConfig(root=str(tmp_path / "ttlake")), retain_history=True
-    )
-
-
-class TestTimeTravel:
-    """retain_history: every committed write records a snapshot;
-    replaced files go to _archive/; read_version reconstructs any
-    snapshot; vacuum prunes."""
-
-    def test_merge_history(self, spark, tt_store):
-        tt_store.create_or_replace(
-            "db", "t",
-            spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), ["k"],
-        )
-        tt_store.merge(
-            "db", "t", spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"]),
-            ["k"],
-        )
-        snaps = tt_store.snapshots("db", "t")
-        assert [s["version"] for s in snaps] == [1, 2]
-        v1 = {(r.k, r.v) for r in tt_store.read_version("db", "t", 1).collect()}
-        v2 = {(r.k, r.v) for r in tt_store.read_version("db", "t", 2).collect()}
-        assert v1 == {(1, "a"), (2, "b")}
-        assert v2 == {(1, "a"), (2, "B"), (3, "c")}
-        # current read matches latest snapshot
-        cur = {(r.k, r.v) for r in tt_store.read("db", "t").collect()}
-        assert cur == v2
-
-    def test_overwrite_preserves_history(self, spark, tt_store):
-        tt_store.create_or_replace(
-            "db", "t", spark.createDataFrame([(1, "a")], ["k", "v"]), ["k"]
-        )
-        tt_store.create_or_replace(
-            "db", "t", spark.createDataFrame([(9, "z")], ["k", "v"]), ["k"]
-        )
-        v1 = {(r.k, r.v) for r in tt_store.read_version("db", "t", 1).collect()}
-        v2 = {(r.k, r.v) for r in tt_store.read_version("db", "t", 2).collect()}
-        assert v1 == {(1, "a")} and v2 == {(9, "z")}
-
-    def test_schema_evolution_snapshot_schemas(self, spark, tt_store):
-        tt_store.create_or_replace(
-            "db", "t", spark.createDataFrame([(1, "a")], ["k", "v"]), ["k"]
-        )
-        tt_store.append(
-            "db", "t", spark.createDataFrame([(2, "b", 7.5)], ["k", "v", "w"])
-        )
-        v1 = tt_store.read_version("db", "t", 1)
-        v2 = tt_store.read_version("db", "t", 2)
-        assert v1.columns == ["k", "v"]
-        assert v2.columns == ["k", "v", "w"]
-        rows = {r.k: r.w for r in v2.collect()}
-        assert rows[1] is None and rows[2] == 7.5
-
-    def test_vacuum_prunes_old_versions(self, spark, tt_store):
-        tt_store.create_or_replace(
-            "db", "t", spark.createDataFrame([(1, "a")], ["k", "v"]), ["k"]
-        )
-        tt_store.merge(
-            "db", "t", spark.createDataFrame([(1, "A")], ["k", "v"]), ["k"]
-        )
-        tt_store.merge(
-            "db", "t", spark.createDataFrame([(1, "AA")], ["k", "v"]), ["k"]
-        )
-        assert len(tt_store.snapshots("db", "t")) == 3
-        removed = tt_store.vacuum("db", "t", keep_last=1)
-        assert removed >= 1
-        assert [s["version"] for s in tt_store.snapshots("db", "t")] == [3]
-        with pytest.raises(KeyError):
-            tt_store.read_version("db", "t", 1)
-        # latest still reads fine
-        assert tt_store.read_version("db", "t", 3).collect()[0].v == "AA"
-
-    def test_no_history_mode_records_nothing(self, spark, store):
-        store.create_or_replace(
-            "db", "t", spark.createDataFrame([(1, "a")], ["k", "v"]), ["k"]
-        )
-        assert store.snapshots("db", "t") == []
-
-
-class TestCompactSortBy:
-    def test_sorted_compaction_tightens_zone_maps(self, spark, store):
-        from pyspark.sql import functions as F
-
-        # Interleaved appends: every file spans nearly the full key
-        # range, so zone maps prune nothing.
-        for i in range(4):
-            df = spark.range(1000).select(
-                (F.col("id") * 4 + i).alias("k"),
-                F.lit(f"b{i}").alias("v"),
-            ).coalesce(1)
-            store.append("db", "t", df, ["k"])
-        n = store.compact(
-            "db", "t", target_file_bytes=16 * 1024, sort_by=["k"]
-        )
-        assert n == 4
-        info = store.info("db", "t")
-        files = store._latest(info.location)["files"]  # noqa: SLF001
-        assert len(files) >= 2
-        # Post-sort, file key ranges are disjoint (tight clustering).
-        ranges = sorted(e["zone_map"] for e in files.values())
-        for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-            assert hi1 < lo2
-        # Rows intact.
-        assert store.read("db", "t").count() == 4000
 
 
 class TestSilverExactlyOnce:

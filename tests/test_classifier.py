@@ -1,17 +1,15 @@
 """Trainable quality classifier (operators/classifier.py):
 separability on planted data, JVM-only scoring plan, model
-persistence round-trip, and the GPT-3 Pareto keep rule."""
+persistence round-trip, and the frozen shipped model's probes."""
 
 from __future__ import annotations
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from serverless_data_lake_spark.operators.classifier import (
     QUALITY_SCORE_COL,
-    pareto_keep_probability,
     score_quality,
     train_quality_classifier,
 )
@@ -92,74 +90,6 @@ def test_model_roundtrips_through_disk(spark, model, tmp_path):
     b = {r.doc_id: r[QUALITY_SCORE_COL]
          for r in score_quality(df, loaded).collect()}
     assert a == pytest.approx(b)
-
-
-def test_pareto_keep_rule_composes_with_importance_sample(spark, model):
-    from serverless_data_lake_spark.operators.sampling import (
-        importance_sample,
-    )
-
-    rng = random.Random(5)
-    docs = spark.createDataFrame(
-        [
-            (i,
-             " ".join(
-                 rng.choice(CLEAN_WORDS if i % 2 == 0 else JUNK_WORDS)
-                 for _ in range(25)
-             ),
-             0.0)
-            for i in range(200)
-        ],
-        SCHEMA,
-    )
-    scored = score_quality(docs, model)
-    kept = {
-        r.doc_id
-        for r in importance_sample(
-            scored, "doc_id",
-            pareto_keep_probability(F.col(QUALITY_SCORE_COL)),
-        ).collect()
-    }
-    n_clean = sum(1 for k in kept if k % 2 == 0)
-    n_junk = sum(1 for k in kept if k % 2 == 1)
-    # (2 - s)^-9: s≈1 -> ~1.0 keep, s≈0 -> ~0.002 keep.
-    assert n_clean >= 95
-    assert n_junk <= 3
-
-
-def test_curation_stage_both_modes(spark, model):
-    from serverless_data_lake_spark.pipeline.curation import (
-        CurationPipeline,
-    )
-
-    rng = random.Random(7)
-    docs = spark.createDataFrame(
-        [
-            (i,
-             " ".join(
-                 rng.choice(CLEAN_WORDS if i % 2 == 0 else JUNK_WORDS)
-                 for _ in range(25)
-             ),
-             0.0)
-            for i in range(100)
-        ],
-        SCHEMA,
-    )
-    hard = CurationPipeline("doc_id", "text").classifier_filter(
-        model, min_prob=0.5
-    )
-    out, rep = hard.execute(docs)
-    assert rep[-1].rows_out == 50  # exactly the clean half
-    assert QUALITY_SCORE_COL not in out.columns
-
-    pareto = CurationPipeline("doc_id", "text").classifier_filter(
-        model, alpha=9.0
-    )
-    _out2, rep2 = pareto.execute(docs)
-    assert 45 <= rep2[-1].rows_out <= 55  # ~clean half + tiny junk tail
-
-    with pytest.raises(ValueError, match="exactly one"):
-        CurationPipeline().classifier_filter(model)
 
 
 def test_frozen_model_reproduces_pinned_probe_scores(spark):

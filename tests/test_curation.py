@@ -190,28 +190,6 @@ def test_repetition_filter_stage(spark):
     assert report[-1].rows_dropped == 1
 
 
-def test_scrub_reference_spans_stage(spark):
-    ref = spark.createDataFrame(
-        [(100, "the quick brown fox jumps over the lazy dog")], SCHEMA
-    )
-    docs = spark.createDataFrame(
-        [(1, "intro the quick brown fox jumps over the lazy dog outro"),
-         (2, "nothing shared with the reference corpus here")],
-        SCHEMA,
-    )
-    pipe = CurationPipeline("doc_id", "text").scrub_reference_spans(
-        ref, k=5
-    )
-    got = {}
-    pipe.execute(
-        docs, sink=lambda d: got.update(
-            {r["doc_id"]: r["text"] for r in d.collect()}
-        )
-    )
-    assert got[1] == "intro outro"
-    assert got[2] == "nothing shared with the reference corpus here"
-
-
 def test_eager_stage_inputs_compute_once(spark):
     """Stages whose operator runs driver actions over its input
     (near_dedup's closure, rebalance's count+collect) must read a

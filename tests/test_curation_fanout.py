@@ -70,7 +70,7 @@ def default_fanout(spark, tmp_path_factory):
 
     stream = spark.readStream.schema(SCHEMA).json(str(src))
     clean_decont, grams = decontaminate_stream(
-        stream, ref_df, "doc_id", "text", n=5
+        ref_df, "doc_id", "text", n=5
     )
     clean_span, ref_grams = span_scrub_stream(
         ref_df, "doc_id", "text", k=5
@@ -177,7 +177,7 @@ def test_precomputed_gram_params_match_default(
     r = reference_span_grams(ref_df, "doc_id", "text", 5)
     rg_pre = spark.createDataFrame(r.collect(), r.schema)
     cd, grams = decontaminate_stream(
-        stream, ref_df, "doc_id", "text", n=5,
+        ref_df, "doc_id", "text", n=5,
         broadcast=True, test_grams=tg,
     )
     cs, rg = span_scrub_stream(

@@ -12,6 +12,7 @@ entry inside that window.
 from __future__ import annotations
 
 import ast
+import functools
 import hashlib
 import json
 from pathlib import Path
@@ -107,9 +108,10 @@ def test_no_complex_types_in_entry_schemas(spark):
     )
 
 
-#: Top-level package definitions no user path calls that stay on
-#: purpose, each with its reason. Any other unreached definition is
-#: dead code: delete it with its tests.
+#: Package definitions no user path calls that stay on purpose, each
+#: with its reason: top-level names, and methods as ``"Class.method"``.
+#: A class named here reaches its public methods. Any other unreached
+#: definition is dead code: delete it with its tests.
 PUBLIC_ENTRY_POINTS = {
     "RestSource": "the paper's pull ingestion (the reference's plan "
     "runner); TestPlanToLake runs it from plan to bronze to silver",
@@ -127,6 +129,11 @@ PUBLIC_ENTRY_POINTS = {
     "stream==batch test is part of the correctness floor",
     "embedding_near_duplicates": "the SQL reference "
     "TestNumpyPairsKernel checks embedding_all_pairs_numpy against",
+    "TableStore.vacuum": "the only recovery of what a crashed commit "
+    "leaves behind (staging dirs, temp log files): safety code",
+    "Lake.export_parquet": "the paper's parquet export (SURVEY S11)",
+    "Lake.save_ingestion_plan": "stores the pull plans that "
+    "RestSource.run_plans_by_tag runs (SURVEY S13/O6)",
 }
 
 
@@ -142,77 +149,188 @@ def _names(node) -> set[str]:
 
 def _reached(defs: dict, roots: set[str]) -> set:
     """Fixed point: a definition is reached once a reached body (or a
-    root) names it, so code called only from dead code is dead."""
-    seen, reached = set(roots), set()
-    grew = True
-    while grew:
-        grew = False
-        for key, uses in defs.items():
-            if key not in reached and key[1] in seen:
+    root) names it, so code called only from dead code is dead. A
+    method ``Class.method`` is reached by its own name, or by its
+    qualified name as a root."""
+    by_name: dict[str, list] = {}
+    for key in defs:
+        qual = key[1]
+        by_name.setdefault(qual, []).append(key)
+        if "." in qual:
+            by_name.setdefault(qual.rpartition(".")[2], []).append(key)
+    seen, todo, reached = set(roots), list(roots), set()
+    while todo:
+        for key in by_name.get(todo.pop(), ()):
+            if key not in reached:
                 reached.add(key)
-                seen |= uses
-                grew = True
+                todo += defs[key] - seen
+                seen |= defs[key]
     return reached
 
 
-def test_every_package_definition_is_reached():
-    """Every top-level definition in the package is reached from a
-    user path, or is named in ``PUBLIC_ENTRY_POINTS``. User paths are
-    the package's own module-level code (not the re-exports in
-    ``__init__.py``), ``__spark_entry__.py``, ``bench.py``, ``tools/``
-    and ``perfbench/``. Tests do not count: a definition only its
-    own tests call is dead. Name-based, so a name shared with a live
-    definition elsewhere counts as reached (the scan errs towards
-    keeping code)."""
-    defs: dict[tuple[str, str], set[str]] = {}
-    roots: set[str] = set()
-    for path in sorted((REPO / "serverless_data_lake_spark").rglob("*.py")):
-        where = path.relative_to(REPO).as_posix()
-        for stmt in ast.parse(path.read_text()).body:
-            if isinstance(
-                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                names, body = [stmt.name], stmt
-            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
-                targets = (
-                    stmt.targets if isinstance(stmt, ast.Assign)
-                    else [stmt.target]
-                )
-                names = [
-                    t.id for t in targets
-                    if isinstance(t, ast.Name) and not t.id.startswith("__")
-                ]
-                body = stmt.value
-            else:
-                names = []
-            for name in names:
-                defs[(where, name)] = _names(body) if body else set()
-            if not names and path.name != "__init__.py":
-                roots |= _names(stmt)
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _is_method(node) -> bool:
+    """A method the scan tracks on its own: dunders are reached with
+    their class, so they stay part of the class body."""
+    return isinstance(node, _FUNCS) and not (
+        node.name.startswith("__") and node.name.endswith("__")
+    )
+
+
+@functools.cache
+def _sources() -> tuple[dict, frozenset]:
+    """The parsed package modules by path, and the names the user paths
+    use: ``__spark_entry__.py``, ``bench.py``, ``tools/`` and
+    ``perfbench/``."""
+    package = {
+        path.relative_to(REPO).as_posix(): ast.parse(path.read_text())
+        for path in sorted((REPO / "serverless_data_lake_spark").rglob("*.py"))
+    }
+    user: set[str] = set()
     for path in [
         REPO / "__spark_entry__.py",
         REPO / "bench.py",
         *sorted((REPO / "tools").rglob("*.py")),
         *sorted((REPO / "perfbench").rglob("*.py")),
     ]:
-        roots |= _names(ast.parse(path.read_text()))
+        user |= _names(ast.parse(path.read_text()))
+    return package, frozenset(user)
 
-    reached = _reached(defs, roots | set(PUBLIC_ENTRY_POINTS))
+
+@functools.cache
+def _module_defs(where: str, tree: ast.Module) -> tuple[dict, frozenset]:
+    """One package module's definitions, ``{(where, name): names its
+    body uses}`` with methods named ``Class.method``, and the names its
+    module-level code uses (a root, except in ``__init__.py``, whose
+    re-exports reach nothing)."""
+    defs: dict[tuple[str, str], set[str]] = {}
+    roots: set[str] = set()
+    for stmt in tree.body:
+        if isinstance(stmt, ast.ClassDef):
+            uses: set[str] = set()
+            for node in [
+                *stmt.decorator_list, *stmt.bases, *stmt.keywords, *stmt.body,
+            ]:
+                if _is_method(node):
+                    defs.setdefault(
+                        (where, f"{stmt.name}.{node.name}"), set()
+                    ).update(_names(node))
+                else:
+                    uses |= _names(node)
+            names, body = [stmt.name], uses
+        elif isinstance(stmt, _FUNCS):
+            names, body = [stmt.name], _names(stmt)
+        elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+            targets = (
+                stmt.targets if isinstance(stmt, ast.Assign)
+                else [stmt.target]
+            )
+            names = [
+                t.id for t in targets
+                if isinstance(t, ast.Name) and not t.id.startswith("__")
+            ]
+            body = _names(stmt.value) if stmt.value else set()
+        else:
+            names = []
+        for name in names:
+            defs[(where, name)] = body
+        if not names and not where.endswith("/__init__.py"):
+            roots |= _names(stmt)
+    return defs, frozenset(roots)
+
+
+def _scan(
+    package: dict, user: frozenset, public: dict
+) -> tuple[list[str], list[str]]:
+    """``(unreached, stale)``: the package definitions (``where::name``,
+    methods as ``where::Class.method``) that neither a user path nor
+    ``public`` reaches, and the ``public`` keys that name nothing or
+    that a user path reaches anyway. A class in ``public`` reaches its
+    public methods."""
+    defs: dict[tuple[str, str], set[str]] = {}
+    roots = set(user)
+    for where, tree in package.items():
+        module_defs, module_roots = _module_defs(where, tree)
+        defs |= module_defs
+        roots |= module_roots
+    public_roots = set(public) | {
+        qual for _, qual in defs
+        if "." in qual and qual.partition(".")[0] in public
+        and not qual.partition(".")[2].startswith("_")
+    }
+    reached = _reached(defs, roots | public_roots)
     unreached = sorted(f"{w}::{n}" for w, n in defs if (w, n) not in reached)
+    live = {n for _, n in _reached(defs, roots)}
+    defined = {n for _, n in defs}
+    stale = sorted(n for n in public if n in live or n not in defined)
+    return unreached, stale
+
+
+def test_every_package_definition_is_reached():
+    """Every package definition, top-level or method, is reached from
+    a user path, or is named in ``PUBLIC_ENTRY_POINTS``. User paths
+    are the package's own module-level code (not the re-exports in
+    ``__init__.py``), ``__spark_entry__.py``, ``bench.py``, ``tools/``
+    and ``perfbench/``. Tests do not count: a definition only its
+    own tests call is dead. Name-based, so a name shared with a live
+    definition elsewhere counts as reached (the scan errs towards
+    keeping code)."""
+    unreached, stale = _scan(*_sources(), PUBLIC_ENTRY_POINTS)
     assert not unreached, (
         "no user path reaches these definitions; delete them with "
         "their tests, or name them in PUBLIC_ENTRY_POINTS with a "
         "reason:\n  " + "\n  ".join(unreached)
     )
-    live = {n for _, n in _reached(defs, roots)}
-    defined = {n for _, n in defs}
-    stale = sorted(
-        n for n in PUBLIC_ENTRY_POINTS if n in live or n not in defined
-    )
     assert not stale, (
         f"PUBLIC_ENTRY_POINTS names a definition that is gone or now "
         f"reached from a user path: {stale}"
     )
+
+
+#: A module planted into the scanned package: its class is reached
+#: from a user path, ``__init__`` with the class, ``used`` from
+#: ``__init__``; nothing names ``never_called``.
+_PLANTED = (
+    "serverless_data_lake_spark/_planted.py",
+    ast.parse(
+        "class Planted:\n"
+        "    def __init__(self):\n"
+        "        self.used()\n"
+        "\n"
+        "    def used(self):\n"
+        "        return 1\n"
+        "\n"
+        "    def never_called(self):\n"
+        "        return 2\n"
+    ),
+)
+
+
+def _planted_scan(public: dict) -> tuple[list[str], list[str]]:
+    package, user = _sources()
+    return _scan(
+        dict([*package.items(), _PLANTED]), user | {"Planted"}, public
+    )
+
+
+def test_scan_flags_a_method_nothing_calls():
+    """Guard the guard: a method no reached body names is flagged,
+    and one that a reached method or dunder names is not."""
+    unreached, stale = _planted_scan(PUBLIC_ENTRY_POINTS)
+    assert unreached == [f"{_PLANTED[0]}::Planted.never_called"]
+    assert not stale
+    kept = {**PUBLIC_ENTRY_POINTS, "Planted.never_called": "kept"}
+    assert _planted_scan(kept) == ([], [])
+
+
+def test_stale_method_key_fails():
+    """Guard the guard: a ``"Class.method"`` key is stale once the
+    method is gone or a user path reaches it."""
+    for key in ("Planted.gone", "Planted.used"):
+        _, stale = _planted_scan({**PUBLIC_ENTRY_POINTS, key: "stale"})
+        assert stale == [key]
 
 
 def test_planted_complex_column_fails_local_canonicalizer():

@@ -159,10 +159,6 @@ def test_curation_hooks(spark):
         .cap_per_source("source", 10)
         .rebalance_sources("source", 0.75)
     )
-    # Both stages are corpus-global -> streaming must refuse.
-    assert pipe.corpus_global_stages == [
-        "cap_per[source<=10]", "rebalance[source<=0.75]",
-    ]
     kept = {}
     _out, report = pipe.execute(
         docs, sink=lambda d: kept.update(

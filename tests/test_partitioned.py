@@ -1,6 +1,6 @@
 """Hive-partitioned tables on TableStore: directory pruning on
 partition-column filters, partition-local copy-on-write merge,
-per-partition compaction, time travel through the partition layout.
+appends that land in their partitions, and restart.
 
 The reference gets its file organization from Iceberg's (hidden)
 partitioning; here the same levers are hive layout + Catalyst
@@ -21,13 +21,6 @@ from serverless_data_lake_spark.config import LakeConfig
 @pytest.fixture()
 def store(spark, tmp_path):
     return TableStore(spark, LakeConfig(root=str(tmp_path / "lake")))
-
-
-@pytest.fixture()
-def hist_store(spark, tmp_path):
-    return TableStore(
-        spark, LakeConfig(root=str(tmp_path / "lake")), retain_history=True
-    )
 
 
 def _base(spark, n=100, parts=4):
@@ -205,35 +198,6 @@ class TestPartitionedAppendCompact:
         t = store.read("d_gold", "t")
         assert t.filter(F.col("p") == 9).count() == 1
         assert t.count() == 101
-
-    def test_compact_is_partition_local(self, spark, store):
-        store.create_or_replace(
-            "d_gold", "t", _base(spark).repartition(8), ["id"], ["p"]
-        )
-        before = _files(store, "d_gold", "t")
-        n = store.compact("d_gold", "t")
-        after = _files(store, "d_gold", "t")
-        assert n >= 2
-        # Still hive layout, same rows, fewer files.
-        assert all("/p=" in f for f in after)
-        assert len(after) < len(before)
-        assert store.read("d_gold", "t").count() == 100
-
-
-class TestPartitionedTimeTravel:
-    def test_read_version_reconstructs_partitions(self, spark, hist_store):
-        hist_store.create_or_replace(
-            "d_gold", "t", _base(spark), ["id"], ["p"]
-        )
-        src = spark.createDataFrame([(1, 1, -1)], "id long, p long, v long")
-        hist_store.merge("d_gold", "t", src, ["id"])
-        v1 = hist_store.read_version("d_gold", "t", 1)
-        assert v1.count() == 100
-        assert v1.filter(F.col("id") == 1).first().v == 2
-        # Partition values survive archival.
-        assert v1.filter(F.col("p") == 1).count() == 25
-        v2 = hist_store.read_version("d_gold", "t", 2)
-        assert v2.filter(F.col("id") == 1).first().v == -1
 
 
 class TestPartitionedRestart:

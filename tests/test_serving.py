@@ -115,6 +115,37 @@ class TestHttpApi:
             assert err.code == 400
             assert reason in json.loads(err.read())["error"]
 
+    @pytest.mark.parametrize(
+        "sql, code, condition",
+        [
+            ("SELECT nope FROM {t}", 400, "UNRESOLVED_COLUMN"),
+            ("SELECT s.nope FROM (SELECT named_struct('a', 1) AS s)", 400,
+             "FIELD_NOT_FOUND"),
+            ("SELECT order_id FROM {t} a JOIN {t} b ON true", 400,
+             "AMBIGUOUS_REFERENCE"),
+            ("SELECT order_id + array(1) AS x FROM {t}", 400,
+             "DATATYPE_MISMATCH"),
+            ("SELECT abs(1, 2) AS x", 400, "WRONG_NUM_ARGS"),
+            ("SELECT order_id FROM {t} GROUP BY total_amount", 400,
+             "MISSING_AGGREGATION"),
+            ("SELECT sum(order_id), total_amount FROM {t}", 400,
+             "MISSING_GROUP_BY"),
+            # A storage fault, not the query's: an endpoint with no
+            # bronze objects.
+            ("SELECT * FROM sales.bronze.nothing_ingested", 500,
+             "PATH_NOT_FOUND"),
+        ],
+    )
+    def test_analysis_error_status(self, lake, server, sql, code, condition):
+        """An analysis error that is the query's own fault answers 400
+        like the gate; a storage fault stays 500. Both scrub paths."""
+        sql = sql.format(t="sales.silver.orders")
+        with pytest.raises(urllib.error.HTTPError) as err:
+            _get(f"{server}/consumption/query?sql={quote(sql)}")
+        assert err.value.code == code
+        msg = json.loads(err.value.read())["error"]
+        assert condition in msg and lake.config.root not in msg
+
     def test_tables_listing(self, server):
         status, body = _get(f"{server}/consumption/tables")
         names = {(t["domain"], t["layer"], t["table"]) for t in body["tables"]}
